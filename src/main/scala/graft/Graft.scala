@@ -37,7 +37,9 @@ object Graft {
                          partitions: Int, queryId: String, records: Long): DataFrame =
     SkylineOps.skylineWithMetrics(ds, strategy, domain, partitions, queryId, records)
 
-  /** Batch run of the streaming barrier protocol (CSV lines + triggers). */
+  /** Batch run of the streaming barrier protocol (CSV lines + triggers):
+    * the [[skylineStreamTopology]] operators over a batch Dataset, one
+    * result per query whose barrier every partition reached. */
   def skylineStream(spark: SparkSession, dataLines: Dataset[String],
                     triggers: Seq[String], strategy: String, domain: Double,
                     partitions: Int): Seq[streaming.SkylineStream.QueryResult] =

@@ -139,7 +139,8 @@ object PipelineQueries {
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Full streaming protocol (S→P1/F1→B1→C1→A1/A2→A3 merge) over the same
-    // 2-D point set as sky2d_global; the oracle is the same skyline SQL, so
+    // 2-D point set as sky2d_global, run as a batch query through the
+    // transformWithState operators; the oracle is the same skyline SQL, so
     // the gate proves streaming == batch semantics.
     "stream_sky2d" -> ((s, dir) => {
       import s.implicits._
@@ -176,8 +177,8 @@ object PipelineQueries {
         val env = dataIn.toDS().flatMap(l => SkylineStream.parseData(l, pidOf))
           .unionAll(trigIn.toDS().flatMap(p =>
             SkylineStream.broadcastTrigger(p, n, 0L)))
-        // one micro-batch carries data + trigger; stepLocal orders
-        // data-before-triggers within a batch, so the bare barrier fires
+        // one micro-batch carries data + trigger; the barrier applies a
+        // batch's data before its triggers, so the bare barrier fires
         dataIn.addData(lines.toIndexedSeq)
         trigIn.addData("collect,0")
         runAppendStream(s,

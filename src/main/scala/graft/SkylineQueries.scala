@@ -181,10 +181,7 @@ object SkylineQueries {
           org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[graft.core.Point]()))
         val surv = glob.groupByKey(_.originPartition).count().collect().toMap
         local.unpersist()
-        val sumRatios = sizes.collect {
-          case (pid, sz) if sz > 0 => surv.getOrElse(pid, 0L).toDouble / sz
-        }.sum
-        (strat, math.round(sumRatios / N * 10000.0) / 10000.0)
+        (strat, math.round(SkylineOps.optimality(sizes, surv, N) * 10000.0) / 10000.0)
       }
       rows.toDF("strategy", "optimality").orderBy("strategy")
     })

@@ -124,10 +124,20 @@ object SkylineOps {
       case other => throw new IllegalArgumentException(s"unknown strategy: $other")
     }
 
+  /** M1 optimality (`FlinkSkyline.java:590-608`): the mean over ALL
+    * `numPartitions` partitions of the share of a partition's local skyline
+    * that survives the global merge; an empty or absent partition counts 0.
+    * Both maps are keyed by partition id. */
+  def optimality(localSizes: Map[Int, Int], survivors: Map[Int, Long],
+                 numPartitions: Int): Double =
+    localSizes.collect {
+      case (pid, sz) if sz > 0 => survivors.getOrElse(pid, 0L).toDouble / sz
+    }.sum / numPartitions
+
   /** Full reference-parity query: skyline + the metrics object the reference
-    * emits per query (`FlinkSkyline.java:610-648` JSON schema; optimality
-    * `:590-608` = avg over ALL partitions of local-survivor ratio). Timing
-    * fields are wall-clock (non-deterministic), matching field names only.
+    * emits per query (`FlinkSkyline.java:610-648` JSON schema; [[optimality]]
+    * `:590-608`). Timing fields are wall-clock (non-deterministic), matching
+    * field names only.
     */
   def skylineWithMetrics(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int, queryId: String,
@@ -144,13 +154,10 @@ object SkylineOps {
       globalSky.groupByKey(_.originPartition).count().collect().toMap
     val skySize = globalSky.count()
     val tEnd = System.currentTimeMillis()
-    val sumRatios = localSizes.collect {
-      case (pid, sz) if sz > 0 => survivors.getOrElse(pid, 0L).toDouble / sz
-    }.sum
-    val optimality = sumRatios / numPartitions
+    val opt = optimality(localSizes, survivors, numPartitions)
     local.unpersist(); globalSky.unpersist()
     Seq((queryId, recordCount, skySize,
-         math.round(optimality * 10000.0) / 10000.0,
+         math.round(opt * 10000.0) / 10000.0,
          0L, tLocal - t0, tEnd - tLocal, tEnd - t0))
       .toDF("query_id", "record_count", "skyline_size", "optimality",
             "ingestion_time_ms", "local_processing_time_ms",
@@ -224,9 +231,10 @@ object SkylineOps {
     * ships over its second shuffle (`FlinkSkyline.java:171-174`), but here
     * the merge work is spread over every core instead of one reducer. If the
     * union exceeds `maxBroadcastPoints` (high-dim pathological data) it
-    * falls back to the log-depth [[skylineTree]] merge; at cluster scale the
-    * same pattern nests hierarchically (filter within executor groups
-    * first). */
+    * falls back to the distributed pairwise cross-filter
+    * (`crossFilterChunks`), which needs no driver collect or broadcast; at
+    * cluster scale the same pattern nests hierarchically (filter within
+    * executor groups first). */
   def skylineBroadcastFilter(ds: Dataset[Point],
                              maxBroadcastPoints: Int = 4000000): Dataset[Point] = {
     val spark = ds.sparkSession

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
-import graft.core.{Dominance, Point, SkylineBuffer}
+import graft.core.Point
 import graft.operators.SkylineOps
 
 /** Structured Streaming shell reproducing the reference's continuous topology
@@ -15,20 +12,16 @@ import graft.operators.SkylineOps
   *        parse → tag pid                broadcast to N partitions
   *             └────── tagged union (Spark's encoding of the 2-input
   *                      keyed co-process C1) ──────┘
-  *                   groupByKey(pid) + flatMapGroupsWithState
-  *                [local BNL skyline + barrier state machine A1+A2]
-  *                              │ local results
-  *                [global BNL merge + countdown latch A3]  (driver-side
-  *                 accumulator fed via foreachBatch — the reference's single
-  *                 keyed aggregator instance; flatMapGroupsWithState cannot
-  *                 be chained twice in one query. [[SkylineStreamTWS]] runs
-  *                 the SAME topology fully distributed as two chained
-  *                 `transformWithState` stages — preferred on Spark 4.)
-  *                              │ metrics JSON strings
+  *                              │ envelopes
+  *           [[SkylineStreamTWS.topology]]: two chained transformWithState
+  *           stages — local BNL skyline + barrier (A1+A2) keyed by
+  *           partition, then global BNL merge + countdown latch (A3) keyed
+  *           by query
+  *                              │ QueryResult (metrics JSON)
   *
-  * Within a micro-batch, data elements are processed before triggers so the
-  * barrier check observes every record of the batch (deterministic resolution
-  * of the per-key FIFO the reference gets from arrival order).
+  * This object holds the protocol's records and its input side (parse,
+  * trigger broadcast); [[runBatch]] runs the same topology over a batch
+  * `Dataset`.
   */
 object SkylineStream {
 
@@ -40,11 +33,6 @@ object SkylineStream {
     * (`FlinkSkyline.java:201-213`). */
   case class LocalResult(pid: Int, payload: String, dispatchMs: Long,
                          startMs: Long, skyline: Seq[Point], cpuMs: Long)
-
-  /** Keyed state of the local processor (`FlinkSkyline.java:216-237`). */
-  case class LocalState(skyline: Seq[Point], maxSeenId: Long,
-                        pending: Seq[(String, Long)], startMs: Long,
-                        cpuNanos: Long)
 
   /** Completed query result (the reference's emitted JSON object,
     * `FlinkSkyline.java:631-648`). */
@@ -68,10 +56,7 @@ object SkylineStream {
         s""""total_processing_time_ms": $totalProcessingTimeMs}"""
   }
 
-  private implicit def envelopeEnc: Encoder[Envelope] = ExpressionEncoder[Envelope]()
-  private implicit def localResultEnc: Encoder[LocalResult] = ExpressionEncoder[LocalResult]()
-
-  /** Parse a data CSV line "id,v1,...,vd" and stamp its partition id; null on
+  /** Parse a data CSV line "id,v1,...,vd" and stamp its partition id; None on
     * malformed input (reference P1/F1). */
   def parseData(line: String, pidOf: Array[Double] => Int): Option[Envelope] = {
     val p = line.split(",")
@@ -87,165 +72,52 @@ object SkylineStream {
   def broadcastTrigger(payload: String, n: Int, nowMs: Long): Seq[Envelope] =
     (0 until n).map(i => Envelope(i, 1, -1L, Array.empty, payload, nowMs))
 
-  private[streaming] def requiredCount(payload: String): Long = {
-    val parts = payload.split(",")
-    // triggers are external input like data lines: an unparseable count
-    // degrades to the no-barrier default instead of failing every task
-    // retry and killing the streaming query (the data path's F1 discipline
-    // applied to the control stream)
-    if (parts.length > 1)
-      try parts(1).trim.toLong catch { case _: NumberFormatException => 0L }
-    else 0L
-  }
-
-  /** The A1+A2 state machine, applied to one micro-batch's worth of envelopes
-    * for one partition key. Returns emitted local results + new state. */
-  def stepLocal(pid: Int, batch: Seq[Envelope], st: LocalState): (Seq[LocalResult], LocalState) = {
-    val t0 = System.nanoTime()
-    var maxId = st.maxSeenId
-    var startMs = st.startMs
-    val sky = new SkylineBuffer
-    st.skyline.foreach(p => sky.points += p)   // restore without re-checking
-    val out = scala.collection.mutable.ArrayBuffer[LocalResult]()
-    var pending = st.pending
-
-    def fire(payload: String, dispatchMs: Long, cpuNanos: Long): Unit = {
-      val pts = sky.result.map(_.copy(originPartition = pid))
-      out += LocalResult(pid, payload, dispatchMs,
-        if (startMs == 0L) System.currentTimeMillis() else startMs,
-        pts, cpuNanos / 1000000L)
-    }
-
-    // data before triggers within the batch (deterministic barrier semantics)
-    val (data, triggers) = batch.partition(_.kind == 0)
-    data.foreach { e =>
-      if (startMs == 0L) startMs = System.currentTimeMillis()
-      if (e.id > maxId) maxId = e.id
-      sky.insert(Point(e.id, e.values))
-    }
-    // re-check parked queries against the new barrier position
-    val cpuSoFar = st.cpuNanos + (System.nanoTime() - t0)
-    if (data.nonEmpty && pending.nonEmpty) {
-      val (ready, stillPending) = pending.partition { case (pl, _) =>
-        maxId >= requiredCount(pl)
-      }
-      ready.foreach { case (pl, dm) => fire(pl, dm, cpuSoFar) }
-      pending = stillPending
-    }
-    // new triggers: fire if barrier satisfied or partition empty (maxId == -1).
-    // Reference parity (`FlinkSkyline.java:351`): an empty partition answers
-    // immediately — which deliberately conflates "no data yet" with "no data
-    // ever"; a trigger racing ahead of a partition's first record contributes
-    // an empty local skyline to that query, exactly as the reference does.
-    triggers.foreach { e =>
-      if (maxId >= requiredCount(e.payload) || maxId == -1L)
-        fire(e.payload, e.dispatchMs, cpuSoFar)
-      else pending = pending :+ (e.payload, e.dispatchMs)
-    }
-    val cpu = st.cpuNanos + (System.nanoTime() - t0)
-    (out.toSeq, LocalState(sky.result, maxId, pending, startMs, cpu))
-  }
-
-  /** Local phase as a streaming stateful operator. */
-  def localPhase(env: Dataset[Envelope]): Dataset[LocalResult] = {
-    implicit val stEnc: Encoder[LocalState] = ExpressionEncoder[LocalState]()
-    implicit val intEnc: Encoder[Int] = Encoders.scalaInt
-    env.groupByKey(_.pid)
-      .flatMapGroupsWithState[LocalState, LocalResult](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (pid: Int, it: Iterator[Envelope], state: GroupState[LocalState]) =>
-          val st = state.getOption.getOrElse(LocalState(Nil, -1L, Nil, 0L, 0L))
-          val (out, st2) = stepLocal(pid, it.toSeq, st)
-          state.update(st2)
-          out.iterator
-      }
-  }
-
-  /** The A3 global aggregator: incremental BNL merge per query payload with a
-    * countdown latch over `totalPartitions`. One instance accumulates across
-    * micro-batches (driver side, via foreachBatch), exactly like the
-    * reference's single keyed GlobalSkylineAggregator task. */
-  final class GlobalAggregator(totalPartitions: Int) extends Serializable {
-    private case class Acc(buf: SkylineBuffer, var arrived: Int,
-                           var minStart: Long, var lastArrival: Long,
-                           var maxCpu: Long, var dispatchMs: Long,
-                           localSizes: scala.collection.mutable.Map[Int, Int])
-    private val accs = scala.collection.mutable.Map[String, Acc]()
-    private val emitted = scala.collection.mutable.ArrayBuffer[QueryResult]()
-
-    def offer(r: LocalResult): Unit = synchronized {
-      val acc = accs.getOrElseUpdate(r.payload,
-        Acc(new SkylineBuffer, 0, Long.MaxValue, 0L, 0L, r.dispatchMs,
-          scala.collection.mutable.Map()))
-      // the latch counts DISTINCT partitions: a duplicated trigger payload
-      // makes every partition answer twice, and a raw arrival counter would
-      // both fill early (missing the slow partitions' skylines) and merge
-      // duplicate antichains (duplicating every skyline point)
-      if (acc.localSizes.contains(r.pid)) return
-      acc.minStart = math.min(acc.minStart, r.startMs)
-      acc.lastArrival = System.currentTimeMillis()
-      acc.maxCpu = math.max(acc.maxCpu, r.cpuMs)
-      acc.localSizes(r.pid) = r.skyline.size
-      r.skyline.foreach(acc.buf.insert)
-      acc.arrived = acc.localSizes.size
-      if (acc.arrived >= totalPartitions) {
-        val finish = System.currentTimeMillis()
-        val global = acc.buf.result
-        val survivors = global.groupBy(_.originPartition).view.mapValues(_.size)
-        val sumRatios = (0 until totalPartitions).map { i =>
-          acc.localSizes.get(i) match {
-            case Some(sz) if sz > 0 => survivors.getOrElse(i, 0).toDouble / sz
-            case _ => 0.0
-          }
-        }.sum
-        val optimality = sumRatios / totalPartitions
-        val parts = r.payload.split(",")
-        val mapWall = math.max(0L, acc.lastArrival - acc.minStart)
-        val ingestion = math.max(0L, mapWall - acc.maxCpu)
-        emitted += QueryResult(parts(0),
-          if (parts.length > 1) parts(1).trim else "unknown",
-          global.size, optimality, ingestion, acc.maxCpu,
-          finish - acc.lastArrival, finish - acc.minStart)
-        accs.remove(r.payload)
-      }
-    }
-
-    def results: Seq[QueryResult] = synchronized(emitted.toSeq)
-    def globalSkyline(payload: String): Seq[Point] =
-      synchronized(accs.get(payload).map(_.buf.result).getOrElse(Nil))
-  }
-
-  /** Full-protocol run that returns the merged global skyline points (for
-    * oracle-checking the streaming path against the batch skyline SQL).
-    * Uses a bare trigger (requiredCount 0 → immediate fire after the batch's
-    * data, `FlinkSkyline.java:334`). */
-  def runBatchPoints(spark: SparkSession, dataLines: Dataset[String],
-                     strategy: String, domain: Double,
-                     numPartitions: Int): Seq[Point] = {
+  /** Envelopes of a batch run: the parsed data lines plus every trigger
+    * payload broadcast to all partitions. */
+  private def batchEnvelopes(spark: SparkSession, dataLines: Dataset[String],
+                             triggerPayloads: Seq[String], strategy: String,
+                             domain: Double, numPartitions: Int): Dataset[Envelope] = {
     import spark.implicits._
-    val pidOf = SkylineOps.pidFunction(strategy, domain, numPartitions)
-    val env = dataLines.flatMap(l => parseData(l, pidOf)).unionAll(
-      spark.createDataset(broadcastTrigger("collect", numPartitions,
-        System.currentTimeMillis())))
-    val buf = new SkylineBuffer
-    localPhase(env).collect().foreach(_.skyline.foreach(buf.insert))
-    buf.result
-  }
-
-  /** Batch-mode end-to-end pipeline: CSV lines + trigger payloads → completed
-    * query results. The batch analog of the full streaming topology. */
-  def runBatch(spark: SparkSession, dataLines: Dataset[String],
-               triggerPayloads: Seq[String], strategy: String, domain: Double,
-               numPartitions: Int): Seq[QueryResult] = {
-    import spark.implicits._
+    // batch transformWithState finds its state stores through the
+    // StateStoreCoordinator, which the streams manager registers on creation
+    spark.streams
     val pidOf = SkylineOps.pidFunction(strategy, domain, numPartitions)
     val now = System.currentTimeMillis()
-    val env = dataLines.flatMap(l => parseData(l, pidOf)).unionAll(
+    dataLines.flatMap(l => parseData(l, pidOf)).unionAll(
       spark.createDataset(triggerPayloads.flatMap(p =>
         broadcastTrigger(p, numPartitions, now))))
-    val local = localPhase(env)
-    val agg = new GlobalAggregator(numPartitions)
-    local.collect().foreach(agg.offer)
-    agg.results
   }
+
+  /** Collects a batch run of the topology. Each of its two stateful stages
+    * opens one state store per shuffle partition, empty or not, so the run
+    * is planned with one shuffle partition per protocol partition instead
+    * of the session's setting (200 by default: about 7x slower on a small
+    * input). */
+  private def collectBatch[T](spark: SparkSession, numPartitions: Int,
+                              run: Dataset[T]): Seq[T] = {
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, numPartitions.toString)
+    try run.collect().toSeq finally spark.conf.set(key, prior)
+  }
+
+  /** Full-protocol batch run that returns the merged global skyline points
+    * (for oracle-checking the streaming path against the batch skyline SQL).
+    * Uses a bare trigger (requiredCount 0 → fires after the batch's data,
+    * `FlinkSkyline.java:334`). */
+  def runBatchPoints(spark: SparkSession, dataLines: Dataset[String],
+                     strategy: String, domain: Double,
+                     numPartitions: Int): Seq[Point] =
+    collectBatch(spark, numPartitions, SkylineStreamTWS.topologyPoints(
+      batchEnvelopes(spark, dataLines, Seq("collect"), strategy, domain,
+        numPartitions), numPartitions))
+
+  /** Batch-mode end-to-end pipeline: CSV lines + trigger payloads → completed
+    * query results, through the same operators as the streaming topology. */
+  def runBatch(spark: SparkSession, dataLines: Dataset[String],
+               triggerPayloads: Seq[String], strategy: String, domain: Double,
+               numPartitions: Int): Seq[QueryResult] =
+    collectBatch(spark, numPartitions, SkylineStreamTWS.topology(
+      batchEnvelopes(spark, dataLines, triggerPayloads, strategy, domain,
+        numPartitions), numPartitions))
 }

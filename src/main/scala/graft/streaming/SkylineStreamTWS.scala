@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
 import graft.core.{Point, SkylineBuffer}
+import graft.operators.SkylineOps
 import graft.streaming.SkylineStream.{Envelope, LocalResult, QueryResult}
 
 /** The reference's full two-hop streaming topology as ONE Structured
@@ -15,10 +16,13 @@ import graft.streaming.SkylineStream.{Envelope, LocalResult, QueryResult}
   *   incremental BNL merge + countdown latch, A3] ─ QueryResult
   *
   * This is the chained keyed-stage shape of the reference
-  * (`java/org.main/FlinkSkyline.java:138-183`) that the older
-  * `flatMapGroupsWithState` API could not express in a single query (it
-  * cannot be chained); `transformWithState` can, so the global merge runs
-  * as a distributed stateful operator instead of a driver-side accumulator.
+  * (`java/org.main/FlinkSkyline.java:138-183`); the global merge runs as a
+  * distributed stateful operator, not a driver-side accumulator. The same
+  * operators run on a batch `Dataset` (see [[SkylineStream.runBatch]]).
+  *
+  * The protocol rules live in two pure functions, [[barrier]] (park/fire)
+  * and [[latch]] (distinct-partition countdown); the processors only move
+  * state in and out of the store around them.
   */
 object SkylineStreamTWS {
 
@@ -35,11 +39,61 @@ object SkylineStreamTWS {
   case class LocalScalars(maxSeenId: Long, pending: Seq[(String, Long)],
                           startMs: Long, cpuNanos: Long, nUncompacted: Int)
 
+  private[streaming] def requiredCount(payload: String): Long = {
+    val parts = payload.split(",")
+    // triggers are external input like data lines: an unparseable count
+    // degrades to the no-barrier default instead of failing every task
+    // retry and killing the streaming query (the data path's F1 discipline
+    // applied to the control stream)
+    if (parts.length > 1)
+      try parts(1).trim.toLong catch { case _: NumberFormatException => 0L }
+    else 0L
+  }
+
+  /** One partition's barrier decision for one micro-batch: the new highest
+    * id seen, parked queries the new data released (`ready`), new triggers
+    * answered at once (`fireNow`) and the queries still parked. Queries are
+    * (payload, dispatchMs) pairs. */
+  case class BarrierStep(maxSeenId: Long, ready: Seq[(String, Long)],
+                         fireNow: Seq[(String, Long)],
+                         parked: Seq[(String, Long)])
+
+  /** A2 (`FlinkSkyline.java:296-315, 330-356`). The batch's data ids are
+    * applied before its triggers, so the barrier check observes every record
+    * of the batch (a deterministic stand-in for the per-key FIFO the
+    * reference gets from arrival order). A new trigger fires if the barrier
+    * is reached or the partition has seen no data (`maxSeenId == -1`).
+    * Reference parity (`FlinkSkyline.java:351`): that deliberately
+    * conflates "no data yet" with "no data ever" — a trigger racing ahead of
+    * a partition's first record contributes an empty local skyline. */
+  def barrier(maxSeenId: Long, pending: Seq[(String, Long)], dataIds: Seq[Long],
+              triggers: Seq[(String, Long)]): BarrierStep = {
+    val maxId = dataIds.foldLeft(maxSeenId)(math.max)
+    val (ready, parked) = pending.partition { case (pl, _) =>
+      maxId >= requiredCount(pl) }
+    val (fireNow, parkNew) = triggers.partition { case (pl, _) =>
+      maxId >= requiredCount(pl) || maxId == -1L }
+    BarrierStep(maxId, ready, fireNow, parked ++ parkNew)
+  }
+
+  /** Bookkeeping of a query no partition has answered yet. */
+  val emptyMeta: GlobalMeta = GlobalMeta(0, Long.MaxValue, 0L, 0L, 0L, Nil)
+
+  /** A3 countdown latch: counts one local result arriving at `nowMs` into a
+    * query's bookkeeping, or returns None when its partition has already
+    * answered. The latch counts DISTINCT partitions: a duplicated trigger
+    * payload makes every partition answer twice, and a raw arrival counter
+    * would both fill early (missing the slow partitions' skylines) and
+    * merge duplicate antichains. */
+  def latch(m: GlobalMeta, r: LocalResult, nowMs: Long): Option[GlobalMeta] =
+    if (m.localSizes.exists(_._1 == r.pid)) None
+    else Some(GlobalMeta(m.arrived + 1, math.min(m.minStart, r.startMs), nowMs,
+      math.max(m.maxCpu, r.cpuMs), r.dispatchMs,
+      m.localSizes :+ (r.pid -> r.skyline.size)))
+
   /** A1+A2: local BNL skyline + barrier/trigger state machine, keyed by
-    * spatial partition id. Same state transitions as
-    * [[SkylineStream.stepLocal]] (the flatMapGroupsWithState shell), but
-    * with the antichain SPLIT OUT of the scalar value state into a
-    * RocksDB ListState and maintained lazily:
+    * spatial partition id, with the antichain SPLIT OUT of the scalar value
+    * state into a RocksDB ListState and maintained lazily:
     *
     *  - a data-only micro-batch APPENDS its points to the list (O(batch)
     *    writes) instead of restoring + re-inserting + rewriting the whole
@@ -57,7 +111,7 @@ object SkylineStreamTWS {
     @transient private var sc: ValueState[LocalScalars] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      // fresh handle names ("local" held the old monolithic LocalState):
+      // fresh handle names ("local" held an earlier one-value state):
       // a pre-split checkpoint restarts with fresh state instead of
       // crashing on a state-schema mismatch. CAVEAT — "fresh" means the
       // old antichain/barrier state is silently DISCARDED, which for an
@@ -75,62 +129,43 @@ object SkylineStreamTWS {
                                  tv: TimerValues): Iterator[LocalResult] = {
       val t0 = System.nanoTime()
       val st = if (sc.exists()) sc.get() else LocalScalars(-1L, Nil, 0L, 0L, 0)
-      var maxId = st.maxSeenId
       var startMs = st.startMs
-      // data before triggers within the batch (deterministic barrier
-      // semantics, like stepLocal)
       val (data, triggers) = rows.toSeq.partition(_.kind == 0)
       if (data.nonEmpty) {
         if (startMs == 0L) startMs = System.currentTimeMillis()
-        val pts = new Array[Point](data.length)
-        var i = 0
-        data.foreach { e =>
-          if (e.id > maxId) maxId = e.id
-          pts(i) = Point(e.id, e.values); i += 1
-        }
-        sky.appendList(pts)
+        sky.appendList(data.map(e => Point(e.id, e.values)).toArray)
       }
-      // parked queries re-check only when new data moved the barrier
-      val (ready, parked) =
-        if (data.nonEmpty)
-          st.pending.partition { case (pl, _) =>
-            maxId >= SkylineStream.requiredCount(pl) }
-        else (Nil, st.pending)
-      // new triggers: fire if barrier satisfied or partition empty
-      // (maxId == -1, reference parity — see stepLocal)
-      val (fireNow, parkNew) = triggers.partition(e =>
-        maxId >= SkylineStream.requiredCount(e.payload) || maxId == -1L)
-      val pending = parked ++ parkNew.map(e => (e.payload, e.dispatchMs))
+      val b = barrier(st.maxSeenId, st.pending, data.map(_.id),
+        triggers.map(e => (e.payload, e.dispatchMs)))
+      val fire = b.ready ++ b.fireNow
       val nUnc = st.nUncompacted + data.length
-      val mustFire = ready.nonEmpty || fireNow.nonEmpty
+      val compact = fire.nonEmpty || nUnc >= compactLimit
       var compacted: Seq[Point] = Nil
-      var nUncOut = nUnc
-      if (mustFire || nUnc >= compactLimit) {
+      if (compact) {
         compacted = SkylineBuffer.of(sky.get()).result
         // ListState.put rejects empty arrays (Spark 4 contract)
         if (compacted.nonEmpty) sky.put(compacted.toArray) else sky.clear()
-        nUncOut = 0
       }
       val cpu = st.cpuNanos + (System.nanoTime() - t0)
-      sc.update(LocalScalars(maxId, pending, startMs, cpu, nUncOut))
-      if (!mustFire) Iterator.empty
+      sc.update(LocalScalars(b.maxSeenId, b.parked, startMs, cpu,
+        if (compact) 0 else nUnc))
+      if (fire.isEmpty) Iterator.empty
       else {
         val pts = compacted.map(_.copy(originPartition = pid))
         val start = if (startMs == 0L) System.currentTimeMillis() else startMs
-        val cpuMs = cpu / 1000000L
-        (ready.iterator.map { case (pl, dm) =>
-          LocalResult(pid, pl, dm, start, pts, cpuMs) } ++
-          fireNow.iterator.map(e =>
-            LocalResult(pid, e.payload, e.dispatchMs, start, pts, cpuMs)))
+        fire.iterator.map { case (pl, dm) =>
+          LocalResult(pid, pl, dm, start, pts, cpu / 1000000L) }
       }
     }
   }
 
   /** A3: global skyline merge + countdown latch, keyed by query payload.
-    * Emits exactly when all `totalPartitions` local results arrived, then
-    * clears the per-query state (`FlinkSkyline.java:573,653-657`). */
-  class GlobalProcessor(totalPartitions: Int)
-      extends StatefulProcessor[String, LocalResult, QueryResult] {
+    * When all `totalPartitions` local results have arrived it emits
+    * `emit(payload, meta, finishMs, globalSkyline)` and clears the per-query
+    * state (`FlinkSkyline.java:573,653-657`). */
+  class GlobalProcessor[O](totalPartitions: Int,
+                           emit: (String, GlobalMeta, Long, Seq[Point]) => Iterator[O])
+      extends StatefulProcessor[String, LocalResult, O] {
     @transient private var buf: ListState[Point] = _
     @transient private var meta: ValueState[GlobalMeta] = _
 
@@ -142,42 +177,20 @@ object SkylineStreamTWS {
     }
 
     override def handleInputRows(payload: String, rows: Iterator[LocalResult],
-                                 tv: TimerValues): Iterator[QueryResult] = {
-      var m = if (meta.exists()) meta.get()
-        else GlobalMeta(0, Long.MaxValue, 0L, 0L, 0L, Nil)
+                                 tv: TimerValues): Iterator[O] = {
+      var m = if (meta.exists()) meta.get() else emptyMeta
       val sky = new SkylineBuffer
       buf.get().foreach(p => sky.points += p)  // restore merged antichain
       rows.foreach { r =>
-        // distinct-pid latch: a duplicated trigger payload makes partitions
-        // answer twice; counting raw arrivals would fill the latch early
-        // (dropping slow partitions) and double-merge antichains
-        if (!m.localSizes.exists(_._1 == r.pid)) {
-          m = GlobalMeta(m.arrived + 1,
-            math.min(m.minStart, r.startMs), System.currentTimeMillis(),
-            math.max(m.maxCpu, r.cpuMs), r.dispatchMs,
-            m.localSizes :+ (r.pid -> r.skyline.size))
+        latch(m, r, System.currentTimeMillis()).foreach { counted =>
+          m = counted
           r.skyline.foreach(sky.insert)
         }
       }
       if (m.arrived >= totalPartitions) {
-        val finish = System.currentTimeMillis()
-        val global = sky.result
-        val survivors = global.groupBy(_.originPartition).view.mapValues(_.size)
-        val sizesByPid = m.localSizes.toMap
-        val sumRatios = (0 until totalPartitions).map { i =>
-          sizesByPid.get(i) match {
-            case Some(sz) if sz > 0 => survivors.getOrElse(i, 0).toDouble / sz
-            case _ => 0.0
-          }
-        }.sum
-        val parts = payload.split(",")
-        val mapWall = math.max(0L, m.lastArrival - m.minStart)
+        val finish = System.currentTimeMillis()  // before sky.result compacts
         buf.clear(); meta.clear()
-        Iterator.single(QueryResult(parts(0),
-          if (parts.length > 1) parts(1).trim else "unknown",
-          global.size, sumRatios / totalPartitions,
-          math.max(0L, mapWall - m.maxCpu), m.maxCpu,
-          finish - m.lastArrival, finish - m.minStart))
+        emit(payload, m, finish, sky.result)
       } else {
         // ListState.put rejects empty arrays (Spark 4 contract): a latch
         // fed only empty-partition answers so far has nothing to store
@@ -189,83 +202,57 @@ object SkylineStreamTWS {
     }
   }
 
-  /** Like [[GlobalProcessor]] but emits the merged global skyline POINTS at
-    * latch-fill (for oracle-checking the chained topology against the batch
-    * skyline SQL; the reference's suppressed-payload emission path,
-    * `FlinkSkyline.java:643-646`, behind its output flag). */
-  /** Distinct partitions already counted toward a query's latch (duplicate
-    * trigger payloads make partitions answer more than once). */
-  case class ArrivedPids(pids: Seq[Int])
-
-  class GlobalPointsProcessor(totalPartitions: Int)
-      extends StatefulProcessor[String, LocalResult, Point] {
-    @transient private var buf: ListState[Point] = _
-    @transient private var arrived: ValueState[ArrivedPids] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      buf = getHandle.getListState[Point]("buf",
-        Encoders.product[Point], TTLConfig.NONE)
-      // handle named 'arrived_pids', NOT 'arrived': the value encoding
-      // changed from Int to ArrivedPids, and reusing the old handle name
-      // would make a restart from a pre-change checkpoint fail on a
-      // state-schema mismatch instead of starting this state fresh
-      arrived = getHandle.getValueState[ArrivedPids]("arrived_pids",
-        Encoders.product[ArrivedPids], TTLConfig.NONE)
-    }
-
-    override def handleInputRows(payload: String, rows: Iterator[LocalResult],
-                                 tv: TimerValues): Iterator[Point] = {
-      var pids = if (arrived.exists()) arrived.get().pids else Nil
-      val sky = new SkylineBuffer
-      buf.get().foreach(p => sky.points += p)
-      rows.foreach { r =>
-        // distinct-pid latch; see GlobalProcessor
-        if (!pids.contains(r.pid)) {
-          pids = pids :+ r.pid
-          r.skyline.foreach(sky.insert)
-        }
-      }
-      if (pids.size >= totalPartitions) {
-        buf.clear(); arrived.clear()
-        sky.result.iterator
-      } else {
-        // ListState.put rejects empty arrays (Spark 4 contract)
-        val merged = sky.result
-        if (merged.nonEmpty) buf.put(merged.toArray) else buf.clear()
-        arrived.update(ArrivedPids(pids))
-        Iterator.empty
-      }
-    }
+  /** The reference's emitted metrics object for a completed query
+    * (`FlinkSkyline.java:590-648`). */
+  def queryResult(payload: String, m: GlobalMeta, finish: Long,
+                  global: Seq[Point], totalPartitions: Int): QueryResult = {
+    val survivors = global.groupBy(_.originPartition).view
+      .mapValues(_.size.toLong).toMap
+    val parts = payload.split(",")
+    val mapWall = math.max(0L, m.lastArrival - m.minStart)
+    QueryResult(parts(0), if (parts.length > 1) parts(1).trim else "unknown",
+      global.size,
+      SkylineOps.optimality(m.localSizes.toMap, survivors, totalPartitions),
+      math.max(0L, mapWall - m.maxCpu), m.maxCpu,
+      finish - m.lastArrival, finish - m.minStart)
   }
 
-  /** [[topology]] variant emitting the global skyline points. */
+  /** The local stage alone: one [[LocalResult]] per partition and fired
+    * query. */
+  def localStage(env: Dataset[Envelope],
+                 compactLimit: Int = 5000): Dataset[LocalResult] = {
+    implicit val lrEnc: Encoder[LocalResult] = ExpressionEncoder[LocalResult]()
+    implicit val intEnc: Encoder[Int] = Encoders.scalaInt
+    env.groupByKey(_.pid)
+      .transformWithState(new LocalProcessor(compactLimit), TimeMode.None(),
+        OutputMode.Append())
+  }
+
+  /** The local stage chained into a [[GlobalProcessor]] that emits `emit`. */
+  private def chained[O: Encoder](env: Dataset[Envelope], totalPartitions: Int,
+                                  compactLimit: Int)(
+      emit: (String, GlobalMeta, Long, Seq[Point]) => Iterator[O]): Dataset[O] = {
+    implicit val strEnc: Encoder[String] = Encoders.STRING
+    localStage(env, compactLimit).groupByKey(_.payload)
+      .transformWithState(new GlobalProcessor(totalPartitions, emit),
+        TimeMode.None(), OutputMode.Append())
+  }
+
+  /** [[topology]] variant emitting the merged global skyline points (for
+    * oracle-checking against the batch skyline SQL; the reference's
+    * suppressed-payload emission path, `FlinkSkyline.java:643-646`). */
   def topologyPoints(env: Dataset[Envelope], totalPartitions: Int,
                      compactLimit: Int = 5000): Dataset[Point] = {
-    implicit val lrEnc: Encoder[LocalResult] = ExpressionEncoder[LocalResult]()
     implicit val ptEnc: Encoder[Point] = ExpressionEncoder[Point]()
-    implicit val intEnc: Encoder[Int] = Encoders.scalaInt
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    env.groupByKey(_.pid)
-      .transformWithState(new LocalProcessor(compactLimit), TimeMode.None(),
-        OutputMode.Append())
-      .groupByKey(_.payload)
-      .transformWithState(new GlobalPointsProcessor(totalPartitions),
-        TimeMode.None(), OutputMode.Append())
+    chained(env, totalPartitions, compactLimit)((_, _, _, global) => global.iterator)
   }
 
-  /** The full chained topology. Requires the RocksDB state store provider
-    * (`spark.sql.streaming.stateStore.providerClass`). */
+  /** The full chained topology. A streaming run requires the RocksDB state
+    * store provider (`spark.sql.streaming.stateStore.providerClass`). */
   def topology(env: Dataset[Envelope], totalPartitions: Int,
                compactLimit: Int = 5000): Dataset[QueryResult] = {
-    implicit val lrEnc: Encoder[LocalResult] = ExpressionEncoder[LocalResult]()
     implicit val qrEnc: Encoder[QueryResult] = ExpressionEncoder[QueryResult]()
-    implicit val intEnc: Encoder[Int] = Encoders.scalaInt
-    implicit val strEnc: Encoder[String] = Encoders.STRING
-    env.groupByKey(_.pid)
-      .transformWithState(new LocalProcessor(compactLimit), TimeMode.None(),
-        OutputMode.Append())
-      .groupByKey(_.payload)
-      .transformWithState(new GlobalProcessor(totalPartitions),
-        TimeMode.None(), OutputMode.Append())
+    chained(env, totalPartitions, compactLimit)((payload, m, finish, global) =>
+      Iterator.single(queryResult(payload, m, finish, global, totalPartitions)))
   }
 }

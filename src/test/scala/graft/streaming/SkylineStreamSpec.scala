@@ -1,16 +1,17 @@
 package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Dominance, Point}
+import graft.core.Dominance
 import graft.operators.SparkTestSession
-import graft.streaming.SkylineStream._
 
 /** End-to-end streaming protocol tests (reference A1/A2/A3 + B1 + C1):
-  * barrier parking/firing across micro-batches, empty-partition immediate
-  * answers, duplicate survival, and agreement with the batch skyline. */
+  * barrier parking/firing across micro-batches (on the local
+  * transformWithState stage), empty-partition immediate answers, duplicate
+  * survival, and agreement with the batch skyline (the chained topology run
+  * as a batch query). */
 class SkylineStreamSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -20,10 +21,38 @@ class SkylineStreamSpec extends AnyFunSuite {
   private def mkLines(pts: Seq[(Long, Double, Double)]): Seq[String] =
     pts.map { case (id, a, b) => s"$id,$a,$b" }
 
-  private def bruteSkyline(pts: Seq[(Long, Double, Double)]): Set[(Double, Double)] = {
+  /** Skyline size with duplicates counted individually (BNL semantics). */
+  private def bruteSize(pts: Seq[(Long, Double, Double)]): Int = {
     val vs = pts.map { case (_, a, b) => Array(a, b) }
-    vs.filter(t => !vs.exists(u => Dominance.dominates(u, t)))
-      .map(a => (a(0), a(1))).toSet
+    vs.count(t => !vs.exists(u => Dominance.dominates(u, t)))
+  }
+
+  /** Runs `body` against the local stage of the topology on a streaming
+    * query over two MemoryStreams (data lines, trigger payloads), with the
+    * RocksDB provider transformWithState needs. */
+  private def withLocalStage(name: String)(
+      body: (MemoryStream[String], MemoryStream[String], StreamingQuery) => Unit): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ckpt = java.nio.file.Files.createTempDirectory(name).toString
+    val dataIn = MemoryStream[String]
+    val trigIn = MemoryStream[String]
+    val n = N; val dom = DOMAIN   // local copies: closures must not capture the spec
+    val pidOf = graft.operators.SkylineOps.pidFunction("mr-dim", dom, n)
+    val env = dataIn.toDS().flatMap(l => SkylineStream.parseData(l, pidOf))
+      .unionAll(trigIn.toDS().flatMap(p =>
+        SkylineStream.broadcastTrigger(p, n, 12345L)))
+    val q = SkylineStreamTWS.localStage(env)
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", ckpt)
+      .outputMode(OutputMode.Append).start()
+    try body(dataIn, trigIn, q)
+    finally {
+      q.stop()
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("batch pipeline: trigger after data computes the global skyline + metrics") {
@@ -39,8 +68,7 @@ class SkylineStreamSpec extends AnyFunSuite {
     assert(res.length == 1)
     val r = res.head
     assert(r.queryId == "1" && r.recordCount == "400")
-    assert(r.skylineSize == bruteSkyline(pts).size ||
-      r.skylineSize >= bruteSkyline(pts).size) // duplicates counted individually
+    assert(r.skylineSize == bruteSize(pts))  // duplicates counted individually
     assert(r.optimality >= 0.0 && r.optimality <= 1.0)
     assert(r.toJson.contains("\"skyline_size\""))
   }
@@ -57,19 +85,7 @@ class SkylineStreamSpec extends AnyFunSuite {
   }
 
   test("streaming: trigger parks until the barrier is reached in a later batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dataIn = MemoryStream[String]
-    val trigIn = MemoryStream[String]
-    val n = N; val dom = DOMAIN   // local copies: closures must not capture the spec
-    val pidOf = graft.operators.SkylineOps.pidFunction("mr-dim", dom, n)
-    val env = dataIn.toDS().flatMap(l => SkylineStream.parseData(l, pidOf))
-      .unionAll(trigIn.toDS().flatMap(p =>
-        SkylineStream.broadcastTrigger(p, n, 12345L)))
-    val local = SkylineStream.localPhase(env)
-    val q = local.writeStream.format("memory").queryName("local_out")
-      .outputMode(OutputMode.Append).start()
-    try {
+    withLocalStage("local_out") { (dataIn, trigIn, q) =>
       // batch 1: a bit of data up to id 9 + a trigger requiring id >= 20
       dataIn.addData(mkLines(Seq((0L, 50.0, 50.0), (9L, 10.0, 90.0))))
       trigIn.addData("1,20")
@@ -87,29 +103,18 @@ class SkylineStreamSpec extends AnyFunSuite {
       // every partition answered exactly once for this query
       assert(afterB2.map(r => (r.getAs[Int]("pid"), r.getAs[String]("payload")))
         .distinct.length == N)
-    } finally q.stop()
+      assert(afterB2.length == N)
+    }
   }
 
   test("bare trigger payload (no comma) fires immediately; empty partitions answer") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val dataIn = MemoryStream[String]
-    val trigIn = MemoryStream[String]
-    val n = N; val dom = DOMAIN
-    val pidOf = graft.operators.SkylineOps.pidFunction("mr-dim", dom, n)
-    val env = dataIn.toDS().flatMap(l => SkylineStream.parseData(l, pidOf))
-      .unionAll(trigIn.toDS().flatMap(p =>
-        SkylineStream.broadcastTrigger(p, n, 1L)))
-    val q = SkylineStream.localPhase(env)
-      .writeStream.format("memory").queryName("bare_out")
-      .outputMode(OutputMode.Append).start()
-    try {
+    withLocalStage("bare_out") { (_, trigIn, q) =>
       trigIn.addData("9")
       q.processAllAvailable()
       val rows = spark.table("bare_out").collect()
       assert(rows.length == N)               // all partitions answer immediately
       assert(rows.forall(_.getAs[Seq[Any]]("skyline").isEmpty))
-    } finally q.stop()
+    }
   }
 
   test("streaming result equals batch skyline across strategies") {
@@ -117,21 +122,13 @@ class SkylineStreamSpec extends AnyFunSuite {
     val rng = new scala.util.Random(17)
     val pts = Seq.tabulate(800)(i =>
       (i.toLong, rng.nextInt(80).toDouble, rng.nextInt(80).toDouble))
-    val expect = bruteSkyline(pts)
+    val expect = bruteSize(pts)
     for (strategy <- Seq("mr-dim", "mr-grid", "mr-angle")) {
-      val n = N
-      val pidOf = graft.operators.SkylineOps.pidFunction(strategy, 80.0, n)
-      val env = spark.createDataset(mkLines(pts))
-        .flatMap(l => SkylineStream.parseData(l, pidOf))
-        .unionAll(spark.createDataset(
-          SkylineStream.broadcastTrigger("q,700", n, 0L)))
-      val local = SkylineStream.localPhase(env)
-      val agg = new SkylineStream.GlobalAggregator(n)
-      local.collect().foreach(agg.offer)
-      val res = agg.results
+      val res = SkylineStream.runBatch(spark, spark.createDataset(mkLines(pts)),
+        Seq("q,700"), strategy, 80.0, N)
       assert(res.length == 1, strategy)
-      // distinct-value skyline agreement (duplicate multiplicity preserved too)
-      assert(res.head.skylineSize >= expect.size, strategy)
+      // every strategy returns the exact skyline, duplicates included
+      assert(res.head.skylineSize == expect, strategy)
     }
   }
 }
