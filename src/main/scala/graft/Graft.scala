@@ -22,7 +22,9 @@ object Graft {
 
   // --- skyline (reference surface) ---------------------------------------
 
-  /** Global skyline of `df` over the given (minimized) dimension columns. */
+  /** Global skyline of `df` over the given (minimized) dimension columns,
+    * keyed by its first column; the global merge runs in parallel (see
+    * [[SkylineOps.skylineDF]]). */
   def skyline(df: DataFrame, dims: Seq[String]): DataFrame =
     SkylineOps.skylineDF(df, df.columns.head, dims)
 

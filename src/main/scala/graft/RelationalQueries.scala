@@ -363,7 +363,7 @@ object RelationalQueries {
         expr("(ts div 1000000000) div 3600 * 3600").as("bucket_start"),
         col("event_id"), col("value").cast("double").as("v1"),
         get_json_object(col("props"), "$.k").cast("double").as("v2"))
-      graft.operators.SkylineOps.groupedSkylineDF(ev, "bucket_start",
+      graft.operators.SkylineOps.skylineGroupedDF(ev, Seq("bucket_start"),
         "event_id", Seq("v1", "v2")).orderBy("bucket_start", "event_id")
     }),
     // as-of join: for each error event, the user's latest prior purchase

@@ -288,10 +288,6 @@ final class SkylineBuffer extends Serializable {
     s
   }
 
-  /** BNL insert (staged; the fixpoint is identical to the reference's
-    * immediate insert-with-eviction — BNL is order-insensitive). */
-  def insert(c: Point): Unit = add(c)
-
   /** Lazy merge: concatenate; the sorted bulk build happens at the next
     * compact()/result. Keeps the two-phase Aggregator's final merge a single
     * presorted pass instead of s² incremental BNL inserts. */

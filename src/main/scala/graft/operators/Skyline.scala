@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
-import graft.core.{Dominance, Point, SkylineBuffer}
+import graft.core.{Point, SkylineBuffer}
 
 /** Skyline (Pareto frontier, minimization) as a typed Spark `Aggregator`.
   *
@@ -29,16 +29,33 @@ class SkylineAgg extends Aggregator[Point, SkylineBuffer, Seq[Point]] {
 object SkylineOps {
 
   /** Lift a relational frame into the typed point model: one id column plus the
-    * dimension columns (all cast to double). */
+    * dimension columns (all cast to double). A row with a null or NaN
+    * dimension is malformed and dropped (NaN would break the transitivity
+    * every merge path relies on). */
   def pointsFrom(df: DataFrame, idCol: String, dimCols: Seq[String]): Dataset[Point] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select(
-      col(idCol).cast("long").as("id"),
-      array(dimCols.map(c => col(c).cast("double")): _*).as("values"),
-      lit(-1).as("originPartition")
-    ).as[Point]
+    pointColumns(df, Nil, idCol, dimCols).as[Point]
   }
+
+  /** `keep` columns, then the [[Point]] columns (id, values,
+    * originPartition) of the rows whose dimensions are all non-null and not
+    * NaN — a plain codegen'd filter on the cast dimension columns. */
+  private def pointColumns(df: DataFrame, keep: Seq[Column], idCol: String,
+                           dimCols: Seq[String]): DataFrame = {
+    val dims = dimCols.map(c => col(c).cast("double"))
+    df.where(dims.map(d => d.isNotNull && !isnan(d)).foldLeft(lit(true))(_ && _))
+      .select(keep ++ Seq(col(idCol).cast("long").as("id"),
+        array(dims: _*).as("values"), lit(-1).as("originPartition")): _*)
+  }
+
+  /** Points back in the relational layout: `idCol`, then one column per
+    * dimension. */
+  private[graft] def pointsToColumns(pts: Dataset[Point], idCol: String,
+                                     dimCols: Seq[String]): DataFrame =
+    pts.toDF("id", "values", "op").select(col("id").as(idCol) +:
+      dimCols.zipWithIndex.map { case (c, i) =>
+        element_at(col("values"), i + 1).as(c) }: _*)
 
   /** Global skyline via one aggregation — Catalyst plans partial per-partition
     * BNL (combiner) + a single final merge, mirroring the reference's
@@ -164,44 +181,10 @@ object SkylineOps {
             "global_processing_time_ms", "total_processing_time_ms")
   }
 
-  /** Grouped skyline: one Pareto frontier per group key (e.g. per event-time
-    * window) — the relational `groupBy().agg(skyline)` form. Partial
-    * aggregation applies per group, so each group's combiner runs map-side
-    * and groups are fully parallel. */
-  def groupedSkylineDF(df: DataFrame, groupCol: String, idCol: String,
-                       dimCols: Seq[String]): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    implicit val tupEnc: Encoder[(Long, Point)] = ExpressionEncoder[(Long, Point)]()
-    val prepared = df.select(col(groupCol).cast("long").as("_g"),
-      col(idCol).cast("long").as("id"),
-      array(dimCols.map(c => col(c).cast("double")): _*).as("values"))
-      .as[(Long, Long, Seq[Double])]
-      .map { case (g, id, vs) => (g, Point(id, vs.toArray)) }
-    prepared.groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(new SkylineAgg().toColumn)
-      .flatMap { case (g, pts) => pts.map(p => (g, p.id, p.values.toSeq)) }
-      .toDF(groupCol, idCol, "values")
-      .select(col(groupCol) +: col(idCol) +:
-        dimCols.zipWithIndex.map { case (c, i) =>
-          element_at(col("values"), i + 1).as(c) }: _*)
-  }
-
-  /** Large-scale skyline via log-depth tree aggregation: partial per-partition
-    * skylines combine pairwise across executors instead of funneling every
-    * local skyline into one single-threaded final merge. Same fixpoint as
-    * [[skyline]]; use when local skylines are large (high-dimensional /
-    * anti-correlated data — the reference's 4-D curse-of-dimensionality case,
-    * PDF §5.3). */
-  def skylineTree(ds: Dataset[Point], depth: Int = 3): Seq[Point] =
-    ds.rdd.treeAggregate(SkylineBuffer.empty)(
-      (b, p) => { b.add(p); b },
-      (a, b) => a.merge(b),
-      depth).result
-
-  /** skylineTree through a spatial strategy (local phase keyed by the
-    * partitioner, tagged for optimality, then tree-merged). */
+  /** Large-scale skyline via log-depth tree aggregation through a spatial
+    * strategy: the local phase is keyed by the partitioner and tagged for
+    * optimality, then partial skylines combine pairwise across executors
+    * instead of funneling into one single-threaded final merge. */
   def skylineTreeViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
                              numPartitions: Int, depth: Int = 3): Seq[Point] = {
     implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
@@ -662,11 +645,11 @@ object SkylineOps {
     * Candidate fan-out is the superset-enumeration of each cell (a cell with
     * k high bits is re-sent to 2^(d-k) cells). Measured tradeoff (bench
     * pair sky_1m_3d_gridpar / sky_1m_3d_tree_uni, plus 4-D/500k anti runs):
-    * at sizes where the candidate union fits one thread, [[skylineTree]]
-    * wins on BOTH uniform (1M/3-D: tree 0.33 s vs grid 2.1 s — the
-    * skyline is tiny, so the merge is trivial and gridpar's routing
-    * shuffle dominates) and anti-correlated data (4-D/500k: tree ~90 s vs
-    * grid ~400 s). Gridpar's value is the memory bound, not raw speed:
+    * at sizes where the candidate union fits one thread, the tree merge
+    * ([[skylineTreeViaStrategy]]) wins on BOTH uniform (1M/3-D: tree
+    * 0.33 s vs grid 2.1 s — the skyline is tiny, so the merge is trivial
+    * and gridpar's routing shuffle dominates) and anti-correlated data
+    * (4-D/500k: tree ~90 s vs grid ~400 s). Gridpar's value is the memory bound, not raw speed:
     * each of the 2^d merges sees only its subset cells' candidates, so no
     * single task ever materializes the full candidate union — the
     * property that matters once that union exceeds one executor's heap,
@@ -714,15 +697,6 @@ object SkylineOps {
     }
   }
 
-  /** Sort-based 2-D skyline. A point (v1,v2) is Pareto-minimal iff v2 equals
-    * the min of its v1-group AND no strictly smaller v1-group has a min
-    * v2 <= v2. The public path delegates to [[skyline2DDFScalable]], whose
-    * prefix-min is range-partitioned — no task ever sees all distinct v1
-    * values, so the plan has no single-partition window at any scale.
-    * Duplicates of a skyline point all survive, like the BNL path. */
-  def skyline2DDF(df: DataFrame, idCol: String, v1: String, v2: String): DataFrame =
-    skyline2DDFScalable(df, idCol, v1, v2)
-
   /** Windowed reference formulation of the 2-D sort skyline: one global
     * prefix-min window over the DISTINCT v1 values. Kept ONLY as a test
     * oracle for [[skyline2DDFScalable]] — the `Window.orderBy` with no
@@ -741,11 +715,13 @@ object SkylineOps {
       .select(col(idCol), col(v1), col(v2))
   }
 
-  /** Fully-distributed 2-D skyline: like [[skyline2DDF]] but the prefix-min
-    * over distinct v1 values is computed with a range-partitioned two-pass
-    * scan instead of one global window — per-partition local prefix minima
-    * plus broadcast per-partition offsets — so no single task ever sees all
-    * distinct v1 values. Identical output. */
+  /** Sort-based, fully-distributed 2-D skyline. A point (v1,v2) is
+    * Pareto-minimal iff v2 equals the min of its v1-group AND no strictly
+    * smaller v1-group has a min v2 <= v2. The prefix-min over distinct v1
+    * values is a range-partitioned two-pass scan — per-partition local
+    * prefix minima plus broadcast per-partition offsets — so no single task
+    * ever sees all distinct v1 values. Duplicates of a skyline point all
+    * survive, like the BNL path. */
   def skyline2DDFScalable(df: DataFrame, idCol: String, v1: String, v2: String,
                           numRanges: Int = 32): DataFrame = {
     val spark = df.sparkSession
@@ -789,15 +765,17 @@ object SkylineOps {
       .select(col(idCol), col(v1), col(v2))
   }
 
-  /** Relational skyline over explicit dimension columns: returns the input rows
-    * that are Pareto-optimal (duplicates preserved). Implemented as the typed
-    * two-phase aggregate, then re-expanded to the original column layout. */
-  def skylineDF(df: DataFrame, idCol: String, dimCols: Seq[String]): DataFrame = {
-    val res = skyline(pointsFrom(df, idCol, dimCols)).toDF("id", "values", "op")
-    res.select(col("id").as(idCol) +:
-      dimCols.zipWithIndex.map { case (c, i) =>
-        element_at(col("values"), i + 1).as(c) }: _*)
-  }
+  /** Relational skyline over explicit dimension columns: (idCol, dims...) of
+    * the Pareto-optimal input rows (duplicates preserved; rows with a null or
+    * NaN dimension dropped, see [[pointsFrom]]). The global phase is the
+    * fully parallel [[skylineBroadcastFilter]] merge — per-partition local
+    * antichains, then every candidate dominance-checked against the
+    * broadcast union across all cores, falling back to the chunked pairwise
+    * cross-filter past the broadcast bound — so no single-threaded final
+    * merge appears anywhere in the plan. */
+  def skylineDF(df: DataFrame, idCol: String, dimCols: Seq[String]): DataFrame =
+    pointsToColumns(skylineBroadcastFilter(pointsFrom(df, idCol, dimCols)),
+      idCol, dimCols)
 
   /** Per-group skyline in ONE aggregation: every group gets its own Pareto
     * frontier (e.g. the price/size frontier per brand). The typed
@@ -807,16 +785,13 @@ object SkylineOps {
     * sharded across groups by the hash exchange instead of funneling through
     * one global task. Grouping is therefore *free parallelism* for the global
     * phase — the more groups, the wider the merge — which is exactly how a
-    * per-tenant / per-category frontier should execute at 100 TB. */
+    * per-tenant / per-category frontier should execute at 100 TB. Rows with
+    * a null or NaN dimension are dropped, as in [[pointsFrom]]. */
   def skylineGroupedDF(df: DataFrame, groupCols: Seq[String], idCol: String,
                        dimCols: Seq[String]): DataFrame = {
     val skyU = udaf(new SkylineAgg(), ExpressionEncoder[Point]())
-    val prepared = df.select(
-      groupCols.map(col) ++ Seq(
-        col(idCol).cast("long").as("id"),
-        array(dimCols.map(c => col(c).cast("double")): _*).as("values"),
-        lit(-1).as("originPartition")): _*)
-    prepared.groupBy(groupCols.map(col): _*)
+    pointColumns(df, groupCols.map(col), idCol, dimCols)
+      .groupBy(groupCols.map(col): _*)
       .agg(skyU(col("id"), col("values"), col("originPartition")).as("sky"))
       .select(groupCols.map(col) :+ explode(col("sky")).as("p"): _*)
       .select(groupCols.map(col) ++ (col("p.id").as(idCol) +:
@@ -824,33 +799,12 @@ object SkylineOps {
           element_at(col("p.values"), i + 1).as(c) }): _*)
   }
 
-  /** [[skylineDF]] whose GLOBAL phase is the fully-parallel broadcast
-    * cross-filter merge ([[skylineBroadcastFilter]]): per-partition local
-    * antichains, then every candidate dominance-checked against the
-    * broadcast union across all cores — no single-threaded final merge
-    * anywhere in the plan (the typed-Aggregator form funnels every local
-    * skyline through ONE final-merge task, the reference's dominant cost).
-    * Falls back to the chunked pairwise cross-filter past the broadcast
-    * bound. */
-  def skylineDFDistributed(df: DataFrame, idCol: String,
-                           dimCols: Seq[String]): DataFrame = {
-    val res = skylineBroadcastFilter(pointsFrom(df, idCol, dimCols))
-      .toDF("id", "values", "op")
-    res.select(col("id").as(idCol) +:
-      dimCols.zipWithIndex.map { case (c, i) =>
-        element_at(col("values"), i + 1).as(c) }: _*)
-  }
-
   /** skylineDF through an explicit strategy (partition-invariant: same result
     * as skylineDF for every strategy and n). */
   def skylineDFViaStrategy(df: DataFrame, idCol: String, dimCols: Seq[String],
-                           strategy: String, domain: Double, n: Int): DataFrame = {
-    val res = skylineViaStrategy(pointsFrom(df, idCol, dimCols), strategy, domain, n)
-      .toDF("id", "values", "op")
-    res.select(col("id").as(idCol) +:
-      dimCols.zipWithIndex.map { case (c, i) =>
-        element_at(col("values"), i + 1).as(c) }: _*)
-  }
+                           strategy: String, domain: Double, n: Int): DataFrame =
+    pointsToColumns(skylineViaStrategy(pointsFrom(df, idCol, dimCols), strategy,
+      domain, n), idCol, dimCols)
 
   /** Grid-cell-bounded dominator counting (2-D, minimization): for every row,
     * the exact number of rows that strictly dominate it — the k-skyband
@@ -959,63 +913,5 @@ object SkylineOps {
       .select(col("_id").as(idCol), col("_v1").as(v1), col("_v2").as(v2),
         (coalesce(col("_strict"), lit(0L)) + coalesce(col("_border"), lit(0L)))
           .as(countName))
-  }
-
-  /** k-DOMINANT skyline (Chan et al., SIGMOD 2006): the rows not k-dominated
-    * by ANY row, where `u` k-dominates `t` iff u ≤ t in at least `k` of the
-    * `d` dimensions with a strict `<` in at least one of those k. (Any strict
-    * dimension is also a ≤ dimension, so the predicate reduces to
-    * `#{u.vi ≤ t.vi} ≥ k AND #{u.vi < t.vi} ≥ 1`.) k = d is the ordinary
-    * skyline; smaller k is MORE aggressive — useful exactly where the
-    * reference's 4-D runs drown in the curse of dimensionality
-    * (`java/org.main/FlinkSkyline.java` caps at 4 dims for this reason):
-    * relaxed dominance keeps the answer small as d grows.
-    *
-    * Scale shape: every k-dominant skyline point is an ordinary skyline
-    * point (a full dominator d-dominates, hence k-dominates, for any k ≤ d),
-    * so the candidates are exactly the skyline — computed by the fully
-    * distributed broadcast cross-filter merge — and verification is ONE
-    * streamed pass of the full input against the broadcast candidate set
-    * (k-dominance is not transitive, so candidates must be checked against
-    * every row, not just against each other). No self-join of the corpus
-    * anywhere; the only quadratic term is |input| × |skyline| inside a
-    * BroadcastNestedLoopJoin, with |skyline| bounded by the broadcast guard
-    * of [[skylineBroadcastFilter]]. Duplicates of a surviving row are all
-    * kept, like every other skyline path here. */
-  def kDominantSkylineDF(df: DataFrame, idCol: String, dimCols: Seq[String],
-                         k: Int): DataFrame =
-    kDominantFlagsDF(df, idCol, dimCols, k)
-      .where(col("is_kdom")).drop("is_kdom")
-
-  /** Per-skyline-point k-dominance verdict: the ordinary skyline rows with an
-    * `is_kdom` boolean — true iff NO input row k-dominates the point (the
-    * k-dominant skyline is the `is_kdom` subset). The flag form is the
-    * analyst-facing shape: the k-dominant answer is often tiny or empty
-    * (relaxed dominance is aggressive), and seeing WHICH skyline points were
-    * relegated — not just the survivors — is the useful report. Same
-    * broadcast-verify plan as [[kDominantSkylineDF]]. */
-  def kDominantFlagsDF(df: DataFrame, idCol: String, dimCols: Seq[String],
-                       k: Int): DataFrame = {
-    val d = dimCols.size
-    require(k >= 1 && k <= d, s"k must be in [1, $d], got $k")
-    val sky = skylineDFDistributed(df, idCol, dimCols)
-    if (k == d) return sky.withColumn("is_kdom", lit(true))
-    val cand = broadcast(
-      sky.select(col(idCol).as("_tid") +:
-        dimCols.zipWithIndex.map { case (c, i) => col(c).as(s"_t$i") }: _*))
-    val u = df.select(
-      dimCols.zipWithIndex.map { case (c, i) =>
-        col(c).cast("double").as(s"_u$i") }: _*)
-    def cnt(p: (Column, Column) => Column): Column =
-      dimCols.indices.map { i =>
-        when(p(col(s"_u$i"), col(s"_t$i")), 1).otherwise(0): Column
-      }.reduce(_ + _)
-    // one full scan of u, nested-loop-checked against the broadcast
-    // candidates; killed = candidate ids with at least one k-dominator
-    val killed = u.join(cand, cnt(_ <= _) >= k && cnt(_ < _) >= 1)
-      .select(col("_tid")).distinct().withColumn("_killed", lit(true))
-    sky.join(killed, sky(idCol) === killed("_tid"), "left")
-      .select(col(idCol) +: dimCols.map(col) :+
-        not(coalesce(col("_killed"), lit(false))).as("is_kdom"): _*)
   }
 }

@@ -2,13 +2,15 @@ package graft.plans
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-import graft.core.Dominance
+import scala.collection.mutable.ArrayBuffer
+
+import graft.core.{Point, SkylineBuffer}
 
 /** Skyline as a first-class Catalyst operator.
   *
@@ -21,7 +23,8 @@ import graft.core.Dominance
   * node, and the operator composes with any child plan.
   *
   * `dims` are expressions over the child's output evaluating to DOUBLE
-  * (minimization on every dim, duplicates preserved).
+  * (minimization on every dim, duplicates preserved; a row with a null or
+  * NaN dim is dropped).
   */
 case class Skyline(dims: Seq[Expression], child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
@@ -29,104 +32,46 @@ case class Skyline(dims: Seq[Expression], child: LogicalPlan) extends UnaryNode 
   override protected def withNewChildInternal(c: LogicalPlan): Skyline = copy(child = c)
 }
 
-/** Shared row-level BNL over InternalRow (ascending-sum staged build, same
-  * kernel semantics as graft.core.SkylineBuffer but avoiding row→case-class
-  * conversion: rows are copied once into the buffer). */
-private[plans] object RowSkyline {
-  def compute(rows: Iterator[InternalRow], dimEvals: Seq[Expression],
-              copyRow: Boolean): Iterator[InternalRow] = {
-    val buf = scala.collection.mutable.ArrayBuffer[(Array[Double], InternalRow)]()
-    rows.foreach { r =>
-      val vs = new Array[Double](dimEvals.length)
-      var ok = true
-      var i = 0
-      while (i < dimEvals.length) {
-        val v = dimEvals(i).eval(r)
-        if (v == null) ok = false else vs(i) = v.asInstanceOf[Double]
-        i += 1
-      }
-      if (ok) buf += ((vs, if (copyRow) r.copy() else r))
-    }
-    val arr = buf.toArray
-    // sums once per row (the comparator runs O(n log n) times), then the
-    // ascending-sum no-evict walk: a dominator has a strictly smaller sum
-    val sums = new Array[Double](arr.length)
-    var s = 0
-    while (s < arr.length) {
-      var acc = 0.0; var t = 0
-      val vs = arr(s)._1
-      while (t < vs.length) { acc += vs(t); t += 1 }
-      sums(s) = acc; s += 1
-    }
-    val order = Array.range(0, arr.length).sortBy(sums(_))
-    val out = scala.collection.mutable.ArrayBuffer[(Array[Double], InternalRow)]()
-    val outSums = scala.collection.mutable.ArrayBuffer[Double]()
-    var i = 0
-    while (i < order.length) {
-      val c = arr(order(i))
-      var dominated = false
-      var k = 0
-      while (!dominated && k < out.length) {
-        if (Dominance.dominates(out(k)._1, c._1)) dominated = true
-        k += 1
-      }
-      if (!dominated) { out += c; outSums += sums(order(i)) }
-      i += 1
-    }
-    // equal non-finite sums can still dominate each other (the no-evict
-    // invariant needs strictly-smaller-sum dominators) — re-reduce that
-    // normally-empty group pairwise
-    if (outSums.exists(v => !java.lang.Double.isFinite(v))) {
-      val res = scala.collection.mutable.ArrayBuffer[(Array[Double], InternalRow)]()
-      val nf = scala.collection.mutable.ArrayBuffer[(Array[Double], InternalRow)]()
-      var y = 0
-      while (y < out.length) {
-        if (java.lang.Double.isFinite(outSums(y))) res += out(y) else nf += out(y)
-        y += 1
-      }
-      val keep = scala.collection.mutable.ArrayBuffer[(Array[Double], InternalRow)]()
-      nf.foreach { c =>
-        if (!keep.exists(k => Dominance.dominates(k._1, c._1))) {
-          val survivors = keep.filterNot(k => Dominance.dominates(c._1, k._1))
-          keep.clear(); keep ++= survivors; keep += c
+/** What both physical phases run on each input partition: every row is
+  * copied and lifted to `Point(rowIndex, dims)`, [[SkylineBuffer]] (the one
+  * BNL kernel) reduces them, and the rows at the surviving indices come out.
+  * A row with a null or NaN dimension is malformed and dropped. */
+private[plans] trait SkylineRowsExec extends UnaryExecNode {
+  def dims: Seq[Expression]
+  override def output: Seq[Attribute] = child.output
+  override protected def doExecute(): RDD[InternalRow] = {
+    val bound = dims.map(BindReferences.bindReference(_, child.output))
+    child.execute().mapPartitions { it =>
+      val rows = ArrayBuffer[InternalRow]()
+      val pts = it.flatMap { r =>
+        val vs = new Array[Double](bound.length)
+        var ok = true
+        var i = 0
+        while (ok && i < bound.length) {
+          val v = bound(i).eval(r)
+          ok = v != null && !v.asInstanceOf[Double].isNaN
+          if (ok) vs(i) = v.asInstanceOf[Double]
+          i += 1
         }
+        if (ok) { rows += r.copy(); Some(Point(rows.length - 1L, vs)) } else None
       }
-      res ++= keep
-      res.iterator.map(_._2)
-    } else out.iterator.map(_._2)
+      SkylineBuffer.of(pts).result.iterator.map(p => rows(p.id.toInt))
+    }
   }
 }
 
 /** Map-side phase: local skyline per child partition, fully pipelined. */
 case class SkylinePartialExec(dims: Seq[Expression], child: SparkPlan)
-    extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
+    extends SkylineRowsExec {
   override def outputPartitioning: Partitioning = child.outputPartitioning
-  override protected def doExecute(): RDD[InternalRow] = {
-    val boundDims = dims.map(
-      org.apache.spark.sql.catalyst.expressions.BindReferences
-        .bindReference(_, child.output))
-    child.execute().mapPartitions { it =>
-      RowSkyline.compute(it, boundDims, copyRow = true)
-    }
-  }
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
 }
 
 /** Final phase: global merge; `AllTuples` makes Catalyst plan the exchange. */
 case class SkylineFinalExec(dims: Seq[Expression], child: SparkPlan)
-    extends UnaryExecNode {
-  override def output: Seq[Attribute] = child.output
+    extends SkylineRowsExec {
   override def requiredChildDistribution: Seq[Distribution] = AllTuples :: Nil
   override def outputPartitioning: Partitioning = SinglePartition
-  override protected def doExecute(): RDD[InternalRow] = {
-    val boundDims = dims.map(
-      org.apache.spark.sql.catalyst.expressions.BindReferences
-        .bindReference(_, child.output))
-    child.execute().mapPartitions { it =>
-      RowSkyline.compute(it, boundDims, copyRow = true)
-    }
-  }
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
 }
 

@@ -57,14 +57,15 @@ object SkylineStream {
   }
 
   /** Parse a data CSV line "id,v1,...,vd" and stamp its partition id; None on
-    * malformed input (reference P1/F1). */
+    * malformed input (reference P1/F1), which includes a NaN value: NaN
+    * breaks dominance transitivity, so every skyline path drops it. */
   def parseData(line: String, pidOf: Array[Double] => Int): Option[Envelope] = {
     val p = line.split(",")
     if (p.length < 2) return None
     try {
       val id = p(0).trim.toLong
       val vs = Array.tabulate(p.length - 1)(i => p(i + 1).trim.toDouble)
-      Some(Envelope(pidOf(vs), 0, id, vs, "", 0L))
+      if (vs.exists(_.isNaN)) None else Some(Envelope(pidOf(vs), 0, id, vs, "", 0L))
     } catch { case _: NumberFormatException => None }
   }
 

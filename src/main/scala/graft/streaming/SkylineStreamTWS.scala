@@ -184,7 +184,7 @@ object SkylineStreamTWS {
       rows.foreach { r =>
         latch(m, r, System.currentTimeMillis()).foreach { counted =>
           m = counted
-          r.skyline.foreach(sky.insert)
+          r.skyline.foreach(sky.add)
         }
       }
       if (m.arrived >= totalPartitions) {

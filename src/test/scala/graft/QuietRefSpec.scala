@@ -96,6 +96,20 @@ class QuietRefSpec extends AnyFunSuite {
       Set("stable_total_sec", "scale_total_sec", "stream_total_sec"))
   }
 
+  test("section brackets sum only the lap each entry's min-of-pair keeps") {
+    // a: the faster repeat is kept, so the steal burst on its first lap is
+    // dropped; b: the first lap is kept, so the JIT storm on its slower
+    // repeat is dropped; c: a failed first lap is not in the total
+    val results = Map("a" -> 10.0, "b" -> 4.0, "c" -> -1.0)
+    val repeats = Map("a" -> 6.0, "b" -> 9.0, "c" -> 3.0)
+    val steal = Map("a" -> 30.0, "a__rep" -> 0.5, "b" -> 0.25,
+      "b__rep" -> 2.0, "c__rep" -> 8.0)
+    val gc = Map("a" -> 4.0, "a__rep" -> 0.125, "b" -> 0.5, "b__rep" -> 6.0)
+    val jit = Map("a__rep" -> 1.0, "b" -> 0.25, "b__rep" -> 12.0, "c" -> 9.0)
+    assert(Bench.keptLapBrackets(Set("a", "b", "c"), results, repeats,
+      steal, gc, jit) == ((0.75, 0.625, 1.25)))
+  }
+
   test("no quiet ref undercuts committed evidence by 2x (transcription guard)") {
     val bogus = Bench.quietRef.toSeq.sortBy(_._1).flatMap { case (n, ref) =>
       ledgerMin.get(n).filter(m => ref < m * 0.5)

@@ -84,7 +84,7 @@ class SkylineOpsSpec extends AnyFunSuite {
     for (seed <- Seq(6, 7, 8)) {
       val pts = mkPts(3000, 2, seed, card = 50)   // small domain => duplicates
       val df = pts.map(p => (p.id, p.values(0), p.values(1))).toDF("id", "v1", "v2")
-      val fast = SkylineOps.skyline2DDF(df, "id", "v1", "v2")
+      val fast = SkylineOps.skyline2DDFScalable(df, "id", "v1", "v2")
         .as[(Long, Double, Double)].collect().toSet
       val slow = SkylineOps.skyline(pts.toDS()).collect()
         .map(p => (p.id, p.values(0), p.values(1))).toSet

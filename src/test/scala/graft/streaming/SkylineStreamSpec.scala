@@ -76,11 +76,12 @@ class SkylineStreamSpec extends AnyFunSuite {
   test("malformed lines are dropped, duplicates survive") {
     import spark.implicits._
     val lines = Seq("0,5.0,5.0", "1,0.0,0.0", "2,0.0,0.0", "garbage", "3", "4,1.0,xx",
-      "5,0.0,0.0")
+      "5,0.0,0.0", "6,NaN,0.0")
     val res = SkylineStream.runBatch(spark,
       spark.createDataset(lines), Seq("7,5"), "mr-grid", DOMAIN, N)
     assert(res.length == 1)
-    // three duplicates of (0,0) survive; (5,5) dominated
+    // three duplicates of (0,0) survive; (5,5) dominated; the NaN line is
+    // malformed and dropped (kept, nothing would dominate it)
     assert(res.head.skylineSize == 3)
   }
 
