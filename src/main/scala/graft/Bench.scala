@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.SkylineOps
 import graft.sources.Generators
 
@@ -13,7 +11,9 @@ import graft.sources.Generators
   *    non-trivial work at sf0.1);
   *  - reference-workload runs: global skyline of 1M generated anti-correlated
   *    points (the exact BASELINE.md experiment: 2D and 3D, domain [0,10000],
-  *    MR-Angle with 8 partitions — reference totals 17.3s / 27.0s on Flink).
+  *    MR-Angle with 8 partitions — reference totals 17.3s / 27.0s on Flink)
+  *    and the rest of the scale family, run at x1 from the entry table in
+  *    [[BenchHarness]] that [[BenchScale]] runs at 10x.
   */
 object Bench {
 
@@ -84,8 +84,9 @@ object Bench {
     "stream_decontaminate_bloom_ttl",
     "stream_mix_budget", "stream_classifier")
 
-  /** The BASELINE.md reference / scale-stress workloads (coded inline in
-    * main, not catalog entries) — always kept on the trimmed stdout line. */
+  /** The BASELINE.md reference / scale-stress workloads (the
+    * [[BenchHarness]] entry table, not catalog entries) — always kept on
+    * the trimmed stdout line. */
   private[graft] val refWorkloads = Set("sky_1m_2d_anti", "sky_1m_2d_sort",
     "sky_1m_3d_anti", "sky_10m_2d_sort", "sky_10m_3d_bcast",
     "sky_500k_4d_bcast",
@@ -249,110 +250,12 @@ object Bench {
     "text_pii_scrub", "text_quality", "text_repetition", "text_tfidf",
     "text_tokens", "text_top_terms", "text_winnow", "zorder_layout")
 
-  /** Restamp a streaming fixture dir's part files with strictly increasing
-    * mtimes in part-NAME order. FileStreamSource consumes files in
-    * MODIFICATION-TIME order with ties unordered, and a one-job
-    * `repartitionByRange(...).write` stamps every file within the same
-    * instant — an out-of-order batch would rewind event time past a TTL
-    * face's watermark and silently drop rows unscreened. Range partition i
-    * holds the i-th doc_id range, so name order IS event-time order. */
-  private[graft] def restampPartsInNameOrder(dir: String): Unit = {
-    val parts = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.startsWith("part-") &&
-        f.getName.endsWith(".parquet")).sortBy(_.getName)
-    val base = System.currentTimeMillis()
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(base + i * 2000L),
-        s"could not restamp ${f.getName}")
-    }
-  }
 
   def main(args: Array[String]): Unit = {
+    import BenchHarness._
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Catalyst's generated-class cache holds 100 entries by default; the
-      // ~240-entry sweep compiles far more than that between an entry's
-      // first lap and its __rep lap (reps run AFTER the whole catalog), so
-      // every rep re-janinos brand-new classes that HotSpot must re-profile
-      // from zero — the r11 dedup_minhash_est __rep storm (53 janino
-      // recompiles, +65%), i.e. JitDiag's H1 leg, which the 512 MB code
-      // cache (H2) cannot cover. 4096 keeps the whole sweep's generated
-      // classes cached; a rep lap then reuses the first lap's warm classes.
-      // Static conf — must be set at session build, not spark.conf.set.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
-
-    // Unpersist every RDD a lap left pinned — localCheckpoint pushdown
-    // barriers (minhashEstimationAudit, hybrid_rrf_600k's materialized
-    // retrieval lists) and eager merge caches (crossFilterChunks'
-    // survivors) otherwise outlive their lap and tax whatever runs later:
-    // the r9 "anti-warm-up", where dedup_minhash_est_600k's REPEAT read
-    // 2-3x its first run across three artifacts, is block-manager
-    // carryover from exactly these. Scoped by snapshot: only RDDs created
-    // inside `f` are swept, so deliberately cross-lap fixtures (the
-    // decontamination bench indexes, persisted outside the timed bodies)
-    // are exempt.
-    def withRddSweep(f: => Unit): Unit = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      try f finally spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(true))
-    }
-    // block-manager residency (MB) — the attempt-start bracket that names
-    // carryover machine-readably when a lap still anti-warms
-    def cachedMb(): Double = spark.sparkContext.getRDDStorageInfo
-      .map(s => s.memSize + s.diskSize).sum / 1e6
-
-    // Fixed-work LOAD SENTINEL: every core runs the same integer-mix loop,
-    // so the wall time on a quiet machine is one thread's quantum and ANY
-    // external CPU load inflates it proportionally (the sweep totals have
-    // historically swung ~2x under driver-side machine load — r4 and r5
-    // both needed after-the-fact adjudication). Run before AND after the
-    // sweep and written into both JSON outputs, a polluted run labels
-    // itself instead of masquerading as a regression.
-    def loadSentinel(): Double = {
-      val n = Runtime.getRuntime.availableProcessors()
-      time {
-        val ts = (1 to n).map { t =>
-          new Thread(() => {
-            var acc = t.toLong; var i = 0L
-            while (i < 150000000L) {
-              acc = acc * 6364136223846793005L + 1442695040888963407L; i += 1
-            }
-            if (acc == 42L) print("") // defeat dead-code elimination
-          })
-        }
-        ts.foreach(_.start()); ts.foreach(_.join())
-      }
-    }
-
-    // Hypervisor CPU-steal ticks (/proc/stat col 8, USER_HZ=10ms units,
-    // summed over all cores) — the storms that crushed individual sweep
-    // entries 10-30x with QUIET sentinels on both sides turned out to be
-    // host-level steal bursts (one 85s 32-core stall ≈ 272k ticks, and the
-    // machine's cumulative counter matches a handful of exactly such
-    // bursts). steal_sec = the delta across the sweep; ~0 on an honest run,
-    // so any entry spike in a near-zero-steal sweep is REAL and a spike in
-    // a high-steal sweep is the host's fault — no more guessing.
-    def stealTicks(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        val line = try src.getLines().next() finally src.close()
-        line.trim.split("\\s+").drop(1).lift(7).map(_.toLong).getOrElse(0L)
-      } catch { case _: Throwable => 0L }
+    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val laps = new Laps(spark)
 
     // Previous full-sweep timings (committed quiet-machine snapshot) at the
     // SAME scale factor — the movers baseline. Our own writer's format, so
@@ -379,6 +282,18 @@ object Bench {
         }
       } catch { case _: Throwable => Map.empty }
 
+    // SPARK_GRAFT_ONLY=a,b,c restricts the run to named workloads — for
+    // isolating a single timing in a quiet JVM (bench-order heap pressure
+    // inflates tail workloads 5-20x; never diagnose a regression from a
+    // full-sweep number). Unset (full sweeps) = everything.
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // fail fast on a typo'd name — a silent no-op would masquerade as a
+    // real (vacuous) timing result (same guard as Verify's name filter)
+    val unknown = only.getOrElse(Set.empty) -- headline.toSet -- refWorkloads
+    require(unknown.isEmpty, s"unknown workloads: ${unknown.mkString(", ")}")
+    def wanted(name: String): Boolean = only.forall(_.contains(name))
+
     // JVM/session warm-up so the first measured query doesn't pay codegen
     // and classloading costs (the reference numbers exclude job startup too).
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
@@ -396,16 +311,7 @@ object Bench {
     // the operator. Off the clock (before sentinel_pre/stealStart), and
     // FULL sweeps only: SPARK_GRAFT_ONLY diagnostics keep fresh-JVM
     // first-lap semantics — an isolated pair measures exactly that.
-    //
-    // SPARK_GRAFT_WARMUP (judge r14 item 1, diagnostic A/B only — default
-    // "head" is the measured configuration): "r13" reproduces the r13
-    // warm-up exactly (no catalog-wide block, 20k warm corpus, no rrf warm
-    // lap) so a full sweep can adjudicate whether the r14 warm-up's heap/
-    // code-cache residue is what drifted the scale section.
-    val warmMode = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "head")
-    require(Set("head", "r13").contains(warmMode),
-      s"SPARK_GRAFT_WARMUP must be head|r13, got $warmMode")
-    if (sys.env.get("SPARK_GRAFT_ONLY").isEmpty && warmMode == "head") {
+    if (only.isEmpty) {
       // derived from the bench dir's parent (judge r14 item 4: the old
       // /root/testdata literal silently no-opped if the driver relocated
       // testdata); sf0.001 is the smallest deterministic fixture set
@@ -446,18 +352,6 @@ object Bench {
     val sentinelPre = loadSentinel()
     val stealStart = stealTicks()
 
-    // SPARK_GRAFT_ONLY=a,b,c restricts the run to named workloads — for
-    // isolating a single timing in a quiet JVM (bench-order heap pressure
-    // inflates tail workloads 5-20x; never diagnose a regression from a
-    // full-sweep number). Unset (driver runs) = everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // fail fast on a typo'd name — a silent no-op would masquerade as a
-    // real (vacuous) timing result (same guard as Verify's name filter)
-    val unknown = only.getOrElse(Set.empty) -- headline.toSet -- refWorkloads
-    require(unknown.isEmpty, s"unknown workloads: ${unknown.mkString(", ")}")
-    def wanted(name: String): Boolean = only.forall(_.contains(name))
-
     val results = scala.collection.mutable.LinkedHashMap[String, Double]()
     // second-run timings of the slowest workloads (variance signal — sweep
     // totals historically swing ~2x on identical code, so every per-query
@@ -468,188 +362,27 @@ object Bench {
     // Per-entry STEAL BRACKETING (judge r7 item 1): every timed attempt
     // records the hypervisor steal delta across exactly itself; an attempt
     // stormed by > StealGateSec of steal is re-run (bounded retries) and the
-    // minimum wall time is kept, with the kept attempt's own steal recorded.
-    // counted_steal_sec sums the KEPT attempts' steal — the artifact
-    // self-certifies quiet instead of needing after-the-fact adjudication
-    // (three r7 sweeps were storm-polluted; the judge had to re-run them).
-    // A quiet retry within 5% of a stormy minimum is preferred, so the kept
-    // label is quiet whenever an honest quiet measurement exists.
+    // minimum wall time is kept, with the kept attempt's own brackets
+    // recorded in `brackets` — the artifact self-certifies quiet instead of
+    // needing after-the-fact adjudication. A quiet retry within 5% of a
+    // stormy minimum is preferred, so the kept label is quiet whenever an
+    // honest quiet measurement exists.
     val StealGateSec = 2.0
     val StealRetries = 2
-    val entrySteal = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // why a workload recorded -1: the thrown exception's class + message,
-    // kept only when no retry succeeded. A bare -1 in the artifact made the
-    // r10 proc-ttl storm failure undiagnosable from the record alone.
-    val entryErr = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Per-attempt GC and JIT brackets (judge r8 item 1): the r8 sweep had
-    // three scale entries inflated 2-10x on first run with CERTIFIED-LOW
-    // steal — whatever inflated them was invisible to the steal bracket.
-    // Every attempt now also records the JVM's own one-time-cost counters
-    // across exactly itself: GC wall time (collector MXBeans) and JIT
-    // compilation time (compilation MXBean) — the two in-JVM causes of
-    // first-run-only inflation. Kept attempts' values feed the
-    // __first_run_cause adjudication below and land in BENCH_FULL.json.
-    val entryGc = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val entryJit = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // block-manager MB resident when the kept attempt STARTED — near zero
-    // on an honest lap (every attempt sweeps its own leavings); material
-    // residency names the carryover mechanism when a repeat still reads
-    // slower than its first run
-    val entryCacheMb = scala.collection.mutable.LinkedHashMap[String, Double]()
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
-    def jitMillis(): Long = {
-      val b = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (b != null && b.isCompilationTimeMonitoringSupported)
-        b.getTotalCompilationTime else 0L
-    }
-    // Catalyst generated-class compilations (janino) — a nonzero delta on
-    // a REPEAT lap means the generated classes were evicted from the
-    // 100-entry codegen cache by the entries in between, so the lap runs
-    // BRAND-NEW classes that HotSpot must re-profile and re-JIT from zero
-    // (the r10 dedup_substring_600k__rep mechanism; see JitDiag).
-    def janinoCount(): Long =
-      org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME.getCount
-    // JVM code-cache occupancy (all CodeHeap segments, MB) — when this
-    // sits near ReservedCodeCacheSize, UseCodeCacheFlushing evicts cold
-    // nmethods and re-warms them later: a sweep-wide re-JIT storm.
-    def codeHeapUsedMb(): Double = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-        .filter(p => p.getName.startsWith("CodeHeap") ||
-          p.getName == "CodeCache")
-        .map(_.getUsage.getUsed).sum / 1e6
-    }
-    // janino compiles + code-cache MB across the kept attempt — the two
-    // counters that separate "fresh generated classes re-warming" from
-    // plain JIT time in the rep-cause adjudication
-    val entryJanino = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val entryCodeHeap = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // RocksDB CHANGELOG checkpointing for the streaming entries (judge r10
-    // item 4): the default checkpoint uploads a full SST snapshot per
-    // store per commit, which for a many-batch bounded feed is almost all
-    // of the store-commit overhead the TTL faces pay on top of their
-    // unbounded twins; the changelog mode writes per-commit deltas and
-    // snapshots in the background. Set alongside every providerClass set
-    // below; SPARK_GRAFT_NO_CHANGELOG=1 re-runs the old mode for A/B.
-    val ChangelogConf =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val useChangelog = !sys.env.get("SPARK_GRAFT_NO_CHANGELOG").contains("1")
-    def setRocksDbConfs(): Unit = {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      if (useChangelog) spark.conf.set(ChangelogConf, "true")
-    }
-    // CLEANUP OUTSIDE THE TIMED REGION (judge r12 items 1-2). Checkpoint /
-    // fixture teardown used to run inside the timed entry's finally, where
-    // Files.walk(..).deleteIfExists races the RocksDB state-store
-    // maintenance thread — which can repopulate a state subdirectory after
-    // q.stop() returns — and the resulting DirectoryNotEmptyException
-    // propagated out of the bench{} closure and poisoned a COMPLETED
-    // measurement to -1 (r12: stream_decontaminate_bloom_600k_ttl, whose
-    // per-batch vector was already captured). Entries now QUEUE their temp
-    // dirs via cleanupAfter(); the queue drains after time() returns —
-    // outside the timed region — with bounded retries, and a delete that
-    // still fails lands as a "<name>__cleanup_err" artifact key with the
-    // /tmp dir leaked (harmless for one lap) rather than an entry failure.
-    val entryCleanupErr =
-      scala.collection.mutable.LinkedHashMap[String, String]()
-    val pendingCleanup =
-      scala.collection.mutable.ArrayBuffer[(String, java.nio.file.Path)]()
-    def cleanupAfter(name: String, dir: java.nio.file.Path): Unit =
-      pendingCleanup += ((name, dir))
-    def safeDeleteTree(name: String, root: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
-      var tries = 0
-      var done = false
-      // record-and-leak rather than retry forever; a throw here would abort
-      // the rest of the sweep (drainCleanup runs inside timeQuiet's attempt)
-      def recordOrWait(e: Throwable): Unit =
-        if (tries >= 3)
-          entryCleanupErr(name) = (e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage))
-            .replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(200)
-        else Thread.sleep(250L) // let the maintenance thread finish
-      while (!done && tries < 3) {
-        tries += 1
-        try {
-          if (java.nio.file.Files.exists(root)) {
-            val walk = java.nio.file.Files.walk(root)
-            try walk.iterator().asScala.toSeq.reverse
-              .foreach(p => java.nio.file.Files.deleteIfExists(p))
-            finally walk.close()
-          }
-          done = true
-        } catch {
-          // the walk traversal itself wraps mid-walk races in
-          // UncheckedIOException: an entry the maintenance thread removed
-          // is fine (already gone), anything else takes the retry path
-          case e: java.io.UncheckedIOException =>
-            if (e.getCause.isInstanceOf[java.nio.file.NoSuchFileException])
-              done = true
-            else recordOrWait(e.getCause)
-          case e: java.io.IOException => recordOrWait(e)
-        }
-      }
-    }
-    def drainCleanup(): Unit = {
-      val drained = pendingCleanup.toSeq
-      pendingCleanup.clear()
-      drained.foreach { case (n, p) => safeDeleteTree(n, p) }
-    }
+    val brackets = scala.collection.mutable.LinkedHashMap[String, Lap]()
     var stormReruns = 0
     def timeQuiet(name: String, f: () => Unit): Double = {
-      def attempt(): (Double, Double, Double, Double, Double, Long, Double) = {
-        // reap the PREVIOUS lap's leavings before the brackets: a driver
-        // System.gc() is what triggers Spark's ContextCleaner to release
-        // unreachable broadcasts / shuffle files / RDDs, so a repeat lap
-        // starts from the heap the first lap started from instead of
-        // paying the first lap's garbage mid-flight (judge r9 item 5:
-        // sky_10m_5d_xfilter_nat rep 34.6 s vs 10.4 s first with only
-        // 5.7 s labeled GC — the rest was old-lap memory pressure).
-        // Outside the timed region AND before g0, so neither the attempt
-        // time nor its __gc_sec bracket counts this collection.
-        System.gc()
-        val c0 = cachedMb()
-        val jan0 = janinoCount()
-        val s0 = stealTicks(); val g0 = gcMillis(); val j0 = jitMillis()
-        val t = try time(withRddSweep(f())) catch { case e: Throwable =>
-          // strip EVERY control char (not just \n\r\t) plus quote/backslash
-          // so the message can never break the hand-assembled JSON line
-          entryErr(name) = (e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage)).replaceAll("[\\p{Cntrl}\"\\\\]", " ")
-            .take(200)
-          -1.0 }
-        val res = (t, (stealTicks() - s0) / 100.0, (gcMillis() - g0) / 1000.0,
-          (jitMillis() - j0) / 1000.0, c0, janinoCount() - jan0,
-          codeHeapUsedMb())
-        // drain AFTER the brackets are read: checkpoint teardown is part
-        // of neither the timed region nor the attempt's steal/GC window
-        drainCleanup()
-        res
-      }
-      var (keptT, keptS, keptG, keptJ, keptC, keptJan, keptCh) = attempt()
+      var best = laps.lap(name, f)
       var tries = 0
-      while (keptT >= 0 && keptS > StealGateSec && tries < StealRetries) {
+      while (best.t >= 0 && best.steal > StealGateSec && tries < StealRetries) {
         tries += 1; stormReruns += 1
-        val (t, s, g, j, c, jan, ch) = attempt()
-        if (t >= 0 && (t < keptT || (s <= StealGateSec && t <= keptT * 1.05))) {
-          keptT = t; keptS = s; keptG = g; keptJ = j; keptC = c
-          keptJan = jan; keptCh = ch
-        }
+        val l = laps.lap(name, f)
+        if (l.t >= 0 && (l.t < best.t || (l.steal <= StealGateSec && l.t <= best.t * 1.05)))
+          best = l
       }
-      entrySteal(name) = keptS
-      entryGc(name) = keptG
-      entryJit(name) = keptJ
-      entryCacheMb(name) = keptC
-      entryJanino(name) = keptJan
-      entryCodeHeap(name) = keptCh
-      if (keptT >= 0) entryErr.remove(name) // a retry succeeded
-      keptT
+      brackets(name) = best
+      if (best.t >= 0) laps.errors.remove(name) // a retry succeeded
+      best.t
     }
 
     // a failed workload records -1 instead of losing the whole JSON line
@@ -663,349 +396,22 @@ object Bench {
         repeats(n) = timeQuiet(s"${n}__rep", t)
       }
     }
+    val xfilter = scala.collection.mutable.LinkedHashMap[String, SkylineOps.XFilterStats]()
+    def runOnce(entries: Seq[Entry]): Unit =
+      runEntries(spark, entries.filter(e => wanted(e.name)).map(_ -> 1L), xfilter)(
+        (n, _, f) => bench(n)(f()))
+
     // The generator-heavy reference workloads run FIRST: they are the
     // BASELINE.md comparison and the most GC-sensitive (tight codegen loops
     // over generated rows). Run after the catalog — whose tail is streaming
     // state-store churn — they read 5-15x slow even across a System.gc()
     // boundary (single-JVM artifact, not a real regression).
-    // reference-workload skylines (1M anti-correlated, domain [0,10000])
-    bench("sky_1m_2d_anti") {
-      SkylineOps.skylineViaStrategy(
-        Generators.generate(spark, "anti-correlated", 1000000L, 2),
-        "mr-angle", 10000.0, 8).count()
-    }
-    // the prefix-scan path reads its input twice (group pass + join pass);
-    // cache the generated points so generation runs once, like an ingested
-    // table would (materialization is inside the timed region)
-    bench("sky_1m_2d_sort") {
-      import org.apache.spark.sql.functions.col
-      val pts = Generators.generate(spark, "anti-correlated", 1000000L, 2)
-        .toDF("id", "values", "op")
-        .select(col("id"), col("values")(0).as("v1"), col("values")(1).as("v2"))
-        .cache()
-      try SkylineOps.skyline2DDFScalable(pts, "id", "v1", "v2").count()
-      finally pts.unpersist()
-    }
-    bench("sky_1m_3d_anti") {
-      SkylineOps.skylineViaStrategy(
-        Generators.generate(spark, "anti-correlated", 1000000L, 3),
-        "mr-angle", 10000.0, 8).count()
-    }
-
-    // scalability envelope: reference is "linear to 10M records, < 400 s"
-    bench("sky_10m_2d_sort") {
-      import org.apache.spark.sql.functions.col
-      val pts = Generators.generate(spark, "anti-correlated", 10000000L, 2)
-        .toDF("id", "values", "op")
-        .select(col("id"), col("values")(0).as("v1"), col("values")(1).as("v2"))
-        .cache()
-      try SkylineOps.skyline2DDFScalable(pts, "id", "v1", "v2").count()
-      finally pts.unpersist()
-    }
-    // 4-D curse-of-dimensionality case (reference: ~717s at 800k-1M records,
-    // capped there). The broadcast cross-filter keeps the global phase fully
-    // parallel: local antichains are broadcast sum-sorted and every candidate
-    // filters against the union on its own core.
-    bench("sky_500k_4d_bcast") {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 500000L, 4)).count()
-    }
-    // the reference's own 4-D scale (1M records, ~717s on Flink)
-    bench("sky_1m_4d_bcast") {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 1000000L, 4)).count()
-    }
-    // same workload through the too-big-to-broadcast fallback: a low
-    // broadcast bound forces the distributed pairwise cross-filter
-    // (crossFilterChunks), exercising the scale path the default-bound run
-    // never reaches
-    bench("sky_500k_4d_xfilter") {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 500000L, 4),
-        maxBroadcastPoints = 20000).count()
-    }
-    // dimensionality x cardinality corner the reference never reached
-    // (its 4-D cap was 1M): 3-D anti-correlated at 10M records through the
-    // broadcast cross-filter; past the broadcast bound this degrades into
-    // the distributed pairwise path, so the entry exercises whichever merge
-    // the union size dictates at this scale
-    bench("sky_10m_3d_bcast") {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 10000000L, 3)).count()
-    }
-    // the NATURAL too-big-to-broadcast case (judge r8 item 4): 10M 5-D
-    // anti's local-antichain union is 4,001,241 points — past the 4M
-    // default bound on its own, no artificial lowering — so this entry
-    // times crossFilterChunks at its real trigger. In-sweep feasible only
-    // because of the round-9 merge fixes (see PLANS.md): the generator's
-    // high-d shell clamps ~40% of 5-D points to the origin, and the
-    // pre-fix merge paid O(k²) over those duplicates (657 s measured on
-    // the 4-D analogue; 9.7 s after the duplicate fast path + kd index,
-    // bit-identical 2,224,688-point answer)
-    bench("sky_10m_5d_xfilter_nat") {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 10000000L, 5)).count()
-    }
-    // one notch past the 5-D case (judge r10 item 6): 20M 6-D anti, whose
-    // local-antichain union lands several times over the 4M broadcast
-    // bound — the deepest natural crossFilterChunks workout in the sweep.
-    // The merge's measured shape (union size, chunk count, pair tasks,
-    // shipped points) lands in BENCH_FULL via the in-operator stats, and
-    // the tail re-asserts the LINEAR shipping law shipped == (n−1)·union
-    // that XFilterScalingSpec pins at small scale — the 100 TB merge story
-    // as a measured identity in the artifact, not a comment.
-    // clear the stats slot FIRST: the 5-D entry above also runs
-    // crossFilterChunks, and if this entry errors (or ever takes the
-    // broadcast path) the snapshot below would otherwise publish the 5-D
-    // run's numbers under the 6-D keys — mislabeled artifact data
-    SkylineOps.lastXFilterStats.set(null)
-    bench("sky_20m_6d_xfilter_nat") {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 20000000L, 6)).count()
-    }
-    // snapshot the merge stats NOW — later entries (and the rep section)
-    // also run crossFilterChunks and would overwrite the reference
-    val xf6dStats = if (wanted("sky_20m_6d_xfilter_nat"))
-      Option(SkylineOps.lastXFilterStats.get()) else None
-    // grid-parallel global merge vs the tree merge on the SAME uniform
-    // data, so the strategy tradeoff is visible in one sweep. Measured:
-    // tree wins at this size (the candidate union fits one thread);
-    // gridpar's point is the per-merge memory bound at cluster scale —
-    // see the skylineGridParallel scaladoc
-    bench("sky_1m_3d_gridpar") {
-      SkylineOps.skylineGridParallel(
-        Generators.generate(spark, "uniform", 1000000L, 3), 3).count()
-    }
-    bench("sky_1m_3d_tree_uni") {
-      SkylineOps.skylineTreeViaStrategy(
-        Generators.generate(spark, "uniform", 1000000L, 3),
-        "mr-angle", 10000.0, 8).length
-    }
-
-    // Pipeline scale-stress: the MinHash dedup path at 120x the documents
-    // fixture. The catalog entries prove correctness on 5k real docs; these
-    // prove the SHAPE holds when the corpus is 600k docs — a deterministic
-    // 40-word/1000-vocab synthetic corpus with 2% planted near-duplicates
-    // (39/40 words shared with the predecessor row), i.e. the mostly-unique
-    // web-crawl dup density. Random 40-word docs share almost no 4-hash
-    // band (P ~ s^4), so bucket fan-out stays linear and the banded join's
-    // cost is the planted-dup groups — the asymptotic claim, measured.
-    // WARM-UP LAP for the 600k text family (judge r8 item 1): r8's three
-    // unexplained 2-10x first-run inflations (dedup_minhash_est_600k,
-    // text_perplexity_600k, dedup_simhash_600k) were certified steal-free —
-    // the cost is one-time Janino compilation + JIT warm-up of the heavy
-    // codegen'd expression chains, which a small untimed pass through the
-    // SAME operators pays in ~seconds instead of inside the first timed
-    // attempt. The per-attempt __gc_sec/__jit_sec brackets plus the
-    // __first_run_cause adjudication certify whatever inflation remains.
-    // One lap of the retrieval-fusion chain at n docs — shared by the
-    // warm-up below (20k, off the clock) and the hybrid_rrf_600k entry, so
-    // the warmed plan is the measured plan by construction. r13's biggest
-    // jit_warmup excess was exactly this chain (first 10.0 s vs rep 2.7).
-    def hybridRrfLap(n: Long): Unit = {
-      import org.apache.spark.sql.functions._
-      // materialized (as a real corpus would be — a parquet scan, not a
-      // computed expression): bm25 + the dense side read the text/ids a
-      // handful of times, and without this the bench times the synthetic
-      // GENERATOR's re-evaluation instead of the operators
-      val d = Generators.syntheticCorpus(spark, n)
-        .select(col("doc_id"),
-          translate(col("text"), "0123456789", "abcdefghij").as("text"))
-        .localCheckpoint(true)
-      // each 100-row list is materialized once (a served pipeline would
-      // reuse retrieved lists, and lazy frames would re-run both corpus
-      // scans inside the fusion join)
-      val lex = graft.operators.TextAnalysis.bm25(d, "doc_id", "text",
-          Seq("wbcd", "whhh", "weca", "wjjj"))
-        .orderBy(col("score_u6").desc, col("doc_id")).limit(100)
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("score_u6").desc, col("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("rank"))
-        .localCheckpoint(true)
-      val embDf = d.select(col("doc_id"),
-        transform(sequence(lit(0), lit(63)),
-          i => pmod(hash(col("doc_id"), i), lit(1000)).cast("double") / 1000.0)
-          .as("embedding"))
-      val vec = graft.operators.Similarity.topKToQueryU6(embDf, "doc_id",
-          "embedding", embDf.where(col("doc_id") === 0), "embedding", 100)
-        .select(col("nbr_id").as("doc_id"), col("rank"))
-        .localCheckpoint(true)
-      graft.operators.Similarity.rrfFuse(
-          Seq("lex" -> lex, "vec" -> vec), "doc_id")
-        .orderBy(col("rrf_u9").desc, col("doc_id")).limit(20).count()
-    }
-    if (Seq("dedup_minhash_600k_sig", "dedup_minhash_600k",
-        "dedup_simhash_600k", "text_perplexity_600k", "dedup_substring_600k",
-        "dedup_minhash_est_600k", "text_classifier_600k", "hybrid_rrf_600k")
-        .exists(wanted)) withRddSweep {
-      import org.apache.spark.sql.functions.col
-      // 60k (up from 20k, judge r13 item 4): the 20k pass janino-warmed the
-      // chains but left their hot loops short of C2 thresholds — the 600k
-      // first laps still carried 7-9 s JIT brackets and re-labeled
-      // jit_warmup every round. 3x the warm rows costs ~2 s more once and
-      // pushes the heavy codegen'd loops through tiered compilation.
-      // SPARK_GRAFT_WARMUP=r13 reproduces the r13 shape (20k, no rrf lap,
-      // none of the r15 additions) for the scale-drift A/B.
-      val w = Generators.syntheticCorpus(spark,
-        if (warmMode == "head") 60000L else 20000L).localCheckpoint(true)
-      try {
-        graft.operators.Dedup.minhashSignatures(w, "doc_id", "text")
-          .write.format("noop").mode("overwrite").save()
-        graft.operators.Dedup.minhashCandidates(w, "doc_id", "text").count()
-        graft.operators.Dedup.simhashHammingPairs(w, "doc_id", "text").count()
-        val (wc12, wc1, wv) = TextQueries.bigramLm(
-          w.where(col("doc_id") % 2 === 0))
-        TextQueries.scorePerplexity(
-          TextQueries.bigramRows(w.where(col("doc_id") % 2 === 1)),
-          wc12, wc1, wv.head().getLong(0)).count()
-        graft.operators.Dedup.minhashEstimationAudit(
-            w, "doc_id", "text", samplePairsMod = 4)
-          .write.format("noop").mode("overwrite").save()
-        if (warmMode == "head") {
-          if (wanted("hybrid_rrf_600k")) hybridRrfLap(20000L)
-          // r15 additions (judge r14 items 2-3): the two 600k chains in
-          // this block's gate list whose operators the block never actually
-          // exercised — dedup_substring_600k's span-hash kernel read 50.6 s
-          // cold on the r14 driver's first lap despite "being warmed"
-          if (wanted("dedup_substring_600k"))
-            graft.operators.Dedup.exactSubstrStats(w, "doc_id", "text",
-                clean = true)
-              .write.format("noop").mode("overwrite").save()
-          if (wanted("text_classifier_600k"))
-            graft.operators.TextAnalysis.linearClassifierScoreU6(w, "doc_id",
-                "text", TextQueries.classifierWeightsU6)
-              .write.format("noop").mode("overwrite").save()
-        }
-      } finally w.unpersist()
-    }
-    bench("dedup_minhash_600k_sig") {
-      graft.operators.Dedup.minhashSignatures(
-          Generators.syntheticCorpus(spark, 600000L), "doc_id", "text")
-        .write.format("noop").mode("overwrite").save()
-    }
-    bench("dedup_minhash_600k") {
-      graft.operators.Dedup.minhashCandidates(
-          Generators.syntheticCorpus(spark, 600000L), "doc_id", "text").count()
-    }
-    // simhash Hamming banding on the same corpus: 1000-word vocab, 40-word
-    // docs spread the 15-bit block values ~uniformly, so bucket fan-out is
-    // linear and the join cost is the planted-dup groups — the web-scale
-    // shape (the sf fixture is adversarially self-similar by contrast:
-    // tiny shared vocab => near-equal simhashes => hot blocks).
-    bench("dedup_simhash_600k") {
-      graft.operators.Dedup.simhashHammingPairs(
-          Generators.syntheticCorpus(spark, 600000L), "doc_id", "text")
-        .count()
-    }
-    // the LM quality filter on the same 600k-doc corpus: ~23M bigram rows
-    // through the c12 groupBy and the (w1,w2)-co-partitioned scoring join —
-    // the corpus-scale shuffle pair that dominates this operator at 100 TB
-    bench("text_perplexity_600k") {
-      import org.apache.spark.sql.functions.col
-      val d = Generators.syntheticCorpus(spark, 600000L)
-      val (c12, c1, vocab) = TextQueries.bigramLm(
-        d.where(col("doc_id") % 2 === 0))
-      val v = vocab.head().getLong(0)
-      TextQueries.scorePerplexity(
-        TextQueries.bigramRows(d.where(col("doc_id") % 2 === 1)),
-        c12, c1, v).count()
-    }
-    // ExactSubstr on the same corpus: planted dup rows repeat 39/40 words,
-    // so each contributes 32 duplicated 8-token spans — ~20M (doc,pos,hash)
-    // occurrence rows through the first-owner window-min shuffle, plus the
-    // excision projection. noop write (not count) so Catalyst can't prune
-    // the covered/clean columns or eliminate the outer join.
-    bench("dedup_substring_600k") {
-      graft.operators.Dedup.exactSubstrStats(
-          Generators.syntheticCorpus(spark, 600000L), "doc_id", "text",
-          clean = true)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // Retrieval fusion at 600k docs: BM25 over the translated corpus (the
-    // tokenizer keeps [a-z]+ runs, so digits map to letters) plus the
-    // single-query dense top-100 over 600k hash-derived 64-d vectors
-    // (TakeOrderedAndProject — no task sorts the corpus), fused by integer
-    // RRF. Proves the bounded-top-k shape at corpus scale: no window ever
-    // sees more than 100 rows.
-    bench("hybrid_rrf_600k") { hybridRrfLap(600000L) }
-    // Estimation audit at corpus volume WITH the sampling lever: the
-    // banded candidates of the 600k corpus, 1/4 of the pairs
-    // hash-sampled into the exact shingle verification — the
-    // drift-detection shape you would run at 100 TB (sample, not census).
-    bench("dedup_minhash_est_600k") {
-      // materialized: the audit reads the text column four times
-      // (signatures + sizes + both verification joins) and an unpinned
-      // synthetic corpus would make this a generator re-evaluation bench
-      // (the round-6 syntheticCorpus lesson)
-      val corpus = Generators.syntheticCorpus(spark, 600000L)
-        .localCheckpoint(true)
-      try graft.operators.Dedup.minhashEstimationAudit(
-          corpus, "doc_id", "text", samplePairsMod = 4)
-        .write.format("noop").mode("overwrite").save()
-      finally corpus.unpersist()
-    }
-    // The classifier gate at corpus volume: 24M tokens through the native
-    // one-pass bucket-hash/weight-fold expression (one md5 per token, no
-    // shuffle) — the scan-time cost of model-based quality filtering.
-    bench("text_classifier_600k") {
-      graft.operators.TextAnalysis.linearClassifierScoreU6(
-          Generators.syntheticCorpus(spark, 600000L), "doc_id", "text",
-          TextQueries.classifierWeightsU6)
-        .write.format("noop").mode("overwrite").save()
-    }
-    // Multimodal codec path at volume: 600k REAL container files built
-    // (even ids full BMPs ~2-9 KB, odd ids PCM WAVs) and header-parsed
-    // back through the partition-batched decode seam, reduced to per-format
-    // counts/frame sums. ~1.5 GB of payload bytes flow through encode +
-    // decode on 32 cores — the per-row media-metadata cost at corpus scale,
-    // with zero shuffle until the 2-group aggregate.
-    // off-the-clock codec warm (r15, judge r14 cause-map hygiene): the
-    // encode/decode generated classes are the only thing the 600k text
-    // block can't warm — the r14 driver's first lap read 1.64 s vs the
-    // 0.24 s quiet ref, labeled jit_warmup every round. FULL sweeps only,
-    // like the catalog-wide warm block: an isolated pair measures a cold lap
-    if (wanted("multimodal_600k") && warmMode == "head" &&
-        sys.env.get("SPARK_GRAFT_ONLY").isEmpty) {
-      import org.apache.spark.sql.functions._
-      val wids = spark.range(20000L).select(col("id").as("doc_id"))
-      graft.operators.Multimodal.decodeMeta(
-          graft.operators.Multimodal.syntheticMedia(wids, "doc_id"))
-        .toDF()
-        .groupBy("format")
-        .agg(count(lit(1)).as("n"), sum("n_frames").as("frames"),
-          sum("n_bytes").as("bytes"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    bench("multimodal_600k") {
-      import org.apache.spark.sql.functions._
-      val ids = spark.range(600000L).select(col("id").as("doc_id"))
-      graft.operators.Multimodal.decodeMeta(
-          graft.operators.Multimodal.syntheticMedia(ids, "doc_id"))
-        .toDF()
-        .groupBy("format")
-        .agg(count(lit(1)).as("n"), sum("n_frames").as("frames"),
-          sum("n_bytes").as("bytes"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    // CDC MERGE at volume: a 5M-row synthetic changelog (distinct-date
-    // churn per key, 1/13 delete tombstones) collapsed latest-wins onto a
-    // 1M-key base with 500k inserted keys — the daily-ingest shape whose
-    // catalog twin (cdc_apply) proves correctness at fixture scale. The
-    // whole cost is ONE partial-agg shuffle of the changelog + one
-    // co-partitioned full-outer join; nothing scales with base x changelog.
-    bench("cdc_apply_5m") {
-      import org.apache.spark.sql.functions._
-      val base = spark.range(1000000L)
-        .select(col("id").as("k"), (col("id") % 997).cast("double").as("v"))
-      val changelog = spark.range(5000000L).select(
-        (col("id") % 1500000L).as("k"), col("id").as("seq"),
-        when(col("id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
-        (col("id") % 1009).cast("double").as("v"))
-      graft.operators.Cdc.applyChangelog(base, changelog, "k", Seq("seq"),
-          "op", Seq("v"))
-        .write.format("noop").mode("overwrite").save()
-    }
+    runOnce(skylines)
+    // a tenth of the rows (60k docs, up from 20k, r13): the 20k
+    // pass janino-warmed the chains but left their hot loops short of C2
+    // thresholds — the 600k first laps still carried 7-9 s JIT brackets
+    laps.withRddSweep(warm(spark, corpusFamily.filter(e => wanted(e.name)), 10L))
+    runOnce(corpusFamily)
 
     // section boundary: drop generator caches before the catalog sweep
     spark.catalog.clearCache()
@@ -1021,10 +427,7 @@ object Bench {
     val (streamingNames, batchNames) = headline.partition(_.startsWith("stream_"))
     def runCatalog(names: Seq[String]): Unit = names.filter(wanted).foreach { name =>
       SparkEntry.queries.get(name).foreach { fn =>
-        val thunk = () =>
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save(): Unit
-        thunks(name) = thunk
-        results(name) = timeQuiet(name, thunk)
+        bench(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       }
     }
     runCatalog(batchNames)
@@ -1064,41 +467,36 @@ object Bench {
       ++ frozen.toSeq.filter(n => !n.startsWith("stream_"))
       ++ frozenScale.toSeq.filter(n => !n.startsWith("stream_"))).distinct)
 
-    // FIRST-RUN CERTIFICATION (judge r8 item 1): any non-streaming
-    // frozenScale entry whose first run read >= 3x its repeat gets a
-    // machine-readable cause label instead of an unexplained column:
-    //   "gc"                — the kept first attempt's own GC bracket
-    //                         accounts for >= half the excess
-    //   "jit_warmup"        — its JIT-compilation bracket does
-    //   "transient_warmup"  — neither does, but a THIRD run reproduces the
-    //                         repeat (the excess was one-time plan/codegen/
-    //                         page-cache warm-up, certified by measurement)
+    def lapOf(n: String): Lap = brackets.getOrElse(n, Lap(0, 0, 0, 0, 0, 0L, 0))
+    // FIRST-RUN CERTIFICATION (r8, widened in r11): every repeated entry
+    // whose first exceeded 1.5x its repeat by > 1 s absolute (sub-second
+    // excesses are scheduling jitter, not causes) gets
+    // a machine-readable cause label instead of an unexplained column:
+    //   "gc" / "jit_warmup" / "host_steal" — the kept first attempt's own
+    //                         GC / JIT / steal bracket accounts for >= half
+    //                         the excess
+    //   "transient_warmup"  — none does, but a THIRD run reproduces the
+    //                         repeat (one-time plan/codegen/page-cache
+    //                         warm-up, certified by measurement)
     //   "bimodal_unexplained" — the third run reproduced the SLOW time;
     //                         adjudicate by hand (min-of-pair still rules)
     // Labels land in BENCH_FULL.json as <name>__first_run_cause, with the
     // confirm run's seconds as <name>__confirm. Runs here — before the
-    // streaming tail whose state-store churn would poison the confirms.
+    // streaming tail whose state-store churn would poison the confirms —
+    // and the confirm only fires when no bracket explains the excess.
     val causes = scala.collection.mutable.LinkedHashMap[String, String]()
     val confirms = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // judge r11 item 3 widened the gate: EVERY repeated entry (not just
-    // frozenScale) whose first exceeded 1.5x its repeat by > 1 s absolute
-    // gets a label — sub-second excesses are scheduling jitter, not causes.
-    // The confirm third-run only fires when the attempt's own GC/JIT/steal
-    // brackets don't already explain the excess, so the extra coverage
-    // costs at most a handful of (warm, fast) runs.
     results.keys.toSeq.sorted
       .filter(n => !n.startsWith("stream_") &&
         results.get(n).exists(_ >= 0) && repeats.get(n).exists(_ >= 0) &&
         results(n) >= repeats(n) * 1.5 && results(n) - repeats(n) > 1.0)
       .foreach { n =>
         val excess = results(n) - repeats(n)
-        val gc = entryGc.getOrElse(n, 0.0)
-        val jit = entryJit.getOrElse(n, 0.0)
-        val steal = entrySteal.getOrElse(n, 0.0)
+        val l = lapOf(n)
         causes(n) =
-          if (gc >= excess * 0.5) "gc"
-          else if (jit >= excess * 0.5) "jit_warmup"
-          else if (steal >= excess * 0.5) "host_steal"
+          if (l.gc >= excess * 0.5) "gc"
+          else if (l.jit >= excess * 0.5) "jit_warmup"
+          else if (l.steal >= excess * 0.5) "host_steal"
           else {
             val c = timeQuiet(s"${n}__confirm", thunks(n))
             confirms(n) = c
@@ -1126,568 +524,11 @@ object Bench {
       ++ (frozen ++ frozenScale).toSeq)
       .filter(n => n.startsWith("stream_") && !repeats.contains(n)).distinct)
 
-    // Streaming STATEFUL path at the 600k scale-stress size (the batch
-    // 600k family's streaming twin): the MinHash owner stage ingests the
-    // full synthetic corpus as a 10-micro-batch file-source stream
-    // (maxFilesPerTrigger=1) against the RocksDB state store — per-batch
-    // work must stay FLAT as state accumulates (~240k new band buckets per
-    // batch, one long each), which is the whole claim of the
-    // first-seen-owner design. Per-batch trigger walls and the final
-    // state-row count land in BENCH_FULL.json as
-    // stream_dedup_600k__batch_sec / __state_rows. Runs LAST: its
-    // state-store churn would inflate anything timed after it.
-    var sd600kBatches: Seq[Double] = Nil
-    var sd600kStateRows: Long = -1L
-    if (wanted("stream_dedup_600k")) {
-      // corpus written once (setup, untimed); one file per range partition
-      // so the file source replays exactly 10 ordered micro-batches
-      val sdDir = java.nio.file.Files.createTempDirectory("sd600k").toString
-      Generators.syntheticCorpus(spark, 600000L)
-        .repartitionByRange(10, org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite").parquet(sdDir)
-      restampPartsInNameOrder(sdDir)
-      val sdSchema = spark.read.parquet(sdDir).schema
-      bench("stream_dedup_600k") {
-        val prior = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        val ckpt = java.nio.file.Files.createTempDirectory("sd600kckpt")
-        setRocksDbConfs()
-        // store count sized to STATE shape, not core count (r11: 32 -> 16,
-        // 27.7 -> 19.6 s). r15 re-tune (ProbeStateTune): the real state is
-        // 67,732 distinct band buckets (the artifact's own __state_rows —
-        // the old "~2.4M rows" estimate ignored the synthetic corpus's
-        // band-key collisions), so even 16 instances is mostly per-batch
-        // load/commit overhead; 8 won both interleaved probe pairs
-        // (30.1 -> 18.7, 21.8 -> 11.9 s under comparable steal). The
-        // signature stages parallelize by input splits and are unaffected.
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          // raw-row pre-shuffle: one file per trigger = one scan task,
-          // and the per-doc MinHash signature derivation would otherwise
-          // run single-core per batch (see the decontamination entries —
-          // measured 2.3-3.4x there). 60k docs/batch of signature math
-          // spreads across the full core count; the owner stage's keyed
-          // state exchange follows as before.
-          val src = spark.readStream.schema(sdSchema)
-            .option("maxFilesPerTrigger", 1).parquet(sdDir)
-            .repartition(32)
-          val owners = graft.operators.Dedup.streamingMinhashOwners(
-            graft.operators.Dedup.minhashBandKeys(src, "doc_id", "text",
-              k = 5, numHashes = 8, bands = 4))
-          val q = owners.writeStream.format("noop")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            val progress = q.recentProgress.filter(_.numInputRows > 0)
-            // first-lap-wins: if this thunk ever reruns (__rep/confirm), the
-            // published per-batch normalization must keep describing the
-            // HEADLINE lap, not the warm rerun (ADVICE r11)
-            if (sd600kBatches.isEmpty) {
-              sd600kBatches = progress.map(
-                _.durationMs.get("triggerExecution").toDouble / 1000.0).toSeq
-              sd600kStateRows = progress.lastOption
-                .flatMap(_.stateOperators.headOption.map(_.numRowsTotal))
-                .getOrElse(-1L)
-            }
-          } finally q.stop()
-        } finally {
-          prior match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
-          spark.conf.unset(ChangelogConf)
-          spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-          // deferred: deleted after time() returns, outside the timed
-          // region (judge r12 items 1-2 — the cleanup-race -1 poisoning)
-          cleanupAfter("stream_dedup_600k", ckpt)
-        }
-      }
-      // best-effort: a fixture-delete IOException must warn (as a
-      // __cleanup_err key), never abort the remaining sweep
-      safeDeleteTree("fixture_" + sdDir.split('/').last,
-        java.nio.file.Paths.get(sdDir))
-    }
-
-    // TTL-BOUNDED twin of stream_dedup_600k at 2x the batches (judge r7
-    // item 3): the same corpus as 20 micro-batches with event time
-    // ts = doc_id seconds (each batch spans 30,000 s) and a 60,000 s bucket
-    // TTL — buckets idle for ~2 batches of event time are evicted, so the
-    // state-row count must PLATEAU at the last ~3 batches' buckets instead
-    // of growing linearly to ~2.4M like the unbounded run. Per-batch state
-    // rows land in BENCH_FULL.json as
-    // stream_dedup_600k_ttl__state_rows_per_batch — the plateau is the
-    // claim, visible in the artifact itself.
-    var sdTtlStateRows: Seq[Long] = Nil
-    // per-trigger walls: the PER-BATCH normalization against the 10-batch
-    // unbounded twin (this entry deliberately runs 2x the batches, so the
-    // headline ratio overstates the TTL tax by ~2x — the honest comparison
-    // is sec/batch, emitted below as __sec_per_batch for both twins;
-    // measured r11: TTL 1.39 vs plain 1.9 s/batch, i.e. the TTL face is
-    // CHEAPER per batch once batch counts align, and RocksDB changelog
-    // checkpointing (setRocksDbConfs) shaves another ~8% off the TTL legs)
-    var sdTtlBatchSec: Seq[Double] = Nil
-    if (wanted("stream_dedup_600k_ttl")) {
-      val sdDir = java.nio.file.Files.createTempDirectory("sdttl").toString
-      Generators.syntheticCorpus(spark, 600000L)
-        .withColumn("ts", org.apache.spark.sql.functions.col("doc_id"))
-        .repartitionByRange(20, org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite").parquet(sdDir)
-      restampPartsInNameOrder(sdDir)
-      val sdSchema = spark.read.parquet(sdDir).schema
-      bench("stream_dedup_600k_ttl") {
-        val prior = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        val ckpt = java.nio.file.Files.createTempDirectory("sdttlckpt")
-        setRocksDbConfs()
-        // 16 -> 8 stores (r15, ProbeStateTune, judge r14 item 2): the TTL
-        // face's state PLATEAUS at ~39k rows (the eviction is the point),
-        // so 16 RocksDB instances paying load/commit/changelog per batch
-        // is pure per-batch overhead. Quietest probe laps: 8 stores
-        // 13.9 s @ 3.3 s steal vs 16 stores 22.9 s @ 16 s (r11's "8 ties"
-        // predates changelog checkpointing). trackTotalNumberOfRows=false
-        // also measured (15.6 s) but REJECTED: it zeroes numRowsTotal and
-        // the per-batch state-row plateau is this entry's published claim.
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          // same raw-row pre-shuffle as the unbounded twin
-          val src = spark.readStream.schema(sdSchema)
-            .option("maxFilesPerTrigger", 1).parquet(sdDir)
-            .repartition(32)
-          val owners = graft.operators.Dedup.streamingMinhashOwnersTtl(
-            src, "doc_id", "text", "ts", ttlMs = 60000L * 1000L,
-            k = 5, numHashes = 8, bands = 4)
-          val q = owners.writeStream.format("noop")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            val progress = q.recentProgress.filter(_.numInputRows > 0)
-            if (sdTtlBatchSec.isEmpty) { // first-lap-wins (ADVICE r11)
-              sdTtlStateRows = progress
-                .flatMap(_.stateOperators.headOption.map(_.numRowsTotal)).toSeq
-              sdTtlBatchSec = progress.map(
-                _.durationMs.get("triggerExecution").toDouble / 1000.0).toSeq
-            }
-          } finally q.stop()
-        } finally {
-          prior match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
-          spark.conf.unset(ChangelogConf)
-          spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-          // deferred: deleted after time() returns, outside the timed
-          // region (judge r12 items 1-2 — the cleanup-race -1 poisoning)
-          cleanupAfter("stream_dedup_600k_ttl", ckpt)
-        }
-      }
-      // best-effort: a fixture-delete IOException must warn (as a
-      // __cleanup_err key), never abort the remaining sweep
-      safeDeleteTree("fixture_" + sdDir.split('/').last,
-        java.nio.file.Paths.get(sdDir))
-    }
-
-    // TTL-BOUNDED decontamination gate at scale (judge r8 item 3): the 600k
-    // corpus as 20 micro-batches (ts = doc_id seconds), screened against
-    // the doc_id % 97 == 0 benchmark shingle set with a 60,000 s verdict
-    // TTL — quarantine state rows idle for ~2 batches of event time are
-    // evicted, so the per-batch state-row count must PLATEAU instead of
-    // accumulating every contaminated id ever seen (the unbounded gate's
-    // shape). Lands in BENCH_FULL.json as
-    // stream_decontaminate_600k_ttl__state_rows_per_batch.
-    var sdecoTtlStateRows: Seq[Long] = Nil
-    var sdecoTtlBatchSec: Seq[Double] = Nil
-    if (wanted("stream_decontaminate_600k_ttl")) {
-      val sdDir = java.nio.file.Files.createTempDirectory("sdeco").toString
-      val corpus = Generators.syntheticCorpus(spark, 600000L)
-        .withColumn("ts", org.apache.spark.sql.functions.col("doc_id"))
-      corpus
-        .repartitionByRange(20, org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite").parquet(sdDir)
-      restampPartsInNameOrder(sdDir)
-      // the benchmark shingle side is static setup (untimed): at 100 TB the
-      // eval-set index is built once, not per query — PERSISTED, because a
-      // stream-static join re-executes the static subplan every micro-batch
-      // and 20 re-runs of the explode+distinct would dominate the timing
-      // with work production does exactly once
-      // doc_id % 971 ≈ 600 bench docs → ~140k distinct shingles, matching
-      // the documented eval-set scale (~10^5); % 97 would make the bench
-      // side 6k docs / 1.4M shingles — 10x any real eval set
-      val benchSh = spark.read.parquet(sdDir)
-        .where(org.apache.spark.sql.functions.expr("doc_id % 971 = 0"))
-        .select(org.apache.spark.sql.functions.explode(
-          graft.functions.charShingles(
-            org.apache.spark.sql.functions.col("text"), 16)).as("shingle"))
-        .distinct()
-        .persist()
-      benchSh.count() // materialize outside the timed region
-      val sdSchema = spark.read.parquet(sdDir).schema
-      bench("stream_decontaminate_600k_ttl") {
-        val prior = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        val ckpt = java.nio.file.Files.createTempDirectory("sdecockpt")
-        setRocksDbConfs()
-        // state is a few hundred verdict leases: size the state-store
-        // instance count (shuffle partitions, fixed at first start) to
-        // STATE volume, not data parallelism — 32 RocksDB stores paying
-        // load/commit per batch is pure overhead here (measured ~16% of
-        // the long-doc twin's wall); scan/hash/join stages parallelize by
-        // input splits and are unaffected
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          // shuffle the RAW rows before the explode/probe pipeline: one
-          // file per trigger = one scan task, and without this the whole
-          // batch's derivation runs on a single core (measured 2.3-3.4x
-          // on the long-doc twins) — see the long-pair comment
-          val src = spark.readStream.schema(sdSchema)
-            .option("maxFilesPerTrigger", 1).parquet(sdDir)
-            .repartition(8)
-          val verdicts = graft.operators.TextAnalysis.decontaminationGateTtl(
-            src, "doc_id", "text", "ts", "60000 seconds", benchSh)
-          val q = verdicts.writeStream.format("noop")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            val progress = q.recentProgress.filter(_.numInputRows > 0)
-            if (sdecoTtlBatchSec.isEmpty) { // first-lap-wins (ADVICE r11)
-              sdecoTtlStateRows = progress
-                .flatMap(_.stateOperators.headOption.map(_.numRowsTotal)).toSeq
-              sdecoTtlBatchSec = progress.map(
-                _.durationMs.get("triggerExecution").toDouble / 1000.0).toSeq
-            }
-          } finally q.stop()
-        } finally {
-          prior match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
-          spark.conf.unset(ChangelogConf)
-          spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-          // deferred: deleted after time() returns, outside the timed
-          // region (judge r12 items 1-2 — the cleanup-race -1 poisoning)
-          cleanupAfter("stream_decontaminate_600k_ttl", ckpt)
-        }
-      }
-      benchSh.unpersist()
-      // best-effort: a fixture-delete IOException must warn (as a
-      // __cleanup_err key), never abort the remaining sweep
-      safeDeleteTree("fixture_" + sdDir.split('/').last,
-        java.nio.file.Paths.get(sdDir))
-    }
-
-    // WINNOW-screened twin of stream_decontaminate_600k_ttl (judge r9
-    // item 2): the same 600k corpus / 20 micro-batches / 60,000 s TTL, but
-    // both sides keep only winnow fingerprints (k=16, w=4 → ~2/5 the probe
-    // and index volume, recall exact for >= 19-char verbatim overlaps) —
-    // the documented 100 TB ingest default. The full-shingle gate is the
-    // sweep's single most expensive entry (76-80 s r9); this twin measures
-    // exactly what the sub-density screen buys at volume. Same fixture,
-    // same state-row plateau claim, recorded as
-    // stream_decontaminate_winnow_600k_ttl__state_rows_per_batch.
-    var sdecoWinStateRows: Seq[Long] = Nil
-    var sdecoWinBatchSec: Seq[Double] = Nil
-    if (wanted("stream_decontaminate_winnow_600k_ttl")) {
-      val sdDir = java.nio.file.Files.createTempDirectory("sdecow").toString
-      Generators.syntheticCorpus(spark, 600000L)
-        .withColumn("ts", org.apache.spark.sql.functions.col("doc_id"))
-        .repartitionByRange(20, org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite").parquet(sdDir)
-      restampPartsInNameOrder(sdDir)
-      // the eval-set fingerprint index is build-once setup (untimed),
-      // persisted for the same stream-static-rescan reason as benchSh above
-      val benchFps = spark.read.parquet(sdDir)
-        .where(org.apache.spark.sql.functions.expr("doc_id % 971 = 0"))
-        .select(org.apache.spark.sql.functions.explode(
-          graft.functions.MinhashExpressions.winnowNative(
-            graft.functions.normText(
-              org.apache.spark.sql.functions.col("text")), 16, 4)).as("f"))
-        .select(org.apache.spark.sql.functions.col("f.fp").as("fp"))
-        .distinct()
-        .persist()
-      benchFps.count() // materialize outside the timed region
-      val sdSchema = spark.read.parquet(sdDir).schema
-      bench("stream_decontaminate_winnow_600k_ttl") {
-        val prior = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        val ckpt = java.nio.file.Files.createTempDirectory("sdecowckpt")
-        setRocksDbConfs()
-        // same state-volume sizing as the full-shingle twin
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          // same raw-row pre-shuffle as the full-shingle twin
-          val src = spark.readStream.schema(sdSchema)
-            .option("maxFilesPerTrigger", 1).parquet(sdDir)
-            .repartition(8)
-          val verdicts =
-            graft.operators.TextAnalysis.decontaminationGateWinnowTtl(
-              src, "doc_id", "text", "ts", "60000 seconds", benchFps,
-              k = 16, w = 4)
-          val q = verdicts.writeStream.format("noop")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            val progress = q.recentProgress.filter(_.numInputRows > 0)
-            if (sdecoWinBatchSec.isEmpty) { // first-lap-wins (ADVICE r11)
-              sdecoWinStateRows = progress
-                .flatMap(_.stateOperators.headOption.map(_.numRowsTotal)).toSeq
-              sdecoWinBatchSec = progress.map(
-                _.durationMs.get("triggerExecution").toDouble / 1000.0).toSeq
-            }
-          } finally q.stop()
-        } finally {
-          prior match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
-          spark.conf.unset(ChangelogConf)
-          spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-          // deferred: deleted after time() returns, outside the timed
-          // region (judge r12 items 1-2 — the cleanup-race -1 poisoning)
-          cleanupAfter("stream_decontaminate_winnow_600k_ttl", ckpt)
-        }
-      }
-      benchFps.unpersist()
-      // best-effort: a fixture-delete IOException must warn (as a
-      // __cleanup_err key), never abort the remaining sweep
-      safeDeleteTree("fixture_" + sdDir.split('/').last,
-        java.nio.file.Paths.get(sdDir))
-    }
-
-    // BLOOM-screened TTL gate at volume (round 11): the 600k corpus / 20
-    // micro-batches / 60,000 s TTL sized like the full-shingle twin, but
-    // through decontaminationGateBloomTtl with a PRODUCTION-sized filter
-    // (m = 2^22 bits for ~114k bench shingles x 3 hashes, FP ~ 5e-4) — the
-    // honest overhead number for the too-big-to-broadcast face: it pays 3
-    // chained bit-probe broadcasts per batch plus a shuffle confirm where
-    // the exact face pays one broadcast semi-join, and wins only when the
-    // exact set CANNOT broadcast. Same state discipline, so per-batch
-    // walls/state rows are directly comparable to the full-shingle twin's.
-    var sdecoBloomStateRows: Seq[Long] = Nil
-    var sdecoBloomBatchSec: Seq[Double] = Nil
-    if (wanted("stream_decontaminate_bloom_600k_ttl")) {
-      val sdDir = java.nio.file.Files.createTempDirectory("sdecob").toString
-      Generators.syntheticCorpus(spark, 600000L)
-        .withColumn("ts", org.apache.spark.sql.functions.col("doc_id"))
-        .repartitionByRange(20, org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite").parquet(sdDir)
-      restampPartsInNameOrder(sdDir)
-      val benchSh = spark.read.parquet(sdDir)
-        .where(org.apache.spark.sql.functions.expr("doc_id % 971 = 0"))
-        .select(org.apache.spark.sql.functions.explode(
-          graft.functions.charShingles(
-            org.apache.spark.sql.functions.col("text"), 16)).as("shingle"))
-        .distinct().persist()
-      benchSh.count() // eval-set index is build-once setup, untimed
-      val sdSchema = spark.read.parquet(sdDir).schema
-      bench("stream_decontaminate_bloom_600k_ttl") {
-        val ckpt = java.nio.file.Files.createTempDirectory("sdecobckpt")
-        val prior = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        setRocksDbConfs()
-        // 16 -> 8 stores (r15, ProbeStateTune): the gate's verdict state is
-        // ~300 rows — 16 instances was pure per-batch load/commit overhead.
-        // Quietest probe laps: 8 stores 17.5 s @ 3.0 s steal vs 16 stores
-        // 24.5 s @ 17 s; matches the 8-store sizing its exact/winnow twins
-        // have carried since r10.
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          val src = spark.readStream.schema(sdSchema)
-            .option("maxFilesPerTrigger", 1).parquet(sdDir)
-            .repartition(8)
-          val verdicts =
-            graft.operators.TextAnalysis.decontaminationGateBloomTtl(
-              src, "doc_id", "text", "ts", "60000 seconds", benchSh,
-              k = 16, m = 1 << 22, kHashes = 3)
-          val q = verdicts.writeStream.format("noop")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            val progress = q.recentProgress.filter(_.numInputRows > 0)
-            if (sdecoBloomBatchSec.isEmpty) { // first-lap-wins (ADVICE r11)
-              sdecoBloomStateRows = progress
-                .flatMap(_.stateOperators.headOption.map(_.numRowsTotal)).toSeq
-              sdecoBloomBatchSec = progress.map(
-                _.durationMs.get("triggerExecution").toDouble / 1000.0).toSeq
-            }
-          } finally q.stop()
-        } finally {
-          // restore, don't unset: a session-wide or earlier-entry provider
-          // would otherwise be silently cleared for everything timed after
-          // (the prior/match pattern every sibling streaming entry uses)
-          prior match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
-          spark.conf.unset(ChangelogConf)
-          spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-          // deferred: deleted after time() returns, outside the timed
-          // region (judge r12 items 1-2 — the cleanup-race -1 poisoning)
-          cleanupAfter("stream_decontaminate_bloom_600k_ttl", ckpt)
-        }
-      }
-      benchSh.unpersist()
-      // best-effort: a fixture-delete IOException must warn (as a
-      // __cleanup_err key), never abort the remaining sweep
-      safeDeleteTree("fixture_" + sdDir.split('/').last,
-        java.nio.file.Paths.get(sdDir))
-    }
-
-    // LONG-DOCUMENT decontamination gate pair (round 10): the 600k twins
-    // time both faces at tweet-length docs (40 words), where per-batch
-    // fixed cost (state store, trigger, watermark bookkeeping) dominates
-    // and the winnow screen's probe-volume cut barely shows (58.0 vs
-    // 54.1 s, r10 sweep). This pair holds total text volume comparable
-    // (150k docs x 160 words = 24M words) but makes each document 4x
-    // longer, so the term the screen actually cuts — shingle probes per
-    // document — dominates: the measured full/winnow gap here is the
-    // crawl-page (kB+ docs) story, which is what 100 TB ingest looks
-    // like. Same TTL eviction cadence as the 600k pair (TTL = ~2 batches
-    // of event time); 10 micro-batches.
-    var sdecoLongStateRows: Seq[Long] = Nil
-    var sdecoLongWinStateRows: Seq[Long] = Nil
-    var sdecoLongBatchSec: Seq[Double] = Nil
-    var sdecoLongWinBatchSec: Seq[Double] = Nil
-    var sdecoLongBreakdown: Map[String, Double] = Map.empty
-    var sdecoLongWinBreakdown: Map[String, Double] = Map.empty
-    if (Seq("stream_decontaminate_long_ttl",
-            "stream_decontaminate_winnow_long_ttl").exists(wanted)) {
-      val sdDir = java.nio.file.Files.createTempDirectory("sdecolong").toString
-      Generators.syntheticCorpusWords(spark, 150000L, 160)
-        .withColumn("ts", org.apache.spark.sql.functions.col("doc_id"))
-        .repartitionByRange(10, org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite").parquet(sdDir)
-      restampPartsInNameOrder(sdDir)
-      val sdSchema = spark.read.parquet(sdDir).schema
-      def decoGate(name: String,
-          mkVerdicts: org.apache.spark.sql.DataFrame =>
-            org.apache.spark.sql.DataFrame,
-          record: Seq[Long] => Unit,
-          recordWalls: Seq[Double] => Unit,
-          recordBreakdown: Map[String, Double] => Unit): Unit =
-        bench(name) {
-          val prior = spark.conf.getOption(
-            "spark.sql.streaming.stateStore.providerClass")
-          val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-          val ckpt = java.nio.file.Files.createTempDirectory(name)
-          setRocksDbConfs()
-          // shuffle partitions == state-store instance COUNT, fixed at the
-          // query's first start: each store pays load/commit/maintenance
-          // per micro-batch regardless of rows held, so for a gate whose
-          // state is a few hundred verdict leases, 32 RocksDB instances is
-          // pure per-batch overhead. 8 matches the catalog's bounded-feed
-          // sizing; the scan/hash/join stages parallelize by input splits
-          // and are unaffected. Production guidance (README): size
-          // shuffle partitions to STATE volume, not data parallelism.
-          spark.conf.set("spark.sql.shuffle.partitions", "8")
-          try {
-            // one file per trigger = ONE scan task, and the narrow
-            // explode/hash/probe pipeline rides that task — the whole
-            // batch's heavy derivation on a single core. Shuffling the
-            // RAW rows first (15 MB of text — cheap) spreads the
-            // expensive stage across cores; this is the caller-side
-            // pattern for any wide-batch ingest whose trigger unit is
-            // a file, documented in the README sizing note.
-            val src = spark.readStream.schema(sdSchema)
-              .option("maxFilesPerTrigger", 1).parquet(sdDir)
-              .repartition(8)
-            val q = mkVerdicts(src).writeStream.format("noop")
-              .option("checkpointLocation", ckpt.toString)
-              .outputMode("append").start()
-            try {
-              q.processAllAvailable()
-              val progress = q.recentProgress.filter(_.numInputRows > 0)
-              record(progress
-                .flatMap(_.stateOperators.headOption.map(_.numRowsTotal)).toSeq)
-              recordWalls(progress.map(
-                _.durationMs.get("triggerExecution").toDouble / 1000.0).toSeq)
-              // mean seconds per durationMs phase across data batches —
-              // names WHICH per-batch term dominates (addBatch = plan
-              // execution incl. the re-run static side; queryPlanning =
-              // incremental planning; walCommit/commitOffsets = checkpoint
-              // fsyncs; stateCommit rides inside addBatch for RocksDB)
-              if (progress.nonEmpty) {
-                import scala.jdk.CollectionConverters._
-                val keys = progress.head.durationMs.keySet.asScala.toSeq
-                recordBreakdown(keys.map(k => k -> progress.map(p =>
-                  Option(p.durationMs.get(k)).map(_.toDouble).getOrElse(0.0))
-                  .sum / progress.length / 1000.0).toMap)
-              }
-            } finally q.stop()
-          } finally {
-            prior match {
-              case Some(p) => spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", p)
-              case None => spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass")
-            }
-            spark.conf.unset(ChangelogConf)
-            spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-            // deferred: deleted after time() returns, outside the timed
-            // region (judge r12 items 1-2 — the cleanup-race -1 poisoning)
-            cleanupAfter(name, ckpt)
-          }
-        }
-      if (wanted("stream_decontaminate_long_ttl")) {
-        val benchSh = spark.read.parquet(sdDir)
-          .where(org.apache.spark.sql.functions.expr("doc_id % 971 = 0"))
-          .select(org.apache.spark.sql.functions.explode(
-            graft.functions.charShingles(
-              org.apache.spark.sql.functions.col("text"), 16)).as("shingle"))
-          .distinct().persist()
-        benchSh.count() // eval-set index is build-once setup, untimed
-        decoGate("stream_decontaminate_long_ttl",
-          src => graft.operators.TextAnalysis.decontaminationGateTtl(
-            src, "doc_id", "text", "ts", "30000 seconds", benchSh),
-          // first-lap-wins: the published per-batch stats must describe the
-          // headline lap even if the thunk reruns (ADVICE r11)
-          v => if (sdecoLongStateRows.isEmpty) sdecoLongStateRows = v,
-          v => if (sdecoLongBatchSec.isEmpty) sdecoLongBatchSec = v,
-          v => if (sdecoLongBreakdown.isEmpty) sdecoLongBreakdown = v)
-        benchSh.unpersist()
-      }
-      if (wanted("stream_decontaminate_winnow_long_ttl")) {
-        val benchFps = spark.read.parquet(sdDir)
-          .where(org.apache.spark.sql.functions.expr("doc_id % 971 = 0"))
-          .select(org.apache.spark.sql.functions.explode(
-            graft.functions.MinhashExpressions.winnowNative(
-              graft.functions.normText(
-                org.apache.spark.sql.functions.col("text")), 16, 4)).as("f"))
-          .select(org.apache.spark.sql.functions.col("f.fp").as("fp"))
-          .distinct().persist()
-        benchFps.count()
-        decoGate("stream_decontaminate_winnow_long_ttl",
-          src => graft.operators.TextAnalysis.decontaminationGateWinnowTtl(
-            src, "doc_id", "text", "ts", "30000 seconds", benchFps,
-            k = 16, w = 4),
-          v => if (sdecoLongWinStateRows.isEmpty) sdecoLongWinStateRows = v,
-          v => if (sdecoLongWinBatchSec.isEmpty) sdecoLongWinBatchSec = v,
-          v => if (sdecoLongWinBreakdown.isEmpty) sdecoLongWinBreakdown = v)
-        benchFps.unpersist()
-      }
-      // best-effort: a fixture-delete IOException must warn (as a
-      // __cleanup_err key), never abort the remaining sweep
-      safeDeleteTree("fixture_" + sdDir.split('/').last,
-        java.nio.file.Paths.get(sdDir))
-    }
+    // The streaming scale entries run LAST: their state-store churn would
+    // inflate anything timed after them.
+    val progress = scala.collection.mutable.LinkedHashMap[String, StreamStats]()
+    runStreams(spark, laps, streams.filter(e => wanted(e.name)), 1L, progress)(
+      (n, _, f) => bench(n)(f()))
 
     val sentinelPost = loadSentinel()
     val stealSec = (stealTicks() - stealStart) / 100.0
@@ -1698,58 +539,39 @@ object Bench {
     // longer than that budget is silently unparseable (round 3 lost its whole
     // bench to exactly this).
     val total = results.values.filter(_ >= 0).sum
-    // frozen-set cross-round total: min(first, repeat) per entry over the
-    // r5-close catalog only (see `frozen`). min() because the repeat is the
-    // variance signal — whichever run dodged the host storm is the honest
-    // cost. stable_n counts measured frozen entries (118 = full coverage);
-    // a shortfall means a frozen workload errored or was filtered out.
-    val stableEntries = frozen.toSeq.flatMap { n =>
-      results.get(n).filter(_ >= 0)
-        .map(v => math.min(v, repeats.get(n).filter(_ >= 0).getOrElse(v)))
+    // min(first, repeat): the repeat is the variance signal, and whichever
+    // run dodged the host storm is the honest cost
+    def minPair(n: String): Option[Double] = results.get(n).filter(_ >= 0)
+      .map(v => math.min(v, repeats.get(n).filter(_ >= 0).getOrElse(v)))
+    // frozen-set cross-round totals: min-of-pair per entry over the frozen
+    // set only; n counts measured members, so a shortfall means a frozen
+    // workload errored or was filtered out. stable = the r5-close catalog
+    // (118), scale = the 600k/10M family (r7), stream = the
+    // seven heaviest streaming entries (r12)
+    def frozenTotal(set: Set[String]): (Double, Int) = {
+      val vs = set.toSeq.flatMap(minPair)
+      (vs.sum, vs.size)
     }
-    val stableTotal = stableEntries.sum
-    val stableN = stableEntries.size
-    // frozen SCALE-set total: same min(first, repeat) discipline over the
-    // 600k/10M scale family (judge r7 item 6); r7 comparison point 269.5 s
-    // (back-computed from the storm-hit BENCH_r07.json), n = 21
-    val scaleEntries = frozenScale.toSeq.flatMap { n =>
-      results.get(n).filter(_ >= 0)
-        .map(v => math.min(v, repeats.get(n).filter(_ >= 0).getOrElse(v)))
-    }
-    val scaleTotal = scaleEntries.sum
-    val scaleN = scaleEntries.size
-    // frozen STREAMING-set total (judge r12 item 5): min(first, repeat)
-    // over the seven heaviest streaming scale entries, plus the per-batch
-    // normalized twin — the TTL faces run 2x the micro-batches of their
-    // unbounded twins, so sec/batch is the honest cross-round unit
-    val streamEntries = frozenStream.toSeq.flatMap { n =>
-      results.get(n).filter(_ >= 0)
-        .map(v => math.min(v, repeats.get(n).filter(_ >= 0).getOrElse(v)))
-    }
-    val streamTotal = streamEntries.sum
-    val streamN = streamEntries.size
-    val streamBatchVecs: Seq[(String, Seq[Double])] = Seq(
-      "stream_dedup_600k" -> sd600kBatches,
-      "stream_dedup_600k_ttl" -> sdTtlBatchSec,
-      "stream_decontaminate_600k_ttl" -> sdecoTtlBatchSec,
-      "stream_decontaminate_winnow_600k_ttl" -> sdecoWinBatchSec,
-      "stream_decontaminate_bloom_600k_ttl" -> sdecoBloomBatchSec,
-      "stream_decontaminate_long_ttl" -> sdecoLongBatchSec,
-      "stream_decontaminate_winnow_long_ttl" -> sdecoLongWinBatchSec)
-      .filter(_._2.nonEmpty)
-    val streamPerBatchTotal =
-      streamBatchVecs.map { case (_, v) => v.sum / v.length }.sum
-    val streamBatchN = streamBatchVecs.size
+    val (stableTotal, stableN) = frozenTotal(frozen)
+    val (scaleTotal, scaleN) = frozenTotal(frozenScale)
+    val (streamTotal, streamN) = frozenTotal(frozenStream)
+    // the per-batch normalized stream twin: the TTL faces run 2x the
+    // micro-batches of their unbounded twins, so sec/batch is the honest
+    // cross-round unit
+    val batchVecs = progress.values.map(_.batchSec).filter(_.nonEmpty)
+    val streamPerBatchTotal = batchVecs.map(v => v.sum / v.length).sum
+    val streamBatchN = batchVecs.size
     // SECTION-drift self-adjudication (judge r14 item 1): compare each
     // frozen-set total against its best committed sweep total; on a >20%
     // excess, name the cause from the section's own summed brackets of the
     // laps that total keeps (see keptLapBrackets) — the r14 scale drift had
     // quiet per-entry brackets but nobody summed them.
+    def bracket(f: Lap => Double) = brackets.map { case (k, l) => k -> f(l) }
     def sectionDrift(section: String, total: Double,
                      names: Set[String]): (Seq[String], Option[String]) =
       sectionQuietRef.get(section).map { ref =>
         val (steal, gc, jit) = keptLapBrackets(names, results, repeats,
-          entrySteal, entryGc, entryJit)
+          bracket(_.steal), bracket(_.gc), bracket(_.jit))
         val excess = total - ref
         val cause =
           if (total <= ref * 1.2) None
@@ -1765,38 +587,23 @@ object Bench {
           f"""  "${section}__jit_sec": $jit%.2f""") ++
           cause.map(c => s"""  "${section}__drift_cause": "$c""""), cause)
       }.getOrElse((Nil, None))
-    val (stableDriftDetail, stableDriftCause) =
-      sectionDrift("stable_total_sec", stableTotal, frozen)
-    val (scaleDriftDetail, scaleDriftCause) =
-      sectionDrift("scale_total_sec", scaleTotal, frozenScale)
-    val (streamDriftDetail, streamDriftCause) =
-      sectionDrift("stream_total_sec", streamTotal, frozenStream)
-    val sectionDriftDetail =
-      stableDriftDetail ++ scaleDriftDetail ++ streamDriftDetail
-    val sectionDriftCauses =
-      Seq("stable" -> stableDriftCause, "scale" -> scaleDriftCause,
-        "stream" -> streamDriftCause)
-        .collect { case (s, Some(c)) => s"${s}_total" -> c }
+    val drifts = Seq(("stable", stableTotal, frozen), ("scale", scaleTotal, frozenScale),
+      ("stream", streamTotal, frozenStream)).map { case (s, t, names) =>
+      s"${s}_total" -> sectionDrift(s"${s}_total_sec", t, names) }
+    val sectionDriftDetail = drifts.flatMap(_._2._1)
+    val sectionDriftCauses = drifts.collect { case (s, (_, Some(c))) => s -> c }
     // QUIET-REF self-adjudication (judge r12 item 3): every frozen
     // scale/stream entry carries its best committed quiet evidence as
     // <name>__quiet_ref, and a headline min-of-pair exceeding it by >1.3x
     // gets a machine-readable cause label — headline outliers minted by
     // host bandwidth-contention waves (invisible to per-entry steal
     // brackets) adjudicate from the artifact alone
-    val quietDetail = quietRef.toSeq.sortBy(_._1).flatMap { case (n, q) =>
-      results.get(n).filter(_ >= 0).toSeq.flatMap { v =>
-        val mp = math.min(v, repeats.get(n).filter(_ >= 0).getOrElse(v))
-        Seq(s"""  "${n}__quiet_ref": $q""") ++
-          (if (mp > q * 1.3) Seq(
-            s"""  "${n}__headline_cause": "host_noise_vs_quiet_ref"""")
-           else Nil)
-      }
-    }
     val headlineCauses = quietRef.toSeq.sortBy(_._1).flatMap { case (n, q) =>
-      results.get(n).filter(_ >= 0).toSeq.flatMap { v =>
-        val mp = math.min(v, repeats.get(n).filter(_ >= 0).getOrElse(v))
-        if (mp > q * 1.3) Seq(n -> "host_noise_vs_quiet_ref") else Nil
-      }
+      minPair(n).filter(_ > q * 1.3).map(_ => n -> "host_noise_vs_quiet_ref") }
+    val quietDetail = quietRef.toSeq.sortBy(_._1).flatMap { case (n, q) =>
+      minPair(n).map(_ => s"""  "${n}__quiet_ref": $q""") ++
+        headlineCauses.find(_._1 == n).map { case (_, c) =>
+          s"""  "${n}__headline_cause": "$c"""" }
     }
     // steal summed over the KEPT attempts only — the self-certification
     // number (storms burned off in retries don't pollute counted values);
@@ -1805,176 +612,74 @@ object Bench {
     // dribble (~0.2-0.5 ticks/s quiet ≈ 5 s over a 240-entry sweep), so
     // max_entry_steal_sec is the storm indicator: a quiet sweep keeps it
     // well under the 2 s per-entry gate; one stormy kept entry drives it up
-    val countedSteal = entrySteal.values.sum
-    val maxEntrySteal = if (entrySteal.isEmpty) 0.0 else entrySteal.values.max
-    // "<name>__rep" = second-run timing of that workload (slowest-10 +
-    // >1.5x-movers variance signal); total_sec covers first runs only.
-    // sentinel_* = the fixed-work load calibration bracketing the sweep
-    // (quiet machine ≈ 0.2-0.4 s; external load inflates it). A filtered
-    // (SPARK_GRAFT_ONLY) diagnostic run writes to a SEPARATE file — it
-    // must never clobber the last full-sweep snapshot that README/PLANS
-    // cite (which is exactly what happened once in round 5).
-    // per-batch walls + final state size of the streaming scale-stress run
-    // (arrays/non-timing values — readPrevBench's number regex skips them)
-    val streamDetail =
-      if (sd600kBatches.isEmpty) Seq.empty[String]
-      else Seq(
-        s"""  "stream_dedup_600k__batch_sec": [${sd600kBatches.mkString(", ")}]""",
-        s"""  "stream_dedup_600k__state_rows": $sd600kStateRows""")
-    val ttlDetail =
-      (if (sdTtlStateRows.isEmpty) Seq.empty[String]
-       else Seq(s"""  "stream_dedup_600k_ttl__state_rows_per_batch": """ +
-         s"""[${sdTtlStateRows.mkString(", ")}]""")) ++
-      (if (sdecoTtlStateRows.isEmpty) Seq.empty[String]
-       else Seq(
-         s"""  "stream_decontaminate_600k_ttl__state_rows_per_batch": """ +
-         s"""[${sdecoTtlStateRows.mkString(", ")}]""")) ++
-      (if (sdecoWinStateRows.isEmpty) Seq.empty[String]
-       else Seq(
-         s"""  "stream_decontaminate_winnow_600k_ttl__state_rows_per_batch": """ +
-         s"""[${sdecoWinStateRows.mkString(", ")}]""")) ++
-      (if (sdecoBloomStateRows.isEmpty) Seq.empty[String]
-       else Seq(
-         s"""  "stream_decontaminate_bloom_600k_ttl__state_rows_per_batch": """ +
-         s"""[${sdecoBloomStateRows.mkString(", ")}]""")) ++
-      (if (sdecoLongStateRows.isEmpty) Seq.empty[String]
-       else Seq(
-         s"""  "stream_decontaminate_long_ttl__state_rows_per_batch": """ +
-         s"""[${sdecoLongStateRows.mkString(", ")}]""")) ++
-      (if (sdecoLongWinStateRows.isEmpty) Seq.empty[String]
-       else Seq(
-         s"""  "stream_decontaminate_winnow_long_ttl__state_rows_per_batch": """ +
-         s"""[${sdecoLongWinStateRows.mkString(", ")}]""")) ++
-      Seq(
-        ("stream_decontaminate_600k_ttl__batch_sec", sdecoTtlBatchSec),
-        ("stream_decontaminate_winnow_600k_ttl__batch_sec", sdecoWinBatchSec),
-        ("stream_decontaminate_long_ttl__batch_sec", sdecoLongBatchSec),
-        ("stream_decontaminate_winnow_long_ttl__batch_sec",
-          sdecoLongWinBatchSec),
-        ("stream_decontaminate_bloom_600k_ttl__batch_sec", sdecoBloomBatchSec),
-        ("stream_dedup_600k_ttl__batch_sec", sdTtlBatchSec))
-        .filter(_._2.nonEmpty)
-        .map { case (k, v) => s"""  "$k": [${v.mkString(", ")}]""" } ++
-      // EVERY streaming scale entry at PER-BATCH granularity (judge r11
-      // item 4): the TTL faces deliberately run 2x the micro-batches
-      // (judge r7 item 3), so cross-face and cross-round comparison is
-      // sec/batch, not the headline ratio — emitted first-class so the
-      // artifact is self-evident instead of needing the batch-count caveat
-      Seq(
-        ("stream_dedup_600k__sec_per_batch", sd600kBatches),
-        ("stream_dedup_600k_ttl__sec_per_batch", sdTtlBatchSec),
-        ("stream_decontaminate_600k_ttl__sec_per_batch", sdecoTtlBatchSec),
-        ("stream_decontaminate_winnow_600k_ttl__sec_per_batch",
-          sdecoWinBatchSec),
-        ("stream_decontaminate_bloom_600k_ttl__sec_per_batch",
-          sdecoBloomBatchSec),
-        ("stream_decontaminate_long_ttl__sec_per_batch", sdecoLongBatchSec),
-        ("stream_decontaminate_winnow_long_ttl__sec_per_batch",
-          sdecoLongWinBatchSec))
-        .filter(_._2.nonEmpty)
-        .map { case (k, v) =>
-          f"""  "$k": ${v.sum / v.length}%.3f""" } ++
-      Seq(
-        ("stream_decontaminate_long_ttl__phase_mean_sec", sdecoLongBreakdown),
-        ("stream_decontaminate_winnow_long_ttl__phase_mean_sec",
-          sdecoLongWinBreakdown))
-        .filter(_._2.nonEmpty)
-        .map { case (k, m) =>
-          s"""  "$k": {${m.toSeq.sortBy(-_._2)
-            .map { case (p, s) => s""""$p": $s""" }.mkString(", ")}}""" }
-    // per-entry steal labels land in BENCH_FULL.json only for kept attempts
-    // that stayed stormy after the bounded retries (the entries a reader
-    // must still adjudicate by hand); "__steal_sec" keys are harmless to
-    // readPrevBench's movers baseline (lookups are by workload name)
-    val stealDetail = entrySteal.toSeq.filter(_._2 > StealGateSec)
-      .map { case (k, v) => s"""  "${k}__steal_sec": $v""" }
-    // GC/JIT brackets of kept attempts, emitted when material (> 1 s) —
-    // the in-JVM causes the steal bracket can't see; plus the first-run
-    // cause adjudication (string values — readPrevBench's number regex
-    // skips them, so the movers baseline is unaffected)
-    val gcJitDetail =
-      entryGc.toSeq.filter(_._2 > 1.0)
-        .map { case (k, v) => s"""  "${k}__gc_sec": $v""" } ++
-      entryJit.toSeq.filter(_._2 > 1.0)
-        .map { case (k, v) => s"""  "${k}__jit_sec": $v""" } ++
-      // janino + code-cache brackets ride along wherever the JIT bracket
-      // is material: together they separate fresh-class re-warm (janino>0)
-      // from code-cache-flush re-JIT (codeheap near the reserve)
-      entryJit.toSeq.filter(_._2 > 1.0)
-        .flatMap { case (k, _) => entryJanino.get(k)
-          .map(j => s"""  "${k}__janino_n": $j""") } ++
-      entryJit.toSeq.filter(_._2 > 1.0)
-        .flatMap { case (k, _) => entryCodeHeap.get(k)
-          .map(c => f"""  "${k}__codeheap_mb": $c%.0f""") }
-    // REPEAT-LAP certification (judge r9 item 3, the anti-warm-up): any
-    // scale-family entry whose repeat read > 1.5x its first run gets a
-    // machine-readable cause from the rep attempt's own brackets — "gc" /
-    // "jit" when the JVM counters account for >= half the excess,
+    val countedSteal = brackets.values.map(_.steal).sum
+    val maxEntrySteal = if (brackets.isEmpty) 0.0 else brackets.values.map(_.steal).max
+    // Kept-attempt brackets, emitted only where a reader must adjudicate:
+    // steal still past the gate after the bounded retries; GC/JIT > 1 s (the
+    // in-JVM causes the steal bracket can't see), with the janino and
+    // code-cache brackets riding along the JIT one — together they separate
+    // fresh-class re-warm (janino > 0) from code-cache-flush re-JIT
+    // (codeheap near the reserve); and block-manager residency > 64 MB at
+    // lap start. The "__*_sec" keys are harmless to readPrevBench's movers
+    // baseline (lookups are by workload name).
+    val lapDetail = brackets.toSeq.flatMap { case (k, l) =>
+      (if (l.steal > StealGateSec) Seq(s"""  "${k}__steal_sec": ${l.steal}""") else Nil) ++
+      (if (l.gc > 1.0) Seq(s"""  "${k}__gc_sec": ${l.gc}""") else Nil) ++
+      (if (l.jit > 1.0) Seq(s"""  "${k}__jit_sec": ${l.jit}""",
+        s"""  "${k}__janino_n": ${l.janino}""",
+        f"""  "${k}__codeheap_mb": ${l.codeHeapMb}%.0f""") else Nil) ++
+      (if (l.cacheMb > 64.0) Seq(s"""  "${k}__cache_mb": ${l.cacheMb}""") else Nil)
+    }
+    // REPEAT-LAP certification (r9, the anti-warm-up; widened
+    // in r11 to every repeated entry, same 1.5x-plus-1s gate as
+    // the first-run certification): a repeat reading > 1.5x its first run
+    // gets a cause from the rep attempt's own brackets — "gc" / "jit" when
+    // the JVM counters account for >= half the excess,
     // "block_manager_carryover" when the rep attempt STARTED with material
-    // cache residency (the r9 mechanism — now swept per-attempt, so this
-    // label firing means the sweep missed something), else "unexplained".
-    // Labels land as <name>__rep_cause; min-of-pair already rules the
-    // totals either way.
+    // cache residency (the r9 mechanism — swept per lap now, so this label
+    // firing means the sweep missed something), else "unexplained". Labels
+    // land as <name>__rep_cause; min-of-pair already rules the totals.
     val repCauses = scala.collection.mutable.LinkedHashMap[String, String]()
-    // widened from (frozenScale ++ refWorkloads) to every repeated entry
-    // (judge r11 item 3) — same 1.5x-plus-1s-absolute gate as the first-run
-    // certification above
     results.keys.toSeq.sorted
       .filter(n => results.get(n).exists(_ >= 0) &&
         repeats.get(n).exists(_ >= 0) &&
         repeats(n) > results(n) * 1.5 && repeats(n) - results(n) > 1.0)
       .foreach { n =>
         val excess = repeats(n) - results(n)
-        val gc = entryGc.getOrElse(s"${n}__rep", 0.0)
-        val jit = entryJit.getOrElse(s"${n}__rep", 0.0)
-        val cache = entryCacheMb.getOrElse(s"${n}__rep", 0.0)
-        val janino = entryJanino.getOrElse(s"${n}__rep", 0L)
-        val steal = entrySteal.getOrElse(s"${n}__rep", 0.0)
+        val l = lapOf(s"${n}__rep")
         repCauses(n) =
-          if (gc >= excess * 0.5) "gc"
-          // the r10 "jit" label, split by mechanism (JitDiag adjudication):
-          // a nonzero janino delta on the REP lap means its generated
-          // classes were evicted from the 100-entry codegen cache by the
-          // ~130 rerun entries in between, so HotSpot re-profiles and
-          // re-JITs brand-new classes from zero while the lap runs at
-          // interpreter/C1 speed — a measurement artifact of the 240-entry
-          // single-JVM sweep, not an operator property (isolated
-          // first/rep pairs sit within noise; see PLANS.md)
-          else if (jit >= excess * 0.5 && janino > 0) "jit_fresh_class_rewarm"
-          else if (jit >= excess * 0.5) "jit"
-          else if (cache > 64.0) "block_manager_carryover"
-          else if (steal >= excess * 0.5) "host_steal"
+          if (l.gc >= excess * 0.5) "gc"
+          // the r10 "jit" label, split by mechanism: a nonzero janino delta
+          // on the REP lap means its generated classes were evicted from
+          // the codegen cache by the rerun entries in between, so HotSpot
+          // re-profiles and re-JITs brand-new classes while the lap runs at
+          // interpreter/C1 speed — an artifact of the single-JVM sweep, not
+          // an operator property (isolated first/rep pairs sit within noise)
+          else if (l.jit >= excess * 0.5 && l.janino > 0) "jit_fresh_class_rewarm"
+          else if (l.jit >= excess * 0.5) "jit"
+          else if (l.cacheMb > 64.0) "block_manager_carryover"
+          else if (l.steal >= excess * 0.5) "host_steal"
           else "unexplained"
       }
-    val cacheDetail = entryCacheMb.toSeq.filter(_._2 > 64.0)
-      .map { case (k, v) => s"""  "${k}__cache_mb": $v""" }
-    // the 6-D merge's measured shape + the tail re-assert of the LINEAR
-    // shipping law: shipped == (nChunks−1)·union — exact for a healthy run
-    // (XFilterScalingSpec pins the same identity at small scale); a false
-    // here means a pair task was lost or double-counted
-    val xfDetail = xf6dStats.toSeq.flatMap { st =>
-      Seq(
-        s"""  "sky_20m_6d_xfilter_nat__union_points": ${st.unionPoints}""",
-        s"""  "sky_20m_6d_xfilter_nat__n_chunks": ${st.nChunks}""",
-        s"""  "sky_20m_6d_xfilter_nat__pair_tasks": ${st.pairTasks}""",
-        s"""  "sky_20m_6d_xfilter_nat__shipped_points": ${st.shippedPoints}""",
-        s"""  "sky_20m_6d_xfilter_nat__ship_linear_ok": ${
-          st.shippedPoints == (st.nChunks - 1).toLong * st.unionPoints}""")
-    }
     val causeDetail =
       confirms.toSeq.map { case (k, v) => s"""  "${k}__confirm": $v""" } ++
       causes.toSeq.map { case (k, v) =>
         s"""  "${k}__first_run_cause": "$v"""" } ++
       repCauses.toSeq.map { case (k, v) =>
         s"""  "${k}__rep_cause": "$v"""" } ++
-      entryErr.toSeq.map { case (k, v) => s"""  "${k}__err": "$v"""" } ++
-      entryCleanupErr.toSeq.map { case (k, v) =>
+      laps.errors.toSeq.map { case (k, v) => s"""  "${k}__err": "$v"""" } ++
+      laps.cleanupErrors.toSeq.map { case (k, v) =>
         s"""  "${k}__cleanup_err": "$v"""" }
+    // "<name>__rep" = second-run timing of that workload; total_sec covers
+    // first runs only. sentinel_* = the fixed-work load calibration
+    // bracketing the sweep (quiet machine ≈ 0.2-0.4 s). A filtered
+    // (SPARK_GRAFT_ONLY) diagnostic run writes to a SEPARATE file — it must
+    // never clobber the last full-sweep snapshot that README/PLANS cite
+    // (which is exactly what happened once in round 5).
     val fullJson = (results.map { case (k, v) => s"""  "$k": $v""" } ++
       repeats.map { case (k, v) => s"""  "${k}__rep": $v""" } ++
-      streamDetail ++ ttlDetail ++ stealDetail ++ gcJitDetail ++
-      cacheDetail ++ xfDetail ++ causeDetail ++ quietDetail ++
-      sectionDriftDetail)
+      streamJson(progress) ++ lapDetail ++ xfilterJson(xfilter) ++
+      causeDetail ++ quietDetail ++ sectionDriftDetail)
       .mkString(s"""{\n  "total_sec": $total,\n""" +
         s"""  "stable_total_sec": $stableTotal,\n""" +
         s"""  "stable_n": $stableN,\n""" +
@@ -1995,7 +700,6 @@ object Bench {
     val outFile = if (only.isEmpty) "BENCH_FULL.json" else "BENCH_ONLY.json"
     val fw = new java.io.PrintWriter(outFile)
     try fw.write(fullJson) finally fw.close()
-
     // 3-significant-figure seconds: enough to compare rounds, short enough
     // to fit ~70 entries in the line budget. Locale.ROOT-pinned: the f
     // interpolator uses the JVM default locale, and a comma-decimal locale
@@ -2031,8 +735,8 @@ object Bench {
     val causesJson = {
       val all = causes.toSeq.map { case (k, v) => (s"$k~f", short(v)) } ++
         repCauses.toSeq.map { case (k, v) => (s"$k~r", short(v)) } ++
-        entryErr.toSeq.map { case (k, v) => (s"$k~e", v.take(60)) } ++
-        entryCleanupErr.toSeq.map { case (k, v) =>
+        laps.errors.toSeq.map { case (k, v) => (s"$k~e", v.take(60)) } ++
+        laps.cleanupErrors.toSeq.map { case (k, v) =>
           (s"$k~c", v.take(60)) } ++
         headlineCauses.map { case (k, v) => (s"$k~h", short(v)) } ++
         sectionDriftCauses.map { case (k, v) => (s"$k~d", short(v)) }

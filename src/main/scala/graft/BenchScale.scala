@@ -1,18 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.{Dedup, SkylineOps}
 import graft.sources.Generators
-import graft.operators.SkylineOps
 
 /** 10x scale certification of the frozenScale heavy family (judge r13
   * item 1). `Bench` measures the scale family at its sf0.1 sizes (600k-doc
   * corpora, 1M-20M-point skylines); the 100 TB claim rested on enforced
   * plan SHAPE (BroadcastAuditSpec, bounded-collect audits) plus those
-  * timings. This main re-runs the same 22 operators at `mult`x the rows
-  * (default 10: 6M-doc corpora, 10M-200M-point skylines) on the same 32
-  * cores and writes `BENCH_SCALE.json` with, per entry, the measured
-  * min-of-pair, the sf0.1 quiet reference (`Bench.quietRef`, ledger-checked
-  * by QuietRefSpec), and their ratio.
+  * timings. This main re-runs the SAME entry table ([[BenchHarness.entries]]
+  * and the `stream_dedup_600k` twin, 23 entries defined once for both mains)
+  * at `mult`x the rows (default 10: 6M-doc corpora, 10M-200M-point
+  * skylines) on the same 32 cores, plus its four scale-only [[twins]], and
+  * writes `BENCH_SCALE.json` with, per entry, the measured min-of-pair, the
+  * sf0.1 quiet reference (`Bench.quietRef`, ledger-checked by QuietRefSpec),
+  * and their ratio. The stream twin runs Bench's 8 state stores.
   *
   * Reading the ratio: same core count, `mult`x the work, so a perfectly
   * linear operator reads ratio ~ mult; fixed per-job overhead (trigger
@@ -26,71 +27,57 @@ import graft.operators.SkylineOps
   * Environment knobs: SPARK_GRAFT_SCALE_MULT (default 10),
   * SPARK_GRAFT_SCALE_ONLY=a,b,c (diagnostic runs write
   * BENCH_SCALE_ONLY.json, mirroring Bench's full-vs-filtered guard),
-  * SPARK_DRIVER_MEM (build.sbt heap; the certification runs at 96g — 10x
-  * the data in one JVM needs more than the sweep's 24g default, and the
-  * artifact records the heap it ran with). */
+  * SPARK_GRAFT_CPUS, and SPARK_DRIVER_MEM (build.sbt heap; the
+  * certification runs at 96g — 10x the data in one JVM needs more than the
+  * sweep's 24g default, and the artifact records the heap it ran with). */
 object BenchScale {
+  import BenchHarness._
+
+  /** SCALE-PATH TWINS (round 14). The uncapped LSH faces are structurally
+    * QUADRATIC on self-similar corpora — measured on this corpus: minhash
+    * hot buckets grow linearly (max 1,245 members at 600k -> 12,623 at 6M),
+    * candidate pairs 1.44M -> 145M (101x for 10x), and simhash's 15-bit band
+    * space saturates at ~n/2^15 random members per bucket. The twins are the
+    * linear designs: a 100-member bucket cap (hot buckets carry no
+    * pair-level near-dup signal; same constant as ngramJaccardPairs/winnow)
+    * and Manku-style 30-bit wide keys. Each twin also runs at x1 as
+    * `<name>_base` IN THIS RUN, so the artifact carries a same-harness
+    * scaling ratio (__ratio_over_mult_self) that needs no cross-file ref. */
+  private[graft] val twins: Seq[Entry] = Seq(
+    Entry("dedup_minhash_capped_600k", 600000L, (spark, n) => Dedup.minhashCandidates(
+      Generators.syntheticCorpus(spark, n), "doc_id", "text", maxBucket = 100).count()),
+    Entry("dedup_simhash_wide_600k", 600000L, (spark, n) => Dedup.simhashHammingPairsWide(
+      Generators.syntheticCorpus(spark, n), "doc_id", "text").count()))
+
+  /** Every batch entry this main runs, in order, with its multiplier. */
+  private[graft] def batchPlan(mult: Long): Seq[(Entry, Long)] =
+    entries.map(_ -> mult) ++
+      twins.map(e => e.copy(name = s"${e.name}_base") -> 1L) ++ twins.map(_ -> mult)
+
+  /** The streaming twin: the same 10 micro-batches at mult x rows per batch
+    * (state volume grows mult x; the per-batch flatness claim is exactly
+    * what a 10x run certifies). */
+  private[graft] val streamTwins: Seq[StreamEntry] =
+    streams.filter(_.name == "stream_dedup_600k")
+
+  /** Names of every entry this main runs. */
+  private[graft] def entryNames: Seq[String] =
+    batchPlan(1L).map(_._1.name) ++ streamTwins.map(_.name)
 
   def main(args: Array[String]): Unit = {
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toLong
     require(mult >= 1L, "SPARK_GRAFT_SCALE_MULT must be >= 1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions._
+    val spark = session(cpus)
+    val laps = new Laps(spark)
 
     val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def wanted(name: String): Boolean = only.forall(_.contains(name))
 
-    def stealTicks(): Long =
-      try {
-        val src = scala.io.Source.fromFile("/proc/stat")
-        val line = try src.getLines().next() finally src.close()
-        line.trim.split("\\s+").drop(1).lift(7).map(_.toLong).getOrElse(0L)
-      } catch { case _: Throwable => 0L }
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
-    }
+    // per entry: first lap, repeat lap, best lap, storm re-laps, rows
+    val measured = scala.collection.mutable.LinkedHashMap[String, (Lap, Lap, Option[Lap], Int, Long)]()
 
-    val results = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val reps = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val bests = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val extraLaps = scala.collection.mutable.LinkedHashMap[String, Int]()
-    val sizes = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val steals = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val gcs = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val errs = scala.collection.mutable.LinkedHashMap[String, String]()
-    val extra = scala.collection.mutable.LinkedHashMap[String, String]()
-
-    def withRddSweep(f: => Unit): Unit = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      try f finally spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => before(id) }
-        .values.foreach(_.unpersist(true))
-    }
-    case class Lap(t: Double, steal: Double, gc: Double)
-    def lap(name: String, f: () => Unit): Lap = {
-      System.gc()
-      val s0 = stealTicks(); val g0 = gcMillis()
-      val t0 = System.nanoTime()
-      val t = try { withRddSweep(f()); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
-          errs(name) = (e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage))
-            .replaceAll("[\\p{Cntrl}\"\\\\]", " ").take(200)
-          -1.0 }
-      Lap(t, (stealTicks() - s0) / 100.0, (gcMillis() - g0) / 1000.0)
-    }
     /** Two laps (cold-ish + warm) + steal-gated storm re-laps, min over
       * all laps — Bench's timeQuiet adjudication adapted to multi-minute
       * laps: the gate is RELATIVE (5% of the lap, floored at Bench's 2 s
@@ -99,389 +86,84 @@ object BenchScale {
       * published headline is the best lap; its own steal/GC land as the
       * entry's brackets so the artifact self-adjudicates. Setup work
       * belongs OUTSIDE the thunk. */
-    def bench(name: String, n: Long)(f: => Unit): Unit = if (wanted(name)) {
-      sizes(name) = n
+    def bench(name: String, n: Long, f: () => Unit): Unit = {
       def stormed(l: Lap): Boolean = l.steal > math.max(2.0, l.t * 0.05)
-      var laps = List(lap(name, () => f), lap(s"${name}__rep", () => f))
-      def best: Option[Lap] = laps.filter(_.t >= 0).sortBy(_.t).headOption
+      var all = List(laps.lap(name, f), laps.lap(s"${name}__rep", f))
+      def best: Option[Lap] = all.filter(_.t >= 0).sortBy(_.t).headOption
       var tries = 0
       while (best.exists(stormed) && tries < 2) {
         tries += 1
-        laps = laps :+ lap(s"${name}__storm$tries", () => f)
+        all = all :+ laps.lap(s"${name}__storm$tries", f)
       }
-      results(name) = laps.head.t
-      reps(name) = laps(1).t
-      extraLaps(name) = tries
-      bests(name) = best.map(_.t).getOrElse(-1.0)
-      steals(name) = best.map(_.steal).getOrElse(laps.map(_.steal).sum)
-      gcs(name) = best.map(_.gc).getOrElse(0.0)
-      if (best.nonEmpty) errs.remove(name) // some lap succeeded
-      println(f"BENCH_SCALE $name n=$n min=${bests(name)}%.2f " +
-        f"(first=${laps.head.t}%.2f rep=${laps(1).t}%.2f extra=$tries " +
-        f"best_steal=${steals(name)}%.1f)")
+      measured(name) = (all.head, all(1), best, tries, n)
+      if (best.nonEmpty) laps.errors.remove(name) // some lap succeeded
+      println(f"BENCH_SCALE $name n=$n min=${best.fold(-1.0)(_.t)}%.2f " +
+        f"(first=${all.head.t}%.2f rep=${all(1).t}%.2f extra=$tries " +
+        f"best_steal=${best.fold(all.map(_.steal).sum)(_.steal)}%.1f)")
     }
 
     // Warm-up: small passes through the heaviest codegen chains so the
     // first laps measure the operators, not Janino/C2 (same policy as the
     // sweep's warm-up sections).
-    withRddSweep {
+    laps.withRddSweep {
       SkylineOps.skylineBroadcastFilter(
         Generators.generate(spark, "anti-correlated", 20000, 5)).count()
       SkylineOps.skylineViaStrategy(
         Generators.generate(spark, "anti-correlated", 20000, 2),
         "mr-angle", 10000.0, 8).count()
-      val w = Generators.syntheticCorpus(spark, 20000L).localCheckpoint(true)
-      try {
-        graft.operators.Dedup.minhashCandidates(w, "doc_id", "text").count()
-        graft.operators.Dedup.simhashHammingPairs(w, "doc_id", "text").count()
-        graft.operators.Dedup.exactSubstrStats(w, "doc_id", "text",
-          clean = true).write.format("noop").mode("overwrite").save()
-        val (wc12, wc1, wv) = TextQueries.bigramLm(
-          w.where(col("doc_id") % 2 === 0))
-        TextQueries.scorePerplexity(
-          TextQueries.bigramRows(w.where(col("doc_id") % 2 === 1)),
-          wc12, wc1, wv.head().getLong(0)).count()
-      } finally w.unpersist()
+      warm(spark, (corpusFamily ++ twins).filter(e => wanted(e.name)), 30L) // 20k docs per 600k
     }
 
-    val sentinelPre = {
-      val nT = Runtime.getRuntime.availableProcessors()
-      val t0 = System.nanoTime()
-      val ts = (1 to nT).map { t =>
-        new Thread(() => {
-          var acc = t.toLong; var i = 0L
-          while (i < 150000000L) {
-            acc = acc * 6364136223846793005L + 1442695040888963407L; i += 1
-          }
-          if (acc == 42L) print("")
-        })
-      }
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
+    val sentinelPre = loadSentinel()
     val stealStart = stealTicks()
 
-    // ----- skyline family (generated points; sizes = sf0.1 entry x mult)
-    bench("sky_1m_2d_anti", 1000000L * mult) {
-      SkylineOps.skylineViaStrategy(
-        Generators.generate(spark, "anti-correlated", 1000000L * mult, 2),
-        "mr-angle", 10000.0, 8).count()
-    }
-    bench("sky_1m_2d_sort", 1000000L * mult) {
-      val pts = Generators.generate(spark, "anti-correlated", 1000000L * mult, 2)
-        .toDF("id", "values", "op")
-        .select(col("id"), col("values")(0).as("v1"), col("values")(1).as("v2"))
-        .cache()
-      try SkylineOps.skyline2DDFScalable(pts, "id", "v1", "v2").count()
-      finally pts.unpersist()
-    }
-    bench("sky_1m_3d_anti", 1000000L * mult) {
-      SkylineOps.skylineViaStrategy(
-        Generators.generate(spark, "anti-correlated", 1000000L * mult, 3),
-        "mr-angle", 10000.0, 8).count()
-    }
-    bench("sky_10m_2d_sort", 10000000L * mult) {
-      val pts = Generators.generate(spark, "anti-correlated", 10000000L * mult, 2)
-        .toDF("id", "values", "op")
-        .select(col("id"), col("values")(0).as("v1"), col("values")(1).as("v2"))
-        .cache()
-      try SkylineOps.skyline2DDFScalable(pts, "id", "v1", "v2").count()
-      finally pts.unpersist()
-    }
-    bench("sky_500k_4d_bcast", 500000L * mult) {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 500000L * mult, 4)).count()
-    }
-    bench("sky_1m_4d_bcast", 1000000L * mult) {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 1000000L * mult, 4)).count()
-    }
-    bench("sky_500k_4d_xfilter", 500000L * mult) {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 500000L * mult, 4),
-        maxBroadcastPoints = 20000).count()
-    }
-    bench("sky_1m_3d_gridpar", 1000000L * mult) {
-      SkylineOps.skylineGridParallel(
-        Generators.generate(spark, "uniform", 1000000L * mult, 3), 3).count()
-    }
-    bench("sky_1m_3d_tree_uni", 1000000L * mult) {
-      SkylineOps.skylineTreeViaStrategy(
-        Generators.generate(spark, "uniform", 1000000L * mult, 3),
-        "mr-angle", 10000.0, 8).length
-    }
-    bench("sky_10m_3d_bcast", 10000000L * mult) {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 10000000L * mult, 3)).count()
-    }
-    // The two NATURAL pairwise-merge entries: anti-correlated skyline
-    // OUTPUT grows superlinearly in n, so the union the merge must
-    // cross-filter is a growing fraction of the input. Their mult can be
-    // capped separately (SPARK_GRAFT_SCALE_MULT_HI) when the full 10x
-    // union outgrows one host's merge budget; the xfilter stats published
-    // below decompose whatever ratio results into output growth vs merge
-    // cost.
-    val multHi = sys.env.get("SPARK_GRAFT_SCALE_MULT_HI")
-      .map(_.toLong).getOrElse(mult)
-    SkylineOps.lastXFilterStats.set(null)
-    bench("sky_10m_5d_xfilter_nat", 10000000L * multHi) {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 10000000L * multHi, 5)).count()
-    }
-    if (wanted("sky_10m_5d_xfilter_nat"))
-      Option(SkylineOps.lastXFilterStats.get()).foreach { st =>
-        extra("sky_10m_5d_xfilter_nat__union_points") = st.unionPoints.toString
-        extra("sky_10m_5d_xfilter_nat__n_chunks") = st.nChunks.toString
-        extra("sky_10m_5d_xfilter_nat__shipped_points") = st.shippedPoints.toString
-      }
-    SkylineOps.lastXFilterStats.set(null)
-    bench("sky_20m_6d_xfilter_nat", 20000000L * multHi) {
-      SkylineOps.skylineBroadcastFilter(
-        Generators.generate(spark, "anti-correlated", 20000000L * multHi, 6)).count()
-    }
-    if (wanted("sky_20m_6d_xfilter_nat"))
-      Option(SkylineOps.lastXFilterStats.get()).foreach { st =>
-        extra("sky_20m_6d_xfilter_nat__union_points") = st.unionPoints.toString
-        extra("sky_20m_6d_xfilter_nat__n_chunks") = st.nChunks.toString
-        extra("sky_20m_6d_xfilter_nat__shipped_points") = st.shippedPoints.toString
-      }
-
-    // ----- 600k corpus family at mult x (6M docs at the default 10)
-    val corpusN = 600000L * mult
-    bench("dedup_minhash_600k_sig", corpusN) {
-      graft.operators.Dedup.minhashSignatures(
-          Generators.syntheticCorpus(spark, corpusN), "doc_id", "text")
-        .write.format("noop").mode("overwrite").save()
-    }
-    bench("dedup_minhash_600k", corpusN) {
-      graft.operators.Dedup.minhashCandidates(
-          Generators.syntheticCorpus(spark, corpusN), "doc_id", "text").count()
-    }
-    bench("dedup_simhash_600k", corpusN) {
-      graft.operators.Dedup.simhashHammingPairs(
-          Generators.syntheticCorpus(spark, corpusN), "doc_id", "text").count()
-    }
-    // SCALE-PATH TWINS (round 14). The two uncapped LSH faces above are
-    // structurally QUADRATIC on self-similar corpora — measured on this
-    // corpus: minhash hot buckets grow linearly (max 1,245 members at 600k
-    // -> 12,623 at 6M), candidate pairs 1.44M -> 145M (101x for 10x), and
-    // simhash's 15-bit band space saturates at ~n/2^15 random members per
-    // bucket. The twins are the linear designs: a 100-member bucket cap
-    // (hot buckets carry no pair-level near-dup signal; same constant as
-    // ngramJaccardPairs/winnow) and Manku-style 30-bit wide keys. Each twin
-    // measures its own base at the sf0.1 size IN THIS RUN, so the artifact
-    // carries a same-harness scaling ratio (__ratio_over_mult_self) that
-    // needs no cross-file quiet ref.
-    bench("dedup_minhash_capped_600k_base", 600000L) {
-      graft.operators.Dedup.minhashCandidates(
-          Generators.syntheticCorpus(spark, 600000L), "doc_id", "text",
-          maxBucket = 100).count()
-    }
-    bench("dedup_minhash_capped_600k", corpusN) {
-      graft.operators.Dedup.minhashCandidates(
-          Generators.syntheticCorpus(spark, corpusN), "doc_id", "text",
-          maxBucket = 100).count()
-    }
-    bench("dedup_simhash_wide_600k_base", 600000L) {
-      graft.operators.Dedup.simhashHammingPairsWide(
-          Generators.syntheticCorpus(spark, 600000L), "doc_id", "text").count()
-    }
-    bench("dedup_simhash_wide_600k", corpusN) {
-      graft.operators.Dedup.simhashHammingPairsWide(
-          Generators.syntheticCorpus(spark, corpusN), "doc_id", "text").count()
-    }
-    bench("text_perplexity_600k", corpusN) {
-      val d = Generators.syntheticCorpus(spark, corpusN)
-      val (c12, c1, vocab) = TextQueries.bigramLm(
-        d.where(col("doc_id") % 2 === 0))
-      val v = vocab.head().getLong(0)
-      TextQueries.scorePerplexity(
-        TextQueries.bigramRows(d.where(col("doc_id") % 2 === 1)),
-        c12, c1, v).count()
-    }
-    bench("dedup_substring_600k", corpusN) {
-      graft.operators.Dedup.exactSubstrStats(
-          Generators.syntheticCorpus(spark, corpusN), "doc_id", "text",
-          clean = true)
-        .write.format("noop").mode("overwrite").save()
-    }
-    bench("hybrid_rrf_600k", corpusN) {
-      val d = Generators.syntheticCorpus(spark, corpusN)
-        .select(col("doc_id"),
-          translate(col("text"), "0123456789", "abcdefghij").as("text"))
-        .localCheckpoint(true)
-      val lex = graft.operators.TextAnalysis.bm25(d, "doc_id", "text",
-          Seq("wbcd", "whhh", "weca", "wjjj"))
-        .orderBy(col("score_u6").desc, col("doc_id")).limit(100)
-        .withColumn("rank", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .orderBy(col("score_u6").desc, col("doc_id"))).cast("long"))
-        .select(col("doc_id"), col("rank"))
-        .localCheckpoint(true)
-      val embDf = d.select(col("doc_id"),
-        transform(sequence(lit(0), lit(63)),
-          i => pmod(hash(col("doc_id"), i), lit(1000)).cast("double") / 1000.0)
-          .as("embedding"))
-      val vec = graft.operators.Similarity.topKToQueryU6(embDf, "doc_id",
-          "embedding", embDf.where(col("doc_id") === 0), "embedding", 100)
-        .select(col("nbr_id").as("doc_id"), col("rank"))
-        .localCheckpoint(true)
-      graft.operators.Similarity.rrfFuse(
-          Seq("lex" -> lex, "vec" -> vec), "doc_id")
-        .orderBy(col("rrf_u9").desc, col("doc_id")).limit(20).count()
-    }
-    bench("dedup_minhash_est_600k", corpusN) {
-      val corpus = Generators.syntheticCorpus(spark, corpusN)
-        .localCheckpoint(true)
-      try graft.operators.Dedup.minhashEstimationAudit(
-          corpus, "doc_id", "text", samplePairsMod = 4)
-        .write.format("noop").mode("overwrite").save()
-      finally corpus.unpersist()
-    }
-    bench("text_classifier_600k", corpusN) {
-      graft.operators.TextAnalysis.linearClassifierScoreU6(
-          Generators.syntheticCorpus(spark, corpusN), "doc_id", "text",
-          TextQueries.classifierWeightsU6)
-        .write.format("noop").mode("overwrite").save()
-    }
-    bench("multimodal_600k", corpusN) {
-      val ids = spark.range(corpusN).select(col("id").as("doc_id"))
-      graft.operators.Multimodal.decodeMeta(
-          graft.operators.Multimodal.syntheticMedia(ids, "doc_id"))
-        .toDF()
-        .groupBy("format")
-        .agg(count(lit(1)).as("n"), sum("n_frames").as("frames"),
-          sum("n_bytes").as("bytes"))
-        .write.format("noop").mode("overwrite").save()
-    }
-    bench("cdc_apply_5m", 5000000L * mult) {
-      val base = spark.range(1000000L * mult)
-        .select(col("id").as("k"), (col("id") % 997).cast("double").as("v"))
-      val changelog = spark.range(5000000L * mult).select(
-        (col("id") % (1500000L * mult)).as("k"), col("id").as("seq"),
-        when(col("id") % 13 === 0, lit("D")).otherwise(lit("U")).as("op"),
-        (col("id") % 1009).cast("double").as("v"))
-      graft.operators.Cdc.applyChangelog(base, changelog, "k", Seq("seq"),
-          "op", Seq("v"))
-        .write.format("noop").mode("overwrite").save()
-    }
-
-    // ----- the streaming scale twin: same 10 micro-batches, mult x rows
-    // per batch, same 16-store sizing (state volume grows mult x; the
-    // per-batch flatness claim is exactly what a 10x run certifies)
-    var sdBatches: Seq[Double] = Nil
-    var sdStateRows: Long = -1L
-    if (wanted("stream_dedup_600k")) {
-      val sdDir = java.nio.file.Files.createTempDirectory("sdscale").toString
-      Generators.syntheticCorpus(spark, corpusN)
-        .repartitionByRange(10, col("doc_id"))
-        .write.mode("overwrite").parquet(sdDir)
-      Bench.restampPartsInNameOrder(sdDir)
-      val sdSchema = spark.read.parquet(sdDir).schema
-      bench("stream_dedup_600k", corpusN) {
-        val prior = spark.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        val priorShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-        val ckpt = java.nio.file.Files.createTempDirectory("sdscaleckpt")
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        try {
-          val src = spark.readStream.schema(sdSchema)
-            .option("maxFilesPerTrigger", 1).parquet(sdDir)
-            .repartition(32)
-          val owners = graft.operators.Dedup.streamingMinhashOwners(
-            graft.operators.Dedup.minhashBandKeys(src, "doc_id", "text",
-              k = 5, numHashes = 8, bands = 4))
-          val q = owners.writeStream.format("noop")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append").start()
-          try {
-            q.processAllAvailable()
-            val progress = q.recentProgress.filter(_.numInputRows > 0)
-            if (sdBatches.isEmpty) {
-              sdBatches = progress.map(
-                _.durationMs.get("triggerExecution").toDouble / 1000.0).toSeq
-              sdStateRows = progress.lastOption
-                .flatMap(_.stateOperators.headOption.map(_.numRowsTotal))
-                .getOrElse(-1L)
-            }
-          } finally q.stop()
-        } finally {
-          prior match {
-            case Some(p) => spark.conf.set(
-              "spark.sql.streaming.stateStore.providerClass", p)
-            case None => spark.conf.unset(
-              "spark.sql.streaming.stateStore.providerClass")
-          }
-          spark.conf.unset("spark.sql.streaming.stateStore.rocksdb." +
-            "changelogCheckpointing.enabled")
-          spark.conf.set("spark.sql.shuffle.partitions", priorShuffle)
-          IoUtil.deleteRecursively(ckpt.toString)
-        }
-      }
-      IoUtil.deleteRecursively(sdDir)
-    }
+    val xfilter = scala.collection.mutable.LinkedHashMap[String, SkylineOps.XFilterStats]()
+    runEntries(spark, batchPlan(mult).filter(p => wanted(p._1.name)), xfilter)(bench)
+    val progress = scala.collection.mutable.LinkedHashMap[String, StreamStats]()
+    runStreams(spark, laps, streamTwins.filter(e => wanted(e.name)), mult, progress)(bench)
 
     // ----- broadcast-audit the corpus shapes AT THE SCALED SIZE (the
     // Range-estimate trap is size-independent, but this is the committed
     // proof that no operator re-broadcasts at 6M rows)
-    val auditHits = if (only.isEmpty) {
-      val priorAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try graft.tools.BroadcastAudit.auditCorpusShapes(spark, corpusN)
-        .filter(h => !h.resizable)
-      finally spark.conf.set("spark.sql.adaptive.enabled", priorAqe)
-    } else Nil
+    val corpusN = 600000L * mult
+    val auditHits = if (only.isEmpty)
+      withConfs(spark, Seq("spark.sql.adaptive.enabled" -> "false")) {
+        graft.tools.BroadcastAudit.auditCorpusShapes(spark, corpusN)
+          .filter(h => !h.resizable)
+      }
+    else Nil
 
     val stealTotal = (stealTicks() - stealStart) / 100.0
-    val sentinelPost = {
-      val nT = Runtime.getRuntime.availableProcessors()
-      val t0 = System.nanoTime()
-      val ts = (1 to nT).map { t =>
-        new Thread(() => {
-          var acc = t.toLong; var i = 0L
-          while (i < 150000000L) {
-            acc = acc * 6364136223846793005L + 1442695040888963407L; i += 1
-          }
-          if (acc == 42L) print("")
-        })
-      }
-      ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
+    val sentinelPost = loadSentinel()
 
     def j(d: Double): String = if (d.isNaN || d.isInfinite) "-1" else
       BigDecimal(d).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val lines = scala.collection.mutable.ArrayBuffer[String]()
     lines += s"""  "mult": $mult"""
-    lines += s"""  "mult_hi": $multHi"""
+    // the 5-D/6-D entries' multiplier, a key artifact readers expect; = mult
+    lines += s"""  "mult_hi": $mult"""
     lines += s"""  "cpus": $cpus"""
     lines += s"""  "heap": "${sys.env.getOrElse("SPARK_DRIVER_MEM", "24g")}""""
     lines += s"""  "sentinel_pre": ${j(sentinelPre)}"""
     lines += s"""  "sentinel_post": ${j(sentinelPost)}"""
     lines += s"""  "steal_sec": ${j(stealTotal)}"""
     var linTotal = 0.0; var linQuiet = 0.0
-    results.keys.foreach { n =>
-      val first = results(n); val rep = reps.getOrElse(n, -1.0)
-      val mop = bests.getOrElse(n, -1.0)
+    measured.foreach { case (n, (first, rep, best, tries, rows)) =>
+      val mop = best.fold(-1.0)(_.t)
       lines += s"""  "$n": ${j(mop)}"""
-      lines += s"""  "${n}__first": ${j(first)}"""
-      lines += s"""  "${n}__rep": ${j(rep)}"""
-      lines += s"""  "${n}__storm_relaps": ${extraLaps.getOrElse(n, 0)}"""
-      lines += s"""  "${n}__n_rows": ${sizes(n)}"""
-      lines += s"""  "${n}__steal_sec": ${j(steals.getOrElse(n, 0.0))}"""
-      lines += s"""  "${n}__gc_sec": ${j(gcs.getOrElse(n, 0.0))}"""
+      lines += s"""  "${n}__first": ${j(first.t)}"""
+      lines += s"""  "${n}__rep": ${j(rep.t)}"""
+      lines += s"""  "${n}__storm_relaps": $tries"""
+      lines += s"""  "${n}__n_rows": $rows"""
+      lines += s"""  "${n}__steal_sec": ${j(best.fold(
+        first.steal + rep.steal)(_.steal))}"""
+      lines += s"""  "${n}__gc_sec": ${j(best.fold(0.0)(_.gc))}"""
       Bench.quietRef.get(n).foreach { q =>
         lines += s"""  "${n}__sf01_quiet_ref": ${j(q)}"""
         if (mop >= 0) {
           lines += s"""  "${n}__ratio_vs_quiet": ${j(mop / q)}"""
-          val em = if (n == "sky_10m_5d_xfilter_nat" ||
-            n == "sky_20m_6d_xfilter_nat") multHi else mult
-          lines += s"""  "${n}__ratio_over_mult": ${j(mop / q / em)}"""
-          if (em == mult && mop >= 0) { linTotal += mop; linQuiet += q }
+          lines += s"""  "${n}__ratio_over_mult": ${j(mop / q / mult)}"""
+          linTotal += mop; linQuiet += q
         }
       }
     }
@@ -490,20 +172,18 @@ object BenchScale {
         linTotal / linQuiet / mult)}"""
     // same-run self-ratios for the scale-path twins (base measured in this
     // run at the sf0.1 size; ~1.0 reads as linear scaling)
-    for (nm <- Seq("dedup_minhash_capped_600k", "dedup_simhash_wide_600k")) {
-      (bests.get(nm), bests.get(s"${nm}_base")) match {
-        case (Some(s), Some(b)) if s >= 0 && b > 0 =>
+    for (nm <- twins.map(_.name)) {
+      def mop(k: String) = measured.get(k).flatMap(_._3).map(_.t)
+      (mop(nm), mop(s"${nm}_base")) match {
+        case (Some(s), Some(b)) if b > 0 =>
           lines += s"""  "${nm}__ratio_over_mult_self": ${j(s / b / mult)}"""
         case _ =>
       }
     }
-    errs.foreach { case (n, e) => lines += s"""  "${n}__err": "$e"""" }
-    extra.foreach { case (k, v) => lines += s"""  "$k": $v""" }
-    if (sdBatches.nonEmpty) {
-      lines += s"""  "stream_dedup_600k__batch_sec": [${
-        sdBatches.map(j).mkString(", ")}]"""
-      lines += s"""  "stream_dedup_600k__state_rows": $sdStateRows"""
-    }
+    laps.errors.foreach { case (n, e) => lines += s"""  "${n}__err": "$e"""" }
+    laps.cleanupErrors.foreach { case (n, e) => lines += s"""  "${n}__cleanup_err": "$e"""" }
+    lines ++= xfilterJson(xfilter)
+    lines ++= streamJson(progress)
     lines += s"""  "broadcast_audit_n": $corpusN"""
     lines += s"""  "broadcast_audit_nonresizable_hits": [${
       auditHits.map(h => s""""${h.entry}:${h.kind}"""").mkString(", ")}]"""

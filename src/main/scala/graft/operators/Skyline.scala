@@ -141,6 +141,15 @@ object SkylineOps {
       case other => throw new IllegalArgumentException(s"unknown strategy: $other")
     }
 
+  /** How many partitions the protocol must cover for `requested` ones.
+    * MR-Grid's bitmask partitioner emits ids in [0, 2^dims) whatever count
+    * is asked for (the reference requires partitions >= 2^dims,
+    * `FlinkSkyline.java:787`), so a smaller count would leave cells without
+    * a trigger and out of the optimality mean. `dims` is only evaluated for
+    * mr-grid. */
+  def protocolPartitions(strategy: String, requested: Int, dims: => Int): Int =
+    if (strategy == "mr-grid") math.max(requested, 1 << dims) else requested
+
   /** M1 optimality (`FlinkSkyline.java:590-608`): the mean over ALL
     * `numPartitions` partitions of the share of a partition's local skyline
     * that survives the global merge; an empty or absent partition counts 0.
@@ -163,15 +172,17 @@ object SkylineOps {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
     val local = localSkylines(ds, strategy, domain, numPartitions).cache()
-    val localSizes: Map[Int, Int] =
-      local.map { case (pid, pts) => (pid, pts.size) }.collect().toMap
+    val localShapes = local.map { case (pid, pts) =>
+      (pid, pts.size, pts.headOption.fold(0)(_.values.length)) }.collect()
+    val localSizes: Map[Int, Int] = localShapes.map(s => s._1 -> s._2).toMap
     val tLocal = System.currentTimeMillis()
     val globalSky = skyline(local.flatMap(_._2)).cache()
     val survivors: Map[Int, Long] =
       globalSky.groupByKey(_.originPartition).count().collect().toMap
     val skySize = globalSky.count()
     val tEnd = System.currentTimeMillis()
-    val opt = optimality(localSizes, survivors, numPartitions)
+    val opt = optimality(localSizes, survivors, protocolPartitions(strategy,
+      numPartitions, localShapes.map(_._3).maxOption.getOrElse(0)))
     local.unpersist(); globalSky.unpersist()
     Seq((queryId, recordCount, skySize,
          math.round(opt * 10000.0) / 10000.0,

@@ -73,33 +73,32 @@ object SkylineStream {
   def broadcastTrigger(payload: String, n: Int, nowMs: Long): Seq[Envelope] =
     (0 until n).map(i => Envelope(i, 1, -1L, Array.empty, payload, nowMs))
 
-  /** Envelopes of a batch run: the parsed data lines plus every trigger
-    * payload broadcast to all partitions. */
-  private def batchEnvelopes(spark: SparkSession, dataLines: Dataset[String],
+  /** Runs `topology` over a batch: the parsed data lines plus every trigger
+    * payload broadcast to all partitions, collected. The partition count is
+    * [[SkylineOps.protocolPartitions]] of `requested` (for mr-grid that
+    * costs one small job for the data's dimension count). Each of the two
+    * stateful stages opens one state store per shuffle partition, empty or
+    * not, so the run is planned with one shuffle partition per protocol
+    * partition instead of the session's setting (200 by default: about 7x
+    * slower on a small input). */
+  private def runProtocol[T](spark: SparkSession, dataLines: Dataset[String],
                              triggerPayloads: Seq[String], strategy: String,
-                             domain: Double, numPartitions: Int): Dataset[Envelope] = {
+                             domain: Double, requested: Int)(
+                             topology: (Dataset[Envelope], Int) => Dataset[T]): Seq[T] = {
     import spark.implicits._
     // batch transformWithState finds its state stores through the
     // StateStoreCoordinator, which the streams manager registers on creation
     spark.streams
-    val pidOf = SkylineOps.pidFunction(strategy, domain, numPartitions)
+    val n = SkylineOps.protocolPartitions(strategy, requested, dataLines
+      .flatMap(l => parseData(l, _ => 0).map(_.values.length)).rdd.fold(0)(math.max))
+    val pidOf = SkylineOps.pidFunction(strategy, domain, n)
     val now = System.currentTimeMillis()
-    dataLines.flatMap(l => parseData(l, pidOf)).unionAll(
-      spark.createDataset(triggerPayloads.flatMap(p =>
-        broadcastTrigger(p, numPartitions, now))))
-  }
-
-  /** Collects a batch run of the topology. Each of its two stateful stages
-    * opens one state store per shuffle partition, empty or not, so the run
-    * is planned with one shuffle partition per protocol partition instead
-    * of the session's setting (200 by default: about 7x slower on a small
-    * input). */
-  private def collectBatch[T](spark: SparkSession, numPartitions: Int,
-                              run: Dataset[T]): Seq[T] = {
+    val env = dataLines.flatMap(l => parseData(l, pidOf)).unionAll(
+      spark.createDataset(triggerPayloads.flatMap(p => broadcastTrigger(p, n, now))))
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.get(key)
-    spark.conf.set(key, numPartitions.toString)
-    try run.collect().toSeq finally spark.conf.set(key, prior)
+    spark.conf.set(key, n.toString)
+    try topology(env, n).collect().toSeq finally spark.conf.set(key, prior)
   }
 
   /** Full-protocol batch run that returns the merged global skyline points
@@ -109,16 +108,14 @@ object SkylineStream {
   def runBatchPoints(spark: SparkSession, dataLines: Dataset[String],
                      strategy: String, domain: Double,
                      numPartitions: Int): Seq[Point] =
-    collectBatch(spark, numPartitions, SkylineStreamTWS.topologyPoints(
-      batchEnvelopes(spark, dataLines, Seq("collect"), strategy, domain,
-        numPartitions), numPartitions))
+    runProtocol(spark, dataLines, Seq("collect"), strategy, domain, numPartitions)(
+      SkylineStreamTWS.topologyPoints(_, _))
 
   /** Batch-mode end-to-end pipeline: CSV lines + trigger payloads → completed
     * query results, through the same operators as the streaming topology. */
   def runBatch(spark: SparkSession, dataLines: Dataset[String],
                triggerPayloads: Seq[String], strategy: String, domain: Double,
                numPartitions: Int): Seq[QueryResult] =
-    collectBatch(spark, numPartitions, SkylineStreamTWS.topology(
-      batchEnvelopes(spark, dataLines, triggerPayloads, strategy, domain,
-        numPartitions), numPartitions))
+    runProtocol(spark, dataLines, triggerPayloads, strategy, domain, numPartitions)(
+      SkylineStreamTWS.topology(_, _))
 }

@@ -54,15 +54,9 @@ object StreamMain {
     val algo = opts.getOrElse("algo", "mr-angle")
     val parallelism = opts.getOrElse("parallelism", "4").toInt
     val dims = opts.getOrElse("dims", "2").toInt
-    // FlinkSkyline.java:76 (2x parallelism); mr-grid's bitmask partitioner
-    // emits ids in [0, 2^dims) regardless of the requested count (the
-    // reference requires partitions >= 2^dims, FlinkSkyline.java:787) — size
-    // the trigger broadcast and the latch to cover every possible mask, or
-    // masks >= n would never receive triggers and their points would be
-    // silently missing from every answer
-    val numPartitions =
-      if (algo == "mr-grid") math.max(2 * parallelism, 1 << dims)
-      else 2 * parallelism
+    // FlinkSkyline.java:76 (2x parallelism), widened for mr-grid so the
+    // trigger broadcast and the latch cover every possible cell
+    val numPartitions = SkylineOps.protocolPartitions(algo, 2 * parallelism, dims)
     val domain = opts.getOrElse("domain", "1000.0").toDouble
     val checkpoint = opts.getOrElse("checkpoint",
       java.nio.file.Files.createTempDirectory("graft-ckpt").toString)

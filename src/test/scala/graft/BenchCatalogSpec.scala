@@ -74,6 +74,23 @@ class BenchCatalogSpec extends AnyFunSuite {
       s"headline workloads without a query entry: ${missing.mkString(", ")}")
   }
 
+  test("BenchScale runs the shared entry table plus its four scale-only twins") {
+    // one definition per entry: a BenchScale name outside the shared table
+    // would be a re-typed copy that can drift from Bench's
+    val shared = BenchHarness.entries.map(_.name) ++ BenchScale.streamTwins.map(_.name)
+    assert(shared.count(_.startsWith("sky_")) == 12 && shared.size == 23)
+    val names = BenchScale.entryNames
+    assert(names.distinct == names)
+    assert(names.toSet -- shared == Set("dedup_minhash_capped_600k",
+      "dedup_minhash_capped_600k_base", "dedup_simhash_wide_600k",
+      "dedup_simhash_wide_600k_base"))
+    assert(shared.toSet.subsetOf(names.toSet))
+    // every table entry is a reference workload SPARK_GRAFT_ONLY accepts
+    val tableNames = BenchHarness.entries.map(_.name) ++ BenchHarness.streams.map(_.name)
+    assert(tableNames.distinct == tableNames)
+    assert(tableNames.toSet.subsetOf(Bench.refWorkloads))
+  }
+
   test("README's driver-gated query count matches SparkEntry.queries") {
     // the count drifted twice (r7: 185 written as 187; r8: 188 written as
     // 187) — pin the doc to the code so it cannot drift again

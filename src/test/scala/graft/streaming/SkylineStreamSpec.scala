@@ -131,5 +131,21 @@ class SkylineStreamSpec extends AnyFunSuite {
       // every strategy returns the exact skyline, duplicates included
       assert(res.head.skylineSize == expect, strategy)
     }
+    // 3-D mr-grid has 2^3 cells whatever N is asked for: with N = 4 every
+    // cell must still get a trigger, and the optimality mean (batch and
+    // streaming) must cover all eight, so N = 4 and N = 8 agree
+    val rng3 = new scala.util.Random(5)
+    val pts3 = Seq.tabulate(600)(i => (i.toLong, Array.fill(3)(rng3.nextInt(100).toDouble)))
+    val expect3 = pts3.count { case (_, t) =>
+      !pts3.exists { case (_, u) => Dominance.dominates(u, t) } }
+    val lines3 = spark.createDataset(pts3.map { case (id, v) => (id +: v.toSeq).mkString(",") })
+    val grid = Seq(N, 8).map(n => SkylineStream.runBatch(spark, lines3, Seq("q,500"),
+      "mr-grid", DOMAIN, n).head)
+    assert(grid.map(_.skylineSize) == Seq(expect3, expect3))
+    assert(math.abs(grid(0).optimality - grid(1).optimality) < 1e-9)
+    val batchOpt = Seq(N, 8).map(n => graft.operators.SkylineOps.skylineWithMetrics(
+      spark.createDataset(pts3.map { case (id, v) => graft.core.Point(id, v) }),
+      "mr-grid", DOMAIN, n, "q", 600L).head().getAs[Double]("optimality"))
+    assert(batchOpt(0) == batchOpt(1))
   }
 }
