@@ -52,9 +52,8 @@ object SkylineQueries {
     "sky2d_global" -> ((s, dir) =>
       SkylineOps.skylineDF(partPoints(s, dir), "id", Seq("v1", "v2"))
         .orderBy("id")),
-    // the same query through the typed partial/final SkylineAgg merge
-    // (map-side combine, ONE final-merge task) that skylineWithMetrics runs
-    // and skylineGroupedDF runs per group — kept so that merge stays oracled
+    // the same query through SkylineOps.skyline, the spread broadcast kd
+    // merge that skylineWithMetrics runs — kept so that merge stays oracled
     "sky2d_global_agg" -> ((s, dir) =>
       SkylineOps.pointsToColumns(SkylineOps.skyline(SkylineOps.pointsFrom(
         partPoints(s, dir), "id", Seq("v1", "v2"))), "id", Seq("v1", "v2"))

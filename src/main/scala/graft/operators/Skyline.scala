@@ -16,6 +16,8 @@ import graft.core.{Point, SkylineBuffer}
   * non-dominated points ever cross the shuffle), and `merge` is exactly the
   * global BNL merge. Correct because skyline is distributive:
   * sky(A ∪ B) = sky(sky(A) ∪ sky(B)).
+  * Used only where a key shards the final merge (groups, grid cells,
+  * pipeline windows); the global skyline is [[SkylineOps.skyline]].
   */
 class SkylineAgg extends Aggregator[Point, SkylineBuffer, Seq[Point]] {
   override def zero: SkylineBuffer = SkylineBuffer.empty
@@ -57,41 +59,30 @@ object SkylineOps {
       dimCols.zipWithIndex.map { case (c, i) =>
         element_at(col("values"), i + 1).as(c) }: _*)
 
-  /** Global skyline via one aggregation — Catalyst plans partial per-partition
-    * BNL (combiner) + a single final merge, mirroring the reference's
-    * local-then-global topology with no hand-built shuffle. */
+  /** Global skyline, the one global merge: the input is spread round-robin
+    * over `defaultParallelism` slivers, then [[skylineBroadcastFilter]] runs
+    * on every core. `originPartition` passes through. The spread keeps a
+    * union of local skylines (one fat row per strategy partition) from
+    * pre-reducing in one serial BNL per fat antichain; as an RDD shuffle it
+    * runs inside the size-check job instead of an adaptive stage's own. */
   def skyline(ds: Dataset[Point]): Dataset[Point] = {
     val spark = ds.sparkSession
-    import spark.implicits._
-    ds.select(new SkylineAgg().toColumn).flatMap(identity(_))
+    broadcastFilter(spark,
+      ds.rdd.repartition(spark.sparkContext.defaultParallelism), MaxBroadcastPoints)
   }
 
   /** Two-phase skyline through an explicit spatial strategy, mirroring the
     * reference topology (keyBy(strategy) → local BNL → keyBy(query) → global
     * merge, `FlinkSkyline.java:138-174`) — but with map-side combine inside
-    * each phase, which the reference does not have, and the global merge run
-    * as the parallel broadcast cross-filter instead of one single-threaded
+    * the local phase, which the reference does not have, and the global
+    * merge run as the parallel [[skyline]] instead of one single-threaded
     * reducer (the reference's dominant cost, PDF §5.5). Results are
     * identical for every strategy and partition count (partition-invariance
     * of skyline). */
   def skylineViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int): Dataset[Point] = {
     implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
-    val spark = ds.sparkSession
-    // REBALANCE between the phases: localSkylines emits one fat row per
-    // strategy partition (numPartitions ≈ 8 of them), so the merge's
-    // per-partition pre-reduce would otherwise run one serial BNL per fat
-    // antichain — on 1M 3-D anti that is a 30k-point antichain through a
-    // single-threaded O(n·s) pass, measured 2.6 s of the entry's 4.1 s
-    // wall (Sky3dProbe; the kd filter does the same dominance work in
-    // 0.06 s across 32 tasks). A round-robin spread of the (tiny,
-    // already-reduced) union costs one ~30k-row shuffle and turns the
-    // pre-reduce into defaultParallelism balanced slivers; antichain
-    // slivers stay antichains, so the union the kd filter sees is
-    // unchanged minus cross-partition kills.
-    skylineBroadcastFilter(
-      localSkylines(ds, strategy, domain, numPartitions).flatMap(_._2)
-        .repartition(spark.sparkContext.defaultParallelism))
+    skyline(localSkylines(ds, strategy, domain, numPartitions).flatMap(_._2))
   }
 
   /** Per-strategy local skylines: (partitionId, points tagged with
@@ -103,22 +94,33 @@ object SkylineOps {
     * antichains cross the wire (as Tungsten-encoded rows, not serialized
     * aggregation buffers), and the per-key merge reduces the combined
     * partials. Same fixpoint as the typed-Aggregator form with far less
-    * allocation churn on wide inputs. */
+    * allocation churn on wide inputs.
+    *
+    * An input narrower than `defaultParallelism` (a CSV file under
+    * `openCostInBytes` is ONE split) is first hash-spread by id over that
+    * many partitions; round-robin would sort every row first (~190 ms of
+    * the one scan task on 150k 3-D rows). Wider inputs keep their plan.
+    * Observing the width plans the input: free for a scan, but an adaptive
+    * plan runs its shuffles there and again for the partials. */
   def localSkylines(ds: Dataset[Point], strategy: String, domain: Double,
                     numPartitions: Int): Dataset[(Int, Seq[Point])] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val pidOf = pidFunction(strategy, domain, numPartitions)
-    val partials = ds.mapPartitions { it =>
+    val cores = spark.sparkContext.defaultParallelism
+    val narrow = ds.queryExecution.toRdd.getNumPartitions < cores
+    val in = if (narrow) ds.repartition(cores, col("id")) else ds
+    val partials = in.mapPartitions { it =>
       val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
       it.foreach(p => bufs.getOrElseUpdate(pidOf(p.values), SkylineBuffer.empty).add(p))
       bufs.iterator.map { case (pid, b) => (pid, b.result) }
     }
     partials.groupByKey(_._1).mapGroups { (pid, it) =>
-      // one bulk ascending-sum build over all partials beats incremental
-      // staged compaction (each compact rescans the growing survivor set)
+      // a BNL over a union of antichains is quadratic; the kd filter is not
+      // (150k 3-D anti-correlated rows: 124 -> 46 ms)
       val all = it.flatMap(_._2).toArray
-      (pid, SkylineBuffer.of(all.iterator).result.map(_.copy(originPartition = pid)))
+      val kd = buildKd(all)
+      (pid, all.toSeq.filter(p => !dominatedByKd(kd, p)).map(_.copy(originPartition = pid)))
     }
   }
 
@@ -164,26 +166,31 @@ object SkylineOps {
     * emits per query (`FlinkSkyline.java:610-648` JSON schema; [[optimality]]
     * `:590-608`). Timing fields are wall-clock (non-deterministic), matching
     * field names only.
-    */
+    * [[localSkylines]] then [[skyline]]: one collect of the local sizes and
+    * arity, `skyline`'s size check and union collect, then one pass over its
+    * survivors counting them per origin partition (the sum is the size). */
   def skylineWithMetrics(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int, queryId: String,
                          recordCount: Long): DataFrame = {
     val spark = ds.sparkSession
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    val local = localSkylines(ds, strategy, domain, numPartitions).cache()
+    // an RDD cache: each query over a cached Dataset costs one more job
+    val local = localSkylines(ds, strategy, domain, numPartitions).rdd.cache()
     val localShapes = local.map { case (pid, pts) =>
       (pid, pts.size, pts.headOption.fold(0)(_.values.length)) }.collect()
     val localSizes: Map[Int, Int] = localShapes.map(s => s._1 -> s._2).toMap
     val tLocal = System.currentTimeMillis()
-    val globalSky = skyline(local.flatMap(_._2)).cache()
-    val survivors: Map[Int, Long] =
-      globalSky.groupByKey(_.originPartition).count().collect().toMap
-    val skySize = globalSky.count()
+    // one stage: each task counts its survivors, the driver adds the maps
+    val survivors: Map[Int, Long] = skyline(spark.createDataset(local.flatMap(_._2)))
+      .rdd.aggregate(Map.empty[Int, Long])(
+        (m, p) => m.updated(p.originPartition, m.getOrElse(p.originPartition, 0L) + 1L),
+        (a, b) => b.foldLeft(a) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v) })
+    val skySize = survivors.values.sum
     val tEnd = System.currentTimeMillis()
     val opt = optimality(localSizes, survivors, protocolPartitions(strategy,
       numPartitions, localShapes.map(_._3).maxOption.getOrElse(0)))
-    local.unpersist(); globalSky.unpersist()
+    local.unpersist()
     Seq((queryId, recordCount, skySize,
          math.round(opt * 10000.0) / 10000.0,
          0L, tLocal - t0, tEnd - tLocal, tEnd - t0))
@@ -206,35 +213,30 @@ object SkylineOps {
       depth).result
   }
 
-  /** Two-phase skyline whose GLOBAL phase is fully parallel: per-partition
-    * local antichains (phase 1, map-side SFS build) are unioned, broadcast as
-    * one flat sum-sorted coordinate array, and every candidate is then
-    * dominance-filtered against the broadcast set in parallel across all
-    * cores (phase 2). Correct because any dominator of a candidate is either
-    * itself in the union or is dominated by a union member that (by
-    * transitivity) also dominates the candidate.
+  /** Two-phase skyline whose GLOBAL phase is fully parallel: each partition
+    * reduces to its local antichain, the union (size-checked before it
+    * reaches the driver) is broadcast as a kd dominance index ([[KdIndex]]),
+    * and every candidate is checked against it on every core. Correct
+    * because any dominator of a candidate is either in the union or is
+    * dominated by a union member that (by transitivity) also dominates the
+    * candidate. Duplicates of a skyline point all survive (equals never
+    * dominate), matching BNL semantics.
     *
-    * The scan per candidate stops at the candidate's own coordinate sum: a
-    * dominator must be <= everywhere and < somewhere, hence has a STRICTLY
-    * smaller sum — so only the sorted prefix `sums(k) < sum(c)` can contain
-    * one. Duplicates of a skyline point all survive (equal sums are outside
-    * the prefix), matching BNL semantics.
-    *
-    * Scale: the broadcast is bounded by (numPartitions × local skyline
-    * size), not by input size — the same bound the reference's global phase
-    * ships over its second shuffle (`FlinkSkyline.java:171-174`), but here
-    * the merge work is spread over every core instead of one reducer. If the
-    * union exceeds `maxBroadcastPoints` (high-dim pathological data) it
+    * The broadcast is bounded by the union of local skylines, not by input
+    * size — the bound the reference's global phase ships over its second
+    * shuffle (`FlinkSkyline.java:171-174`). Past `maxBroadcastPoints` it
     * falls back to the distributed pairwise cross-filter
-    * (`crossFilterChunks`), which needs no driver collect or broadcast; at
-    * cluster scale the same pattern nests hierarchically (filter within
-    * executor groups first). */
+    * (`crossFilterChunks`), with no driver collect or broadcast. */
   def skylineBroadcastFilter(ds: Dataset[Point],
-                             maxBroadcastPoints: Int = 4000000): Dataset[Point] = {
-    val spark = ds.sparkSession
+                             maxBroadcastPoints: Int = MaxBroadcastPoints): Dataset[Point] =
+    broadcastFilter(ds.sparkSession, ds.rdd, maxBroadcastPoints)
+
+  private final val MaxBroadcastPoints = 4000000
+
+  private def broadcastFilter(spark: SparkSession, points: org.apache.spark.rdd.RDD[Point],
+                              maxBroadcastPoints: Int): Dataset[Point] = {
     import spark.implicits._
-    implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
-    val localRdd = ds.rdd.mapPartitions { it =>
+    val localRdd = points.mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
       else Iterator.single(SkylineBuffer.of(it).result.toArray)
     }.cache()
@@ -256,17 +258,11 @@ object SkylineOps {
       val union = localRdd.collect().iterator.flatten.toArray
       val packed = buildKd(union)
       val bPacked = spark.sparkContext.broadcast(packed)
-      // the union is already on the driver, so the candidate side is re-seeded
-      // from it rather than re-reading localRdd — nothing stays cached past
-      // this call (a leak here pins block-manager memory for the session,
-      // since query catalogs call this dozens of times).
-      // 512 points per slice, not 4096: the per-point kd dominance check is
-      // CPU-heavy exactly when the union is a wide antichain (a surviving
-      // point must prove NOTHING dominates it, so the traversal can't
-      // prune), and the old divisor capped a 30k-point 3-D anti merge at 8
-      // tasks on 32 cores — measured 2.5-2.9 s of the sky_1m_3d_anti
-      // entry's 3.9-4.4 s wall (Sky3dProbe). Tiny unions still collapse to
-      // a handful of tasks.
+      // the candidates are re-seeded from the driver's union, so nothing
+      // stays cached past this call. 512 points per slice: a surviving
+      // point of a wide antichain cannot prune its kd traversal, so the
+      // check is CPU-heavy exactly there (4096 capped a 30k-point 3-D anti
+      // merge at 8 tasks on 32 cores: 2.5-2.9 s of a 3.9-4.4 s entry).
       val slices = math.max(1, math.min(union.length / 512 + 1,
         spark.sparkContext.defaultParallelism))
       val survivors = spark.sparkContext.parallelize(union.toIndexedSeq, slices)

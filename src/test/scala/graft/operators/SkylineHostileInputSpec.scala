@@ -69,7 +69,15 @@ class SkylineHostileInputSpec extends AnyFunSuite {
           (() => asSky(Graft.skylineLargeScale(ds).collect()))) ++
         Strategies.map(st => s"skylineViaStrategy($st)" -> (() => asSky(
           SkylineOps.skylineViaStrategy(ds, st, Domain, 8).collect()))))
-      assert(bad.isEmpty, s"d=$d seed=$seed\n${bad.mkString("\n")}")
+      val expectSize = brute(pts).size.toLong
+      val badSizes = Strategies.flatMap { st =>
+        val got = Try(SkylineOps.skylineWithMetrics(ds, st, Domain, 8, "q", pts.size)
+          .collect().head.getAs[Long]("skyline_size"))
+        if (got.toOption.contains(expectSize)) None
+        else Some(s"skylineWithMetrics($st) skyline_size: $got, expected $expectSize")
+      }
+      assert(bad.isEmpty && badSizes.isEmpty,
+        s"d=$d seed=$seed\n${(bad ++ badSizes).mkString("\n")}")
     }
   }
 

@@ -86,8 +86,7 @@ class SkylineOpsSpec extends AnyFunSuite {
       val df = pts.map(p => (p.id, p.values(0), p.values(1))).toDF("id", "v1", "v2")
       val fast = SkylineOps.skyline2DDFScalable(df, "id", "v1", "v2")
         .as[(Long, Double, Double)].collect().toSet
-      val slow = SkylineOps.skyline(pts.toDS()).collect()
-        .map(p => (p.id, p.values(0), p.values(1))).toSet
+      val slow = bruteForce(pts).map { case (id, vs) => (id, vs(0), vs(1)) }
       assert(fast == slow, s"seed=$seed")
     }
   }
@@ -123,7 +122,7 @@ class SkylineOpsSpec extends AnyFunSuite {
     import spark.implicits._
     for ((dims, seed) <- Seq((2, 41), (3, 42), (4, 43))) {
       val pts = mkPts(3000, dims, seed, card = 40)
-      val expect = asSet(SkylineOps.skyline(pts.toDS()).collect().toSeq)
+      val expect = bruteForce(pts)
       val got = asSet(SkylineOps.skylineGridParallel(pts.toDS(), dims).collect().toSeq)
       assert(got == expect, s"dims=$dims")
     }
@@ -138,7 +137,7 @@ class SkylineOpsSpec extends AnyFunSuite {
     import spark.implicits._
     for ((dims, seed) <- Seq((2, 51), (3, 52), (4, 53))) {
       val pts = mkPts(3000, dims, seed, card = 40)
-      val expect = asSet(SkylineOps.skyline(pts.toDS()).collect().toSeq)
+      val expect = bruteForce(pts)
       val got = asSet(SkylineOps.skylineBroadcastFilter(
         pts.toDS().repartition(5)).collect().toSeq)
       assert(got == expect, s"dims=$dims")
@@ -166,6 +165,31 @@ class SkylineOpsSpec extends AnyFunSuite {
     val opt = row.getAs[Double]("optimality")
     assert(opt >= 0.0 && opt <= 1.0)
     assert(row.getAs[Long]("skyline_size") > 0)
+  }
+
+  test("metrics query equals a driver-side answer on spread and wide inputs") {
+    import spark.implicits._
+    val (domain, n) = (30.0, 4)
+    val pts = mkPts(1200, 3, seed = 12, card = 30)   // small domain => duplicates
+    val global = bruteForce(pts)
+    for (strategy <- Seq("mr-dim", "mr-grid", "mr-angle")) {
+      val pidOf = SkylineOps.pidFunction(strategy, domain, n)
+      val shares = pts.groupBy(p => pidOf(p.values)).values.map { part =>
+        val local = bruteForce(part)
+        local.count(global.contains).toDouble / local.size
+      }
+      val expect = shares.sum / SkylineOps.protocolPartitions(strategy, n, 3)
+      // one partition takes the spread path, 16 the wide one
+      for (slices <- Seq(1, 16)) {
+        val ds = spark.createDataset(spark.sparkContext.parallelize(pts, slices))
+        val row = SkylineOps.skylineWithMetrics(ds, strategy, domain, n, "q", pts.size)
+          .collect().head
+        assert(row.getAs[Long]("skyline_size") == global.size, s"$strategy slices=$slices")
+        // the query rounds optimality to 4 decimals
+        assert(math.abs(row.getAs[Double]("optimality") - expect) <= 0.5e-4 + 1e-12,
+          s"$strategy slices=$slices")
+      }
+    }
   }
 
   test("grid-bounded dominator/dominated counts equal brute force") {
