@@ -23,16 +23,18 @@ object Graft {
   // --- skyline (reference surface) ---------------------------------------
 
   /** Global skyline of `df` over the given (minimized) dimension columns,
-    * keyed by its first column; the global merge runs in parallel (see
-    * [[SkylineOps.skylineDF]]). */
+    * keyed by its first column: a lazy Catalyst skyline whose global merge
+    * runs in parallel (see [[SkylineOps.skylineDF]]). */
   def skyline(df: DataFrame, dims: Seq[String]): DataFrame =
     SkylineOps.skylineDF(df, df.columns.head, dims)
 
-  /** Skyline through a reference partitioning strategy
-    * ("mr-dim" | "mr-grid" | "mr-angle"). */
+  /** Skyline whose partial phase combines per reference partitioning
+    * strategy id ("mr-dim" | "mr-grid" | "mr-angle"); same rows as
+    * [[skyline]] for every strategy and partition count. */
   def skylineVia(df: DataFrame, idCol: String, dims: Seq[String],
                  strategy: String, domain: Double, partitions: Int): DataFrame =
-    SkylineOps.skylineDFViaStrategy(df, idCol, dims, strategy, domain, partitions)
+    SkylineOps.skylineDF(df, idCol, dims,
+      Some(plans.ReferenceStrategy(strategy, domain, partitions)))
 
   /** The reference's full query: skyline size + optimality + timing JSON. */
   def skylineWithMetrics(ds: Dataset[Point], strategy: String, domain: Double,

@@ -45,29 +45,28 @@ object SkylineQueries {
   val N = 8          // partitions, reference default 2*parallelism=8
   val DOMAIN = 1000.0
 
+  private def skyVia(pts: DataFrame, strategy: String): DataFrame =
+    SkylineOps.skylineDF(pts, "id", Seq("v1", "v2"),
+      Some(graft.plans.ReferenceStrategy(strategy, DOMAIN, N))).orderBy("id")
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A1+A3: global two-phase skyline through the relational front door,
-    // whose GLOBAL phase is the parallel broadcast cross-filter merge
-    // (chunked pairwise fallback past the bound): no serial final merge
+    // the Catalyst node: partial skyline per input partition, then the
+    // parallel broadcast kd merge (chunked cross-filter past the bound)
     "sky2d_global" -> ((s, dir) =>
       SkylineOps.skylineDF(partPoints(s, dir), "id", Seq("v1", "v2"))
         .orderBy("id")),
     // the same query through SkylineOps.skyline, the spread broadcast kd
     // merge that skylineWithMetrics runs — kept so that merge stays oracled
     "sky2d_global_agg" -> ((s, dir) =>
-      SkylineOps.pointsToColumns(SkylineOps.skyline(SkylineOps.pointsFrom(
-        partPoints(s, dir), "id", Seq("v1", "v2"))), "id", Seq("v1", "v2"))
+      SkylineOps.skyline(SkylineOps.pointsFrom(partPoints(s, dir), "id", Seq("v1", "v2")))
+        .select(col("id"), col("values")(0).as("v1"), col("values")(1).as("v2"))
         .orderBy("id")),
-    // K1/K2/K3 + A1 + A3: the three reference topologies; partition-invariant
-    "sky2d_dim" -> ((s, dir) =>
-      SkylineOps.skylineDFViaStrategy(partPoints(s, dir), "id", Seq("v1", "v2"),
-        "mr-dim", DOMAIN, N).orderBy("id")),
-    "sky2d_grid" -> ((s, dir) =>
-      SkylineOps.skylineDFViaStrategy(partPoints(s, dir), "id", Seq("v1", "v2"),
-        "mr-grid", DOMAIN, N).orderBy("id")),
-    "sky2d_angle" -> ((s, dir) =>
-      SkylineOps.skylineDFViaStrategy(partPoints(s, dir), "id", Seq("v1", "v2"),
-        "mr-angle", DOMAIN, N).orderBy("id")),
+    // K1/K2/K3 + A1 + A3: the three reference topologies as the node's
+    // partial-phase strategy; partition-invariant
+    "sky2d_dim" -> ((s, dir) => skyVia(partPoints(s, dir), "mr-dim")),
+    "sky2d_grid" -> ((s, dir) => skyVia(partPoints(s, dir), "mr-grid")),
+    "sky2d_angle" -> ((s, dir) => skyVia(partPoints(s, dir), "mr-angle")),
     // 3-D skyline over a lineitem subset
     "sky3d_lineitem" -> ((s, dir) => {
       val pts = t(s, dir, "lineitem")
@@ -107,8 +106,8 @@ object SkylineQueries {
       partPoints(s, dir).select(col("id"),
         Partitioners.mrAngle(array(col("v1"), col("v2")), N).cast("long").as("pid"))
         .orderBy("id")),
-    // Custom Catalyst operator path: logical Skyline node -> planned
-    // partial/final physical pair with a Catalyst-inserted exchange
+    // The Catalyst node with every input column kept: logical Skyline ->
+    // SkylinePartialExec -> SkylineMergeExec
     "sky2d_plan" -> ((s, dir) =>
       graft.plans.SkylinePlanApi.skyline(partPoints(s, dir), Seq("v1", "v2"))
         .orderBy("id")),
@@ -173,16 +172,10 @@ object SkylineQueries {
     "sky_optimality" -> ((s, dir) => {
       import s.implicits._
       val pts = SkylineOps.pointsFrom(partPoints(s, dir), "id", Seq("v1", "v2"))
-      val rows = Seq("mr-dim", "mr-grid", "mr-angle").map { strat =>
-        val local = SkylineOps.localSkylines(pts, strat, DOMAIN, N).cache()
-        val sizes = local.map { case (pid, ps) => (pid, ps.size) }.collect().toMap
-        val glob = SkylineOps.skyline(local.flatMap(_._2)(
-          org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[graft.core.Point]()))
-        val surv = glob.groupByKey(_.originPartition).count().collect().toMap
-        local.unpersist()
-        (strat, math.round(SkylineOps.optimality(sizes, surv, N) * 10000.0) / 10000.0)
-      }
-      rows.toDF("strategy", "optimality").orderBy("strategy")
+      Seq("mr-dim", "mr-grid", "mr-angle").map { strat =>
+        (strat, SkylineOps.skylineWithMetrics(pts, strat, DOMAIN, N, strat, 0L)
+          .head().getAs[Double]("optimality"))
+      }.toDF("strategy", "optimality").orderBy("strategy")
     })
   )
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
@@ -50,14 +51,6 @@ object SkylineOps {
       .select(keep ++ Seq(col(idCol).cast("long").as("id"),
         array(dims: _*).as("values"), lit(-1).as("originPartition")): _*)
   }
-
-  /** Points back in the relational layout: `idCol`, then one column per
-    * dimension. */
-  private[graft] def pointsToColumns(pts: Dataset[Point], idCol: String,
-                                     dimCols: Seq[String]): DataFrame =
-    pts.toDF("id", "values", "op").select(col("id").as(idCol) +:
-      dimCols.zipWithIndex.map { case (c, i) =>
-        element_at(col("values"), i + 1).as(c) }: _*)
 
   /** Global skyline, the one global merge: the input is spread round-robin
     * over `defaultParallelism` slivers, then [[skylineBroadcastFilter]] runs
@@ -233,18 +226,27 @@ object SkylineOps {
 
   private final val MaxBroadcastPoints = 4000000
 
-  private def broadcastFilter(spark: SparkSession, points: org.apache.spark.rdd.RDD[Point],
+  private def broadcastFilter(spark: SparkSession, points: RDD[Point],
                               maxBroadcastPoints: Int): Dataset[Point] = {
-    import spark.implicits._
-    val localRdd = points.mapPartitions { it =>
+    implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
+    spark.createDataset(mergeLocal(spark, points.mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
       else Iterator.single(SkylineBuffer.of(it).result.toArray)
-    }.cache()
+    }, maxBroadcastPoints))
+  }
+
+  /** The global merge of [[skylineBroadcastFilter]] over blocks of
+    * candidates (one array per task, normally a local skyline): the points no
+    * candidate dominates. Runs the size check and the union collect when
+    * called; the blocks stay cached for those jobs only. */
+  private[graft] def mergeLocal(spark: SparkSession, local: RDD[Array[Point]],
+                                maxBroadcastPoints: Int = MaxBroadcastPoints): RDD[Point] = {
+    val localRdd = local.cache()
     try {
       // size check BEFORE any collect — the union never lands on the driver
       // unless it fits the broadcast bound
       val unionCount = localRdd.map(_.length.toLong).fold(0L)(_ + _)
-      if (unionCount == 0) return spark.emptyDataset[Point]
+      if (unionCount == 0) return spark.sparkContext.emptyRDD[Point]
       if (unionCount > maxBroadcastPoints) {
         // union too wide to broadcast whole: distributed pairwise cross-filter.
         // The union is re-chunked, each (chunk i, chunk j) pair is dominance-
@@ -265,12 +267,11 @@ object SkylineOps {
       // merge at 8 tasks on 32 cores: 2.5-2.9 s of a 3.9-4.4 s entry).
       val slices = math.max(1, math.min(union.length / 512 + 1,
         spark.sparkContext.defaultParallelism))
-      val survivors = spark.sparkContext.parallelize(union.toIndexedSeq, slices)
+      spark.sparkContext.parallelize(union.toIndexedSeq, slices)
         .mapPartitions { it =>
           val pk = bPacked.value
           it.filter(p => !dominatedByKd(pk, p))
         }
-      spark.createDataset(survivors)
     } finally localRdd.unpersist(false)
   }
 
@@ -294,9 +295,7 @@ object SkylineOps {
     * chunk j, and bitsets AND-reduce per chunk. Within-chunk domination is
     * impossible (each chunk is an antichain). */
   private def crossFilterChunks(spark: SparkSession,
-      localRdd: org.apache.spark.rdd.RDD[Array[Point]],
-      unionUpperBound: Long): Dataset[Point] = {
-    implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
+      localRdd: RDD[Array[Point]], unionUpperBound: Long): RDD[Point] = {
     // chunk-pair tasks = n·(n-1) but the cartesian SHIPS each chunk n-1
     // times, so shuffle volume grows linearly in n × |union|: the FLOOR is
     // n ≈ √(2·cores) — enough pair-tasks to fill every core (n²≈2·cores)
@@ -401,7 +400,7 @@ object SkylineOps {
     // bounded by the full union, potentially >maxBroadcastPoints — can be
     // freed before returning instead of pinning block-manager memory for the
     // rest of the session; the survivors cache itself is freed by the
-    // ContextCleaner once the returned Dataset is dropped
+    // ContextCleaner once the returned RDD is dropped
     survivors.count()
     // one cheap pass over the cached chunks for the union size, one over
     // the cached masks for the exactly-once pair/shipped totals
@@ -413,7 +412,7 @@ object SkylineOps {
       XFilterStats(nChunks, unionPts, pairTasks, shippedPts))
     chunks.unpersist(false)
     masks.unpersist(false)
-    spark.createDataset(survivors)
+    survivors
   }
 
   /** Packed antichain for broadcast: flat coords + ascending coordinate sums
@@ -551,7 +550,7 @@ object SkylineOps {
         // segment bounding box → stored at m
         var t = 0
         while (t < d) {
-          var lo = Double.MaxValue; var hi = -Double.MaxValue
+          var lo = Double.PositiveInfinity; var hi = Double.NegativeInfinity
           var i = l
           while (i < h) {
             val v = fl(order(i) * d + t)
@@ -772,17 +771,16 @@ object SkylineOps {
       .select(col(idCol), col(v1), col(v2))
   }
 
-  /** Relational skyline over explicit dimension columns: (idCol, dims...) of
-    * the Pareto-optimal input rows (duplicates preserved; rows with a null or
-    * NaN dimension dropped, see [[pointsFrom]]). The global phase is the
-    * fully parallel [[skylineBroadcastFilter]] merge — per-partition local
-    * antichains, then every candidate dominance-checked against the
-    * broadcast union across all cores, falling back to the chunked pairwise
-    * cross-filter past the broadcast bound — so no single-threaded final
-    * merge appears anywhere in the plan. */
-  def skylineDF(df: DataFrame, idCol: String, dimCols: Seq[String]): DataFrame =
-    pointsToColumns(skylineBroadcastFilter(pointsFrom(df, idCol, dimCols)),
-      idCol, dimCols)
+  /** Relational skyline over explicit dimension columns: (idCol as a long,
+    * dims as doubles, under the names given) of the Pareto-optimal input rows
+    * (duplicates preserved; rows with a null or NaN dimension dropped). It
+    * builds the lazy Catalyst [[graft.plans.Skyline]] node, planned as a
+    * partial skyline per input partition (per strategy id within it when
+    * `via` is set) and the parallel global merge of [[skyline]]. */
+  def skylineDF(df: DataFrame, idCol: String, dimCols: Seq[String],
+                via: Option[graft.plans.ReferenceStrategy] = None): DataFrame =
+    graft.plans.SkylinePlanApi.skyline(df, dimCols, via).select(
+      col(idCol).cast("long").as(idCol) +: dimCols.map(c => col(c).cast("double").as(c)): _*)
 
   /** Per-group skyline in ONE aggregation: every group gets its own Pareto
     * frontier (e.g. the price/size frontier per brand). The typed
@@ -805,13 +803,6 @@ object SkylineOps {
         dimCols.zipWithIndex.map { case (c, i) =>
           element_at(col("p.values"), i + 1).as(c) }): _*)
   }
-
-  /** skylineDF through an explicit strategy (partition-invariant: same result
-    * as skylineDF for every strategy and n). */
-  def skylineDFViaStrategy(df: DataFrame, idCol: String, dimCols: Seq[String],
-                           strategy: String, domain: Double, n: Int): DataFrame =
-    pointsToColumns(skylineViaStrategy(pointsFrom(df, idCol, dimCols), strategy,
-      domain, n), idCol, dimCols)
 
   /** Grid-cell-bounded dominator counting (2-D, minimization): for every row,
     * the exact number of rows that strictly dominate it — the k-skyband

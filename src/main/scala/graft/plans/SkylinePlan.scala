@@ -1,144 +1,180 @@
 package graft.plans
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, Distribution, Partitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable.{ArrayBuffer, HashMap}
 
 import graft.core.{Point, SkylineBuffer}
+import graft.operators.SkylineOps
 
-/** Skyline as a first-class Catalyst operator.
+/** A reference partitioning strategy ("mr-dim" | "mr-grid" | "mr-angle")
+  * over `domain` with `partitions` ids; an unknown name fails here, when
+  * the frame is built. */
+case class ReferenceStrategy(name: String, domain: Double, partitions: Int) {
+  private[plans] val pidOf: Array[Double] => Int =
+    SkylineOps.pidFunction(name, domain, partitions)
+}
+
+/** Skyline as a first-class Catalyst operator, the one relational skyline.
   *
   * The reference hand-builds its two-phase topology (local BNL → shuffle →
   * global merge, `java/org.main/FlinkSkyline.java:138-174`); here the same
   * structure is PLANNED: `SkylinePartialExec` runs pipelined on each child
-  * partition (a combiner — only non-dominated rows reach the exchange), and
-  * `SkylineFinalExec` declares `AllTuples` distribution so Catalyst inserts
-  * the exchange. Filters/projections still push below through the logical
-  * node, and the operator composes with any child plan.
+  * partition (a combiner: one local skyline per partition, or per strategy id
+  * within it when `via` is set), and `SkylineMergeExec` runs the global merge
+  * of [[SkylineOps.skyline]] over the partial survivors on every core.
+  * Filters/projections still push below through the logical node, and the
+  * operator composes with any child plan.
   *
   * `dims` are expressions over the child's output evaluating to DOUBLE
   * (minimization on every dim, duplicates preserved; a row with a null or
   * NaN dim is dropped).
   */
-case class Skyline(dims: Seq[Expression], child: LogicalPlan) extends UnaryNode {
+case class Skyline(dims: Seq[Expression], via: Option[ReferenceStrategy],
+                   child: LogicalPlan) extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(c: LogicalPlan): Skyline = copy(child = c)
 }
 
-/** What both physical phases run on each input partition: every row is
-  * copied and lifted to `Point(rowIndex, dims)`, [[SkylineBuffer]] (the one
-  * BNL kernel) reduces them, and the rows at the surviving indices come out.
-  * A row with a null or NaN dimension is malformed and dropped. */
+/** Both physical phases: the child's rows come out unchanged, and a row
+  * is lifted to `Point(id, dims)`; None when a dim is null or NaN (a
+  * malformed row, dropped). */
 private[plans] trait SkylineRowsExec extends UnaryExecNode {
   def dims: Seq[Expression]
   override def output: Seq[Attribute] = child.output
-  override protected def doExecute(): RDD[InternalRow] = {
-    val bound = dims.map(BindReferences.bindReference(_, child.output))
-    child.execute().mapPartitions { it =>
-      val rows = ArrayBuffer[InternalRow]()
-      val pts = it.flatMap { r =>
-        val vs = new Array[Double](bound.length)
-        var ok = true
-        var i = 0
-        while (ok && i < bound.length) {
-          val v = bound(i).eval(r)
-          ok = v != null && !v.asInstanceOf[Double].isNaN
-          if (ok) vs(i) = v.asInstanceOf[Double]
-          i += 1
-        }
-        if (ok) { rows += r.copy(); Some(Point(rows.length - 1L, vs)) } else None
+
+  protected def rowLift: (InternalRow, Long) => Option[Point] = {
+    val bound = dims.map(BindReferences.bindReference(_, child.output)).toArray
+    (r, id) => {
+      val vs = new Array[Double](bound.length)
+      var ok = true
+      var i = 0
+      while (ok && i < bound.length) {
+        val v = bound(i).eval(r)
+        ok = v != null && !v.asInstanceOf[Double].isNaN
+        if (ok) vs(i) = v.asInstanceOf[Double]
+        i += 1
       }
-      SkylineBuffer.of(pts).result.iterator.map(p => rows(p.id.toInt))
+      if (ok) Some(Point(id, vs)) else None
     }
   }
 }
 
-/** Map-side phase: local skyline per child partition, fully pipelined. */
-case class SkylinePartialExec(dims: Seq[Expression], child: SparkPlan)
-    extends SkylineRowsExec {
+/** Map-side phase: local skyline per child partition, fully pipelined. Every
+  * valid row is copied and lifted to `Point(rowIndex, dims)`, [[SkylineBuffer]]
+  * (the one BNL kernel) reduces them, one buffer per strategy id when `via`
+  * is set, and the rows at the surviving indices come out. */
+case class SkylinePartialExec(dims: Seq[Expression], via: Option[ReferenceStrategy],
+                              child: SparkPlan) extends SkylineRowsExec {
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val lift = rowLift
+    val pidOf = via.map(_.pidOf)
+    child.execute().mapPartitions { it =>
+      val rows = ArrayBuffer[InternalRow]()
+      val bufs = HashMap[Int, SkylineBuffer]()
+      it.foreach(r => lift(r, rows.length).foreach { p =>
+        rows += r.copy()
+        bufs.getOrElseUpdate(pidOf.fold(0)(_(p.values)), SkylineBuffer.empty).add(p)
+      })
+      bufs.valuesIterator.flatMap(_.result).map(p => rows(p.id.toInt))
+    }
+  }
 }
 
-/** Final phase: global merge; `AllTuples` makes Catalyst plan the exchange. */
-case class SkylineFinalExec(dims: Seq[Expression], child: SparkPlan)
+/** Global phase: the partial survivors of child partition `i` are cached,
+  * lifted to `Point(i, dims)` and merged by [[SkylineOps.mergeLocal]], the
+  * merge [[SkylineOps.skyline]] runs (broadcast kd filter, chunked
+  * cross-filter past its bound). Each survivor goes back to partition `i`,
+  * which keeps its rows whose dimension vector survived: whether a row
+  * survives depends only on that vector (equal vectors never dominate each
+  * other), so a cached partition that is evicted and recomputed in another
+  * row order keeps the same rows. The ContextCleaner frees the cache with
+  * the returned RDD. */
+case class SkylineMergeExec(dims: Seq[Expression], child: SparkPlan)
     extends SkylineRowsExec {
-  override def requiredChildDistribution: Seq[Distribution] = AllTuples :: Nil
-  override def outputPartitioning: Partitioning = SinglePartition
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val lift = rowLift
+    val rows = child.execute().mapPartitions(_.map(_.copy())).cache()
+    val local = rows.mapPartitionsWithIndex { (i, it) =>
+      val pts = it.flatMap(lift(_, i)).toArray
+      if (pts.isEmpty) Iterator.empty else Iterator.single(pts)
+    }
+    val kept = SkylineOps.mergeLocal(session, local)
+      .map(p => (p.id.toInt, p.values))
+      .partitionBy(new HashPartitioner(rows.getNumPartitions))
+    rows.zipPartitions(kept) { (it, survivors) =>
+      val live = survivors.map(_._2.toSeq).toSet
+      it.filter(r => lift(r, 0).exists(p => live(p.values.toSeq)))
+    }
+  }
 }
 
-/** Plans logical Skyline → partial + final (the two-phase MR structure). */
+/** Plans logical Skyline → partial + merge (the two-phase MR structure). */
 object SkylineStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case Skyline(dims, child) =>
-      SkylineFinalExec(dims,
-        SkylinePartialExec(dims, planLater(child))) :: Nil
+    case Skyline(dims, via, child) =>
+      SkylineMergeExec(dims, SkylinePartialExec(dims, via, planLater(child))) :: Nil
     case _ => Nil
   }
 }
 
 /** Session extension wiring: `spark.withExtensions(new SkylineExtensions)` or
   * `spark.sql.extensions=graft.plans.SkylineExtensions`. Injects the planner
-  * strategy and the same SQL function surface as
-  * [[SkylineExtensions.register]] (a config-loaded session must not see a
-  * poorer catalog than a programmatic one). */
+  * strategy and [[SkylineExtensions.functions]], the same SQL function
+  * surface as [[SkylineExtensions.register]]. */
 class SkylineExtensions extends (SparkSessionExtensions => Unit) {
-  private def inject(e: SparkSessionExtensions, name: String,
-                     cls: Class[_], b: Seq[Expression] => Expression): Unit =
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        cls.getName, name),
-      b))
-
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => SkylineStrategy)
-    inject(e, "sky_dominates", classOf[graft.functions.DominatesExpr],
-      exprs => graft.functions.DominatesExpr(exprs(0), exprs(1)))
-    inject(e, "graft_dot", classOf[graft.functions.DotProductExpr],
-      exprs => graft.functions.DotProductExpr(exprs(0), exprs(1)))
-    inject(e, "graft_sqnorm", classOf[graft.functions.SqNormExpr],
-      exprs => graft.functions.SqNormExpr(exprs(0)))
-    inject(e, "graft_shingles", classOf[graft.functions.CharShinglesExpr],
-      exprs => graft.functions.CharShinglesExpr(exprs(0),
-        SkylineExtensions.intArgPublic(exprs(1), "graft_shingles(k)")))
-    inject(e, "graft_mrangle", classOf[graft.functions.MrAngleExpr],
-      exprs => graft.functions.MrAngleExpr(exprs(0),
-        SkylineExtensions.intArgPublic(exprs(1), "graft_mrangle(n)")))
-    inject(e, "graft_nfc", classOf[graft.functions.NfcNormalizeExpr],
-      exprs => graft.functions.NfcNormalizeExpr(exprs(0)))
-    inject(e, "graft_strip_accents", classOf[graft.functions.StripAccentsExpr],
-      exprs => graft.functions.StripAccentsExpr(exprs(0)))
-    inject(e, "graft_simhash", classOf[graft.functions.SimhashExpr],
-      exprs => graft.functions.SimhashExpr(exprs(0)))
-    inject(e, "graft_minhash_sig", classOf[graft.functions.MinhashSigExpr],
-      exprs => graft.functions.MinhashSigExpr(exprs(0),
-        SkylineExtensions.intArgPublic(exprs(1), "graft_minhash_sig(k)"),
-        SkylineExtensions.intArgPublic(exprs(2), "graft_minhash_sig(numHashes)")))
-    inject(e, "graft_classifier_sum", classOf[graft.functions.ClassifierSumExpr],
-      exprs => graft.functions.ClassifierSumExpr(exprs(0),
-        SkylineExtensions.longArrayArgPublic(exprs(1),
-          "graft_classifier_sum(weights)")))
-    // composite trees (no single expression class backs them; the info
-    // class is the dominant sub-expression)
-    inject(e, "graft_cosine", classOf[graft.functions.DotProductExpr],
-      exprs => SkylineExtensions.cosineExpr(exprs(0), exprs(1)))
-    inject(e, "graft_hash60", classOf[graft.functions.DotProductExpr],
-      exprs => SkylineExtensions.hash60ExprPublic(exprs(0)))
+    SkylineExtensions.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((
+        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          cls.getName, name),
+        builder))
+    }
   }
 }
 
 object SkylineExtensions {
   import org.apache.spark.sql.catalyst.expressions._
   import org.apache.spark.sql.types.{BinaryType, LongType}
+  import graft.functions._
+
+  /** The engine's SQL functions: (name, info class, builder). Composite
+    * trees have no single expression class; their info class is the
+    * dominant sub-expression. */
+  private[plans] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("sky_dominates", classOf[DominatesExpr], e => DominatesExpr(e(0), e(1))),
+    ("graft_dot", classOf[DotProductExpr], e => DotProductExpr(e(0), e(1))),
+    ("graft_sqnorm", classOf[SqNormExpr], e => SqNormExpr(e(0))),
+    ("graft_cosine", classOf[DotProductExpr], e => cosineExpr(e(0), e(1))),
+    ("graft_hash60", classOf[DotProductExpr], e => hash60Expr(e(0))),
+    ("graft_shingles", classOf[CharShinglesExpr],
+      e => CharShinglesExpr(e(0), intArg(e(1), "graft_shingles(k)"))),
+    ("graft_mrangle", classOf[MrAngleExpr],
+      e => MrAngleExpr(e(0), intArg(e(1), "graft_mrangle(n)"))),
+    ("graft_nfc", classOf[NfcNormalizeExpr], e => NfcNormalizeExpr(e(0))),
+    ("graft_strip_accents", classOf[StripAccentsExpr], e => StripAccentsExpr(e(0))),
+    ("graft_simhash", classOf[SimhashExpr], e => SimhashExpr(e(0))),
+    ("graft_minhash_sig", classOf[MinhashSigExpr],
+      e => MinhashSigExpr(e(0), intArg(e(1), "graft_minhash_sig(k)"),
+        intArg(e(2), "graft_minhash_sig(numHashes)"))),
+    ("graft_classifier_sum", classOf[ClassifierSumExpr],
+      e => ClassifierSumExpr(e(0),
+        longArrayArg(e(1), "graft_classifier_sum(weights)"))))
 
   private def intArg(e: Expression, name: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -146,14 +182,10 @@ object SkylineExtensions {
       s"$name expects a literal int, got $other")
   }
 
-  /** [[intArg]] for the extensions-class injection sites. */
-  private[plans] def intArgPublic(e: Expression, name: String): Int =
-    intArg(e, name)
-
   /** A foldable ARRAY<integral> argument (e.g. `array(1, 2, 3)`) evaluated
     * to its Long values at registration time — the weight-table argument
     * form for graft_classifier_sum. */
-  private[plans] def longArrayArgPublic(e: Expression, name: String): Seq[Long] =
+  private def longArrayArg(e: Expression, name: String): Seq[Long] =
     e match {
       case a if a.foldable && a.dataType.isInstanceOf[
           org.apache.spark.sql.types.ArrayType] =>
@@ -171,85 +203,58 @@ object SkylineExtensions {
         s"$name expects a foldable array literal, got $other")
     }
 
-  private[plans] def hash60ExprPublic(c: Expression): Expression =
-    hash60Expr(c)
-
-  /** Clamped cosine as a Catalyst tree (shared by both injection paths). */
+  /** Clamped cosine as a Catalyst tree. */
   private[plans] def cosineExpr(a: Expression, b: Expression): Expression = {
-    val dot = graft.functions.DotProductExpr(a, b)
-    val denom = Multiply(Sqrt(graft.functions.SqNormExpr(a)),
-      Sqrt(graft.functions.SqNormExpr(b)))
+    val dot = DotProductExpr(a, b)
+    val denom = Multiply(Sqrt(SqNormExpr(a)), Sqrt(SqNormExpr(b)))
     Least(Seq(Greatest(Seq(Divide(dot, denom), Literal(-1.0))), Literal(1.0)))
   }
 
   /** md5-derived portable 60-bit hash as a Catalyst tree (the SQL-function
     * form of [[graft.functions.hash60]]). */
-  private def hash60Expr(c: Expression): Expression =
+  private[plans] def hash60Expr(c: Expression): Expression =
     Cast(Conv(Substring(Md5(Cast(c, BinaryType)), Literal(1), Literal(15)),
       Literal(16), Literal(10)), LongType)
 
-  /** Runtime registration on an existing session (extensions classes only
-    * apply at session build; driver-owned sessions need this path). Exposes
-    * the skyline planner strategy plus the engine's SQL function surface:
-    * sky_dominates, graft_dot, graft_sqnorm, graft_cosine, graft_hash60,
-    * graft_shingles, graft_mrangle, graft_nfc, graft_strip_accents. */
-  def register(spark: SparkSession): Unit = {
+  /** Adds the skyline planner strategy to the session (idempotent). */
+  private[plans] def installStrategy(spark: SparkSession): Unit =
     if (!spark.experimental.extraStrategies.contains(SkylineStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ SkylineStrategy
+
+  /** Runtime registration on an existing session (extensions classes only
+    * apply at session build; driver-owned sessions need this path): the
+    * skyline planner strategy plus every function in [[functions]]. */
+  def register(spark: SparkSession): Unit = {
+    installStrategy(spark)
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("sky_dominates",
-      exprs => graft.functions.DominatesExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot",
-      exprs => graft.functions.DotProductExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sqnorm",
-      exprs => graft.functions.SqNormExpr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_cosine",
-      exprs => cosineExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_hash60",
-      exprs => hash60Expr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingles",
-      exprs => graft.functions.CharShinglesExpr(exprs(0),
-        intArg(exprs(1), "graft_shingles(k)")), "built-in")
-    reg.createOrReplaceTempFunction("graft_mrangle",
-      exprs => graft.functions.MrAngleExpr(exprs(0),
-        intArg(exprs(1), "graft_mrangle(n)")), "built-in")
-    reg.createOrReplaceTempFunction("graft_nfc",
-      exprs => graft.functions.NfcNormalizeExpr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_strip_accents",
-      exprs => graft.functions.StripAccentsExpr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash",
-      exprs => graft.functions.SimhashExpr(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => graft.functions.MinhashSigExpr(exprs(0),
-        intArg(exprs(1), "graft_minhash_sig(k)"),
-        intArg(exprs(2), "graft_minhash_sig(numHashes)")), "built-in")
-    reg.createOrReplaceTempFunction("graft_classifier_sum",
-      exprs => graft.functions.ClassifierSumExpr(exprs(0),
-        longArrayArgPublic(exprs(1), "graft_classifier_sum(weights)")),
-      "built-in")
+    functions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }
 
 object SkylinePlanApi {
   import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+  import org.apache.spark.sql.catalyst.expressions.Cast
   import org.apache.spark.sql.graftbridge.ColumnBridge
+  import org.apache.spark.sql.types.DoubleType
 
-  /** Skyline of `df` over `dimCols` through the custom operator. Registers
-    * the planner strategy on the session (idempotent) so no extension config
-    * is needed for programmatic use. */
-  def skyline(df: DataFrame, dimCols: Seq[String]): DataFrame = {
+  /** Skyline of `df` over `dimCols` (each cast to double, resolved by the
+    * session's resolver the way `col(c)` is) as a lazy logical [[Skyline]]
+    * node: every column of `df` is kept, and building the frame runs no
+    * job. `via` sets the partial phase's reference strategy. Installs the
+    * planner strategy on the session, so no extension config is needed. */
+  def skyline(df: DataFrame, dimCols: Seq[String],
+              via: Option[ReferenceStrategy] = None): DataFrame = {
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(SkylineStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ SkylineStrategy
+    SkylineExtensions.installStrategy(spark)
     val plan = ColumnBridge.planOf(df)
-    val dims = dimCols.map { c =>
-      val attr = plan.output.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(s"no column $c"))
-      org.apache.spark.sql.catalyst.expressions.Cast(attr,
-        org.apache.spark.sql.types.DoubleType)
-    }
-    ColumnBridge.ofRows(spark, Skyline(dims, plan))
+    val dims = dimCols.map(c => Cast(plan.resolve(
+      UnresolvedAttribute.quotedString(c).nameParts, spark.sessionState.conf.resolver)
+      .getOrElse(throw new IllegalArgumentException(
+        s"no column $c among ${plan.output.map(_.name).mkString(", ")}")), DoubleType))
+    ColumnBridge.ofRows(spark, Skyline(dims, via, plan))
   }
 }

@@ -85,4 +85,15 @@ class KdIndexProps extends AnyFunSuite {
         Point(300L + i, Array(rnd.nextDouble() * 60 - 5))), s"1d trial=$trial")
     }
   }
+
+  test("a box with an infinite coordinate is bounded by its real values") {
+    // a +Inf-only dimension once left the box minimum at Double.MaxValue,
+    // so a point read as "differing" from itself and dominated itself
+    val inf = Double.PositiveInfinity
+    val pts = Array(Point(0L, Array(inf, 0.0, 1.0)), Point(1L, Array(-inf, 1.0, 2.0)))
+    val ix = SkylineOps.buildKd(Array(pts(0)))
+    assert(!SkylineOps.dominatedByKd(ix, pts(0)))
+    val both = SkylineOps.buildKd(pts)
+    assert(pts.forall(p => !SkylineOps.dominatedByKd(both, p)))
+  }
 }

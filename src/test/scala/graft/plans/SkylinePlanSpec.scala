@@ -1,12 +1,21 @@
 package graft.plans
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, SinglePartition}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.core.{Dominance, Point}
 import graft.operators.{SkylineOps, SparkTestSession}
 
-/** The custom Catalyst operator: agreement with the Aggregator path, plan
-  * shape (partial → exchange → final), and the sky_dominates expression. */
+/** The custom Catalyst operator: agreement with the Dataset path, plan
+  * shape (partial → parallel merge), laziness, and the sky_dominates
+  * expression. */
 class SkylinePlanSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
@@ -24,19 +33,81 @@ class SkylinePlanSpec extends AnyFunSuite {
     assert(planned == agg)
   }
 
-  test("physical plan is partial -> exchange -> final (two-phase combiner)") {
+  test("physical plan is partial -> parallel merge (two-phase combiner)") {
     import spark.implicits._
     val df = Seq((1L, 2.0, 3.0), (2L, 1.0, 4.0)).toDF("id", "v1", "v2")
     val phys = SkylinePlanApi.skyline(df, Seq("v1", "v2"))
       .queryExecution.executedPlan.toString
-    assert(phys.contains("SkylineFinal"))
+    assert(phys.contains("SkylineMerge"))
     assert(phys.contains("SkylinePartial"))
-    assert(phys.contains("Exchange"))
-    // the exchange must sit BETWEEN final and partial (combiner before shuffle)
-    val fin = phys.indexOf("SkylineFinal")
-    val ex = phys.indexOf("Exchange")
-    val par = phys.indexOf("SkylinePartial")
-    assert(fin < ex && ex < par)
+    assert(!phys.contains("SkylineFinal"))
+    // the combiner sits below the merge
+    assert(phys.indexOf("SkylineMerge") < phys.indexOf("SkylinePartial"))
+  }
+
+  /** Records job starts and completed stages. [[sync]] runs a marker job and
+    * waits until the listener bus delivers it; the bus is ordered, so every
+    * earlier event is in by then. */
+  private class Recorder extends SparkListener {
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val stages = new ConcurrentLinkedQueue[StageInfo]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      jobs.add(Option(e.properties).flatMap(p =>
+        Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      stages.add(e.stageInfo)
+    def sync(): Unit = {
+      val sc = spark.sparkContext
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains("marker"), "listener bus never delivered the marker job")
+    }
+    def during[T](body: => T): (T, Recorder) = {
+      spark.sparkContext.addSparkListener(this)
+      try { val t = body; sync(); (t, this) }
+      finally spark.sparkContext.removeSparkListener(this)
+    }
+  }
+
+  test("the merge stage runs on more than one task, with no SinglePartition") {
+    val c = 4096.0
+    val rows = (0 until 2048).map(i => Row(i.toLong, i.toDouble, c - i))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("x", DoubleType), StructField("y", DoubleType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 16), schema)
+    val sky = graft.Graft.skyline(df, Seq("x", "y"))
+    val (n, rec) = new Recorder().during(sky.collect().length)
+    assert(n == 2048) // an antichain: every row survives
+    val merge = rec.stages.asScala.filter(_.rddInfos.exists(_.scope.exists(s =>
+      s.name.startsWith("Skyline") && s.name != "SkylinePartial"))).toSeq
+    assert(merge.nonEmpty, "no stage ran the merge node")
+    assert(merge.forall(_.numTasks > 1),
+      s"single-task merge stage: ${merge.map(s => s.name -> s.numTasks)}")
+    val plan = sky.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    assert(plan.collect { case p if p.outputPartitioning == SinglePartition ||
+      p.requiredChildDistribution.contains(AllTuples) => p.nodeName }.isEmpty,
+      plan.toString)
+  }
+
+  test("Graft.skyline and Graft.skylineVia run no job until an action") {
+    val rows = (0 until 64).map(i => Row(i.toLong, (i % 8).toDouble, (i / 8).toDouble))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v1", DoubleType), StructField("v2", DoubleType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+    val (frames, built) = new Recorder().during(
+      graft.Graft.skyline(df, Seq("v1", "v2")) +:
+        Seq("mr-dim", "mr-grid", "mr-angle").map(st =>
+          graft.Graft.skylineVia(df, "id", Seq("v1", "v2"), st, 8.0, 4)))
+    assert(built.jobs.asScala.toSeq == Seq("marker"),
+      s"jobs while building: ${built.jobs.asScala.mkString(", ")}")
+    val (_, ran) = new Recorder().during(frames.foreach(f =>
+      assert(f.collect().map(_.getLong(0)).toSeq == Seq(0L))))
+    assert(ran.jobs.size > 1)
   }
 
   test("filters still push below the Skyline node") {
@@ -44,6 +115,10 @@ class SkylinePlanSpec extends AnyFunSuite {
     val df = spark.createDataset(Seq((1L, 2.0, 3.0), (2L, 9.0, 9.0))).toDF("id", "v1", "v2")
     val out = SkylinePlanApi.skyline(df.where($"id" <= 1), Seq("v1", "v2")).collect()
     assert(out.map(_.getLong(0)).toSeq == Seq(1L))
+    // dim names resolve the way col(c) does (case-insensitive by default)
+    val upper = graft.Graft.skyline(df.where($"id" <= 1), Seq("V1", "v2"))
+    assert(upper.columns.toSeq == Seq("id", "V1", "v2"))
+    assert(upper.collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
   test("sky_dominates SQL function via runtime registration") {
@@ -75,7 +150,7 @@ class SkylinePlanSpec extends AnyFunSuite {
     val r = spark.range(1).select(
       column(SkylineExtensions.cosineExpr(arr(1.0, 0.0), arr(1.0, 0.0))).as("c1"),
       column(SkylineExtensions.cosineExpr(arr(1.0, 0.0), arr(0.0, 1.0))).as("c0"),
-      column(SkylineExtensions.hash60ExprPublic(Literal("42"))).as("h"))
+      column(SkylineExtensions.hash60Expr(Literal("42"))).as("h"))
       .head()
     assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(r.getDouble(1)) < 1e-12)
