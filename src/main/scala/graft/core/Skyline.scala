@@ -17,6 +17,15 @@ final case class Point(id: Long, values: Array[Double], originPartition: Int = -
   * `a` dominates `b` iff a(i) <= b(i) for ALL i and a(i) < b(i) for AT LEAST one i.
   * Consequence: exact duplicates never dominate each other, so every duplicate of a
   * skyline point is itself a skyline member (observed in reference PDF §5.1).
+  *
+  * Dominance over a set of points is decided by one index, the kd tree of
+  * [[buildKd]]; [[SkylineBuffer]] and every global merge query it.
+  *
+  * Arity: an index takes the arity of the first point it is built from and
+  * leaves points of any other arity out, and a probe of another arity is
+  * never dominated. So points of different arity never dominate each
+  * other, and a point whose arity differs from an index's is kept
+  * unchecked. Mixed arity is outside the contract.
   */
 object Dominance {
   def dominates(a: Array[Double], b: Array[Double]): Boolean = {
@@ -32,291 +41,320 @@ object Dominance {
     }
     better
   }
+
+  /** Flat coordinates of the points of the index arity, in ascending
+    * coordinate-sum order, with those sums. */
+  private[graft] def pack(points: Array[Point]): PackedPoints = {
+    val d = if (points.isEmpty) 0 else points(0).values.length
+    val sums = points.map(p => { var s = 0.0; var i = 0
+      while (i < p.values.length) { s += p.values(i); i += 1 }; s })
+    val order = Array.range(0, points.length)
+      .filter(points(_).values.length == d).sortBy(sums(_))
+    val flat = new Array[Double](order.length * d)
+    val srt = new Array[Double](order.length)
+    var k = 0
+    while (k < order.length) {
+      System.arraycopy(points(order(k)).values, 0, flat, k * d, d)
+      srt(k) = sums(order(k)); k += 1
+    }
+    PackedPoints(flat, srt, d)
+  }
+
+  /** True iff some packed point strictly dominates `p`, by a scan of the
+    * strictly-smaller-sum prefix (a dominator has a strictly smaller sum).
+    * The reference verdict [[dominatedByKd]] is tested against. */
+  private[graft] def dominatedByPacked(pk: PackedPoints, p: Point): Boolean = {
+    val vs = p.values
+    if (vs.length != pk.d || pk.sums.length == 0) return false
+    var s = 0.0; var i = 0
+    while (i < pk.d) { s += vs(i); i += 1 }
+    var lo = 0; var hi = pk.sums.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (pk.sums(mid) < s) lo = mid + 1 else hi = mid
+    }
+    var q = 0
+    while (q < lo) {
+      if (dominatesAt(pk.flat, q * pk.d, vs)) return true
+      q += 1
+    }
+    false
+  }
+
+  /** Does the packed point at `base` dominate `vs`? */
+  @inline private def dominatesAt(fl: Array[Double], base: Int, vs: Array[Double]): Boolean = {
+    var better = false; var t = 0
+    while (t < vs.length) {
+      val av = fl(base + t); val bv = vs(t)
+      if (av > bv) return false
+      if (av < bv) better = true
+      t += 1
+    }
+    better
+  }
+
+  /** Segments of at most this many points are kd leaves, scanned whole. */
+  private final val KdLeaf = 8
+
+  /** The kd tree of [[KdIndex]] over `points`; O(n log n). */
+  private[graft] def buildKd(points: Array[Point]): KdIndex = {
+    val d = if (points.isEmpty) 0 else points(0).values.length
+    val kept = points.filter(_.values.length == d)
+    val n = if (d == 0) 0 else kept.length
+    val order = Array.range(0, n)
+    val fl = new Array[Double](n * d)
+    var k = 0
+    while (k < n) { System.arraycopy(kept(k).values, 0, fl, k * d, d); k += 1 }
+    // per-NODE bounding boxes, stored at the node's median slot (node =
+    // segment [l, h), median m = (l + h) >>> 1)
+    val boxLo = new Array[Double](n * d)
+    val boxHi = new Array[Double](n * d)
+    // quickselect: partition order[l, h) so that order(m) holds the median
+    // by dimension t and smaller keys sit left of m; pivots come from a
+    // xorshift stream seeded by m, so a build is deterministic
+    def select(l0: Int, h0: Int, m: Int, t: Int): Unit = {
+      var l = l0; var h = h0
+      var r = m * 0x9E3779B97F4A7C15L + 1
+      while (h - l > 1) {
+        r ^= r << 13; r ^= r >>> 7; r ^= r << 17
+        val pv = fl(order(l + ((r >>> 33) % (h - l)).toInt) * d + t)
+        var i = l; var j = h - 1
+        while (i <= j) {
+          while (fl(order(i) * d + t) < pv) i += 1
+          while (fl(order(j) * d + t) > pv) j -= 1
+          if (i <= j) {
+            val tmp = order(i); order(i) = order(j); order(j) = tmp
+            i += 1; j -= 1
+          }
+        }
+        // order[l, j] <= pv, order[i, h) >= pv, (j, i) == pv
+        if (m <= j) h = j + 1
+        else if (m >= i) l = i
+        else return // m lands in the all-equal middle band: positioned
+      }
+    }
+    def build(l: Int, h: Int): Unit = if (l < h) {
+      val m = (l + h) >>> 1
+      // segment bounding box → stored at m; ±Infinity starts keep a box
+      // of infinite coordinates bounded by its real values
+      var t = 0
+      while (t < d) {
+        var lo = Double.PositiveInfinity; var hi = Double.NegativeInfinity
+        var i = l
+        while (i < h) {
+          val v = fl(order(i) * d + t)
+          if (v < lo) lo = v
+          if (v > hi) hi = v
+          i += 1
+        }
+        boxLo(m * d + t) = lo; boxHi(m * d + t) = hi
+        t += 1
+      }
+      if (h - l > KdLeaf) {
+        // split on the widest dimension of THIS box
+        var wt = 0; var wspan = -1.0
+        t = 0
+        while (t < d) {
+          val span = boxHi(m * d + t) - boxLo(m * d + t)
+          if (span > wspan) { wspan = span; wt = t }
+          t += 1
+        }
+        select(l, h, m, wt)
+        build(l, m)
+        build(m + 1, h)
+      }
+    }
+    build(0, n)
+    // the points in tree order: node m's point sits at m * d
+    val tree = new Array[Double](n * d)
+    k = 0
+    while (k < n) { System.arraycopy(fl, order(k) * d, tree, k * d, d); k += 1 }
+    KdIndex(d, tree, boxLo, boxHi)
+  }
+
+  /** Exactly [[dominatedByPacked]]'s verdict through the kd tree's
+    * box-pruned range-emptiness search; see [[KdIndex]]. */
+  private[graft] def dominatedByKd(ix: KdIndex, p: Point): Boolean = {
+    val d = ix.d; val vs = p.values
+    if (vs.length != d || ix.size == 0) return false
+    def rec(l: Int, h: Int): Boolean = {
+      if (l >= h) return false
+      val m = (l + h) >>> 1
+      val base = m * d
+      var t = 0
+      // prune: a dominator needs every coord <= c's; impossible if the
+      // subtree's min corner pokes above c anywhere
+      while (t < d) {
+        if (ix.boxLo(base + t) > vs(t)) return false
+        t += 1
+      }
+      // containment: the whole box is inside [-Inf, c], so any point that
+      // differs from c dominates, and existence is readable off the box in
+      // O(d): lo(t) < hi(t) means two points differ in dim t; lo(t) ==
+      // hi(t) < c(t) means the box sits strictly below c in dim t. Neither
+      // for any t ⟺ every point equals c ⟺ no dominator, so a duplicate
+      // flood costs O(d) here.
+      var contained = true
+      t = 0
+      while (contained && t < d) {
+        if (ix.boxHi(base + t) > vs(t)) contained = false
+        t += 1
+      }
+      if (contained) {
+        t = 0
+        while (t < d) {
+          if (ix.boxLo(base + t) < ix.boxHi(base + t) ||
+            ix.boxLo(base + t) < vs(t)) return true
+          t += 1
+        }
+        return false // box degenerate to exactly c: equals never dominate
+      }
+      if (h - l <= KdLeaf) {
+        var q = l
+        while (q < h) { if (dominatesAt(ix.flat, q * d, vs)) return true; q += 1 }
+        return false
+      }
+      if (dominatesAt(ix.flat, base, vs)) return true
+      if (rec(l, m)) return true
+      rec(m + 1, h)
+    }
+    rec(0, ix.size)
+  }
 }
 
-/** Block-Nested-Loop skyline maintenance.
+/** Flat coordinates in ascending coordinate-sum order, with the sums:
+  * the layout [[Dominance.dominatedByPacked]] scans. Arity `d` (see
+  * [[Dominance]] for the arity rule). */
+private[graft] case class PackedPoints(flat: Array[Double], sums: Array[Double], d: Int)
+    extends Serializable
+
+/** A kd-tree dominance index over a point set (MBR pruning, as in "An
+  * MBR-Oriented Approach for Efficient Skyline Query Processing", ICDE 2019).
+  * `flat` holds the points in tree order: node `m` of segment [l, h) is the
+  * point at `m * d`, `m = (l + h) >>> 1`, with its segment's bounding box at
+  * the same slot of `boxLo`/`boxHi`.
   *
-  * Same fixpoint as the reference's buffered BNL
-  * (`java/org.main/FlinkSkyline.java:417-444`): a candidate dominated by any
-  * current member is dropped; a candidate that dominates members evicts them;
-  * otherwise it is inserted. Insert order does not change the final set (BNL is
-  * confluent), which is what makes the two-phase (partial/merge) decomposition
-  * correct — skyline(A ∪ B) == skyline(skyline(A) ∪ skyline(B)).
+  * Certifying that a candidate c survives an antichain of s points by
+  * scanning costs ~s/2 dominance tests, and on anti-correlated data no
+  * dominator ever exists, so a pairwise merge is Θ(s²): 657 s for the
+  * s = 2.22M union of 10M 4-D anti points on 32 cores.
   *
-  * Scale notes (this kernel runs per Spark partition / per agg buffer):
-  *  - eviction uses swap-remove, so insert is O(s) with no shifting;
-  *  - `sortedBySum` pre-ordering makes inserts eviction-free (a point can only be
-  *    dominated by a point with a strictly smaller coordinate sum), roughly halving
-  *    comparisons for bulk builds.
+  * A dominator of c must lie in the corner box [-Inf, c]; for a survivor
+  * that box is empty — an orthogonal range-emptiness query. Every node
+  * stores its segment's bounding box:
+  *   - a box whose min corner exceeds c in ANY dim holds no dominator — the
+  *     subtree is pruned in d compares;
+  *   - a box whose max corner is ≤ c in EVERY dim lies inside the corner
+  *     box — any point ≠ c dominates, decided in O(d);
+  *   - only boxes straddling c's staircase recurse, down to leaves of at
+  *     most 8 points, which are scanned.
+  * The split dimension is the box's widest. Verdicts are bit-identical to
+  * [[Dominance.dominatedByPacked]] (KdIndexProps random-verifies it).
+  *
+  * Memory: the boxes triple the flat footprint (3d doubles per point); at
+  * the 4M-point broadcast bound in 5-D that is ~480 MB per executor. Past
+  * the bound the cross-filter builds one index per chunk on the executors
+  * instead. */
+private[graft] case class KdIndex(d: Int, flat: Array[Double],
+    boxLo: Array[Double], boxHi: Array[Double]) extends Serializable {
+  def size: Int = if (d == 0) 0 else flat.length / d
+}
+
+/** Skyline maintenance: the reference's buffered BNL
+  * (`java/org.main/FlinkSkyline.java:417-444`) computed through the kd index.
+  *
+  * A point survives iff no point added so far dominates it. The answer does
+  * not depend on insert order, which is what makes the two-phase
+  * (partial/merge) decomposition correct — skyline(A ∪ B) ==
+  * skyline(skyline(A) ∪ skyline(B)).
+  *
+  * Inserts are staged, like the reference's 5000-record inputBuffer
+  * (`FlinkSkyline.java:232,285-289`), and compacted into the survivors once
+  * the stage holds max(StageLimit, survivors) points, so the total work on a
+  * growing antichain stays O(n log n). The two fields are plain buffers that
+  * kryo serializes ([[graft.operators.SkylineAgg]]'s buffer encoder); no
+  * index outlives a compaction.
   */
 final class SkylineBuffer extends Serializable {
-  private[graft] var points = new ArrayBuffer[Point]()
-  /** Staged candidates not yet BNL-checked (the reference's 5000-record
-    * inputBuffer, `FlinkSkyline.java:232,285-289`): inserts are batched and
-    * compacted with an ascending-sum presort, which makes each compaction
-    * eviction-free and checks candidates against survivors only. */
-  private[graft] var staged = new ArrayBuffer[Point]()
-  private[graft] val StageLimit = 5000
+  private var points = new ArrayBuffer[Point]() // the survivors, an antichain
+  private var staged = new ArrayBuffer[Point]()
 
   def size: Int = { compact(); points.length }
   def result: Seq[Point] = { compact(); points.toSeq }
 
-  /** Batched insert: stage now, BNL on overflow. */
   def add(c: Point): Unit = {
     staged += c
-    if (staged.length >= StageLimit) compact()
+    if (staged.length >= math.max(SkylineBuffer.StageLimit, points.length)) compact()
   }
 
-  /** Fold all staged candidates into the skyline. Both the current skyline
-    * (kept ascending-sum-sorted as an invariant) and the sorted staged batch
-    * are merge-walked in sum order; in that order nothing can evict an
-    * already-accepted survivor. Old skyline points are mutually
-    * non-dominated, so they are only checked against staged-origin survivors
-    * — the skyline never rescans itself.
-    *
-    * The survivor set is mirrored into one flat primitive double[] (packed
-    * coords) so the hot dominance loop is a contiguous-memory scan with no
-    * per-point pointer chasing — this is what keeps the high-dimensional
-    * (curse-of-dimensionality) merges tractable. */
-  def compact(): Unit = {
-    if (staged.isEmpty) return
-    val d = staged(0).values.length
-    val st = staged.toArray
-    val stSums = new Array[Double](st.length)
-    var x = 0
-    while (x < st.length) { stSums(x) = sumOf(st(x).values); x += 1 }
-    val stIdx = Array.range(0, st.length).sortBy(stSums(_))
-    val old = points
-    val oldSums = new Array[Double](old.length)
-    x = 0
-    while (x < old.length) { oldSums(x) = sumOf(old(x).values); x += 1 }
-
-    val out = new ArrayBuffer[Point](old.length + 16)
-    var flat = new Array[Double](math.max(16, (old.length + 16) * d))
-    var stagedBits = new Array[Long](((old.length + st.length) >> 6) + 1)
-    var n = 0
-    // per-block per-dim minima over survivors (block = BLK points): a block
-    // where some dim's minimum exceeds the candidate's value cannot contain a
-    // dominator, so the whole block is skipped — the lower-corner MBR prune
-    // of MBR-oriented skyline processing (ICDE 2019), applied to a packed
-    // array. (Measured: a wash on heavily anti-correlated data where block
-    // minima straddle most candidates, a win on distributions with dominated
-    // regions; always sound.)
-    val BLK = 128
-    var blockMins = Array.fill(math.max(16, (old.length / BLK + 2) * d))(
-      Double.PositiveInfinity)
-
-    @inline def ensure(): Unit = {
-      if ((n + 1) * d > flat.length)
-        flat = java.util.Arrays.copyOf(flat, flat.length * 2)
-      if ((n >> 6) >= stagedBits.length)
-        stagedBits = java.util.Arrays.copyOf(stagedBits, stagedBits.length * 2)
-      val nb = (n / BLK + 1) * d
-      if (nb > blockMins.length) {
-        val grown = Array.fill(blockMins.length * 2)(Double.PositiveInfinity)
-        System.arraycopy(blockMins, 0, grown, 0, blockMins.length)
-        blockMins = grown
-      }
-    }
-    // per-dim minimum over accepted survivors: a candidate strictly below any
-    // of them cannot be dominated (quick accept — most skyline members of
-    // anti-correlated data are extreme in some dim)
-    val minPerDim = Array.fill(d)(Double.PositiveInfinity)
-    var lastKiller = -1
-    // EXACT-DUPLICATE fast path: a candidate identical to an already-
-    // accepted survivor survives by confluence (any dominator of the copy
-    // would have dominated the accepted twin first — impossible), so it is
-    // accepted without scanning anyone. Duplicate floods are a real input:
-    // the reference's own high-d anti-correlated generator clamps 22-40%
-    // of points to the origin (4-D ε=0.9 / 5-D ε=2.5), and without this
-    // path each origin copy rescans every prior copy — O(k²) over k
-    // duplicates was 657 s of a 10M 4-D run's merge phase, measured.
-    // The index is a PRIMITIVE chained hash (ADVICE r9): an open-addressed
-    // int table keyed by the point hash (slot holds survivor-index + 1,
-    // 0 = empty; equal-hash survivors chain through dupNext) — three int
-    // writes per accept instead of a boxed Integer + HashMap node +
-    // ArrayBuffer per survivor, so duplicate-free multi-million-point
-    // merges no longer pay hundreds of MB of transient boxed allocations
-    // per compact(). Survivor count is bounded by old+staged, so the
-    // per-survivor arrays and the <=0.5-load table are allocated once.
-    val dupBound = old.length + st.length
-    val dupMask = (Integer.highestOneBit(math.max(64, dupBound * 2 + 1)) * 2) - 1
-    val dupTable = new Array[Int](dupMask + 1)
-    val dupHash = new Array[Int](math.max(1, dupBound))
-    val dupNext = new Array[Int](math.max(1, dupBound))
-    @inline def dupSlot(h: Int): Int = {
-      var s = (h ^ (h >>> 16)) & dupMask
-      while (dupTable(s) != 0 && dupHash(dupTable(s) - 1) != h)
-        s = (s + 1) & dupMask
-      s
-    }
-    def isDupOfAccepted(c: Array[Double]): Boolean = {
-      var k = dupTable(dupSlot(java.util.Arrays.hashCode(c))) - 1
-      while (k >= 0) {
-        val base = k * d
-        var t = 0; var eq = true
-        while (eq && t < d) { if (flat(base + t) != c(t)) eq = false; t += 1 }
-        if (eq) return true
-        k = dupNext(k)
-      }
-      false
-    }
-    // dominance over the packed survivor array; stagedOnly skips old-origin
-    // survivors (old points are mutually non-dominated by invariant)
-    def dominated(c: Array[Double], stagedOnly: Boolean): Boolean = {
-      var i = 0
-      while (i < d) {
-        if (c(i) < minPerDim(i)) return false
-        i += 1
-      }
-      @inline def beats(k: Int): Boolean = {
-        val base = k * d
-        var better = false; var bad = false
-        var t = 0
-        while (!bad && t < d) {
-          val av = flat(base + t); val bv = c(t)
-          if (av > bv) bad = true
-          else if (av < bv) better = true
-          t += 1
-        }
-        !bad && better
-      }
-      // the point that last dominated something tends to dominate again
-      if (lastKiller >= 0 && lastKiller < n &&
-          (!stagedOnly || ((stagedBits(lastKiller >> 6) >>> (lastKiller & 63)) & 1L) == 1L) &&
-          beats(lastKiller)) return true
-      var b = 0
-      val nBlocks = (n + BLK - 1) / BLK
-      while (b < nBlocks) {
-        // block-level prune: can any member have ALL dims <= c?
-        var possible = true
-        var t = 0
-        val mBase = b * d
-        while (possible && t < d) {
-          if (blockMins(mBase + t) > c(t)) possible = false
-          t += 1
-        }
-        if (possible) {
-          var k = b * BLK
-          val end = math.min(n, (b + 1) * BLK)
-          while (k < end) {
-            if (!stagedOnly || ((stagedBits(k >> 6) >>> (k & 63)) & 1L) == 1L) {
-              if (beats(k)) { lastKiller = k; return true }
-            }
-            k += 1
-          }
-        }
-        b += 1
-      }
-      false
-    }
-    @inline def accept(p: Point, fromStaged: Boolean): Unit = {
-      ensure()
-      if (p.values.length == d) {
-        System.arraycopy(p.values, 0, flat, n * d, d)
-        val mBase = (n / BLK) * d
-        var t = 0
-        while (t < d) {
-          val v = p.values(t)
-          if (v < minPerDim(t)) minPerDim(t) = v
-          if (v < blockMins(mBase + t)) blockMins(mBase + t) = v
-          t += 1
-        }
-        val h = java.util.Arrays.hashCode(p.values)
-        dupHash(n) = h
-        val s = dupSlot(h)
-        dupNext(n) = dupTable(s) - 1
-        dupTable(s) = n + 1
-      } else // off-contract arity: NaN slots never dominate and are never dominated
-        java.util.Arrays.fill(flat, n * d, (n + 1) * d, Double.NaN)
-      if (fromStaged) stagedBits(n >> 6) |= (1L << (n & 63))
-      out += p
-      n += 1
-    }
-    var i = 0; var j = 0
-    while (i < old.length || j < st.length) {
-      val takeOld = j >= st.length ||
-        (i < old.length && oldSums(i) <= stSums(stIdx(j)))
-      if (takeOld) {
-        if (old(i).values.length != d || isDupOfAccepted(old(i).values) ||
-            !dominated(old(i).values, stagedOnly = true))
-          accept(old(i), fromStaged = false)
-        i += 1
-      } else {
-        val c = st(stIdx(j))
-        if (c.values.length != d || isDupOfAccepted(c.values) ||
-            !dominated(c.values, stagedOnly = false))
-          accept(c, fromStaged = true)
-        j += 1
-      }
-    }
-    // The no-evict walk relies on "a dominator has a strictly smaller sum",
-    // which holds for finite sums only: two points with sum +-Inf (or NaN)
-    // can still dominate one another, and acceptance above is permanent.
-    // Re-reduce the (normally empty) non-finite-sum group with the
-    // order-insensitive pairwise check. Cross-group pairs are safe: a
-    // dominator of a finite-sum point has only finite or -Inf coords, and
-    // -Inf-sum points sort first so finite candidates were already checked
-    // against them.
-    var anyNonFinite = false
-    var z = 0
-    while (!anyNonFinite && z < out.length) {
-      if (!java.lang.Double.isFinite(sumOf(out(z).values))) anyNonFinite = true
-      z += 1
-    }
-    points = if (!anyNonFinite) out else {
-      val res = new ArrayBuffer[Point](out.length)
-      val nf = new ArrayBuffer[Point]()
-      out.foreach(p =>
-        if (java.lang.Double.isFinite(sumOf(p.values))) res += p else nf += p)
-      val keep = new ArrayBuffer[Point]()
-      nf.foreach { c =>
-        if (!keep.exists(k => Dominance.dominates(k.values, c.values))) {
-          val survivors = keep.filterNot(k => Dominance.dominates(c.values, k.values))
-          keep.clear(); keep ++= survivors; keep += c
-        }
-      }
-      res ++= keep
-      res
-    }
-    staged = new ArrayBuffer[Point]()
-  }
-
-  @inline private def sumOf(vs: Array[Double]): Double = {
-    var s = 0.0; var i = 0
-    while (i < vs.length) { s += vs(i); i += 1 }
-    s
-  }
-
-  /** Lazy merge: concatenate; the sorted bulk build happens at the next
-    * compact()/result. Keeps the two-phase Aggregator's final merge a single
-    * presorted pass instead of s² incremental BNL inserts. */
+  /** Adds every point of `other` (survivors and staged). */
   def merge(other: SkylineBuffer): SkylineBuffer = {
-    staged ++= other.points
-    staged ++= other.staged
-    // opportunistic compaction keeps memory bounded on wide merges
-    if (staged.length >= StageLimit * 4) compact()
+    other.points.foreach(add)
+    other.staged.foreach(add)
     this
+  }
+
+  /** Folds the stage into the survivors:
+    *  1. equal dimension vectors collapse to one index entry, since a
+    *     verdict depends only on the vector (a duplicate flood is one);
+    *  2. staged points the index over the survivors' vectors dominates are
+    *     dropped — most of a stage once the skyline has formed;
+    *  3. each survivor vector and staged vector left is kept, with every
+    *     point that carries it, unless the index over those staged vectors
+    *     dominates it (survivors are an antichain, and step 2 checked the
+    *     staged points against them). */
+  private def compact(): Unit = {
+    if (staged.isEmpty) return
+    val (oldVecs, oldRep) = SkylineBuffer.collapse(points)
+    val oldIx = Dominance.buildKd(oldVecs)
+    val fresh = staged.filter(p => !Dominance.dominatedByKd(oldIx, p))
+    val (freshVecs, freshRep) = SkylineBuffer.collapse(fresh)
+    val ix = Dominance.buildKd(freshVecs)
+    def kept(pts: ArrayBuffer[Point], vecs: Array[Point], rep: Array[Int]) = {
+      val live = vecs.map(v => !Dominance.dominatedByKd(ix, v))
+      pts.indices.iterator.filter(i => live(rep(i))).map(pts)
+    }
+    points = ArrayBuffer.from(kept(points, oldVecs, oldRep) ++ kept(fresh, freshVecs, freshRep))
+    staged = new ArrayBuffer[Point]()
   }
 }
 
 object SkylineBuffer {
-  def empty: SkylineBuffer = new SkylineBuffer
+  private[graft] final val StageLimit = 5000
 
-  /** Skyline of an iterator (ascending-sum bulk build: a dominator always has
-    * a strictly smaller coordinate sum, so in sorted order no insert can
-    * evict — each point is checked against final survivors only). */
-  def of(it: Iterator[Point]): SkylineBuffer = {
-    val buf = new SkylineBuffer
-    buf.staged ++= it
-    buf.compact()
-    buf
+  /** The first point of each distinct dimension vector of `pts`, and the
+    * index of each point's vector among them. */
+  private def collapse(pts: ArrayBuffer[Point]): (Array[Point], Array[Int]) = {
+    val seen = new java.util.HashMap[Vec, Integer]()
+    val reps = new ArrayBuffer[Point]()
+    val rep = pts.iterator.map { p =>
+      val r = seen.putIfAbsent(new Vec(p.values), reps.length)
+      if (r != null) r.intValue else { reps += p; reps.length - 1 }
+    }.toArray
+    (reps.toArray, rep)
   }
 
-  /** Row-at-a-time build (same fixpoint; staging still batches internally). */
-  def ofIncremental(it: Iterator[Point]): SkylineBuffer = {
+  /** Bitwise equality of dimension vectors, as `java.util.Arrays.equals`. */
+  private final class Vec(val vs: Array[Double]) {
+    override val hashCode: Int = java.util.Arrays.hashCode(vs)
+    override def equals(o: Any): Boolean = o match {
+      case v: Vec => java.util.Arrays.equals(vs, v.vs)
+      case _ => false
+    }
+  }
+
+  def empty: SkylineBuffer = new SkylineBuffer
+
+  /** Skyline of an iterator, staged in chunks like [[SkylineBuffer.add]]:
+    * once a skyline has formed, step 2 of each compaction drops most of a
+    * chunk against the small index over the survivors, where one index over
+    * the whole input would be built over every row. */
+  def of(it: Iterator[Point]): SkylineBuffer = {
     val buf = new SkylineBuffer
     it.foreach(buf.add)
     buf
   }
+
+  /** Row-at-a-time build: the same staged build as [[of]]. */
+  def ofIncremental(it: Iterator[Point]): SkylineBuffer = of(it)
 }

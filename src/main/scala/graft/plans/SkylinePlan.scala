@@ -70,7 +70,7 @@ private[plans] trait SkylineRowsExec extends UnaryExecNode {
 
 /** Map-side phase: local skyline per child partition, fully pipelined. Every
   * valid row is copied and lifted to `Point(rowIndex, dims)`, [[SkylineBuffer]]
-  * (the one BNL kernel) reduces them, one buffer per strategy id when `via`
+  * (the kd-index kernel) reduces them, one buffer per strategy id when `via`
   * is set, and the rows at the surviving indices come out. */
 case class SkylinePartialExec(dims: Seq[Expression], via: Option[ReferenceStrategy],
                               child: SparkPlan) extends SkylineRowsExec {
@@ -138,13 +138,7 @@ object SkylineStrategy extends SparkStrategy {
 class SkylineExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => SkylineStrategy)
-    SkylineExtensions.functions.foreach { case (name, cls, builder) =>
-      e.injectFunction((
-        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          cls.getName, name),
-        builder))
-    }
+    SkylineExtensions.described.foreach(e.injectFunction)
   }
 }
 
@@ -161,7 +155,7 @@ object SkylineExtensions {
     ("graft_dot", classOf[DotProductExpr], e => DotProductExpr(e(0), e(1))),
     ("graft_sqnorm", classOf[SqNormExpr], e => SqNormExpr(e(0))),
     ("graft_cosine", classOf[DotProductExpr], e => cosineExpr(e(0), e(1))),
-    ("graft_hash60", classOf[DotProductExpr], e => hash60Expr(e(0))),
+    ("graft_hash60", classOf[Md5], e => hash60Expr(e(0))),
     ("graft_shingles", classOf[CharShinglesExpr],
       e => CharShinglesExpr(e(0), intArg(e(1), "graft_shingles(k)"))),
     ("graft_mrangle", classOf[MrAngleExpr],
@@ -175,6 +169,14 @@ object SkylineExtensions {
     ("graft_classifier_sum", classOf[ClassifierSumExpr],
       e => ClassifierSumExpr(e(0),
         longArrayArg(e(1), "graft_classifier_sum(weights)"))))
+
+  /** [[functions]] as (identifier, info naming the info class, builder). */
+  private[plans] val described =
+    functions.map { case (name, cls, builder) =>
+      (org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, null, name, null, "", "", "", "", "", "", "built-in"),
+        builder)
+    }
 
   private def intArg(e: Expression, name: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -228,9 +230,7 @@ object SkylineExtensions {
   def register(spark: SparkSession): Unit = {
     installStrategy(spark)
     val reg = spark.sessionState.functionRegistry
-    functions.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
+    described.foreach { case (id, info, builder) => reg.registerFunction(id, info, builder) }
   }
 }
 

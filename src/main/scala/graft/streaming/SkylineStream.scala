@@ -14,9 +14,9 @@ import graft.operators.SkylineOps
   *                      keyed co-process C1) ──────┘
   *                              │ envelopes
   *           [[SkylineStreamTWS.topology]]: two chained transformWithState
-  *           stages — local BNL skyline + barrier (A1+A2) keyed by
-  *           partition, then global BNL merge + countdown latch (A3) keyed
-  *           by query
+  *           stages — local skyline + barrier (A1+A2) keyed by
+  *           partition, then global merge + countdown latch (A3) keyed by
+  *           query, both through the kd-index `SkylineBuffer`
   *                              │ QueryResult (metrics JSON)
   *
   * This object holds the protocol's records and its input side (parse,

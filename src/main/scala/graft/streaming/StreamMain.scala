@@ -21,7 +21,7 @@ import graft.operators.SkylineOps
   *           --domain 1000.0 --checkpoint /tmp/ckpt
   *
   * The pipeline is the fully distributed chained-`transformWithState`
-  * topology ([[SkylineStreamTWS.topology]]): local BNL skylines keyed by
+  * topology ([[SkylineStreamTWS.topology]]): local skylines keyed by
   * spatial partition, then the countdown-latch global merge keyed by query —
   * both phases scale with executors; the driver only routes completed
   * `QueryResult`s to the sink. (The reference funnels the global phase

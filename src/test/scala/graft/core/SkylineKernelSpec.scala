@@ -41,8 +41,8 @@ class SkylineKernelSpec extends AnyFunSuite {
     // points to the origin; all copies are skyline members (duplicates
     // never dominate). 200k copies through the buffer must (a) all
     // survive, (b) evict everything they dominate, and (c) finish in
-    // linear time via the exact-duplicate hash fast path — before round 9
-    // this case was O(k²) duplicate rescans (the measured 657 s merge)
+    // near-linear time: equal vectors collapse to one kd index entry —
+    // O(k²) duplicate rescans once cost a 657 s merge
     val rng = new Random(7)
     val flood = List.tabulate(200000)(i => Point(i.toLong, Array(0.0, 0.0, 0.0)))
     val rest = List.tabulate(5000)(i => Point(1000000L + i,
@@ -96,8 +96,8 @@ class SkylineKernelSpec extends AnyFunSuite {
   }
 
   test("non-finite coordinates: dominated +Inf-sum points are evicted") {
-    // two +Inf sums break the strictly-smaller-sum invariant of the
-    // no-evict merge walk; the non-finite group must be re-reduced
+    // points whose coordinate sums are both +Inf (or -Inf) still dominate
+    // one another; the kd verdicts compare coordinates, never sums
     val b = SkylineBuffer.empty
     b.add(Point(2, Array(1.0, Double.PositiveInfinity)))
     b.add(Point(1, Array(0.0, Double.PositiveInfinity)))
@@ -110,5 +110,40 @@ class SkylineKernelSpec extends AnyFunSuite {
     c.add(Point(11, Array(Double.NegativeInfinity, 1.0)))
     val ids2 = c.result.map(_.id).toSet
     assert(ids2 == Set(11L), s"got $ids2")
+  }
+
+  test("multi-compaction: add in two orders, of and merge agree with brute force") {
+    // more than 3 x StageLimit points, so every path crosses several
+    // compaction boundaries, some with more survivors than StageLimit
+    val rng = new Random(2025)
+    val inf = Double.PositiveInfinity
+    val pts = Array.tabulate(3 * SkylineBuffer.StageLimit + 1000) { i =>
+      val vs = i % 5 match {
+        case 0 | 1 => // an antichain on x + y + z = 300 with ties and repeats
+          val x = rng.nextInt(301); val y = rng.nextInt(301 - x)
+          Array(x, y, 300 - x - y).map(_.toDouble)
+        case 2 => // sums >= 300: dominated by the plane or on top of it
+          Array.fill(3)(100.0 + rng.nextInt(300))
+        case 3 => // duplicate floods: a skyline vector and a dominated one
+          if (rng.nextBoolean()) Array(0.0, 150.0, 150.0) else Array(200.0, 200.0, 200.0)
+        case _ => // ±Inf, dominating only within their own rows
+          if (rng.nextBoolean()) Array(inf, -1.0, rng.nextInt(3).toDouble)
+          else Array(-inf, 301.0 + rng.nextInt(3), 301.0 + rng.nextInt(3))
+      }
+      Point(i.toLong, vs)
+    }
+    val expect = {
+      val alive = pts.filter(t => !pts.exists(u => Dominance.dominates(u.values, t.values)))
+      alive.map(_.id).sorted.toSeq
+    }
+    assert(expect.length > SkylineBuffer.StageLimit)
+    def ids(b: SkylineBuffer): Seq[Long] = b.result.map(_.id).sorted
+    assert(ids(SkylineBuffer.ofIncremental(pts.iterator)) == expect, "add")
+    assert(ids(SkylineBuffer.ofIncremental(rng.shuffle(pts.toSeq).iterator)) == expect,
+      "add, shuffled")
+    assert(ids(SkylineBuffer.of(pts.reverseIterator)) == expect, "of")
+    val (a, b) = pts.partition(_.id % 3 == 0)
+    assert(ids(SkylineBuffer.of(a.iterator).merge(SkylineBuffer.of(b.iterator))) == expect,
+      "merge")
   }
 }

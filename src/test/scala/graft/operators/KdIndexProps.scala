@@ -2,9 +2,9 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Point
+import graft.core.{Dominance, Point}
 
-/** The kd-tree dominance index (SkylineOps.buildKd / dominatedByKd) must
+/** The kd-tree dominance index (Dominance.buildKd / dominatedByKd) must
   * return EXACTLY dominatedByPacked's verdict on every input — box pruning
   * and containment exits are conservative shortcuts, never approximations.
   * Random-verified across the regimes that stress different paths:
@@ -14,11 +14,11 @@ class KdIndexProps extends AnyFunSuite {
 
   private def verify(points: Array[Point], probes: Array[Point],
       label: String): Unit = {
-    val pk = SkylineOps.pack(points)
-    val ix = SkylineOps.buildKd(points)
+    val pk = Dominance.pack(points)
+    val ix = Dominance.buildKd(points)
     probes.foreach { p =>
-      val want = SkylineOps.dominatedByPacked(pk, p)
-      val got = SkylineOps.dominatedByKd(ix, p)
+      val want = Dominance.dominatedByPacked(pk, p)
+      val got = Dominance.dominatedByKd(ix, p)
       assert(got == want,
         s"$label: verdict mismatch for ${p.id}: indexed=$got packed=$want " +
           s"values=${p.values.mkString(",")}")
@@ -91,9 +91,9 @@ class KdIndexProps extends AnyFunSuite {
     // so a point read as "differing" from itself and dominated itself
     val inf = Double.PositiveInfinity
     val pts = Array(Point(0L, Array(inf, 0.0, 1.0)), Point(1L, Array(-inf, 1.0, 2.0)))
-    val ix = SkylineOps.buildKd(Array(pts(0)))
-    assert(!SkylineOps.dominatedByKd(ix, pts(0)))
-    val both = SkylineOps.buildKd(pts)
-    assert(pts.forall(p => !SkylineOps.dominatedByKd(both, p)))
+    val ix = Dominance.buildKd(Array(pts(0)))
+    assert(!Dominance.dominatedByKd(ix, pts(0)))
+    val both = Dominance.buildKd(pts)
+    assert(pts.forall(p => !Dominance.dominatedByKd(both, p)))
   }
 }

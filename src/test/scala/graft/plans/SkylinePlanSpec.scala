@@ -136,6 +136,18 @@ class SkylinePlanSpec extends AnyFunSuite {
     }
   }
 
+  test("every SQL function names its info class (graft_hash60 is Md5)") {
+    // DESCRIBE FUNCTION reads this class; graft_hash60 once named a dot product
+    SkylineExtensions.register(spark)
+    def infoClass(name: String) = spark.sessionState.catalog.lookupFunctionInfo(
+      org.apache.spark.sql.catalyst.FunctionIdentifier(name)).getClassName
+    assert(infoClass("graft_hash60") ==
+      classOf[org.apache.spark.sql.catalyst.expressions.Md5].getName)
+    SkylineExtensions.functions.foreach { case (name, cls, _) =>
+      assert(infoClass(name) == cls.getName, name)
+    }
+  }
+
   test("extensions-class path injects the full function surface") {
     // the config-loaded path (spark.sql.extensions) must register the same
     // catalog as runtime register(); apply() on a fresh extensions object
