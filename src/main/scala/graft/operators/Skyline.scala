@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -53,12 +54,11 @@ object SkylineOps {
         array(dims: _*).as("values"), lit(-1).as("originPartition")): _*)
   }
 
-  /** Global skyline, the one global merge: the input is spread round-robin
-    * over `defaultParallelism` slivers, then [[skylineBroadcastFilter]] runs
-    * on every core. `originPartition` passes through. The spread keeps a
-    * union of local skylines (one fat row per strategy partition) from
-    * pre-reducing in one serial BNL per fat antichain; as an RDD shuffle it
-    * runs inside the size-check job instead of an adaptive stage's own. */
+  /** Global skyline of any input: it is spread round-robin over
+    * `defaultParallelism` slivers, each sliver is reduced to its skyline and
+    * [[mergeLocal]] merges them on every core (`originPartition` passes
+    * through). The spread keeps a few fat antichains from pre-reducing in
+    * one serial task each; it runs inside the size-check job. */
   def skyline(ds: Dataset[Point]): Dataset[Point] = {
     val spark = ds.sparkSession
     broadcastFilter(spark,
@@ -67,51 +67,51 @@ object SkylineOps {
 
   /** Two-phase skyline through an explicit spatial strategy, mirroring the
     * reference topology (keyBy(strategy) → local BNL → keyBy(query) → global
-    * merge, `FlinkSkyline.java:138-174`) — but with map-side combine inside
-    * the local phase, which the reference does not have, and the global
-    * merge run as the parallel [[skyline]] instead of one single-threaded
-    * reducer (the reference's dominant cost, PDF §5.5). Results are
-    * identical for every strategy and partition count (partition-invariance
-    * of skyline). */
+    * merge, `FlinkSkyline.java:138-174`) — with map-side combine, which the
+    * reference does not have, and [[mergeLocal]] on every core instead of
+    * one single-threaded reducer (the reference's dominant cost, PDF §5.5).
+    * Identical results for every strategy and partition count. */
   def skylineViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int): Dataset[Point] = {
-    implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
-    skyline(localSkylines(ds, strategy, domain, numPartitions).flatMap(_._2))
+    val spark = ds.sparkSession
+    spark.createDataset(mergeLocal(spark, localAntichains(ds, strategy, domain,
+      numPartitions).values))(ExpressionEncoder[Point]())
   }
 
   /** Per-strategy local skylines: (partitionId, points tagged with
     * originPartition) — the reference's local-phase output
-    * (`FlinkSkyline.java:396-403`).
-    *
-    * Explicit map-side combine: each input partition reduces its rows into
-    * one SkylineBuffer per strategy key before the shuffle, so only local
-    * antichains cross the wire (as Tungsten-encoded rows, not serialized
-    * aggregation buffers), and the per-key merge reduces the combined
-    * partials. Same fixpoint as the typed-Aggregator form with far less
-    * allocation churn on wide inputs.
-    *
-    * An input narrower than `defaultParallelism` (a CSV file under
-    * `openCostInBytes` is ONE split) is first hash-spread by id over that
-    * many partitions; round-robin would sort every row first (~190 ms of
-    * the one scan task on 150k 3-D rows). Wider inputs keep their plan.
-    * Observing the width plans the input: free for a scan, but an adaptive
-    * plan runs its shuffles there and again for the partials. */
+    * (`FlinkSkyline.java:396-403`), as a Dataset over [[localAntichains]]. */
   def localSkylines(ds: Dataset[Point], strategy: String, domain: Double,
                     numPartitions: Int): Dataset[(Int, Seq[Point])] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val pidOf = pidFunction(strategy, domain, numPartitions)
-    val cores = spark.sparkContext.defaultParallelism
+    ds.sparkSession.createDataset(localAntichains(ds, strategy, domain, numPartitions)
+      .map { case (pid, pts) => (pid, pts.toSeq) })(ExpressionEncoder[(Int, Seq[Point])]())
+  }
+
+  /** The local phase as one RDD lineage: each input partition reduces its
+    * points into one SkylineBuffer per strategy id (map-side combine), the
+    * partials hash-shuffle to `n` tasks (an RDD shuffle, which adaptive
+    * execution cannot coalesce into one task), and each task merges its
+    * ids' partials per id, as `SkylineBuffer.of` would (mr-grid emits up
+    * to 2^dims ids, more than `n`). An input narrower than `defaultParallelism`
+    * (a CSV under `openCostInBytes` is ONE split) is first hash-spread by id,
+    * an adaptive exchange run as its own job when the RDD is built.
+    * Observing the width plans the input: free for a scan, but an adaptive
+    * plan runs its shuffles there and again for the partials. */
+  private def localAntichains(ds: Dataset[Point], strategy: String, domain: Double,
+                              n: Int): RDD[(Int, Array[Point])] = {
+    val pidOf = pidFunction(strategy, domain, n)
+    val cores = ds.sparkSession.sparkContext.defaultParallelism
     val narrow = ds.queryExecution.toRdd.getNumPartitions < cores
     val in = if (narrow) ds.repartition(cores, col("id")) else ds
-    val partials = in.mapPartitions { it =>
+    def byId(it: Iterator[(Int, Point)]) = {
       val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
-      it.foreach(p => bufs.getOrElseUpdate(pidOf(p.values), SkylineBuffer.empty).add(p))
-      bufs.iterator.map { case (pid, b) => (pid, b.result) }
+      it.foreach { case (pid, p) => bufs.getOrElseUpdate(pid, SkylineBuffer.empty).add(p) }
+      bufs.iterator.map { case (pid, b) => (pid, b.result.toArray) }
     }
-    partials.groupByKey(_._1).mapGroups { (pid, it) =>
-      (pid, SkylineBuffer.of(it.flatMap(_._2)).result.map(_.copy(originPartition = pid)))
-    }
+    in.rdd.mapPartitions(it => byId(it.map(p => (pidOf(p.values), p))).map { case (pid, pts) =>
+      (pid, pts.map(_.copy(originPartition = pid))) })
+      .partitionBy(new HashPartitioner(n))
+      .mapPartitions(it => byId(it.flatMap { case (pid, pts) => pts.iterator.map((pid, _)) }))
   }
 
   /** Driver-side partition-id function with exactly the reference arithmetic. */
@@ -155,9 +155,9 @@ object SkylineOps {
   /** Full reference-parity query: skyline + the metrics object the reference
     * emits per query (`FlinkSkyline.java:610-648` JSON schema; [[optimality]]
     * `:590-608`). Timing fields are wall-clock (non-deterministic), matching
-    * field names only.
-    * [[localSkylines]] then [[skyline]]: one collect of the local sizes and
-    * arity, `skyline`'s size check and union collect, then one pass over its
+    * field names only. Three jobs (plus a narrow input's spread): the cached
+    * [[localAntichains]]' sizes and arity, [[mergeLocal]]'s union collect
+    * (the union size is summed from those sizes), and one pass over its
     * survivors counting them per origin partition (the sum is the size). */
   def skylineWithMetrics(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int, queryId: String,
@@ -165,28 +165,27 @@ object SkylineOps {
     val spark = ds.sparkSession
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    // an RDD cache: each query over a cached Dataset costs one more job
-    val local = localSkylines(ds, strategy, domain, numPartitions).rdd.cache()
-    val localShapes = local.map { case (pid, pts) =>
-      (pid, pts.size, pts.headOption.fold(0)(_.values.length)) }.collect()
-    val localSizes: Map[Int, Int] = localShapes.map(s => s._1 -> s._2).toMap
-    val tLocal = System.currentTimeMillis()
-    // one stage: each task counts its survivors, the driver adds the maps
-    val survivors: Map[Int, Long] = skyline(spark.createDataset(local.flatMap(_._2)))
-      .rdd.aggregate(Map.empty[Int, Long])(
+    val local = localAntichains(ds, strategy, domain, numPartitions).cache()
+    try {
+      val localShapes = local.map { case (pid, pts) =>
+        (pid, pts.length, pts.headOption.fold(0)(_.values.length)) }.collect()
+      val localSizes: Map[Int, Int] = localShapes.map(s => s._1 -> s._2).toMap
+      val tLocal = System.currentTimeMillis()
+      // one stage: each task counts its survivors, the driver adds the maps
+      val survivors: Map[Int, Long] = mergeLocal(spark, local.values,
+        unionSize = Some(localShapes.map(_._2.toLong).sum)).aggregate(Map.empty[Int, Long])(
         (m, p) => m.updated(p.originPartition, m.getOrElse(p.originPartition, 0L) + 1L),
         (a, b) => b.foldLeft(a) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v) })
-    val skySize = survivors.values.sum
-    val tEnd = System.currentTimeMillis()
-    val opt = optimality(localSizes, survivors, protocolPartitions(strategy,
-      numPartitions, localShapes.map(_._3).maxOption.getOrElse(0)))
-    local.unpersist()
-    Seq((queryId, recordCount, skySize,
-         math.round(opt * 10000.0) / 10000.0,
-         0L, tLocal - t0, tEnd - tLocal, tEnd - t0))
-      .toDF("query_id", "record_count", "skyline_size", "optimality",
-            "ingestion_time_ms", "local_processing_time_ms",
-            "global_processing_time_ms", "total_processing_time_ms")
+      val tEnd = System.currentTimeMillis()
+      val opt = optimality(localSizes, survivors, protocolPartitions(strategy,
+        numPartitions, localShapes.map(_._3).maxOption.getOrElse(0)))
+      Seq((queryId, recordCount, survivors.values.sum,
+           math.round(opt * 10000.0) / 10000.0,
+           0L, tLocal - t0, tEnd - tLocal, tEnd - t0))
+        .toDF("query_id", "record_count", "skyline_size", "optimality",
+              "ingestion_time_ms", "local_processing_time_ms",
+              "global_processing_time_ms", "total_processing_time_ms")
+    } finally local.unpersist()
   }
 
   /** Large-scale skyline via log-depth tree aggregation through a spatial
@@ -194,14 +193,11 @@ object SkylineOps {
     * optimality, then partial skylines combine pairwise across executors
     * instead of funneling into one single-threaded final merge. */
   def skylineTreeViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
-                             numPartitions: Int, depth: Int = 3): Seq[Point] = {
-    implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
-    val local = localSkylines(ds, strategy, domain, numPartitions).flatMap(_._2)
-    local.rdd.treeAggregate(SkylineBuffer.empty)(
-      (b, p) => { b.add(p); b },
+                             numPartitions: Int, depth: Int = 3): Seq[Point] =
+    localAntichains(ds, strategy, domain, numPartitions).values.treeAggregate(SkylineBuffer.empty)(
+      (b, pts) => { pts.foreach(b.add); b },
       (a, b) => a.merge(b),
       depth).result
-  }
 
   /** Two-phase skyline whose GLOBAL phase is fully parallel: each partition
     * reduces to its local antichain, the union (size-checked before it
@@ -233,17 +229,19 @@ object SkylineOps {
     }, maxBroadcastPoints))
   }
 
-  /** The global merge of [[skylineBroadcastFilter]] over blocks of
-    * candidates (one array per task, normally a local skyline): the points no
-    * candidate dominates. Runs the size check and the union collect when
-    * called; the blocks stay cached for those jobs only. */
+  /** The one global merge (of [[skyline]], [[skylineWithMetrics]] and the
+    * Catalyst `SkylineMergeExec`) over blocks of candidates, normally local
+    * skylines: the points no candidate dominates. Runs the union collect
+    * when called, after a size-check job unless the caller passes the
+    * blocks' `unionSize`; the blocks stay cached for those jobs only. */
   private[graft] def mergeLocal(spark: SparkSession, local: RDD[Array[Point]],
-                                maxBroadcastPoints: Int = MaxBroadcastPoints): RDD[Point] = {
+                                maxBroadcastPoints: Int = MaxBroadcastPoints,
+                                unionSize: Option[Long] = None): RDD[Point] = {
     val localRdd = local.cache()
     try {
       // size check BEFORE any collect — the union never lands on the driver
       // unless it fits the broadcast bound
-      val unionCount = localRdd.map(_.length.toLong).fold(0L)(_ + _)
+      val unionCount = unionSize.getOrElse(localRdd.map(_.length.toLong).fold(0L)(_ + _))
       if (unionCount == 0) return spark.sparkContext.emptyRDD[Point]
       if (unionCount > maxBroadcastPoints) {
         // union too wide to broadcast whole: distributed pairwise cross-filter.

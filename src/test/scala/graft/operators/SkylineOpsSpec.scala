@@ -192,6 +192,59 @@ class SkylineOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("metrics query runs three jobs and merges strategy ids on n tasks") {
+    import spark.implicits._
+    val n = 8
+    val pts = mkPts(3000, 3, seed = 13, card = 100)
+    val ds = spark.createDataset(spark.sparkContext.parallelize(pts, 16))
+    val (row, rec) = new JobRecorder(spark).during(
+      SkylineOps.skylineWithMetrics(ds, "mr-angle", 100.0, n, "q", pts.size).collect().head)
+    assert(row.getAs[Long]("skyline_size") == bruteForce(pts).size)
+    import scala.jdk.CollectionConverters._
+    val jobs = rec.jobs.asScala.filter(_ != "marker")
+    assert(jobs.size == 3, s"jobs: ${jobs.size}")
+    // the stage after the 16 map tasks' partials merges them per strategy id
+    // (in completion order: the query's jobs run one after another)
+    val stages = rec.stages.asScala.toSeq
+    val shape = stages.map(s => s.name -> s.numTasks)
+    val partials = stages.indexWhere(_.numTasks == 16)
+    assert(partials >= 0 && partials + 1 < stages.size, shape)
+    assert(stages(partials + 1).numTasks == n, shape)
+  }
+
+  test("mr-grid with more strategy ids than partitions: local skylines per id") {
+    import spark.implicits._
+    val (domain, n) = (30.0, 4)   // 3-D mr-grid: ids 0-7 on 4 partitions
+    val pts = mkPts(1500, 3, seed = 14, card = 30)   // small domain => duplicates
+    val pidOf = SkylineOps.pidFunction("mr-grid", domain, n)
+    val expect = pts.groupBy(p => pidOf(p.values)).map { case (pid, part) =>
+      pid -> bruteForce(part) }
+    assert(expect.size == 8)
+    for (slices <- Seq(1, 16)) {
+      val ds = spark.createDataset(spark.sparkContext.parallelize(pts, slices))
+      val got = SkylineOps.localSkylines(ds, "mr-grid", domain, n).collect()
+      assert(got.map(_._1).sorted.toSeq == expect.keys.toSeq.sorted, s"slices=$slices")
+      got.foreach { case (pid, local) =>
+        assert(asSet(local) == expect(pid), s"pid=$pid slices=$slices")
+        assert(local.size == expect(pid).size && local.forall(_.originPartition == pid))
+      }
+    }
+  }
+
+  test("a failing metrics query leaves no cached RDD behind") {
+    import spark.implicits._
+    val pts = mkPts(500, 2, seed = 15)
+    // 16 partitions: wide, so the scan runs only once the query has cached
+    val bad = spark.sparkContext.parallelize(pts, 16).map { p =>
+      if (p.id == 250L) throw new IllegalStateException("malformed input") else p }
+    val ds = spark.createDataset(bad)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](SkylineOps.skylineWithMetrics(ds, "mr-angle", 1000.0, 8, "q",
+      pts.size))
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"cached RDDs left behind: $leaked")
+  }
+
   test("grid-bounded dominator/dominated counts equal brute force") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col

@@ -1,8 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, SinglePartition}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
@@ -11,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 import graft.core.{Dominance, Point}
-import graft.operators.{SkylineOps, SparkTestSession}
+import graft.operators.{JobRecorder, SkylineOps, SparkTestSession}
 
 /** The custom Catalyst operator: agreement with the Dataset path, plan
   * shape (partial → parallel merge), laziness, and the sky_dominates
@@ -45,32 +42,6 @@ class SkylinePlanSpec extends AnyFunSuite {
     assert(phys.indexOf("SkylineMerge") < phys.indexOf("SkylinePartial"))
   }
 
-  /** Records job starts and completed stages. [[sync]] runs a marker job and
-    * waits until the listener bus delivers it; the bus is ordered, so every
-    * earlier event is in by then. */
-  private class Recorder extends SparkListener {
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val stages = new ConcurrentLinkedQueue[StageInfo]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      jobs.add(Option(e.properties).flatMap(p =>
-        Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      stages.add(e.stageInfo)
-    def sync(): Unit = {
-      val sc = spark.sparkContext
-      sc.setJobDescription("marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!jobs.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(jobs.contains("marker"), "listener bus never delivered the marker job")
-    }
-    def during[T](body: => T): (T, Recorder) = {
-      spark.sparkContext.addSparkListener(this)
-      try { val t = body; sync(); (t, this) }
-      finally spark.sparkContext.removeSparkListener(this)
-    }
-  }
-
   test("the merge stage runs on more than one task, with no SinglePartition") {
     val c = 4096.0
     val rows = (0 until 2048).map(i => Row(i.toLong, i.toDouble, c - i))
@@ -78,7 +49,7 @@ class SkylinePlanSpec extends AnyFunSuite {
       StructField("x", DoubleType), StructField("y", DoubleType)))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 16), schema)
     val sky = graft.Graft.skyline(df, Seq("x", "y"))
-    val (n, rec) = new Recorder().during(sky.collect().length)
+    val (n, rec) = new JobRecorder(spark).during(sky.collect().length)
     assert(n == 2048) // an antichain: every row survives
     val merge = rec.stages.asScala.filter(_.rddInfos.exists(_.scope.exists(s =>
       s.name.startsWith("Skyline") && s.name != "SkylinePartial"))).toSeq
@@ -99,13 +70,13 @@ class SkylinePlanSpec extends AnyFunSuite {
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("v1", DoubleType), StructField("v2", DoubleType)))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
-    val (frames, built) = new Recorder().during(
+    val (frames, built) = new JobRecorder(spark).during(
       graft.Graft.skyline(df, Seq("v1", "v2")) +:
         Seq("mr-dim", "mr-grid", "mr-angle").map(st =>
           graft.Graft.skylineVia(df, "id", Seq("v1", "v2"), st, 8.0, 4)))
     assert(built.jobs.asScala.toSeq == Seq("marker"),
       s"jobs while building: ${built.jobs.asScala.mkString(", ")}")
-    val (_, ran) = new Recorder().during(frames.foreach(f =>
+    val (_, ran) = new JobRecorder(spark).during(frames.foreach(f =>
       assert(f.collect().map(_.getLong(0)).toSeq == Seq(0L))))
     assert(ran.jobs.size > 1)
   }
