@@ -300,7 +300,7 @@ object Bench {
     SkylineOps.skyline(Generators.generate(spark, "uniform", 10000, 2)).count()
     // a high-d mini-pass warms the broadcast/cross-filter merge machinery
     // (kd build + query codegen) the 4-D/5-D scale entries hit first
-    SkylineOps.skylineBroadcastFilter(
+    SkylineOps.skyline(
       Generators.generate(spark, "anti-correlated", 20000, 5)).count()
     // CATALOG-WIDE WARM-UP (judge r13 item 4): the r13 sweep re-labeled
     // `jit_warmup` on 13 first laps (~32 s of first-vs-rep excess) that the

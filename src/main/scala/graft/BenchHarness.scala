@@ -260,7 +260,7 @@ object BenchHarness {
   }
 
   private def bcast(dims: Int): (SparkSession, Long) => Unit =
-    (spark, n) => SkylineOps.skylineBroadcastFilter(anti(spark, n, dims)).count()
+    (spark, n) => SkylineOps.skyline(anti(spark, n, dims)).count()
 
   private def corpus(spark: SparkSession, n: Long) = Generators.syntheticCorpus(spark, n)
 
@@ -330,7 +330,7 @@ object BenchHarness {
     Entry("sky_1m_4d_bcast", 1000000L, bcast(4)),
     // same workload through the too-big-to-broadcast fallback: a low bound
     // forces the distributed pairwise cross-filter (crossFilterChunks)
-    Entry("sky_500k_4d_xfilter", 500000L, (spark, n) => SkylineOps.skylineBroadcastFilter(
+    Entry("sky_500k_4d_xfilter", 500000L, (spark, n) => SkylineOps.skyline(
       anti(spark, n, 4), maxBroadcastPoints = 20000).count()),
     // 3-D anti at 10M through the broadcast cross-filter: past the bound it
     // degrades into the pairwise path, so the entry exercises whichever

@@ -106,7 +106,7 @@ object BenchScale {
     // first laps measure the operators, not Janino/C2 (same policy as the
     // sweep's warm-up sections).
     laps.withRddSweep {
-      SkylineOps.skylineBroadcastFilter(
+      SkylineOps.skyline(
         Generators.generate(spark, "anti-correlated", 20000, 5)).count()
       SkylineOps.skylineViaStrategy(
         Generators.generate(spark, "anti-correlated", 20000, 2),

@@ -50,12 +50,6 @@ object Graft {
     streaming.SkylineStream.runBatch(spark, dataLines, triggers, strategy,
       domain, partitions)
 
-  /** High-dimensional / anti-correlated scale path: fully parallel global
-    * phase via the broadcast cross-filter (see
-    * [[SkylineOps.skylineBroadcastFilter]]). */
-  def skylineLargeScale(ds: Dataset[Point]): Dataset[Point] =
-    SkylineOps.skylineBroadcastFilter(ds)
-
   /** The chained two-stage streaming topology (Spark 4 transformWithState;
     * requires the RocksDB state store provider). */
   def skylineStreamTopology(env: Dataset[streaming.SkylineStream.Envelope],

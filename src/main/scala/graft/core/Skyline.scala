@@ -42,46 +42,7 @@ object Dominance {
     better
   }
 
-  /** Flat coordinates of the points of the index arity, in ascending
-    * coordinate-sum order, with those sums. */
-  private[graft] def pack(points: Array[Point]): PackedPoints = {
-    val d = if (points.isEmpty) 0 else points(0).values.length
-    val sums = points.map(p => { var s = 0.0; var i = 0
-      while (i < p.values.length) { s += p.values(i); i += 1 }; s })
-    val order = Array.range(0, points.length)
-      .filter(points(_).values.length == d).sortBy(sums(_))
-    val flat = new Array[Double](order.length * d)
-    val srt = new Array[Double](order.length)
-    var k = 0
-    while (k < order.length) {
-      System.arraycopy(points(order(k)).values, 0, flat, k * d, d)
-      srt(k) = sums(order(k)); k += 1
-    }
-    PackedPoints(flat, srt, d)
-  }
-
-  /** True iff some packed point strictly dominates `p`, by a scan of the
-    * strictly-smaller-sum prefix (a dominator has a strictly smaller sum).
-    * The reference verdict [[dominatedByKd]] is tested against. */
-  private[graft] def dominatedByPacked(pk: PackedPoints, p: Point): Boolean = {
-    val vs = p.values
-    if (vs.length != pk.d || pk.sums.length == 0) return false
-    var s = 0.0; var i = 0
-    while (i < pk.d) { s += vs(i); i += 1 }
-    var lo = 0; var hi = pk.sums.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (pk.sums(mid) < s) lo = mid + 1 else hi = mid
-    }
-    var q = 0
-    while (q < lo) {
-      if (dominatesAt(pk.flat, q * pk.d, vs)) return true
-      q += 1
-    }
-    false
-  }
-
-  /** Does the packed point at `base` dominate `vs`? */
+  /** Does the flat point at `base` dominate `vs`? */
   @inline private def dominatesAt(fl: Array[Double], base: Int, vs: Array[Double]): Boolean = {
     var better = false; var t = 0
     while (t < vs.length) {
@@ -172,7 +133,7 @@ object Dominance {
     KdIndex(d, tree, boxLo, boxHi)
   }
 
-  /** Exactly [[dominatedByPacked]]'s verdict through the kd tree's
+  /** True iff some indexed point strictly dominates `p`, by the kd tree's
     * box-pruned range-emptiness search; see [[KdIndex]]. */
   private[graft] def dominatedByKd(ix: KdIndex, p: Point): Boolean = {
     val d = ix.d; val vs = p.values
@@ -222,12 +183,6 @@ object Dominance {
   }
 }
 
-/** Flat coordinates in ascending coordinate-sum order, with the sums:
-  * the layout [[Dominance.dominatedByPacked]] scans. Arity `d` (see
-  * [[Dominance]] for the arity rule). */
-private[graft] case class PackedPoints(flat: Array[Double], sums: Array[Double], d: Int)
-    extends Serializable
-
 /** A kd-tree dominance index over a point set (MBR pruning, as in "An
   * MBR-Oriented Approach for Efficient Skyline Query Processing", ICDE 2019).
   * `flat` holds the points in tree order: node `m` of segment [l, h) is the
@@ -249,7 +204,8 @@ private[graft] case class PackedPoints(flat: Array[Double], sums: Array[Double],
   *   - only boxes straddling c's staircase recurse, down to leaves of at
   *     most 8 points, which are scanned.
   * The split dimension is the box's widest. Verdicts are bit-identical to
-  * [[Dominance.dominatedByPacked]] (KdIndexProps random-verifies it).
+  * a scan (KdIndexProps random-verifies them against the test reference
+  * `PackedPoints.dominatedByPacked`).
   *
   * Memory: the boxes triple the flat footprint (3d doubles per point); at
   * the 4M-point broadcast bound in 5-D that is ~480 MB per executor. Past
@@ -355,6 +311,11 @@ object SkylineBuffer {
     buf
   }
 
-  /** Row-at-a-time build: the same staged build as [[of]]. */
-  def ofIncremental(it: Iterator[Point]): SkylineBuffer = of(it)
+  /** One buffer per `key` of the points of `it` (a strategy id, say): the
+    * skyline of each key's points. */
+  def byKey(it: Iterator[Point])(key: Point => Int): Iterator[(Int, SkylineBuffer)] = {
+    val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
+    it.foreach(p => bufs.getOrElseUpdate(key(p), empty).add(p))
+    bufs.iterator
+  }
 }

@@ -25,7 +25,7 @@ case class MrAngleExpr(child: Expression, n: Int) extends UnaryExpression {
     val vs = new Array[Double](d)
     var i = 0
     while (i < d) { vs(i) = a.getDouble(i); i += 1 }
-    graft.operators.Partitioners.mrAngleScala(vs.toSeq, n)
+    graft.operators.Partitioners.mrAngleScala(vs, n)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =

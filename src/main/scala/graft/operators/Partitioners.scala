@@ -47,7 +47,7 @@ object Partitioners {
     * phi by pi/2, average, scale by n, truncate, clamp to [0, n-1]. 1-D edge
     * case returns 0.
     */
-  def mrAngleScala(values: Seq[Double], n: Int): Int = {
+  def mrAngleScala(values: Array[Double], n: Int): Int = {
     val dims = values.length
     val numAngles = dims - 1
     if (numAngles < 1) return 0

@@ -54,15 +54,29 @@ object SkylineOps {
         array(dims: _*).as("values"), lit(-1).as("originPartition")): _*)
   }
 
-  /** Global skyline of any input: it is spread round-robin over
-    * `defaultParallelism` slivers, each sliver is reduced to its skyline and
-    * [[mergeLocal]] merges them on every core (`originPartition` passes
-    * through). The spread keeps a few fat antichains from pre-reducing in
-    * one serial task each; it runs inside the size-check job. */
-  def skyline(ds: Dataset[Point]): Dataset[Point] = {
+  /** Global skyline of any input, the one way into [[mergeLocal]]: each
+    * input partition is reduced to its skyline and the local skylines are
+    * merged on every core (`originPartition` passes through). An input with
+    * fewer partitions than `defaultParallelism` is first spread round-robin
+    * over that many slivers, so a few fat antichains do not pre-reduce in
+    * one serial task each; a wider input is reduced where it sits. */
+  def skyline(ds: Dataset[Point]): Dataset[Point] = skyline(ds, MaxBroadcastPoints)
+
+  /** [[skyline]] with the merge's broadcast bound and cross-filter chunking
+    * set by the caller (bench entries and specs that force the chunked
+    * cross-filter); see [[mergeLocal]]. */
+  private[graft] def skyline(ds: Dataset[Point], maxBroadcastPoints: Int,
+                             chunks: Option[Int] = None,
+                             chunkTargetBytes: Long = ChunkTargetBytes): Dataset[Point] = {
     val spark = ds.sparkSession
-    broadcastFilter(spark,
-      ds.rdd.repartition(spark.sparkContext.defaultParallelism), MaxBroadcastPoints)
+    val cores = spark.sparkContext.defaultParallelism
+    val rdd = ds.rdd
+    val in = if (rdd.getNumPartitions < cores) rdd.repartition(cores) else rdd
+    spark.createDataset(mergeLocal(spark, in.mapPartitions { it =>
+      if (it.isEmpty) Iterator.empty
+      else Iterator.single(SkylineBuffer.of(it).result.toArray)
+    }, maxBroadcastPoints, chunks = chunks, chunkTargetBytes = chunkTargetBytes))(
+      ExpressionEncoder[Point]())
   }
 
   /** Two-phase skyline through an explicit spatial strategy, mirroring the
@@ -103,19 +117,17 @@ object SkylineOps {
     val cores = ds.sparkSession.sparkContext.defaultParallelism
     val narrow = ds.queryExecution.toRdd.getNumPartitions < cores
     val in = if (narrow) ds.repartition(cores, col("id")) else ds
-    def byId(it: Iterator[(Int, Point)]) = {
-      val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
-      it.foreach { case (pid, p) => bufs.getOrElseUpdate(pid, SkylineBuffer.empty).add(p) }
-      bufs.iterator.map { case (pid, b) => (pid, b.result.toArray) }
-    }
-    in.rdd.mapPartitions(it => byId(it.map(p => (pidOf(p.values), p))).map { case (pid, pts) =>
-      (pid, pts.map(_.copy(originPartition = pid))) })
+    in.rdd.mapPartitions(it => SkylineBuffer.byKey(it)(p => pidOf(p.values)).map { case (pid, b) =>
+      (pid, b.result.iterator.map(_.copy(originPartition = pid)).toArray) })
       .partitionBy(new HashPartitioner(n))
-      .mapPartitions(it => byId(it.flatMap { case (pid, pts) => pts.iterator.map((pid, _)) }))
+      .mapPartitions(it => SkylineBuffer.byKey(it.flatMap(_._2.iterator))(_.originPartition)
+        .map { case (pid, b) => (pid, b.result.toArray) })
   }
 
-  /** Driver-side partition-id function with exactly the reference arithmetic. */
-  def pidFunction(strategy: String, domain: Double, n: Int): Array[Double] => Int =
+  /** Driver-side partition-id function with exactly the reference arithmetic.
+    * A partition count below 1 is rejected here, when the function is built. */
+  def pidFunction(strategy: String, domain: Double, n: Int): Array[Double] => Int = {
+    if (n < 1) throw new IllegalArgumentException(s"partition count must be >= 1, got $n")
     strategy match {
       case "mr-dim" =>
         vs => {
@@ -129,9 +141,10 @@ object SkylineOps {
           mask
         }
       case "mr-angle" =>
-        vs => Partitioners.mrAngleScala(vs.toSeq, n)
+        vs => Partitioners.mrAngleScala(vs, n)
       case other => throw new IllegalArgumentException(s"unknown strategy: $other")
     }
+  }
 
   /** How many partitions the protocol must cover for `requested` ones.
     * MR-Grid's bitmask partitioner emits ids in [0, 2^dims) whatever count
@@ -199,44 +212,31 @@ object SkylineOps {
       (a, b) => a.merge(b),
       depth).result
 
-  /** Two-phase skyline whose GLOBAL phase is fully parallel: each partition
-    * reduces to its local antichain, the union (size-checked before it
-    * reaches the driver) is broadcast as a kd dominance index
-    * ([[graft.core.KdIndex]]), and every candidate is checked against it on
-    * every core. Correct
-    * because any dominator of a candidate is either in the union or is
-    * dominated by a union member that (by transitivity) also dominates the
-    * candidate. Duplicates of a skyline point all survive (equals never
-    * dominate), matching BNL semantics.
-    *
-    * The broadcast is bounded by the union of local skylines, not by input
-    * size — the bound the reference's global phase ships over its second
-    * shuffle (`FlinkSkyline.java:171-174`). Past `maxBroadcastPoints` it
-    * falls back to the distributed pairwise cross-filter
-    * (`crossFilterChunks`), with no driver collect or broadcast. */
-  def skylineBroadcastFilter(ds: Dataset[Point],
-                             maxBroadcastPoints: Int = MaxBroadcastPoints): Dataset[Point] =
-    broadcastFilter(ds.sparkSession, ds.rdd, maxBroadcastPoints)
-
   private final val MaxBroadcastPoints = 4000000
-
-  private def broadcastFilter(spark: SparkSession, points: RDD[Point],
-                              maxBroadcastPoints: Int): Dataset[Point] = {
-    implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
-    spark.createDataset(mergeLocal(spark, points.mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else Iterator.single(SkylineBuffer.of(it).result.toArray)
-    }, maxBroadcastPoints))
-  }
+  private final val ChunkTargetBytes = 64L << 20
 
   /** The one global merge (of [[skyline]], [[skylineWithMetrics]] and the
     * Catalyst `SkylineMergeExec`) over blocks of candidates, normally local
     * skylines: the points no candidate dominates. Runs the union collect
     * when called, after a size-check job unless the caller passes the
-    * blocks' `unionSize`; the blocks stay cached for those jobs only. */
+    * blocks' `unionSize`; the blocks stay cached for those jobs only.
+    *
+    * The union is broadcast as a kd dominance index
+    * ([[graft.core.KdIndex]]) and every candidate is checked against it on
+    * every core. Correct because any dominator of a candidate is either in
+    * the union or is dominated by a union member that (by transitivity) also
+    * dominates the candidate; duplicates of a skyline point all survive
+    * (equals never dominate). The broadcast is bounded by the union of local
+    * skylines, not by input size — the bound the reference's global phase
+    * ships over its second shuffle (`FlinkSkyline.java:171-174`). Past
+    * `maxBroadcastPoints` it falls back to the distributed pairwise
+    * cross-filter ([[crossFilterChunks]], sized by `chunks` and
+    * `chunkTargetBytes`), with no driver collect or broadcast. */
   private[graft] def mergeLocal(spark: SparkSession, local: RDD[Array[Point]],
                                 maxBroadcastPoints: Int = MaxBroadcastPoints,
-                                unionSize: Option[Long] = None): RDD[Point] = {
+                                unionSize: Option[Long] = None,
+                                chunks: Option[Int] = None,
+                                chunkTargetBytes: Long = ChunkTargetBytes): RDD[Point] = {
     val localRdd = local.cache()
     try {
       // size check BEFORE any collect — the union never lands on the driver
@@ -251,7 +251,7 @@ object SkylineOps {
         // same O(s²·d) any exact merge pays on a pathological antichain, but
         // it is spread over chunks² tasks with no serial merge and no
         // oversized driver collect.
-        return crossFilterChunks(spark, localRdd, unionCount)
+        return crossFilterChunks(spark, localRdd, unionCount, chunks, chunkTargetBytes)
       }
       val union = localRdd.collect().iterator.flatten.toArray
       val packed = buildKd(union)
@@ -290,8 +290,8 @@ object SkylineOps {
     * with i != j runs as one task producing chunk i's survivor bitset vs
     * chunk j, and bitsets AND-reduce per chunk. Within-chunk domination is
     * impossible (each chunk is an antichain). */
-  private def crossFilterChunks(spark: SparkSession,
-      localRdd: RDD[Array[Point]], unionUpperBound: Long): RDD[Point] = {
+  private def crossFilterChunks(spark: SparkSession, localRdd: RDD[Array[Point]],
+      unionUpperBound: Long, requestedChunks: Option[Int], targetBytes: Long): RDD[Point] = {
     // chunk-pair tasks = n·(n-1) but the cartesian SHIPS each chunk n-1
     // times, so shuffle volume grows linearly in n × |union|: the FLOOR is
     // n ≈ √(2·cores) — enough pair-tasks to fill every core (n²≈2·cores)
@@ -302,24 +302,16 @@ object SkylineOps {
     // ~8·(d+1) bytes/point, so n is raised until a chunk fits the target
     // footprint — the linear shipping law makes that trade explicit
     // (shipped = (n−1)·|union| grows linearly in n; per-task memory shrinks
-    // as 1/n). graft.xfilter.chunks overrides for the scaling-law probes;
-    // graft.xfilter.chunk.target.bytes overrides the per-chunk footprint
-    // target (default 64 MB — comfortably inside any executor).
+    // as 1/n). `requestedChunks` overrides n for the scaling-law probes; the
+    // per-chunk footprint target defaults to 64 MB, comfortably inside any
+    // executor.
     val d = localRdd.map(a => if (a.isEmpty) 0 else a(0).values.length)
       .fold(0)(math.max)
     val fillChunks = math.max(2, math.ceil(
       math.sqrt(spark.sparkContext.defaultParallelism * 2.0)).toInt)
-    val targetBytes = spark.conf.getOption("graft.xfilter.chunk.target.bytes")
-      .map(_.toLong).getOrElse(64L << 20)
-    require(targetBytes > 0,
-      s"graft.xfilter.chunk.target.bytes must be > 0, got $targetBytes")
     val memChunks = math.ceil(
       unionUpperBound.toDouble * 8.0 * (d + 1) / targetBytes).toInt
-    val nChunks = spark.conf.getOption("graft.xfilter.chunks").map(_.toInt)
-      .getOrElse(math.max(fillChunks, memChunks))
-    // n = 1 degenerates soundly (one chunk = one full local reduction) but
-    // 0/negative would floorMod-crash mid-job — fail at plan time instead
-    require(nChunks >= 1, s"graft.xfilter.chunks must be >= 1, got $nChunks")
+    val nChunks = requestedChunks.getOrElse(math.max(fillChunks, memChunks))
     // re-chunk to balance: points hash-spread, each chunk re-reduced to an
     // antichain (sound: dropping locally-dominated points is always sound).
     // Each chunk is then put in a TOTAL deterministic order (coordinate sum,
@@ -474,24 +466,6 @@ object SkylineOps {
       it.foreach(_._2.foreach(buf.add))
       buf.result.filter(_.originPartition == cell).iterator
     }
-  }
-
-  /** Windowed reference formulation of the 2-D sort skyline: one global
-    * prefix-min window over the DISTINCT v1 values. Kept ONLY as a test
-    * oracle for [[skyline2DDFScalable]] — the `Window.orderBy` with no
-    * partitioning funnels all distinct v1 values through one task, which is
-    * exactly what the scalable path exists to avoid. Not part of the public
-    * API. */
-  private[graft] def skyline2DDFWindowed(df: DataFrame, idCol: String,
-                                         v1: String, v2: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val gmin = df.groupBy(col(v1)).agg(min(col(v2)).as("_gmin"))
-    val w = Window.orderBy(col(v1)).rowsBetween(Window.unboundedPreceding, -1)
-    val pref = gmin.withColumn("_pmin", min(col("_gmin")).over(w))
-    df.join(pref, v1)
-      .where(col(v2) === col("_gmin") &&
-        (col("_pmin").isNull || col("_pmin") > col(v2)))
-      .select(col(idCol), col(v1), col(v2))
   }
 
   /** Sort-based, fully-distributed 2-D skyline. A point (v1,v2) is

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-import scala.collection.mutable.{ArrayBuffer, HashMap}
+import scala.collection.mutable.ArrayBuffer
 
 import graft.core.{Point, SkylineBuffer}
 import graft.operators.SkylineOps
@@ -82,19 +82,16 @@ case class SkylinePartialExec(dims: Seq[Expression], via: Option[ReferenceStrate
     val pidOf = via.map(_.pidOf)
     child.execute().mapPartitions { it =>
       val rows = ArrayBuffer[InternalRow]()
-      val bufs = HashMap[Int, SkylineBuffer]()
-      it.foreach(r => lift(r, rows.length).foreach { p =>
-        rows += r.copy()
-        bufs.getOrElseUpdate(pidOf.fold(0)(_(p.values)), SkylineBuffer.empty).add(p)
-      })
-      bufs.valuesIterator.flatMap(_.result).map(p => rows(p.id.toInt))
+      val pts = it.flatMap(r => lift(r, rows.length).map { p => rows += r.copy(); p })
+      SkylineBuffer.byKey(pts)(p => pidOf.fold(0)(_(p.values)))
+        .flatMap(_._2.result).map(p => rows(p.id.toInt))
     }
   }
 }
 
 /** Global phase: the partial survivors of child partition `i` are cached,
   * lifted to `Point(i, dims)` and merged by [[SkylineOps.mergeLocal]], the
-  * merge [[SkylineOps.skyline]] runs (broadcast kd filter, chunked
+  * merge behind [[SkylineOps.skyline]] (broadcast kd filter, chunked
   * cross-filter past its bound). Each survivor goes back to partition `i`,
   * which keeps its rows whose dimension vector survived: whether a row
   * survives depends only on that vector (equal vectors never dominate each

@@ -32,7 +32,7 @@ class SkylineKernelSpec extends AnyFunSuite {
   test("duplicates of a skyline point are all skyline members") {
     val pts = Seq(Point(1, Array(0.0, 0.0)), Point(2, Array(0.0, 0.0)),
       Point(3, Array(1.0, 1.0)), Point(4, Array(0.0, 0.0)))
-    val sky = SkylineBuffer.ofIncremental(pts.iterator).result
+    val sky = SkylineBuffer.of(pts.iterator).result
     assert(asSet(sky) == Set((1L, Seq(0.0, 0.0)), (2L, Seq(0.0, 0.0)), (4L, Seq(0.0, 0.0))))
   }
 
@@ -58,9 +58,9 @@ class SkylineKernelSpec extends AnyFunSuite {
       val dims = 2 + rng.nextInt(3)
       val pts = randPoints(rng, rng.nextInt(80), dims, 10)
       val expect = bruteForce(pts)
-      assert(asSet(SkylineBuffer.ofIncremental(pts.iterator).result) == expect)
+      assert(asSet(SkylineBuffer.of(pts.iterator).result) == expect)
       val shuffled = rng.shuffle(pts)
-      assert(asSet(SkylineBuffer.ofIncremental(shuffled.iterator).result) == expect)
+      assert(asSet(SkylineBuffer.of(shuffled.iterator).result) == expect)
     }
   }
 
@@ -69,7 +69,7 @@ class SkylineKernelSpec extends AnyFunSuite {
     for (_ <- 1 to 60) {
       val pts = randPoints(rng, rng.nextInt(100), 3, 8)
       assert(asSet(SkylineBuffer.of(pts.iterator).result) ==
-        asSet(SkylineBuffer.ofIncremental(pts.iterator).result))
+        asSet(SkylineBuffer.of(pts.iterator).result))
     }
   }
 
@@ -138,8 +138,8 @@ class SkylineKernelSpec extends AnyFunSuite {
     }
     assert(expect.length > SkylineBuffer.StageLimit)
     def ids(b: SkylineBuffer): Seq[Long] = b.result.map(_.id).sorted
-    assert(ids(SkylineBuffer.ofIncremental(pts.iterator)) == expect, "add")
-    assert(ids(SkylineBuffer.ofIncremental(rng.shuffle(pts.toSeq).iterator)) == expect,
+    assert(ids(SkylineBuffer.of(pts.iterator)) == expect, "add")
+    assert(ids(SkylineBuffer.of(rng.shuffle(pts.toSeq).iterator)) == expect,
       "add, shuffled")
     assert(ids(SkylineBuffer.of(pts.reverseIterator)) == expect, "of")
     val (a, b) = pts.partition(_.id % 3 == 0)

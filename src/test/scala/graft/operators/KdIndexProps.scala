@@ -2,10 +2,10 @@ package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Dominance, Point}
+import graft.core.{Dominance, PackedPoints, Point}
 
 /** The kd-tree dominance index (Dominance.buildKd / dominatedByKd) must
-  * return EXACTLY dominatedByPacked's verdict on every input — box pruning
+  * return EXACTLY PackedPoints.dominatedByPacked's verdict on every input — box pruning
   * and containment exits are conservative shortcuts, never approximations.
   * Random-verified across the regimes that stress different paths:
   * uniform (containment exits), anti-correlated shells (staircase
@@ -14,10 +14,10 @@ class KdIndexProps extends AnyFunSuite {
 
   private def verify(points: Array[Point], probes: Array[Point],
       label: String): Unit = {
-    val pk = Dominance.pack(points)
+    val pk = PackedPoints.pack(points)
     val ix = Dominance.buildKd(points)
     probes.foreach { p =>
-      val want = Dominance.dominatedByPacked(pk, p)
+      val want = PackedPoints.dominatedByPacked(pk, p)
       val got = Dominance.dominatedByKd(ix, p)
       assert(got == want,
         s"$label: verdict mismatch for ${p.id}: indexed=$got packed=$want " +

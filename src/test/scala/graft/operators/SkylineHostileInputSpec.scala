@@ -61,12 +61,8 @@ class SkylineHostileInputSpec extends AnyFunSuite {
       val bad = disagreeing(brute(pts), Seq(
         "SkylineBuffer.of" -> (() => asSky(SkylineBuffer.of(pts.iterator).result)),
         "skyline" -> (() => asSky(SkylineOps.skyline(ds).collect())),
-        "skylineBroadcastFilter" ->
-          (() => asSky(SkylineOps.skylineBroadcastFilter(ds).collect())),
-        "skylineBroadcastFilter(max 3)" -> (() => asSky(
-          SkylineOps.skylineBroadcastFilter(ds, maxBroadcastPoints = 3).collect())),
-        "Graft.skylineLargeScale" ->
-          (() => asSky(Graft.skylineLargeScale(ds).collect()))) ++
+        "skyline(max 3)" -> (() => asSky(
+          SkylineOps.skyline(ds, maxBroadcastPoints = 3).collect()))) ++
         Strategies.map(st => s"skylineViaStrategy($st)" -> (() => asSky(
           SkylineOps.skylineViaStrategy(ds, st, Domain, 8).collect()))))
       val expectSize = brute(pts).size.toLong
@@ -121,8 +117,8 @@ class SkylineHostileInputSpec extends AnyFunSuite {
         "Graft.skyline" -> (() => rowsOf(Graft.skyline(df, dims), 0, d)),
         "Graft.skylineGrouped" -> (() =>
           rowsOf(Graft.skylineGrouped(df, Seq("g"), "id", dims), 1, d)),
-        "Graft.skylineLargeScale" -> (() => asSky(
-          Graft.skylineLargeScale(SkylineOps.pointsFrom(df, "id", dims)).collect()))) ++
+        "skyline(pointsFrom)" -> (() => asSky(
+          SkylineOps.skyline(SkylineOps.pointsFrom(df, "id", dims)).collect()))) ++
         Strategies.map(st => s"Graft.skylineVia($st)" -> (() =>
           rowsOf(Graft.skylineVia(df, "id", dims, st, Domain, 8), 0, d))))
       assert(bad.isEmpty, s"d=$d rows=${rows.size}\n${bad.mkString("\n")}")

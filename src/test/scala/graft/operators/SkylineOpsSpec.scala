@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
@@ -28,6 +28,24 @@ class SkylineOpsSpec extends AnyFunSuite {
 
   private def asSet(pts: Seq[Point]): Set[(Long, Seq[Double])] =
     pts.map(p => (p.id, p.values.toSeq)).toSet
+
+  /** Windowed reference formulation of the 2-D sort skyline: one global
+    * prefix-min window over the DISTINCT v1 values. The test oracle for
+    * [[SkylineOps.skyline2DDFScalable]] — the `Window.orderBy` with no
+    * partitioning funnels all distinct v1 values through one task, which is
+    * exactly what the scalable path exists to avoid. */
+  private def skyline2DDFWindowed(df: DataFrame, idCol: String,
+                                  v1: String, v2: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, min}
+    val gmin = df.groupBy(col(v1)).agg(min(col(v2)).as("_gmin"))
+    val w = Window.orderBy(col(v1)).rowsBetween(Window.unboundedPreceding, -1)
+    val pref = gmin.withColumn("_pmin", min(col("_gmin")).over(w))
+    df.join(pref, v1)
+      .where(col(v2) === col("_gmin") &&
+        (col("_pmin").isNull || col("_pmin") > col(v2)))
+      .select(col(idCol), col(v1), col(v2))
+  }
 
   private def mkPts(n: Int, dims: Int, seed: Int, card: Int = 1000): Seq[Point] = {
     val rng = new Random(seed)
@@ -97,7 +115,7 @@ class SkylineOpsSpec extends AnyFunSuite {
     for (seed <- Seq(61, 62)) {
       val pts = mkPts(4000, 2, seed, card = 60)
       val df = pts.map(p => (p.id, p.values(0), p.values(1))).toDF("id", "v1", "v2")
-      val a = SkylineOps.skyline2DDFWindowed(df, "id", "v1", "v2")
+      val a = skyline2DDFWindowed(df, "id", "v1", "v2")
         .as[(Long, Double, Double)].collect().toSet
       val b = SkylineOps.skyline2DDFScalable(df, "id", "v1", "v2", numRanges = 7)
         .as[(Long, Double, Double)].collect().toSet
@@ -109,7 +127,7 @@ class SkylineOpsSpec extends AnyFunSuite {
     // run-to-run flicker here
     val big = mkPts(60000, 2, seed = 63, card = 50000)
     val bigDf = big.map(p => (p.id, p.values(0), p.values(1))).toDF("id", "v1", "v2")
-    val expect = SkylineOps.skyline2DDFWindowed(bigDf, "id", "v1", "v2")
+    val expect = skyline2DDFWindowed(bigDf, "id", "v1", "v2")
       .as[(Long, Double, Double)].collect().toSet
     for (round <- 1 to 3) {
       val got = SkylineOps.skyline2DDFScalable(bigDf, "id", "v1", "v2", numRanges = 16)
@@ -138,18 +156,18 @@ class SkylineOpsSpec extends AnyFunSuite {
     for ((dims, seed) <- Seq((2, 51), (3, 52), (4, 53))) {
       val pts = mkPts(3000, dims, seed, card = 40)
       val expect = bruteForce(pts)
-      val got = asSet(SkylineOps.skylineBroadcastFilter(
+      val got = asSet(SkylineOps.skyline(
         pts.toDS().repartition(5)).collect().toSeq)
       assert(got == expect, s"dims=$dims")
     }
     // duplicates of a skyline point all survive (equal sums never dominate)
     val dups = Seq.tabulate(4)(i => graft.core.Point(500L + i, Array(0.0, 0.0))) ++
       mkPts(500, 2, 54, card = 40).map(p => p.copy(values = p.values.map(_ + 1.0)))
-    val out = SkylineOps.skylineBroadcastFilter(dups.toDS().repartition(3)).collect()
+    val out = SkylineOps.skyline(dups.toDS().repartition(3)).collect()
     assert(out.count(_.values.toSeq == Seq(0.0, 0.0)) == 4)
     // oversized-union fallback path still exact
     val pts = mkPts(2000, 2, seed = 55, card = 1000)
-    val viaFallback = asSet(SkylineOps.skylineBroadcastFilter(
+    val viaFallback = asSet(SkylineOps.skyline(
       pts.toDS(), maxBroadcastPoints = 10).collect().toSeq)
     assert(viaFallback == bruteForce(pts))
   }
@@ -210,6 +228,48 @@ class SkylineOpsSpec extends AnyFunSuite {
     val partials = stages.indexWhere(_.numTasks == 16)
     assert(partials >= 0 && partials + 1 < stages.size, shape)
     assert(stages(partials + 1).numTasks == n, shape)
+  }
+
+  test("skyline merges a wide input where it sits and spreads a one-partition input") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val pts = mkPts(3000, 3, seed = 16, card = 100)
+    val cores = spark.sparkContext.defaultParallelism
+    // one partition per core or more: the pre-reduce runs on the input's own
+    // partitions, so no shuffle stage runs before the merge
+    val wide = spark.createDataset(spark.sparkContext.parallelize(pts, cores))
+    val (wideSky, wideRec) = new JobRecorder(spark).during(SkylineOps.skyline(wide).collect())
+    assert(asSet(wideSky.toSeq) == bruteForce(pts))
+    def shuffles(s: org.apache.spark.scheduler.StageInfo) =
+      s.taskMetrics.shuffleWriteMetrics.recordsWritten > 0
+    val wideStages = wideRec.stages.asScala.toSeq
+    assert(!wideStages.exists(shuffles),
+      wideStages.map(s => s.name -> s.numTasks))
+    // one partition: spread over the cores before the pre-reduce
+    val narrow = spark.createDataset(spark.sparkContext.parallelize(pts, 1))
+    val (narrowSky, narrowRec) = new JobRecorder(spark).during(SkylineOps.skyline(narrow).collect())
+    assert(asSet(narrowSky.toSeq) == bruteForce(pts))
+    val narrowStages = narrowRec.stages.asScala.toSeq
+    val shape = narrowStages.map(s => s.name -> s.numTasks)
+    val spread = narrowStages.find(shuffles)
+    assert(spread.exists(_.numTasks == 1), shape)
+    val preReduce = narrowStages.find(_.parentIds.contains(spread.get.stageId))
+    assert(preReduce.exists(_.numTasks > 1), shape)
+  }
+
+  test("a partition count below 1 is rejected when the partitioner is built") {
+    import spark.implicits._
+    for (strategy <- Seq("mr-dim", "mr-grid", "mr-angle"); n <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](SkylineOps.pidFunction(strategy, 100.0, n))
+      assert(e.getMessage.contains(n.toString), e.getMessage)
+      val viaNode = intercept[IllegalArgumentException](
+        graft.plans.ReferenceStrategy(strategy, 100.0, n))
+      assert(viaNode.getMessage.contains(n.toString), viaNode.getMessage)
+    }
+    val pts = mkPts(200, 2, seed = 17)
+    val e = intercept[IllegalArgumentException](
+      SkylineOps.skylineWithMetrics(pts.toDS(), "mr-angle", 1000.0, 0, "q", pts.size))
+    assert(e.getMessage.contains("0"), e.getMessage)
   }
 
   test("mr-grid with more strategy ids than partitions: local skylines per id") {

@@ -59,8 +59,8 @@ object SkylinePathProps extends Properties("SkylinePaths") {
       val got = Seq(
         "node" -> node(None),
         "SkylineOps.skyline" -> points(SkylineOps.skyline),
-        "skylineBroadcastFilter(max 3)" ->
-          points(SkylineOps.skylineBroadcastFilter(_, maxBroadcastPoints = 3))) ++
+        "skyline(max 3)" ->
+          points(SkylineOps.skyline(_, maxBroadcastPoints = 3))) ++
         Seq("mr-dim", "mr-grid", "mr-angle").map(st =>
           s"node via $st" -> node(Some(ReferenceStrategy(st, Domain, 8))))
       val bad = got.collect { case (name, sky) if sky != expect => s"$name: $sky" }

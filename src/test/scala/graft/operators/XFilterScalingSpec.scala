@@ -26,32 +26,25 @@ class XFilterScalingSpec extends AnyFunSuite {
 
   test("shipped volume == (nChunks-1) x union at every chunk count (linear law)") {
     for (n <- Seq(2, 4, 8)) {
-      spark.conf.set("graft.xfilter.chunks", n.toString)
-      try {
-        // tiny bound forces the distributed pairwise path
-        val out = SkylineOps.skylineBroadcastFilter(
-          antichain(), maxBroadcastPoints = 100).count()
-        assert(out == N.toLong, s"n=$n lost antichain points")
-        val st = SkylineOps.lastXFilterStats.get()
-        assert(st != null && st.nChunks == n)
-        assert(st.unionPoints == N.toLong, s"n=$n union=${st.unionPoints}")
-        assert(st.pairTasks == n.toLong * (n - 1),
-          s"n=$n pairTasks=${st.pairTasks}")
-        assert(st.shippedPoints == (n - 1).toLong * N,
-          s"n=$n shipped=${st.shippedPoints}, expected ${(n - 1).toLong * N}" +
-            " — the linear law (n-1)*union broke")
-      } finally spark.conf.unset("graft.xfilter.chunks")
+      // tiny bound forces the distributed pairwise path
+      val out = SkylineOps.skyline(
+        antichain(), maxBroadcastPoints = 100, chunks = Some(n)).count()
+      assert(out == N.toLong, s"n=$n lost antichain points")
+      val st = SkylineOps.lastXFilterStats.get()
+      assert(st != null && st.nChunks == n)
+      assert(st.unionPoints == N.toLong, s"n=$n union=${st.unionPoints}")
+      assert(st.pairTasks == n.toLong * (n - 1),
+        s"n=$n pairTasks=${st.pairTasks}")
+      assert(st.shippedPoints == (n - 1).toLong * N,
+        s"n=$n shipped=${st.shippedPoints}, expected ${(n - 1).toLong * N}" +
+          " — the linear law (n-1)*union broke")
     }
   }
 
   test("doubling chunks doubles shipped volume, not quadruples (exponent 1)") {
     def shippedAt(n: Int): Long = {
-      spark.conf.set("graft.xfilter.chunks", n.toString)
-      try {
-        SkylineOps.skylineBroadcastFilter(
-          antichain(), maxBroadcastPoints = 100).count()
-        SkylineOps.lastXFilterStats.get().shippedPoints
-      } finally spark.conf.unset("graft.xfilter.chunks")
+      SkylineOps.skyline(antichain(), maxBroadcastPoints = 100, chunks = Some(n)).count()
+      SkylineOps.lastXFilterStats.get().shippedPoints
     }
     val s4 = shippedAt(4); val s8 = shippedAt(8)
     // exact ratio (8-1)/(4-1); a quadratic law would read 8²−8 / 4²−4 = 4.67
@@ -70,22 +63,19 @@ class XFilterScalingSpec extends AnyFunSuite {
     val fill = math.max(2, math.ceil(
       math.sqrt(spark.sparkContext.defaultParallelism * 2.0)).toInt)
     val memChunks = 16
-    spark.conf.set("graft.xfilter.chunk.target.bytes", "30000")
-    try {
-      val out = SkylineOps.skylineBroadcastFilter(
-        antichain(), maxBroadcastPoints = 100).count()
-      assert(out == N.toLong, "auto-sized merge lost antichain points")
-      val st = SkylineOps.lastXFilterStats.get()
-      assert(st != null && st.nChunks == math.max(fill, memChunks),
-        s"expected ${math.max(fill, memChunks)} auto-sized chunks, " +
-          s"got ${if (st == null) "null" else st.nChunks}")
-      // the linear law must hold under auto-sizing too
-      assert(st.shippedPoints == (st.nChunks - 1).toLong * st.unionPoints,
-        s"shipped=${st.shippedPoints} != (n-1)*union under auto-sizing")
-    } finally spark.conf.unset("graft.xfilter.chunk.target.bytes")
+    val out = SkylineOps.skyline(
+      antichain(), maxBroadcastPoints = 100, chunkTargetBytes = 30000L).count()
+    assert(out == N.toLong, "auto-sized merge lost antichain points")
+    val st = SkylineOps.lastXFilterStats.get()
+    assert(st != null && st.nChunks == math.max(fill, memChunks),
+      s"expected ${math.max(fill, memChunks)} auto-sized chunks, " +
+        s"got ${if (st == null) "null" else st.nChunks}")
+    // the linear law must hold under auto-sizing too
+    assert(st.shippedPoints == (st.nChunks - 1).toLong * st.unionPoints,
+      s"shipped=${st.shippedPoints} != (n-1)*union under auto-sizing")
     // and with the default 64 MB target this union is one chunk's worth,
     // so the task-fill floor rules — the pre-r12 behavior is unchanged
-    val out2 = SkylineOps.skylineBroadcastFilter(
+    val out2 = SkylineOps.skyline(
       antichain(), maxBroadcastPoints = 100).count()
     assert(out2 == N.toLong)
     assert(SkylineOps.lastXFilterStats.get().nChunks == fill,
