@@ -133,10 +133,12 @@ object Dominance {
     KdIndex(d, tree, boxLo, boxHi)
   }
 
-  /** True iff some indexed point strictly dominates `p`, by the kd tree's
-    * box-pruned range-emptiness search; see [[KdIndex]]. */
-  private[graft] def dominatedByKd(ix: KdIndex, p: Point): Boolean = {
-    val d = ix.d; val vs = p.values
+  /** True iff some indexed point strictly dominates the vector `vs`, by the
+    * kd tree's box-pruned range-emptiness search; see [[KdIndex]]. Reads
+    * `vs` only and allocates nothing, so a caller can probe a reused
+    * scratch vector before it builds a [[Point]]. */
+  private[graft] def dominatedByKd(ix: KdIndex, vs: Array[Double]): Boolean = {
+    val d = ix.d
     if (vs.length != d || ix.size == 0) return false
     def rec(l: Int, h: Int): Boolean = {
       if (l >= h) return false
@@ -224,24 +226,51 @@ private[graft] case class KdIndex(d: Int, flat: Array[Double],
   * (partial/merge) decomposition correct — skyline(A ∪ B) ==
   * skyline(skyline(A) ∪ skyline(B)).
   *
-  * Inserts are staged, like the reference's 5000-record inputBuffer
-  * (`FlinkSkyline.java:232,285-289`), and compacted into the survivors once
-  * the stage holds max(StageLimit, survivors) points, so the total work on a
-  * growing antichain stays O(n log n). The two fields are plain buffers that
-  * kryo serializes ([[graft.operators.SkylineAgg]]'s buffer encoder); no
-  * index outlives a compaction.
+  * Admission: while it is on, an arriving point that the survivors' kd
+  * index dominates is dropped at once. It is never staged, and through
+  * [[offer]] it is never even allocated: the MBR-pruned dominance test of
+  * "An MBR-Oriented Approach for Efficient Skyline Query Processing" (ICDE
+  * 2019), applied before a row becomes an object. A dominated point is
+  * never a skyline member, whatever dominates it, so admission never drops
+  * one.
+  *
+  * Staging: points are staged, like the reference's 5000-record inputBuffer
+  * (`FlinkSkyline.java:232,285-289`), and folded into the survivors once the
+  * stage holds max(stage limit, survivors) points, so the total work on a
+  * growing antichain stays O(n log n). The first stage holds
+  * [[SkylineBuffer.FirstStage]] points and is not admitted: with no
+  * survivors there is nothing to admit against. Each compaction then reads
+  * what share of the points that arrived since the last one were dropped:
+  *   - at least half: the input is mostly dominated, so admission is on and
+  *     the next stage is FirstStage again, which keeps the index fresh;
+  *   - less: the input is close to an antichain, where a probe rarely drops
+  *     a point, so admission is off and the next stage is
+  *     [[SkylineBuffer.StageLimit]].
+  *
+  * The survivors and the stage are plain buffers that kryo serializes
+  * ([[graft.operators.SkylineAgg]]'s buffer encoder); the index is transient,
+  * built from the survivors on the first probe after a compaction or a
+  * round trip.
   */
 final class SkylineBuffer extends Serializable {
   private var points = new ArrayBuffer[Point]() // the survivors, an antichain
   private var staged = new ArrayBuffer[Point]()
+  private var admitting = false
+  private var stageLimit = SkylineBuffer.FirstStage
+  private var arrivals = 0 // points added since the last compaction
+  @transient private var ix: KdIndex = _ // over the survivors; null: not built
 
   def size: Int = { compact(); points.length }
   def result: Seq[Point] = { compact(); points.toSeq }
 
-  def add(c: Point): Unit = {
-    staged += c
-    if (staged.length >= math.max(SkylineBuffer.StageLimit, points.length)) compact()
-  }
+  /** Stages `c` unless admission drops it. */
+  def add(c: Point): Unit = if (admits(c.values)) stage(c)
+
+  /** Stages `Point(id, a copy of vs, origin)` unless admission drops `vs`;
+    * true iff it was staged. `vs` is only read, so a row reader can pass
+    * one scratch vector for every row. */
+  def offer(id: Long, vs: Array[Double], origin: Int = -1): Boolean =
+    admits(vs) && { stage(Point(id, vs.clone(), origin)); true }
 
   /** Adds every point of `other` (survivors and staged). */
   def merge(other: SkylineBuffer): SkylineBuffer = {
@@ -250,32 +279,60 @@ final class SkylineBuffer extends Serializable {
     this
   }
 
+  private def admits(vs: Array[Double]): Boolean = {
+    arrivals += 1
+    !admitting || {
+      if (ix == null) ix = Dominance.buildKd(SkylineBuffer.collapse(points)._1)
+      !Dominance.dominatedByKd(ix, vs)
+    }
+  }
+
+  private def stage(c: Point): Unit = {
+    staged += c
+    if (staged.length >= math.max(stageLimit, points.length)) compact()
+  }
+
   /** Folds the stage into the survivors:
     *  1. equal dimension vectors collapse to one index entry, since a
     *     verdict depends only on the vector (a duplicate flood is one);
-    *  2. staged points the index over the survivors' vectors dominates are
-    *     dropped — most of a stage once the skyline has formed;
-    *  3. each survivor vector and staged vector left is kept, with every
-    *     point that carries it, unless the index over those staged vectors
-    *     dominates it (survivors are an antichain, and step 2 checked the
-    *     staged points against them). */
+    *  2. the stage's vectors are indexed — only those new in it when it was
+    *     admitted (the survivors dominate none of them, and a copy of a
+    *     survivor dominates nothing that survivor does not), every vector
+    *     otherwise;
+    *  3. each vector is kept, with every point that carries it, unless that
+    *     index dominates it;
+    *  4. the share of arrivals dropped sets admission and the next stage. */
   private def compact(): Unit = {
     if (staged.isEmpty) return
-    val (oldVecs, oldRep) = SkylineBuffer.collapse(points)
-    val oldIx = Dominance.buildKd(oldVecs)
-    val fresh = staged.filter(p => !Dominance.dominatedByKd(oldIx, p))
-    val (freshVecs, freshRep) = SkylineBuffer.collapse(fresh)
-    val ix = Dominance.buildKd(freshVecs)
-    def kept(pts: ArrayBuffer[Point], vecs: Array[Point], rep: Array[Int]) = {
-      val live = vecs.map(v => !Dominance.dominatedByKd(ix, v))
-      pts.indices.iterator.filter(i => live(rep(i))).map(pts)
+    val all = points ++ staged
+    val (vecs, rep) = SkylineBuffer.collapse(all) // survivors' vectors first
+    val firstNew =
+      if (admitting) rep.iterator.take(points.length).foldLeft(-1)(math.max) + 1 else 0
+    val index = Dominance.buildKd(vecs.drop(firstNew))
+    val live = vecs.map(v => !Dominance.dominatedByKd(index, v.values))
+    val next = new ArrayBuffer[Point]()
+    var keptStaged = 0
+    var i = 0
+    while (i < all.length) {
+      if (live(rep(i))) { next += all(i); if (i >= points.length) keptStaged += 1 }
+      i += 1
     }
-    points = ArrayBuffer.from(kept(points, oldVecs, oldRep) ++ kept(fresh, freshVecs, freshRep))
+    admitting = 2 * (arrivals - keptStaged) >= arrivals
+    stageLimit = if (admitting) SkylineBuffer.FirstStage else SkylineBuffer.StageLimit
+    arrivals = 0
+    points = next
     staged = new ArrayBuffer[Point]()
+    ix = null
   }
 }
 
 object SkylineBuffer {
+  /** The first stage, and the next one after a mostly dominated stage.
+    * 128 timed no slower than 64 or 256 on the two shapes this kernel
+    * serves: the uniform 4-D local phase, and the union of local antichains
+    * that the per-id merge folds. */
+  private[graft] final val FirstStage = 128
+  /** The next stage after a mostly surviving one: the reference's buffer. */
   private[graft] final val StageLimit = 5000
 
   /** The first point of each distinct dimension vector of `pts`, and the
@@ -301,10 +358,10 @@ object SkylineBuffer {
 
   def empty: SkylineBuffer = new SkylineBuffer
 
-  /** Skyline of an iterator, staged in chunks like [[SkylineBuffer.add]]:
-    * once a skyline has formed, step 2 of each compaction drops most of a
-    * chunk against the small index over the survivors, where one index over
-    * the whole input would be built over every row. */
+  /** Skyline of an iterator through [[SkylineBuffer.add]]: once a skyline
+    * has formed, admission drops most points against the small index over
+    * the survivors, where one index over the whole input would be built over
+    * every row. */
   def of(it: Iterator[Point]): SkylineBuffer = {
     val buf = new SkylineBuffer
     it.foreach(buf.add)

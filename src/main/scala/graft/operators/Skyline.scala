@@ -4,8 +4,10 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 import graft.core.{Point, SkylineBuffer}
 import graft.core.Dominance.{buildKd, dominatedByKd}
@@ -101,27 +103,59 @@ object SkylineOps {
       .map { case (pid, pts) => (pid, pts.toSeq) })(ExpressionEncoder[(Int, Seq[Point])]())
   }
 
-  /** The local phase as one RDD lineage: each input partition reduces its
-    * points into one SkylineBuffer per strategy id (map-side combine), the
-    * partials hash-shuffle to `n` tasks (an RDD shuffle, which adaptive
-    * execution cannot coalesce into one task), and each task merges its
-    * ids' partials per id, as `SkylineBuffer.of` would (mr-grid emits up
-    * to 2^dims ids, more than `n`). An input narrower than `defaultParallelism`
-    * (a CSV under `openCostInBytes` is ONE split) is first hash-spread by id,
-    * an adaptive exchange run as its own job when the RDD is built.
-    * Observing the width plans the input: free for a scan, but an adaptive
-    * plan runs its shuffles there and again for the partials. */
+  /** The local phase as one RDD lineage over the input's rows: each input
+    * partition reduces its rows into one SkylineBuffer per strategy id
+    * (map-side combine), the partials hash-shuffle to `n` tasks (an RDD
+    * shuffle, which adaptive execution cannot coalesce into one task), and
+    * each task merges its ids' partials per id, as `SkylineBuffer.of` would
+    * (mr-grid emits up to 2^dims ids, more than `n`).
+    *
+    * The rows are the `queryExecution.toRdd` that the width check plans, so
+    * a wide input is planned once. An input narrower than
+    * `defaultParallelism` (a CSV under `openCostInBytes` is ONE split) is
+    * first hash-spread by id, an adaptive exchange run as its own job when
+    * its RDD is built. Each row's vector is copied into one scratch array per
+    * task, its strategy id is computed from that array, and a [[Point]] is
+    * built only for a row its id's buffer admits (see [[SkylineBuffer]]). */
   private def localAntichains(ds: Dataset[Point], strategy: String, domain: Double,
                               n: Int): RDD[(Int, Array[Point])] = {
     val pidOf = pidFunction(strategy, domain, n)
     val cores = ds.sparkSession.sparkContext.defaultParallelism
-    val narrow = ds.queryExecution.toRdd.getNumPartitions < cores
-    val in = if (narrow) ds.repartition(cores, col("id")) else ds
-    in.rdd.mapPartitions(it => SkylineBuffer.byKey(it)(p => pidOf(p.values)).map { case (pid, b) =>
-      (pid, b.result.iterator.map(_.copy(originPartition = pid)).toArray) })
-      .partitionBy(new HashPartitioner(n))
+    val rows = ds.queryExecution.toRdd
+    val in = if (rows.getNumPartitions < cores) ds.repartition(cores, col("id")) else ds
+    val read = idAndValues(in)
+    (if (in eq ds) rows else in.queryExecution.toRdd).mapPartitions { it =>
+      val proj = UnsafeProjection.create(read)
+      val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
+      var vs = Array.emptyDoubleArray
+      it.foreach { r =>
+        val row = proj(r)
+        val arr = row.getArray(1)
+        if (arr.numElements != vs.length) vs = new Array[Double](arr.numElements)
+        var i = 0
+        while (i < vs.length) { vs(i) = arr.getDouble(i); i += 1 }
+        val pid = pidOf(vs)
+        bufs.getOrElseUpdate(pid, SkylineBuffer.empty).offer(row.getLong(0), vs, pid)
+      }
+      bufs.iterator.map { case (pid, b) => (pid, b.result.toArray) }
+    }.partitionBy(new HashPartitioner(n))
       .mapPartitions(it => SkylineBuffer.byKey(it.flatMap(_._2.iterator))(_.originPartition)
         .map { case (pid, b) => (pid, b.result.toArray) })
+  }
+
+  /** The point's `id` as a long and `values` as array<double>, bound by
+    * name to the columns of `ds`'s rows. The casts are no-ops on
+    * [[pointsFrom]]'s types, and widen an input whose `.as[Point]` up-casts
+    * narrower ones; the columns may come in any order, beside others. */
+  private def idAndValues(ds: Dataset[Point]): Seq[Expression] = {
+    val out = ds.queryExecution.analyzed.output
+    val conf = ds.sparkSession.sessionState.conf
+    def read(name: String, as: DataType): Expression = {
+      val i = out.indexWhere(a => conf.resolver(a.name, name))
+      Cast(BoundReference(i, out(i).dataType, out(i).nullable), as,
+        Some(conf.sessionLocalTimeZone))
+    }
+    Seq(read("id", LongType), read("values", ArrayType(DoubleType)))
   }
 
   /** Driver-side partition-id function with exactly the reference arithmetic.
@@ -266,7 +300,7 @@ object SkylineOps {
       spark.sparkContext.parallelize(union.toIndexedSeq, slices)
         .mapPartitions { it =>
           val pk = bPacked.value
-          it.filter(p => !dominatedByKd(pk, p))
+          it.filter(p => !dominatedByKd(pk, p.values))
         }
     } finally localRdd.unpersist(false)
   }
@@ -359,7 +393,7 @@ object SkylineOps {
       java.util.Arrays.fill(bits, -1L)
       var x = 0
       while (x < arr.length) {
-        if (dominatedByKd(pk, arr(x))) bits(x >> 6) &= ~(1L << (x & 63))
+        if (dominatedByKd(pk, arr(x).values)) bits(x >> 6) &= ~(1L << (x & 63))
         x += 1
       }
       (i, (bits, 1L, pk.size.toLong))

@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
@@ -44,47 +44,60 @@ case class Skyline(dims: Seq[Expression], via: Option[ReferenceStrategy],
   override protected def withNewChildInternal(c: LogicalPlan): Skyline = copy(child = c)
 }
 
-/** Both physical phases: the child's rows come out unchanged, and a row
-  * is lifted to `Point(id, dims)`; None when a dim is null or NaN (a
-  * malformed row, dropped). */
+/** Both physical phases: the child's rows come out unchanged, and a row's
+  * dims are read by a [[DimsReader]]. */
 private[plans] trait SkylineRowsExec extends UnaryExecNode {
   def dims: Seq[Expression]
   override def output: Seq[Attribute] = child.output
 
-  protected def rowLift: (InternalRow, Long) => Option[Point] = {
-    val bound = dims.map(BindReferences.bindReference(_, child.output)).toArray
-    (r, id) => {
-      val vs = new Array[Double](bound.length)
-      var ok = true
-      var i = 0
-      while (ok && i < bound.length) {
-        val v = bound(i).eval(r)
-        ok = v != null && !v.asInstanceOf[Double].isNaN
-        if (ok) vs(i) = v.asInstanceOf[Double]
-        i += 1
-      }
-      if (ok) Some(Point(id, vs)) else None
+  protected def reader: DimsReader = new DimsReader(dims, child.output)
+}
+
+/** Reads the `dims` of a child row into a double vector, through one
+  * projection generated per task (on first use after deserialization). */
+private[plans] final class DimsReader(dims: Seq[Expression], input: Seq[Attribute])
+    extends Serializable {
+  @transient private lazy val proj = UnsafeProjection.create(dims, input)
+
+  def arity: Int = dims.length
+
+  /** Fills `vs`; false when a dim is null or NaN (a malformed row, dropped). */
+  def apply(r: InternalRow, vs: Array[Double]): Boolean = {
+    val row = proj(r)
+    var ok = true
+    var i = 0
+    while (ok && i < vs.length) {
+      ok = !row.isNullAt(i) && !row.getDouble(i).isNaN
+      if (ok) vs(i) = row.getDouble(i)
+      i += 1
     }
+    ok
   }
 }
 
-/** Map-side phase: local skyline per child partition, fully pipelined. Every
-  * valid row is copied and lifted to `Point(rowIndex, dims)`, [[SkylineBuffer]]
-  * (the kd-index kernel) reduces them, one buffer per strategy id when `via`
-  * is set, and the rows at the surviving indices come out. */
+/** Map-side phase: local skyline per child partition, fully pipelined. Each
+  * valid row's dims go into one scratch vector per task, and
+  * [[SkylineBuffer]] (the kd-index kernel; one buffer per strategy id when
+  * `via` is set) admits or drops it there. Only an admitted row is copied
+  * and becomes `Point(rowIndex, dims)`; the rows at the surviving indices
+  * come out. */
 case class SkylinePartialExec(dims: Seq[Expression], via: Option[ReferenceStrategy],
                               child: SparkPlan) extends SkylineRowsExec {
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val lift = rowLift
+    val read = reader
     val pidOf = via.map(_.pidOf)
     child.execute().mapPartitions { it =>
       val rows = ArrayBuffer[InternalRow]()
-      val pts = it.flatMap(r => lift(r, rows.length).map { p => rows += r.copy(); p })
-      SkylineBuffer.byKey(pts)(p => pidOf.fold(0)(_(p.values)))
-        .flatMap(_._2.result).map(p => rows(p.id.toInt))
+      val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
+      val vs = new Array[Double](read.arity)
+      it.foreach { r =>
+        if (read(r, vs) && bufs.getOrElseUpdate(pidOf.fold(0)(_(vs)), SkylineBuffer.empty)
+            .offer(rows.length, vs)) rows += r.copy()
+      }
+      bufs.valuesIterator.flatMap(_.result).map(p => rows(p.id.toInt))
     }
   }
 }
@@ -103,10 +116,13 @@ case class SkylineMergeExec(dims: Seq[Expression], child: SparkPlan)
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val lift = rowLift
+    val read = reader
     val rows = child.execute().mapPartitions(_.map(_.copy())).cache()
     val local = rows.mapPartitionsWithIndex { (i, it) =>
-      val pts = it.flatMap(lift(_, i)).toArray
+      val pts = it.flatMap { r =>
+        val vs = new Array[Double](read.arity)
+        if (read(r, vs)) Some(Point(i, vs)) else None
+      }.toArray
       if (pts.isEmpty) Iterator.empty else Iterator.single(pts)
     }
     val kept = SkylineOps.mergeLocal(session, local)
@@ -114,7 +130,8 @@ case class SkylineMergeExec(dims: Seq[Expression], child: SparkPlan)
       .partitionBy(new HashPartitioner(rows.getNumPartitions))
     rows.zipPartitions(kept) { (it, survivors) =>
       val live = survivors.map(_._2.toSeq).toSet
-      it.filter(r => lift(r, 0).exists(p => live(p.values.toSeq)))
+      val vs = new Array[Double](read.arity)
+      it.filter(r => read(r, vs) && live(vs.toSeq))
     }
   }
 }

@@ -146,4 +146,61 @@ class SkylineKernelSpec extends AnyFunSuite {
     assert(ids(SkylineBuffer.of(a.iterator).merge(SkylineBuffer.of(b.iterator))) == expect,
       "merge")
   }
+
+  test("admission: every order, ±Inf and floods equal brute force; no member is dropped") {
+    // a first stage of FirstStage points, then stages that flip admission on
+    // (mostly dominated arrivals) and off (antichain runs); offer must stage
+    // every skyline member, from one scratch vector reused for every row
+    val rng = new Random(77)
+    val inf = Double.PositiveInfinity
+    val n = 12 * SkylineBuffer.FirstStage
+    val pts = Array.tabulate(n) { i =>
+      val vs = (i / SkylineBuffer.FirstStage) % 4 match {
+        case 0 => Array.fill(3)(rng.nextInt(50).toDouble) // mostly dominated
+        case 1 => // an antichain run on x + y + z = 60
+          val x = rng.nextInt(61); val y = rng.nextInt(61 - x)
+          Array(x, y, 60 - x - y).map(_.toDouble)
+        case 2 => // floods of one skyline vector and one dominated vector
+          if (rng.nextBoolean()) Array(0.0, 30.0, 30.0) else Array(40.0, 40.0, 40.0)
+        case _ => // ±Inf, dominating only within their own rows
+          if (rng.nextBoolean()) Array(inf, -1.0, rng.nextInt(3).toDouble)
+          else Array(-inf, 61.0 + rng.nextInt(3), 61.0 + rng.nextInt(3))
+      }
+      Point(i.toLong, vs)
+    }
+    val expect = bruteForce(pts.toSeq)
+    val members = expect.map(_._1)
+    val sum = (p: Point) => p.values.sum
+    val orders = Seq(
+      "input" -> pts.toSeq,
+      "shuffled" -> rng.shuffle(pts.toSeq),
+      "skyline first" -> pts.toSeq.sortBy(p => (!members(p.id), p.id)),
+      "skyline last" -> pts.toSeq.sortBy(p => (members(p.id), p.id)),
+      "sum ascending" -> pts.toSeq.sortBy(p => (sum(p), p.id)),
+      "sum descending" -> pts.toSeq.sortBy(p => (-sum(p), p.id)))
+    for ((name, order) <- orders) {
+      assert(asSet(SkylineBuffer.of(order.iterator).result) == expect, s"add, $name")
+      val b = SkylineBuffer.empty
+      val vs = new Array[Double](3)
+      val staged = order.filter { p =>
+        System.arraycopy(p.values, 0, vs, 0, 3)
+        b.offer(p.id, vs)
+      }.map(_.id).toSet
+      assert(members.subsetOf(staged), s"offer dropped a member, $name")
+      assert(asSet(b.result) == expect, s"offer, $name")
+    }
+  }
+
+  test("a buffer round-tripped through kryo mid-stream keeps admitting soundly") {
+    // the index is transient: the copy rebuilds it from its survivors
+    val ser = new org.apache.spark.serializer.KryoSerializer(new org.apache.spark.SparkConf())
+      .newInstance()
+    val rng = new Random(91)
+    val pts = randPoints(rng, 10 * SkylineBuffer.FirstStage, 3, 40)
+    val (head, tail) = pts.splitAt(pts.length / 2)
+    val b = SkylineBuffer.of(head.iterator)
+    val copy = ser.deserialize[SkylineBuffer](ser.serialize(b))
+    tail.foreach(copy.add)
+    assert(asSet(copy.result) == bruteForce(pts))
+  }
 }

@@ -18,7 +18,7 @@ class KdIndexProps extends AnyFunSuite {
     val ix = Dominance.buildKd(points)
     probes.foreach { p =>
       val want = PackedPoints.dominatedByPacked(pk, p)
-      val got = Dominance.dominatedByKd(ix, p)
+      val got = Dominance.dominatedByKd(ix, p.values)
       assert(got == want,
         s"$label: verdict mismatch for ${p.id}: indexed=$got packed=$want " +
           s"values=${p.values.mkString(",")}")
@@ -92,8 +92,26 @@ class KdIndexProps extends AnyFunSuite {
     val inf = Double.PositiveInfinity
     val pts = Array(Point(0L, Array(inf, 0.0, 1.0)), Point(1L, Array(-inf, 1.0, 2.0)))
     val ix = Dominance.buildKd(Array(pts(0)))
-    assert(!Dominance.dominatedByKd(ix, pts(0)))
+    assert(!Dominance.dominatedByKd(ix, pts(0).values))
     val both = Dominance.buildKd(pts)
-    assert(pts.forall(p => !Dominance.dominatedByKd(both, p)))
+    assert(pts.forall(p => !Dominance.dominatedByKd(both, p.values)))
+  }
+
+  test("a reused scratch vector probes like the point it holds") {
+    // the row readers copy each row into one array and probe that array
+    for (trial <- 0 until 10; d <- Seq(2, 3, 4)) {
+      val rnd = new scala.util.Random(trial * 17 + d)
+      val pts = Array.tabulate(300)(i => Point(i.toLong, Array.fill(d)(rnd.nextInt(40).toDouble)))
+      val pk = PackedPoints.pack(pts)
+      val ix = Dominance.buildKd(pts)
+      val vs = new Array[Double](d)
+      val probes = pts ++ Array.tabulate(100)(i =>
+        Point(1000L + i, Array.fill(d)(rnd.nextInt(50).toDouble - 5)))
+      probes.foreach { p =>
+        System.arraycopy(p.values, 0, vs, 0, d)
+        assert(Dominance.dominatedByKd(ix, vs) == PackedPoints.dominatedByPacked(pk, p),
+          s"d=$d trial=$trial values=${p.values.mkString(",")}")
+      }
+    }
   }
 }

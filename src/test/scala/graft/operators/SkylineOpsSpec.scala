@@ -230,6 +230,63 @@ class SkylineOpsSpec extends AnyFunSuite {
     assert(stages(partials + 1).numTasks == n, shape)
   }
 
+  test("an adaptive wide input's shuffle runs once") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val pts = mkPts(3000, 3, seed = 19, card = 100)
+    assert(16 >= spark.sparkContext.defaultParallelism)
+    // an adaptive plan runs its exchange when its RDD is built; the width
+    // check and the row read share that RDD
+    val ds = pts.toDS().repartition(16)
+    val (row, rec) = new JobRecorder(spark).during(
+      SkylineOps.skylineWithMetrics(ds, "mr-angle", 100.0, 8, "q", pts.size).collect().head)
+    assert(row.getAs[Long]("skyline_size") == bruteForce(pts).size)
+    val stages = rec.stages.asScala.toSeq
+    // the input's shuffle-map stage is the one that writes every input row
+    val inputMaps = stages.filter(_.taskMetrics.shuffleWriteMetrics.recordsWritten == pts.size)
+    assert(inputMaps.size == 1, stages.map(s => s.name -> s.numTasks))
+  }
+
+  test("the row read binds id and values by name and up-casts narrower types") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import spark.implicits._
+    val (domain, n) = (30.0, 4)
+    val pts = mkPts(900, 3, seed = 21, card = 30)   // small domain => duplicates
+    val global = bruteForce(pts)
+    val sc = spark.sparkContext
+    def inputs(slices: Int): Seq[(String, org.apache.spark.sql.Dataset[Point])] = Seq(
+      "columns reordered, one extra" -> spark.createDataFrame(
+        sc.parallelize(pts.map(p => Row(p.values.toSeq, "x", p.originPartition, p.id)), slices),
+        StructType(Seq(StructField("values", ArrayType(DoubleType)),
+          StructField("extra", StringType), StructField("originPartition", IntegerType),
+          StructField("id", LongType)))).as[Point],
+      "int id, float values" -> spark.createDataFrame(
+        sc.parallelize(pts.map(p => Row(p.id.toInt, p.values.map(_.toFloat).toSeq, -1)), slices),
+        StructType(Seq(StructField("id", IntegerType), StructField("values", ArrayType(FloatType)),
+          StructField("originPartition", IntegerType)))).as[Point],
+      "rdd-backed" -> spark.createDataset(sc.parallelize(pts, slices)))
+    for (strategy <- Seq("mr-dim", "mr-grid", "mr-angle")) {
+      val pidOf = SkylineOps.pidFunction(strategy, domain, n)
+      val byPid = pts.groupBy(p => pidOf(p.values)).map { case (pid, part) =>
+        pid -> bruteForce(part) }
+      val expect = byPid.values.map(local => local.count(global.contains).toDouble / local.size)
+        .sum / SkylineOps.protocolPartitions(strategy, n, 3)
+      for (slices <- Seq(1, 16); (name, ds) <- inputs(slices)) {
+        val at = s"$strategy, $name, $slices partition(s)"
+        val local = SkylineOps.localSkylines(ds, strategy, domain, n).collect()
+        assert(local.map(_._1).sorted.toSeq == byPid.keys.toSeq.sorted, at)
+        local.foreach { case (pid, sky) =>
+          assert(asSet(sky) == byPid(pid) && sky.forall(_.originPartition == pid), s"$at pid=$pid")
+        }
+        val row = SkylineOps.skylineWithMetrics(ds, strategy, domain, n, "q", pts.size)
+          .collect().head
+        assert(row.getAs[Long]("skyline_size") == global.size, at)
+        assert(math.abs(row.getAs[Double]("optimality") - expect) <= 0.5e-4 + 1e-12, at)
+      }
+    }
+  }
+
   test("skyline merges a wide input where it sits and spreads a one-partition input") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
