@@ -299,9 +299,11 @@ object Bench {
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     SkylineOps.skyline(Generators.generate(spark, "uniform", 10000, 2)).count()
     // a high-d mini-pass warms the broadcast/cross-filter merge machinery
-    // (kd build + query codegen) the 4-D/5-D scale entries hit first
-    SkylineOps.skyline(
-      Generators.generate(spark, "anti-correlated", 20000, 5)).count()
+    // (kd build + query codegen) the 4-D/5-D scale entries hit first; its
+    // union is small enough for the driver-side filter, so a driver bound
+    // of 0 sends it through the broadcast filter those entries take
+    SkylineOps.skyline(Generators.generate(spark, "anti-correlated", 20000, 5),
+      driverBound = _ => 0).count()
     // CATALOG-WIDE WARM-UP (judge r13 item 4): the r13 sweep re-labeled
     // `jit_warmup` on 13 first laps (~32 s of first-vs-rep excess) that the
     // cause map then had to re-explain every round. Codegen is

@@ -1,13 +1,18 @@
 package graft.operators
 
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
+import org.apache.spark.{HashPartitioner, OneToOneDependency}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType,
+  StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 import graft.core.{Point, SkylineBuffer}
 import graft.core.Dominance.{buildKd, dominatedByKd}
@@ -58,40 +63,47 @@ object SkylineOps {
 
   /** Global skyline of any input, the one way into [[mergeLocal]]: each
     * input partition is reduced to its skyline and the local skylines are
-    * merged on every core (`originPartition` passes through). An input with
-    * fewer partitions than `defaultParallelism` is first spread round-robin
-    * over that many slivers, so a few fat antichains do not pre-reduce in
-    * one serial task each; a wider input is reduced where it sits. */
+    * merged (`originPartition` passes through). An input with fewer
+    * partitions than `defaultParallelism` is first spread round-robin over
+    * that many slivers, so a few fat antichains do not pre-reduce in one
+    * serial task each; a wider input is reduced where it sits. */
   def skyline(ds: Dataset[Point]): Dataset[Point] = skyline(ds, MaxBroadcastPoints)
 
-  /** [[skyline]] with the merge's broadcast bound and cross-filter chunking
-    * set by the caller (bench entries and specs that force the chunked
-    * cross-filter); see [[mergeLocal]]. */
-  private[graft] def skyline(ds: Dataset[Point], maxBroadcastPoints: Int,
+  /** [[skyline]] with the merge's bounds and cross-filter chunking set by
+    * the caller (bench entries and specs that force a merge path); see
+    * [[mergeLocal]]. */
+  private[graft] def skyline(ds: Dataset[Point], maxBroadcastPoints: Int = MaxBroadcastPoints,
+                             driverBound: Int => Int = driverBoundOf,
                              chunks: Option[Int] = None,
                              chunkTargetBytes: Long = ChunkTargetBytes): Dataset[Point] = {
     val spark = ds.sparkSession
     val cores = spark.sparkContext.defaultParallelism
     val rdd = ds.rdd
     val in = if (rdd.getNumPartitions < cores) rdd.repartition(cores) else rdd
-    spark.createDataset(mergeLocal(spark, in.mapPartitions { it =>
+    asDataset(spark, mergeLocal(spark, in.mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
-      else Iterator.single(SkylineBuffer.of(it).result.toArray)
-    }, maxBroadcastPoints, chunks = chunks, chunkTargetBytes = chunkTargetBytes))(
-      ExpressionEncoder[Point]())
+      else Iterator.single((0, SkylineBuffer.of(it).result.toArray))
+    }, maxBroadcastPoints, driverBound, chunks, chunkTargetBytes))
   }
+
+  /** A merge's survivors as a Dataset: a driver-side answer as a local
+    * relation (reading it runs no job), a distributed one as its RDD. */
+  private def asDataset(spark: SparkSession, merged: Merged): Dataset[Point] =
+    merged.fold(pts => spark.createDataset(pts.toSeq)(pointEncoder),
+      rdd => spark.createDataset(rdd)(pointEncoder))
+
+  private lazy val pointEncoder: Encoder[Point] = ExpressionEncoder[Point]()
 
   /** Two-phase skyline through an explicit spatial strategy, mirroring the
     * reference topology (keyBy(strategy) → local BNL → keyBy(query) → global
     * merge, `FlinkSkyline.java:138-174`) — with map-side combine, which the
-    * reference does not have, and [[mergeLocal]] on every core instead of
-    * one single-threaded reducer (the reference's dominant cost, PDF §5.5).
+    * reference does not have, and [[mergeLocal]]'s kd index instead of one
+    * single-threaded BNL reducer (the reference's dominant cost, PDF §5.5).
     * Identical results for every strategy and partition count. */
   def skylineViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int): Dataset[Point] = {
     val spark = ds.sparkSession
-    spark.createDataset(mergeLocal(spark, localAntichains(ds, strategy, domain,
-      numPartitions).values))(ExpressionEncoder[Point]())
+    asDataset(spark, mergeLocal(spark, localAntichains(ds, strategy, domain, numPartitions)))
   }
 
   /** Per-strategy local skylines: (partitionId, points tagged with
@@ -108,23 +120,25 @@ object SkylineOps {
     * (map-side combine), the partials hash-shuffle to `n` tasks (an RDD
     * shuffle, which adaptive execution cannot coalesce into one task), and
     * each task merges its ids' partials per id, as `SkylineBuffer.of` would
-    * (mr-grid emits up to 2^dims ids, more than `n`).
+    * (mr-grid emits up to 2^dims ids, more than `n`). Building it runs no
+    * job (unless the input's own adaptive plan runs its exchanges).
     *
     * The rows are the `queryExecution.toRdd` that the width check plans, so
-    * a wide input is planned once. An input narrower than
-    * `defaultParallelism` (a CSV under `openCostInBytes` is ONE split) is
-    * first hash-spread by id, an adaptive exchange run as its own job when
-    * its RDD is built. Each row's vector is copied into one scratch array per
-    * task, its strategy id is computed from that array, and a [[Point]] is
-    * built only for a row its id's buffer admits (see [[SkylineBuffer]]). */
+    * every input is planned once. An input narrower than `defaultParallelism`
+    * (a CSV under `openCostInBytes` is ONE split) is first hash-spread by id
+    * over that many partitions ([[spreadById]]), a shuffle inside this
+    * lineage. Each row's vector is copied into one scratch array per task,
+    * its strategy id is computed from that array, and a [[Point]] is built
+    * only for a row its id's buffer admits (see [[SkylineBuffer]]). */
   private def localAntichains(ds: Dataset[Point], strategy: String, domain: Double,
                               n: Int): RDD[(Int, Array[Point])] = {
     val pidOf = pidFunction(strategy, domain, n)
     val cores = ds.sparkSession.sparkContext.defaultParallelism
+    val read = idAndValues(ds)
     val rows = ds.queryExecution.toRdd
-    val in = if (rows.getNumPartitions < cores) ds.repartition(cores, col("id")) else ds
-    val read = idAndValues(in)
-    (if (in eq ds) rows else in.queryExecution.toRdd).mapPartitions { it =>
+    val in = if (rows.getNumPartitions >= cores) rows
+      else spreadById(rows, read.head, ds.queryExecution.executedPlan.output.length, cores)
+    in.mapPartitions { it =>
       val proj = UnsafeProjection.create(read)
       val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
       var vs = Array.emptyDoubleArray
@@ -142,6 +156,22 @@ object SkylineOps {
       .mapPartitions(it => SkylineBuffer.byKey(it.flatMap(_._2.iterator))(_.originPartition)
         .map { case (pid, b) => (pid, b.result.toArray) })
   }
+
+  /** `rows` (of `width` fields) hash-spread by `id` over `n` partitions
+    * (Murmur3, seed 42, as Spark's hash partitioning), by the mechanism
+    * `ShuffleExchangeExec` uses: an RDD shuffle of the rows in the layout
+    * the plan produces, through the `UnsafeRow` serializer. No row is
+    * copied: the bypass-merge and serialized shuffle writers serialize each
+    * record as it arrives (`ShuffleExchangeExec.needToCopyObjectsBeforeShuffle`),
+    * so a reused row is written before its buffer is refilled. The reader
+    * reuses one row too, which the local phase reads before it pulls the
+    * next. */
+  private def spreadById(rows: RDD[InternalRow], id: Expression, width: Int,
+                         n: Int): RDD[InternalRow] =
+    new ShuffledRDD[Int, InternalRow, InternalRow](rows.mapPartitions { it =>
+      val proj = UnsafeProjection.create(Seq(id))
+      it.map(r => (java.lang.Math.floorMod(Murmur3_x86_32.hashLong(proj(r).getLong(0), 42), n), r))
+    }, new HashPartitioner(n)).setSerializer(ColumnBridge.rowSerializer(width)).map(_._2)
 
   /** The point's `id` as a long and `values` as array<double>, bound by
     * name to the columns of `ds`'s rows. The casts are no-ops on
@@ -202,38 +232,55 @@ object SkylineOps {
   /** Full reference-parity query: skyline + the metrics object the reference
     * emits per query (`FlinkSkyline.java:610-648` JSON schema; [[optimality]]
     * `:590-608`). Timing fields are wall-clock (non-deterministic), matching
-    * field names only. Three jobs (plus a narrow input's spread): the cached
-    * [[localAntichains]]' sizes and arity, [[mergeLocal]]'s union collect
-    * (the union size is summed from those sizes), and one pass over its
-    * survivors counting them per origin partition (the sum is the size). */
+    * field names only. One job when the union of local skylines fits the
+    * driver bound (and each task's share of the broadcast bound):
+    * [[collectUnion]] over the cached [[localAntichains]]
+    * returns their sizes, arity and points, and [[mergeUnion]] filters a
+    * small union on the driver, counting its survivors per origin
+    * partition (the sum is the size). A larger union adds the distributed
+    * merge's jobs and one pass counting its survivors. */
   def skylineWithMetrics(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int, queryId: String,
-                         recordCount: Long): DataFrame = {
+                         recordCount: Long): DataFrame =
+    skylineWithMetrics(ds, strategy, domain, numPartitions, queryId, recordCount, driverBoundOf)
+
+  /** [[skylineWithMetrics]] with the merge's driver bound set by the caller
+    * (specs that force the distributed probe); see [[mergeUnion]]. */
+  private[graft] def skylineWithMetrics(ds: Dataset[Point], strategy: String, domain: Double,
+                                        numPartitions: Int, queryId: String, recordCount: Long,
+                                        driverBound: Int => Int): DataFrame = {
     val spark = ds.sparkSession
-    import spark.implicits._
     val t0 = System.currentTimeMillis()
     val local = localAntichains(ds, strategy, domain, numPartitions).cache()
     try {
-      val localShapes = local.map { case (pid, pts) =>
-        (pid, pts.length, pts.headOption.fold(0)(_.values.length)) }.collect()
-      val localSizes: Map[Int, Int] = localShapes.map(s => s._1 -> s._2).toMap
+      val union = collectUnion(local, MaxBroadcastPoints)
+      val shapes = union.shapes.flatten
       val tLocal = System.currentTimeMillis()
-      // one stage: each task counts its survivors, the driver adds the maps
-      val survivors: Map[Int, Long] = mergeLocal(spark, local.values,
-        unionSize = Some(localShapes.map(_._2.toLong).sum)).aggregate(Map.empty[Int, Long])(
-        (m, p) => m.updated(p.originPartition, m.getOrElse(p.originPartition, 0L) + 1L),
-        (a, b) => b.foldLeft(a) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v) })
+      val merged = mergeUnion(spark, local, union, driverBound = driverBound)
+      val survivors: Map[Int, Long] = merged match {
+        case Left(pts) => pts.groupMapReduce(_.originPartition)(_ => 1L)(_ + _)
+        // one stage: each task counts its survivors, the driver adds the maps
+        case Right(rdd) => rdd.aggregate(Map.empty[Int, Long])(
+          (m, p) => m.updated(p.originPartition, m.getOrElse(p.originPartition, 0L) + 1L),
+          (a, b) => b.foldLeft(a) { case (m, (k, v)) => m.updated(k, m.getOrElse(k, 0L) + v) })
+      }
       val tEnd = System.currentTimeMillis()
-      val opt = optimality(localSizes, survivors, protocolPartitions(strategy,
-        numPartitions, localShapes.map(_._3).maxOption.getOrElse(0)))
-      Seq((queryId, recordCount, survivors.values.sum,
-           math.round(opt * 10000.0) / 10000.0,
-           0L, tLocal - t0, tEnd - tLocal, tEnd - t0))
-        .toDF("query_id", "record_count", "skyline_size", "optimality",
-              "ingestion_time_ms", "local_processing_time_ms",
-              "global_processing_time_ms", "total_processing_time_ms")
+      val opt = optimality(shapes.map(s => s._1 -> s._2).toMap, survivors,
+        protocolPartitions(strategy, numPartitions, union.arity))
+      spark.createDataFrame(java.util.List.of(Row(queryId, recordCount, survivors.values.sum,
+        math.round(opt * 10000.0) / 10000.0, 0L, tLocal - t0, tEnd - tLocal, tEnd - t0)),
+        MetricsSchema)
     } finally local.unpersist()
   }
+
+  /** [[skylineWithMetrics]]' row: the reference's JSON fields, typed as a
+    * tuple encoder would type them. */
+  private val MetricsSchema = StructType(
+    StructField("query_id", StringType) +:
+      Seq("record_count", "skyline_size").map(StructField(_, LongType, nullable = false)) ++:
+      StructField("optimality", DoubleType, nullable = false) +:
+      Seq("ingestion_time_ms", "local_processing_time_ms", "global_processing_time_ms",
+        "total_processing_time_ms").map(StructField(_, LongType, nullable = false)))
 
   /** Large-scale skyline via log-depth tree aggregation through a spatial
     * strategy: the local phase is keyed by the partitioner and tagged for
@@ -249,60 +296,131 @@ object SkylineOps {
   private final val MaxBroadcastPoints = 4000000
   private final val ChunkTargetBytes = 64L << 20
 
-  /** The one global merge (of [[skyline]], [[skylineWithMetrics]] and the
-    * Catalyst `SkylineMergeExec`) over blocks of candidates, normally local
-    * skylines: the points no candidate dominates. Runs the union collect
-    * when called, after a size-check job unless the caller passes the
-    * blocks' `unionSize`; the blocks stay cached for those jobs only.
-    *
-    * The union is broadcast as a kd dominance index
-    * ([[graft.core.KdIndex]]) and every candidate is checked against it on
-    * every core. Correct because any dominator of a candidate is either in
-    * the union or is dominated by a union member that (by transitivity) also
-    * dominates the candidate; duplicates of a skyline point all survive
-    * (equals never dominate). The broadcast is bounded by the union of local
-    * skylines, not by input size — the bound the reference's global phase
-    * ships over its second shuffle (`FlinkSkyline.java:171-174`). Past
-    * `maxBroadcastPoints` it falls back to the distributed pairwise
-    * cross-filter ([[crossFilterChunks]], sized by `chunks` and
-    * `chunkTargetBytes`), with no driver collect or broadcast. */
-  private[graft] def mergeLocal(spark: SparkSession, local: RDD[Array[Point]],
+  /** The largest union of `d`-dimensional local skylines that the driver
+    * filters itself, through the kd index it builds anyway; past it, the
+    * broadcast filter on every core pays back its broadcast and job. Set
+    * at the crossover of the two measured on anti-correlated unions (about
+    * 98% survivors) on a 4-core host, driver loop against the broadcast
+    * filter's wall time: d = 3 crossed between 60k and 70k points, d = 4
+    * between 30k and 35k, d = 5 between 20k and 25k, d = 6 between 17.5k
+    * and 20k (wider vectors use the 6-D bound). In 2-D the driver was
+    * faster at every size up to 1.2M; the bound stops at 500k (0.33 s on
+    * the driver at 600k), which keeps a driver-side answer small. Every
+    * bound is below [[MaxBroadcastPoints]]. */
+  private[graft] def driverBoundOf(d: Int): Int = d match {
+    case 0 | 1 | 2 => 500000
+    case 3 => 60000
+    case 4 => 30000
+    case 5 => 20000
+    case _ => 16000
+  }
+
+  /** A merge's survivors: on the driver (`Left`, a small union filtered
+    * where it was collected) or distributed (`Right`). */
+  private[graft] type Merged = Either[Array[Point], RDD[Point]]
+
+  /** The union of keyed blocks of candidates, normally local skylines, as
+    * one job returns it ([[collectUnion]]): per input partition, every
+    * block's key, size and arity, and the blocks themselves when they fit
+    * the partition's share of the collect's bound (`None` otherwise). */
+  private final case class Union(shapes: Array[Array[(Int, Int, Int)]],
+                                 blocks: Array[Option[Array[Array[Point]]]]) {
+    def size: Long = shapes.iterator.flatten.map(_._2.toLong).sum
+    def arity: Int = shapes.iterator.flatten.map(_._3).maxOption.getOrElse(0)
+  }
+
+  /** [[Union]] of `local` in one job. Each task returns its blocks when
+    * their points fit `bound` divided by the number of tasks, so the driver
+    * never holds more than `bound` points. */
+  private def collectUnion(local: RDD[(Int, Array[Point])], bound: Int): Union = {
+    val share = bound.toLong / math.max(1, local.getNumPartitions)
+    val parts = local.sparkContext.runJob(local, (it: Iterator[(Int, Array[Point])]) => {
+      val bs = it.toArray
+      (bs.map { case (k, pts) => (k, pts.length, pts.headOption.fold(0)(_.values.length)) },
+        Option.when(bs.iterator.map(_._2.length.toLong).sum <= share)(bs.map(_._2)))
+    })
+    Union(parts.map(_._1), parts.map(_._2))
+  }
+
+  /** The one global merge (of [[skyline]], [[skylineViaStrategy]],
+    * [[skylineWithMetrics]] and the Catalyst `SkylineMergeExec`) over keyed
+    * blocks of candidates, normally local skylines: the points no candidate
+    * dominates. Runs [[collectUnion]], one job, when called; `local` is
+    * cached for the merge's jobs unless it or the parent it maps one-to-one
+    * is cached already. See [[mergeUnion]] for the paths. */
+  private[graft] def mergeLocal(spark: SparkSession, local: RDD[(Int, Array[Point])],
                                 maxBroadcastPoints: Int = MaxBroadcastPoints,
-                                unionSize: Option[Long] = None,
+                                driverBound: Int => Int = driverBoundOf,
                                 chunks: Option[Int] = None,
-                                chunkTargetBytes: Long = ChunkTargetBytes): RDD[Point] = {
-    val localRdd = local.cache()
-    try {
-      // size check BEFORE any collect — the union never lands on the driver
-      // unless it fits the broadcast bound
-      val unionCount = unionSize.getOrElse(localRdd.map(_.length.toLong).fold(0L)(_ + _))
-      if (unionCount == 0) return spark.sparkContext.emptyRDD[Point]
-      if (unionCount > maxBroadcastPoints) {
-        // union too wide to broadcast whole: distributed pairwise cross-filter.
-        // The union is re-chunked, each (chunk i, chunk j) pair is dominance-
-        // checked in its OWN task (against chunk j's kd index),
-        // and per-chunk survivor bitmasks are AND-reduced. Total work is the
-        // same O(s²·d) any exact merge pays on a pathological antichain, but
-        // it is spread over chunks² tasks with no serial merge and no
-        // oversized driver collect.
-        return crossFilterChunks(spark, localRdd, unionCount, chunks, chunkTargetBytes)
-      }
-      val union = localRdd.collect().iterator.flatten.toArray
-      val packed = buildKd(union)
-      val bPacked = spark.sparkContext.broadcast(packed)
-      // the candidates are re-seeded from the driver's union, so nothing
-      // stays cached past this call. 512 points per slice: a surviving
-      // point of a wide antichain cannot prune its kd traversal, so the
-      // check is CPU-heavy exactly there (4096 capped a 30k-point 3-D anti
-      // merge at 8 tasks on 32 cores: 2.5-2.9 s of a 3.9-4.4 s entry).
-      val slices = math.max(1, math.min(union.length / 512 + 1,
-        spark.sparkContext.defaultParallelism))
-      spark.sparkContext.parallelize(union.toIndexedSeq, slices)
-        .mapPartitions { it =>
-          val pk = bPacked.value
-          it.filter(p => !dominatedByKd(pk, p.values))
-        }
-    } finally localRdd.unpersist(false)
+                                chunkTargetBytes: Long = ChunkTargetBytes): Merged = {
+    val own = local.getStorageLevel == StorageLevel.NONE && !local.dependencies.exists {
+      case d: OneToOneDependency[_] => d.rdd.getStorageLevel != StorageLevel.NONE
+      case _ => false
+    }
+    if (own) local.cache()
+    try mergeUnion(spark, local, collectUnion(local, maxBroadcastPoints), maxBroadcastPoints,
+      driverBound, chunks, chunkTargetBytes)
+    finally if (own) local.unpersist(false)
+  }
+
+  /** The merge of a collected [[Union]] of `local`'s blocks. The union is
+    * indexed as a kd dominance index ([[graft.core.KdIndex]]) and every
+    * candidate is checked against it. Correct because any dominator of a
+    * candidate is either in the union or is dominated by a union member
+    * that (by transitivity) also dominates the candidate; duplicates of a
+    * skyline point all survive (equals never dominate). The paths:
+    *   - a union within `driverBound(arity)` is filtered on the driver,
+    *     where it was collected: no broadcast and no job;
+    *   - a larger one within `maxBroadcastPoints` is broadcast, and the
+    *     candidates are checked on every core. The broadcast is bounded by
+    *     the union of local skylines, not by input size — the bound the
+    *     reference's global phase ships over its second shuffle
+    *     (`FlinkSkyline.java:171-174`);
+    *   - past `maxBroadcastPoints`, the distributed pairwise cross-filter
+    *     ([[crossFilterChunks]], sized by `chunks` and `chunkTargetBytes`),
+    *     with no driver collect or broadcast.
+    * The blocks a task did not return are fetched in a second job only when
+    * the union fits `maxBroadcastPoints`. */
+  private def mergeUnion(spark: SparkSession, local: RDD[(Int, Array[Point])], union: Union,
+                         maxBroadcastPoints: Int = MaxBroadcastPoints,
+                         driverBound: Int => Int = driverBoundOf,
+                         chunks: Option[Int] = None,
+                         chunkTargetBytes: Long = ChunkTargetBytes): Merged = {
+    val size = union.size
+    if (size == 0) return Left(Array.empty)
+    if (size > maxBroadcastPoints) {
+      // union too wide to broadcast whole: distributed pairwise cross-filter.
+      // The union is re-chunked, each (chunk i, chunk j) pair is dominance-
+      // checked in its OWN task (against chunk j's kd index),
+      // and per-chunk survivor bitmasks are AND-reduced. Total work is the
+      // same O(s²·d) any exact merge pays on a pathological antichain, but
+      // it is spread over chunks² tasks with no serial merge and no
+      // oversized driver collect.
+      return Right(crossFilterChunks(spark, local.values, size, union.arity, chunks,
+        chunkTargetBytes))
+    }
+    val missing = union.blocks.indices.filter(union.blocks(_).isEmpty)
+    val fetched = if (missing.isEmpty) Map.empty[Int, Array[Array[Point]]]
+      else missing.zip(spark.sparkContext.runJob(local,
+        (it: Iterator[(Int, Array[Point])]) => it.map(_._2).toArray, missing)).toMap
+    val all = union.blocks.indices.iterator
+      .flatMap(i => union.blocks(i).getOrElse(fetched(i))).flatten.toArray
+    val packed = buildKd(all)
+    if (all.length <= driverBound(packed.d))
+      return Left(all.filter(p => !dominatedByKd(packed, p.values)))
+    val bPacked = spark.sparkContext.broadcast(packed)
+    // the candidates are re-seeded from the driver's union, so nothing
+    // stays cached past this call. 512 points per slice: a surviving
+    // point of a wide antichain cannot prune its kd traversal, so the
+    // check is CPU-heavy exactly there (4096 capped a 30k-point 3-D anti
+    // merge at 8 tasks on 32 cores: 2.5-2.9 s of a 3.9-4.4 s entry).
+    val slices = math.max(1, math.min(all.length / 512 + 1,
+      spark.sparkContext.defaultParallelism))
+    Right(spark.sparkContext.parallelize(all.toIndexedSeq, slices)
+      .mapPartitions { it =>
+        val pk = bPacked.value
+        it.filter(p => !dominatedByKd(pk, p.values))
+      })
   }
 
   /** Measured shape of the last [[crossFilterChunks]] run (driver-side,
@@ -325,7 +443,8 @@ object SkylineOps {
     * chunk j, and bitsets AND-reduce per chunk. Within-chunk domination is
     * impossible (each chunk is an antichain). */
   private def crossFilterChunks(spark: SparkSession, localRdd: RDD[Array[Point]],
-      unionUpperBound: Long, requestedChunks: Option[Int], targetBytes: Long): RDD[Point] = {
+      unionUpperBound: Long, d: Int, requestedChunks: Option[Int],
+      targetBytes: Long): RDD[Point] = {
     // chunk-pair tasks = n·(n-1) but the cartesian SHIPS each chunk n-1
     // times, so shuffle volume grows linearly in n × |union|: the FLOOR is
     // n ≈ √(2·cores) — enough pair-tasks to fill every core (n²≈2·cores)
@@ -339,8 +458,6 @@ object SkylineOps {
     // as 1/n). `requestedChunks` overrides n for the scaling-law probes; the
     // per-chunk footprint target defaults to 64 MB, comfortably inside any
     // executor.
-    val d = localRdd.map(a => if (a.isEmpty) 0 else a(0).values.length)
-      .fold(0)(math.max)
     val fillChunks = math.max(2, math.ceil(
       math.sqrt(spark.sparkContext.defaultParallelism * 2.0)).toInt)
     val memChunks = math.ceil(

@@ -104,13 +104,15 @@ case class SkylinePartialExec(dims: Seq[Expression], via: Option[ReferenceStrate
 
 /** Global phase: the partial survivors of child partition `i` are cached,
   * lifted to `Point(i, dims)` and merged by [[SkylineOps.mergeLocal]], the
-  * merge behind [[SkylineOps.skyline]] (broadcast kd filter, chunked
-  * cross-filter past its bound). Each survivor goes back to partition `i`,
-  * which keeps its rows whose dimension vector survived: whether a row
-  * survives depends only on that vector (equal vectors never dominate each
-  * other), so a cached partition that is evicted and recomputed in another
-  * row order keeps the same rows. The ContextCleaner frees the cache with
-  * the returned RDD. */
+  * merge behind [[SkylineOps.skyline]] (one job collects a small union and
+  * filters it on the driver; a larger one takes the broadcast kd filter, or
+  * the chunked cross-filter past its bound). Partition `i` then keeps its
+  * rows whose dimension vector survived: survivors on the driver ride the
+  * closure, distributed ones are routed back to partition `i`. Whether a
+  * row survives depends only on that vector (equal vectors never dominate
+  * each other), so a cached partition that is evicted and recomputed in
+  * another row order keeps the same rows. The ContextCleaner frees the
+  * cache with the returned RDD. */
 case class SkylineMergeExec(dims: Seq[Expression], child: SparkPlan)
     extends SkylineRowsExec {
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
@@ -123,15 +125,20 @@ case class SkylineMergeExec(dims: Seq[Expression], child: SparkPlan)
         val vs = new Array[Double](read.arity)
         if (read(r, vs)) Some(Point(i, vs)) else None
       }.toArray
-      if (pts.isEmpty) Iterator.empty else Iterator.single(pts)
+      if (pts.isEmpty) Iterator.empty else Iterator.single((i, pts))
     }
-    val kept = SkylineOps.mergeLocal(session, local)
-      .map(p => (p.id.toInt, p.values))
-      .partitionBy(new HashPartitioner(rows.getNumPartitions))
-    rows.zipPartitions(kept) { (it, survivors) =>
-      val live = survivors.map(_._2.toSeq).toSet
+    val keep = (it: Iterator[InternalRow], live: Set[Seq[Double]]) => {
       val vs = new Array[Double](read.arity)
-      it.filter(r => read(r, vs) && live(vs.toSeq))
+      if (live.isEmpty) Iterator.empty else it.filter(r => read(r, vs) && live(vs.toSeq))
+    }
+    SkylineOps.mergeLocal(session, local) match {
+      case Left(survivors) =>
+        val live = survivors.groupMap(_.id.toInt)(_.values.toSeq).view.mapValues(_.toSet).toMap
+        rows.mapPartitionsWithIndex((i, it) => keep(it, live.getOrElse(i, Set.empty)))
+      case Right(survivors) =>
+        val kept = survivors.map(p => (p.id.toInt, p.values))
+          .partitionBy(new HashPartitioner(rows.getNumPartitions))
+        rows.zipPartitions(kept)((it, live) => keep(it, live.map(_._2.toSeq).toSet))
     }
   }
 }

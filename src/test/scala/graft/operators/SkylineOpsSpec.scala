@@ -180,6 +180,9 @@ class SkylineOpsSpec extends AnyFunSuite {
     assert(df.columns.toSeq == Seq("query_id", "record_count", "skyline_size",
       "optimality", "ingestion_time_ms", "local_processing_time_ms",
       "global_processing_time_ms", "total_processing_time_ms"))
+    // names, types and nullability as a tuple encoder types the fields
+    val tupled = Seq(("", 0L, 0L, 0.0, 0L, 0L, 0L, 0L)).toDF(df.columns.toSeq: _*)
+    assert(df.schema == tupled.schema, df.schema.treeString)
     val opt = row.getAs[Double]("optimality")
     assert(opt >= 0.0 && opt <= 1.0)
     assert(row.getAs[Long]("skyline_size") > 0)
@@ -197,20 +200,22 @@ class SkylineOpsSpec extends AnyFunSuite {
         local.count(global.contains).toDouble / local.size
       }
       val expect = shares.sum / SkylineOps.protocolPartitions(strategy, n, 3)
-      // one partition takes the spread path, 16 the wide one
-      for (slices <- Seq(1, 16)) {
+      // one partition takes the spread path, 16 the wide one; a driver
+      // bound of 0 forces the distributed probe
+      for (slices <- Seq(1, 16); (side, bound) <- Seq("driver" -> SkylineOps.driverBoundOf _,
+          "distributed" -> ((_: Int) => 0))) {
+        val at = s"$strategy slices=$slices $side"
         val ds = spark.createDataset(spark.sparkContext.parallelize(pts, slices))
-        val row = SkylineOps.skylineWithMetrics(ds, strategy, domain, n, "q", pts.size)
+        val row = SkylineOps.skylineWithMetrics(ds, strategy, domain, n, "q", pts.size, bound)
           .collect().head
-        assert(row.getAs[Long]("skyline_size") == global.size, s"$strategy slices=$slices")
+        assert(row.getAs[Long]("skyline_size") == global.size, at)
         // the query rounds optimality to 4 decimals
-        assert(math.abs(row.getAs[Double]("optimality") - expect) <= 0.5e-4 + 1e-12,
-          s"$strategy slices=$slices")
+        assert(math.abs(row.getAs[Double]("optimality") - expect) <= 0.5e-4 + 1e-12, at)
       }
     }
   }
 
-  test("metrics query runs three jobs and merges strategy ids on n tasks") {
+  test("metrics query runs one job and merges strategy ids on n tasks") {
     import spark.implicits._
     val n = 8
     val pts = mkPts(3000, 3, seed = 13, card = 100)
@@ -220,14 +225,76 @@ class SkylineOpsSpec extends AnyFunSuite {
     assert(row.getAs[Long]("skyline_size") == bruteForce(pts).size)
     import scala.jdk.CollectionConverters._
     val jobs = rec.jobs.asScala.filter(_ != "marker")
-    assert(jobs.size == 3, s"jobs: ${jobs.size}")
+    assert(jobs.size == 1, s"jobs: ${jobs.size}")
     // the stage after the 16 map tasks' partials merges them per strategy id
-    // (in completion order: the query's jobs run one after another)
+    // (in completion order: the query's stages run one after another)
     val stages = rec.stages.asScala.toSeq
     val shape = stages.map(s => s.name -> s.numTasks)
     val partials = stages.indexWhere(_.numTasks == 16)
     assert(partials >= 0 && partials + 1 < stages.size, shape)
     assert(stages(partials + 1).numTasks == n, shape)
+  }
+
+  test("metrics query spreads a one-partition input inside its one job") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val n = 8
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores > 1 && cores != n)
+    val pts = mkPts(3000, 3, seed = 18, card = 100)
+    val ds = spark.createDataset(spark.sparkContext.parallelize(pts, 1))
+    val (row, rec) = new JobRecorder(spark).during(
+      SkylineOps.skylineWithMetrics(ds, "mr-angle", 100.0, n, "q", pts.size).collect().head)
+    assert(row.getAs[Long]("skyline_size") == bruteForce(pts).size)
+    val jobs = rec.jobs.asScala.filter(_ != "marker")
+    assert(jobs.size == 1, s"jobs: ${jobs.size}")
+    // the marker job's one stage comes last
+    val shape = rec.stages.asScala.toSeq.map(_.numTasks).dropRight(1)
+    assert(shape == Seq(1, cores, n), shape)
+  }
+
+  test("a task whose blocks exceed its share of the driver bound is fetched in a second job") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores == 4)
+    // partition 0 holds a 60-point antichain, every other one 2 points: a
+    // bound of 20 per task sends partition 0's shape only, and the
+    // 60 + 2 (cores - 1) points fit the bound, so one job fetches the rest
+    val bound = 20 * cores
+    val chain = Seq.tabulate(60)(i => Point(i, Array(i.toDouble, 60.0 - i)))
+    val rest = (1 until cores).map(k => Seq.tabulate(2)(j =>
+      Point(100L * k + j, Array(30.0 + k + j, 40.0 - k - j))))
+    val pts = chain ++ rest.flatten
+    val ds = spark.createDataset(spark.sparkContext.parallelize(chain +: rest, cores)
+      .flatMap(identity))
+    val (got, rec) = new JobRecorder(spark).during(
+      SkylineOps.skyline(ds, maxBroadcastPoints = bound).collect().toSeq)
+    assert(asSet(got) == bruteForce(pts))
+    // the sizing collect on every task, then the fetch of partition 0 (the
+    // marker job's one stage comes last)
+    val stages = rec.stages.asScala.toSeq.map(_.numTasks).dropRight(1)
+    assert(stages == Seq(cores, 1), stages)
+  }
+
+  test("a union of the driver bound is filtered on the driver, one more point is not") {
+    for (d <- Seq(2, 5); extra <- Seq(0, 1)) {
+      val size = SkylineOps.driverBoundOf(d) + extra
+      // an antichain, made on the executors: distinct points on the plane
+      // sum = 1 never dominate each other
+      val blocks = spark.sparkContext.parallelize(0 until 4, 4).map { k =>
+        val rng = new Random(d * 10 + k)
+        (0, Array.tabulate(size / 4 + (if (k < size % 4) 1 else 0)) { i =>
+          val raw = Array.fill(d)(rng.nextDouble() + 1e-9)
+          Point(i * 4L + k, raw.map(_ / raw.sum))
+        })
+      }
+      val at = s"d=$d union=$size"
+      SkylineOps.mergeLocal(spark, blocks) match {
+        case Left(kept) => assert(extra == 0 && kept.length == size, s"$at on the driver")
+        case Right(kept) => assert(extra == 1 && kept.count() == size, s"$at distributed")
+      }
+    }
   }
 
   test("an adaptive wide input's shuffle runs once") {

@@ -11,7 +11,7 @@ import graft.plans.{ReferenceStrategy, SkylinePlanApi}
 /** Generated hostile frames (±Inf, ties from a tiny value pool, duplicate
   * floods, null and NaN dims, more partitions than rows): every skyline path
   * equals brute force over the valid rows. The fixed-seed cases stay in
-  * [[SkylineHostileInputSpec]]; each trial here runs six Spark queries, so
+  * [[SkylineHostileInputSpec]]; each trial here runs seven Spark queries, so
   * the trial count is kept small. */
 object SkylinePathProps extends Properties("SkylinePaths") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -60,7 +60,9 @@ object SkylinePathProps extends Properties("SkylinePaths") {
         "node" -> node(None),
         "SkylineOps.skyline" -> points(SkylineOps.skyline),
         "skyline(max 3)" ->
-          points(SkylineOps.skyline(_, maxBroadcastPoints = 3))) ++
+          points(SkylineOps.skyline(_, maxBroadcastPoints = 3)),
+        "skyline(driver bound 0)" ->
+          points(SkylineOps.skyline(_, driverBound = _ => 0))) ++
         Seq("mr-dim", "mr-grid", "mr-angle").map(st =>
           s"node via $st" -> node(Some(ReferenceStrategy(st, Domain, 8))))
       val bad = got.collect { case (name, sky) if sky != expect => s"$name: $sky" }
