@@ -5,10 +5,14 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, Expression,
+  UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType,
   StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -63,10 +67,11 @@ object SkylineOps {
 
   /** Global skyline of any input, the one way into [[mergeLocal]]: each
     * input partition is reduced to its skyline and the local skylines are
-    * merged (`originPartition` passes through). An input with fewer
-    * partitions than `defaultParallelism` is first spread round-robin over
-    * that many slivers, so a few fat antichains do not pre-reduce in one
-    * serial task each; a wider input is reduced where it sits. */
+    * merged (`originPartition` passes through). A file input is scanned in
+    * core-width splits ([[coreWidth]]). An input that still has fewer
+    * partitions than `defaultParallelism` is spread round-robin over that
+    * many slivers, so a few fat antichains do not pre-reduce in one serial
+    * task each; a wider input is reduced where it sits. */
   def skyline(ds: Dataset[Point]): Dataset[Point] = skyline(ds, MaxBroadcastPoints)
 
   /** [[skyline]] with the merge's bounds and cross-filter chunking set by
@@ -78,7 +83,7 @@ object SkylineOps {
                              chunkTargetBytes: Long = ChunkTargetBytes): Dataset[Point] = {
     val spark = ds.sparkSession
     val cores = spark.sparkContext.defaultParallelism
-    val rdd = ds.rdd
+    val rdd = coreWidth(ds).rdd
     val in = if (rdd.getNumPartitions < cores) rdd.repartition(cores) else rdd
     asDataset(spark, mergeLocal(spark, in.mapPartitions { it =>
       if (it.isEmpty) Iterator.empty
@@ -123,21 +128,24 @@ object SkylineOps {
     * (mr-grid emits up to 2^dims ids, more than `n`). Building it runs no
     * job (unless the input's own adaptive plan runs its exchanges).
     *
-    * The rows are the `queryExecution.toRdd` that the width check plans, so
-    * every input is planned once. An input narrower than `defaultParallelism`
-    * (a CSV under `openCostInBytes` is ONE split) is first hash-spread by id
-    * over that many partitions ([[spreadById]]), a shuffle inside this
-    * lineage. Each row's vector is copied into one scratch array per task,
-    * its strategy id is computed from that array, and a [[Point]] is built
-    * only for a row its id's buffer admits (see [[SkylineBuffer]]). */
+    * The rows are the `queryExecution.toRdd` of the input as [[coreWidth]]
+    * plans it, once: a splittable file input scans and combines on every
+    * core. An input that is still narrower than `defaultParallelism` (a
+    * gzip or multi-line CSV, a one-slice RDD, a local relation) is first
+    * hash-spread by id over that many partitions ([[spreadById]]), a
+    * shuffle inside this lineage. Each row's vector is copied into one
+    * scratch array per task, its strategy id is computed from that array,
+    * and a [[Point]] is built only for a row its id's buffer admits (see
+    * [[SkylineBuffer]]). */
   private def localAntichains(ds: Dataset[Point], strategy: String, domain: Double,
                               n: Int): RDD[(Int, Array[Point])] = {
     val pidOf = pidFunction(strategy, domain, n)
     val cores = ds.sparkSession.sparkContext.defaultParallelism
-    val read = idAndValues(ds)
-    val rows = ds.queryExecution.toRdd
+    val planned = coreWidth(ds)
+    val read = idAndValues(planned)
+    val rows = planned.queryExecution.toRdd
     val in = if (rows.getNumPartitions >= cores) rows
-      else spreadById(rows, read.head, ds.queryExecution.executedPlan.output.length, cores)
+      else spreadById(rows, read.head, planned.queryExecution.executedPlan.output.length, cores)
     in.mapPartitions { it =>
       val proj = UnsafeProjection.create(read)
       val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
@@ -157,15 +165,72 @@ object SkylineOps {
         .map { case (pid, b) => (pid, b.result.toArray) })
   }
 
+  /** `ds` with every file relation in its plan scanned in about
+    * `defaultParallelism` balanced byte ranges: Spark's own split size,
+    * `min(maxPartitionBytes, total bytes / cores)`, without the
+    * `openCostInBytes` floor (4 MB by default) that makes any smaller file
+    * ONE split, so a splittable CSV scans on every core instead of being
+    * parsed in one task and spread. Many small files likewise pack into
+    * about `cores` partitions rather than one per 4 MB of open cost. A
+    * non-splittable file (gzip, multi-line CSV) stays one split; an input
+    * without a file relation is returned as it is.
+    *
+    * The scan reads its split size from the session its `HadoopFsRelation`
+    * holds, not from the planning thread's conf, so each file relation is
+    * re-pointed at [[scanSession]]. The user's session conf is never set:
+    * a change there, even around planning, would race with other queries on
+    * that session. The relation keeps its output attributes, so `id` and
+    * `values` bind by name as before, and a relation's equality ignores its
+    * session, so a cached input still resolves to its cached data. */
+  private def coreWidth(ds: Dataset[Point]): Dataset[Point] = {
+    lazy val scan = scanSession(ds.sparkSession)
+    val plan = ds.queryExecution.analyzed
+    // a re-pointed relation equals the original, so a one-step transform
+    // would keep the original node; the marker makes both steps a change
+    val marked = plan.transform { case l @ LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+      Rescan(l.copy(relation = r.copy()(scan)))
+    }
+    if (marked eq plan) ds
+    else ColumnBridge.ofRows(ds.sparkSession, marked.transform { case Rescan(l) => l })
+      .as[Point](pointEncoder)
+  }
+
+  /** [[coreWidth]]'s placeholder for a re-pointed relation, between its two
+    * transforms only. */
+  private final case class Rescan(l: LogicalRelation) extends LeafNode {
+    override def output: Seq[Attribute] = l.output
+  }
+
+  /** One derived session per user session, held weakly: built once (a new
+    * session costs milliseconds and may register listeners), then brought
+    * up to date at each call with the user's runtime SQL confs (static ones
+    * cannot be set and are the same anyway) and an open cost of one byte. A
+    * zero open cost would make the split size 0 for an input of fewer
+    * bytes than cores. */
+  private def scanSession(spark: SparkSession): SparkSession = scanSessions.synchronized {
+    val scan = scanSessions.computeIfAbsent(spark, _.newSession())
+    val want = spark.sessionState.conf.getAllConfs
+      .filter { case (k, _) => !SQLConf.isStaticConfigKey(k) } +
+      (SQLConf.FILES_OPEN_COST_IN_BYTES.key -> "1")
+    val conf = scan.sessionState.conf
+    val have = conf.getAllConfs
+    have.keys.foreach(k => if (!want.contains(k) && !SQLConf.isStaticConfigKey(k)) conf.unsetConf(k))
+    want.foreach { case (k, v) => if (!have.get(k).contains(v)) conf.setConfString(k, v) }
+    scan
+  }
+
+  private val scanSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
   /** `rows` (of `width` fields) hash-spread by `id` over `n` partitions
-    * (Murmur3, seed 42, as Spark's hash partitioning), by the mechanism
-    * `ShuffleExchangeExec` uses: an RDD shuffle of the rows in the layout
-    * the plan produces, through the `UnsafeRow` serializer. No row is
-    * copied: the bypass-merge and serialized shuffle writers serialize each
-    * record as it arrives (`ShuffleExchangeExec.needToCopyObjectsBeforeShuffle`),
-    * so a reused row is written before its buffer is refilled. The reader
-    * reuses one row too, which the local phase reads before it pulls the
-    * next. */
+    * (Murmur3, seed 42, as Spark's hash partitioning): the fallback of the
+    * local phase for an input narrower than the cores after [[coreWidth]].
+    * It uses the mechanism `ShuffleExchangeExec` uses: an RDD shuffle of
+    * the rows in the layout the plan produces, through the `UnsafeRow`
+    * serializer. No row is copied: the bypass-merge and serialized shuffle
+    * writers serialize each record as it arrives
+    * (`ShuffleExchangeExec.needToCopyObjectsBeforeShuffle`), so a reused row
+    * is written before its buffer is refilled. The reader reuses one row
+    * too, which the local phase reads before it pulls the next. */
   private def spreadById(rows: RDD[InternalRow], id: Expression, width: Int,
                          n: Int): RDD[InternalRow] =
     new ShuffledRDD[Int, InternalRow, InternalRow](rows.mapPartitions { it =>
@@ -408,19 +473,20 @@ object SkylineOps {
     val packed = buildKd(all)
     if (all.length <= driverBound(packed.d))
       return Left(all.filter(p => !dominatedByKd(packed, p.values)))
-    val bPacked = spark.sparkContext.broadcast(packed)
-    // the candidates are re-seeded from the driver's union, so nothing
-    // stays cached past this call. 512 points per slice: a surviving
-    // point of a wide antichain cannot prune its kd traversal, so the
-    // check is CPU-heavy exactly there (4096 capped a 30k-point 3-D anti
-    // merge at 8 tasks on 32 cores: 2.5-2.9 s of a 3.9-4.4 s entry).
+    // the candidates are the driver's union, broadcast beside its index,
+    // so nothing stays cached past this call and a task ships only its
+    // slice number. 512 points per slice: a surviving point of a wide
+    // antichain cannot prune its kd traversal, so the check is CPU-heavy
+    // exactly there (4096 capped a 30k-point 3-D anti merge at 8 tasks on
+    // 32 cores: 2.5-2.9 s of a 3.9-4.4 s entry).
+    val b = spark.sparkContext.broadcast((packed, all))
     val slices = math.max(1, math.min(all.length / 512 + 1,
       spark.sparkContext.defaultParallelism))
-    Right(spark.sparkContext.parallelize(all.toIndexedSeq, slices)
-      .mapPartitions { it =>
-        val pk = bPacked.value
-        it.filter(p => !dominatedByKd(pk, p.values))
-      })
+    Right(spark.sparkContext.parallelize(0 until slices, slices).flatMap { s =>
+      val (pk, pts) = b.value
+      pts.iterator.slice((s.toLong * pts.length / slices).toInt,
+        ((s + 1).toLong * pts.length / slices).toInt).filter(p => !dominatedByKd(pk, p.values))
+    })
   }
 
   /** Measured shape of the last [[crossFilterChunks]] run (driver-side,

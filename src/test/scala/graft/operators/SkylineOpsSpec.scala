@@ -381,6 +381,151 @@ class SkylineOpsSpec extends AnyFunSuite {
     assert(preReduce.exists(_.numTasks > 1), shape)
   }
 
+  /** `lines` written to a one-file CSV (gzip-compressed when `gzip`) in a
+    * new temporary directory, which is deleted after `body` reads it. */
+  private def withCsv[T](lines: Seq[String], gzip: Boolean = false)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("skyline-csv")
+    val file = dir.resolve(if (gzip) "in.csv.gz" else "in.csv")
+    val raw = new java.io.FileOutputStream(file.toFile)
+    val out = if (gzip) new java.util.zip.GZIPOutputStream(raw) else raw
+    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8")) finally out.close()
+    try body(file.toString)
+    finally { java.nio.file.Files.deleteIfExists(file); java.nio.file.Files.delete(dir) }
+  }
+
+  private def csvPoints(path: String, header: Boolean = false) = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(StructField("id", LongType) +:
+      (1 to 3).map(d => StructField(s"v$d", DoubleType)))
+    SkylineOps.pointsFrom(spark.read.schema(schema).option("header", header).csv(path),
+      "id", Seq("v1", "v2", "v3"))
+  }
+
+  /** The reference query's optimality over `pts`, by brute force. */
+  private def expectedOptimality(pts: Seq[Point], strategy: String, domain: Double,
+                                 n: Int): Double = {
+    val global = bruteForce(pts)
+    val pidOf = SkylineOps.pidFunction(strategy, domain, n)
+    pts.groupBy(p => pidOf(p.values)).values.map { part =>
+      val local = bruteForce(part)
+      local.count(global.contains).toDouble / local.size
+    }.sum / SkylineOps.protocolPartitions(strategy, n, 3)
+  }
+
+  /** The metrics query, `localSkylines` and `skyline` over `ds` equal brute
+    * force over `pts`, for every strategy. */
+  private def assertSkylines(at: String, ds: org.apache.spark.sql.Dataset[Point],
+                             pts: Seq[Point], domain: Double, n: Int): Unit = {
+    val global = bruteForce(pts)
+    assert(asSet(SkylineOps.skyline(ds).collect().toSeq) == global, s"$at skyline")
+    for (strategy <- Seq("mr-dim", "mr-grid", "mr-angle")) {
+      val pidOf = SkylineOps.pidFunction(strategy, domain, n)
+      val byPid = pts.groupBy(p => pidOf(p.values)).map { case (pid, part) =>
+        pid -> bruteForce(part) }
+      val local = SkylineOps.localSkylines(ds, strategy, domain, n).collect()
+      assert(local.map(p => p._1 -> asSet(p._2)).toMap == byPid, s"$at $strategy local")
+      val row = SkylineOps.skylineWithMetrics(ds, strategy, domain, n, "q", pts.size)
+        .collect().head
+      assert(row.getAs[Long]("skyline_size") == global.size, s"$at $strategy")
+      assert(math.abs(row.getAs[Double]("optimality") -
+        expectedOptimality(pts, strategy, domain, n)) <= 0.5e-4 + 1e-12, s"$at $strategy")
+    }
+  }
+
+  test("a one-file CSV under the open cost scans on every core, session conf untouched") {
+    import scala.jdk.CollectionConverters._
+    val (domain, n) = (100.0, 8)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores > 1)
+    val pts = mkPts(6000, 3, seed = 22, card = 100)
+    withCsv(pts.map(p => (p.id +: p.values.map(_.toLong)).mkString(","))) { path =>
+      val before = spark.conf.getAll
+      def shape(rec: JobRecorder) = rec.stages.asScala.toSeq.map(_.numTasks).dropRight(1)
+      for (strategy <- Seq("mr-dim", "mr-grid", "mr-angle")) {
+        val (row, rec) = new JobRecorder(spark).during(SkylineOps.skylineWithMetrics(
+          csvPoints(path), strategy, domain, n, "q", pts.size).collect().head)
+        assert(row.getAs[Long]("skyline_size") == bruteForce(pts).size, strategy)
+        assert(math.abs(row.getAs[Double]("optimality") -
+          expectedOptimality(pts, strategy, domain, n)) <= 0.5e-4 + 1e-12, strategy)
+        assert(rec.jobs.asScala.count(_ != "marker") == 1, strategy)
+        // the scan and the map-side combine run on every core: no serial
+        // parse task and no spread (the marker job's one stage comes last)
+        val tasks = shape(rec)
+        assert(tasks.head >= cores && !tasks.contains(1), s"$strategy: $tasks")
+      }
+      // skyline plans its input the same way: no round-robin re-spread
+      val (sky, rec) = new JobRecorder(spark).during(
+        SkylineOps.skyline(csvPoints(path)).collect().toSeq)
+      assert(asSet(sky) == bruteForce(pts))
+      assert(shape(rec).head >= cores && !shape(rec).contains(1), shape(rec))
+      assert(spark.conf.getAll == before)
+    }
+  }
+
+  test("split CSV, gzip CSV and a persisted file input equal brute force and toDS()") {
+    import spark.implicits._
+    val (domain, n, cores) = (100.0, 4, spark.sparkContext.defaultParallelism)
+    val rng = new Random(24)
+    // fixed-width lines: a NaN or malformed variant of a line keeps its
+    // length, so it can replace the line a split boundary falls in
+    def line(id: Int, vs: Seq[String]) = f"$id%06d," + vs.mkString(",")
+    def valid(id: Int) = line(id, Seq.fill(3)(f"${rng.nextInt(100)}%03d"))
+    val variants = Seq((id: Int) => line(id, Seq("NaN", "001", "002")),
+      (id: Int) => line(id, Seq("001", "abc", "002")), (id: Int) => "x" * 18)
+    val body = scala.collection.mutable.ArrayBuffer[String]()
+    (0 until 5000).foreach { id =>
+      rng.nextInt(40) match {
+        case 0 => body += ""                            // an empty line
+        case 1 => body += f"$id%06d,001"                // too few fields
+        case 2 => body += variants(id % 3)(id)
+        case _ =>
+      }
+      body += valid(id)
+    }
+    val lines = "id,v1,v2,v3" +: body.toSeq
+    // the line holding each split boundary (Spark's split size with a
+    // 1-byte open cost) becomes a NaN or malformed line of the same length
+    val starts = lines.scanLeft(0L)(_ + _.length + 1)
+    val split = math.max(1L, (starts.last + 1) / cores)
+    val atBoundary = (1L to starts.last / split).map(k =>
+      starts.lastIndexWhere(_ <= k * split)).filter(i => i > 0 && i < lines.length)
+    val csv = lines.zipWithIndex.map { case (l, i) =>
+      if (atBoundary.contains(i) && l.length == 18 && l.head != 'x')
+        variants(i % 3)(l.take(6).toInt) else l }
+    assert(csv.zipWithIndex.count { case (l, i) => atBoundary.contains(i) && l.length == 18 &&
+      !l.matches("\\d{6}(,\\d{3}){3}") } >= cores - 1)
+    val pts = csv.tail.flatMap { l =>
+      val f = l.split(",", -1)
+      if (f.length == 4 && f.forall(_.matches("\\d+")))
+        Some(Point(f(0).toLong, f.tail.map(_.toDouble))) else None
+    }
+    val seeded = pts.toDS()
+    withCsv(csv) { path =>
+      val ds = csvPoints(path, header = true)
+      assert(ds.rdd.getNumPartitions == 1)
+      assertSkylines("split CSV", ds, pts, domain, n)
+      assertSkylines("toDS()", seeded, pts, domain, n)
+    }
+    withCsv(csv, gzip = true) { path =>
+      // one split: the local phase spreads it
+      import scala.jdk.CollectionConverters._
+      val ds = csvPoints(path, header = true)
+      val (_, rec) = new JobRecorder(spark).during(
+        SkylineOps.skylineWithMetrics(ds, "mr-angle", domain, n, "q", pts.size).collect())
+      assert(rec.stages.asScala.toSeq.map(_.numTasks).dropRight(1) == Seq(1, cores, n))
+      assertSkylines("gzip CSV", ds, pts, domain, n)
+    }
+    withCsv(csv) { path =>
+      val ds = csvPoints(path, header = true).persist()
+      try {
+        assert(ds.count() == pts.size)
+        // a scan after this point would fail: the query reads the cache
+        java.nio.file.Files.delete(java.nio.file.Paths.get(path))
+        assertSkylines("persisted CSV", ds, pts, domain, n)
+      } finally ds.unpersist()
+    }
+  }
+
   test("a partition count below 1 is rejected when the partitioner is built") {
     import spark.implicits._
     for (strategy <- Seq("mr-dim", "mr-grid", "mr-angle"); n <- Seq(0, -1)) {
