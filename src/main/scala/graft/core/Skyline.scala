@@ -266,11 +266,11 @@ final class SkylineBuffer extends Serializable {
   /** Stages `c` unless admission drops it. */
   def add(c: Point): Unit = if (admits(c.values)) stage(c)
 
-  /** Stages `Point(id, a copy of vs, origin)` unless admission drops `vs`;
-    * true iff it was staged. `vs` is only read, so a row reader can pass
-    * one scratch vector for every row. */
-  def offer(id: Long, vs: Array[Double], origin: Int = -1): Boolean =
-    admits(vs) && { stage(Point(id, vs.clone(), origin)); true }
+  /** Stages `Point(id, a copy of vs)` unless admission drops `vs`; true
+    * iff it was staged. `vs` is only read, so a row reader can pass one
+    * scratch vector for every row. */
+  def offer(id: Long, vs: Array[Double]): Boolean =
+    admits(vs) && { stage(Point(id, vs.clone())); true }
 
   /** Adds every point of `other` (survivors and staged). */
   def merge(other: SkylineBuffer): SkylineBuffer = {
@@ -366,13 +366,5 @@ object SkylineBuffer {
     val buf = new SkylineBuffer
     it.foreach(buf.add)
     buf
-  }
-
-  /** One buffer per `key` of the points of `it` (a strategy id, say): the
-    * skyline of each key's points. */
-  def byKey(it: Iterator[Point])(key: Point => Int): Iterator[(Int, SkylineBuffer)] = {
-    val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
-    it.foreach(p => bufs.getOrElseUpdate(key(p), empty).add(p))
-    bufs.iterator
   }
 }

@@ -1,25 +1,26 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.{HashPartitioner, OneToOneDependency}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, Expression,
-  UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField,
+  StructType}
 import org.apache.spark.storage.StorageLevel
-import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 import graft.core.{Point, SkylineBuffer}
 import graft.core.Dominance.{buildKd, dominatedByKd}
+import graft.plans.{DimsReader, ReferenceStrategy}
 
 /** Skyline (Pareto frontier, minimization) as a typed Spark `Aggregator`.
   *
@@ -65,13 +66,11 @@ object SkylineOps {
         array(dims: _*).as("values"), lit(-1).as("originPartition")): _*)
   }
 
-  /** Global skyline of any input, the one way into [[mergeLocal]]: each
-    * input partition is reduced to its skyline and the local skylines are
-    * merged (`originPartition` passes through). A file input is scanned in
-    * core-width splits ([[coreWidth]]). An input that still has fewer
-    * partitions than `defaultParallelism` is spread round-robin over that
-    * many slivers, so a few fat antichains do not pre-reduce in one serial
-    * task each; a wider input is reduced where it sits. */
+  /** Global skyline of any input, the one way into [[mergeLocal]]: the
+    * input's local skylines ([[localPoints]]: one per input partition, a
+    * file input scanned in core-width splits and an input narrower than
+    * `defaultParallelism` spread over that many partitions first) are
+    * merged; `originPartition` passes through. */
   def skyline(ds: Dataset[Point]): Dataset[Point] = skyline(ds, MaxBroadcastPoints)
 
   /** [[skyline]] with the merge's bounds and cross-filter chunking set by
@@ -82,13 +81,8 @@ object SkylineOps {
                              chunks: Option[Int] = None,
                              chunkTargetBytes: Long = ChunkTargetBytes): Dataset[Point] = {
     val spark = ds.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val rdd = coreWidth(ds).rdd
-    val in = if (rdd.getNumPartitions < cores) rdd.repartition(cores) else rdd
-    asDataset(spark, mergeLocal(spark, in.mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else Iterator.single((0, SkylineBuffer.of(it).result.toArray))
-    }, maxBroadcastPoints, driverBound, chunks, chunkTargetBytes))
+    asDataset(spark, mergeLocal(spark, localPoints(ds, None), maxBroadcastPoints, driverBound,
+      chunks, chunkTargetBytes))
   }
 
   /** A merge's survivors as a Dataset: a driver-side answer as a local
@@ -108,91 +102,115 @@ object SkylineOps {
   def skylineViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int): Dataset[Point] = {
     val spark = ds.sparkSession
-    asDataset(spark, mergeLocal(spark, localAntichains(ds, strategy, domain, numPartitions)))
+    val via = Some(ReferenceStrategy(strategy, domain, numPartitions))
+    asDataset(spark, mergeLocal(spark, localPoints(ds, via)))
   }
 
   /** Per-strategy local skylines: (partitionId, points tagged with
     * originPartition) — the reference's local-phase output
-    * (`FlinkSkyline.java:396-403`), as a Dataset over [[localAntichains]]. */
+    * (`FlinkSkyline.java:396-403`), as a Dataset over [[localPoints]]. */
   def localSkylines(ds: Dataset[Point], strategy: String, domain: Double,
                     numPartitions: Int): Dataset[(Int, Seq[Point])] = {
-    ds.sparkSession.createDataset(localAntichains(ds, strategy, domain, numPartitions)
+    val via = Some(ReferenceStrategy(strategy, domain, numPartitions))
+    ds.sparkSession.createDataset(localPoints(ds, via)
       .map { case (pid, pts) => (pid, pts.toSeq) })(ExpressionEncoder[(Int, Seq[Point])]())
   }
 
-  /** The local phase as one RDD lineage over the input's rows: each input
-    * partition reduces its rows into one SkylineBuffer per strategy id
-    * (map-side combine), the partials hash-shuffle to `n` tasks (an RDD
-    * shuffle, which adaptive execution cannot coalesce into one task), and
-    * each task merges its ids' partials per id, as `SkylineBuffer.of` would
-    * (mr-grid emits up to 2^dims ids, more than `n`). Building it runs no
-    * job (unless the input's own adaptive plan runs its exchanges).
-    *
-    * The rows are the `queryExecution.toRdd` of the input as [[coreWidth]]
-    * plans it, once: a splittable file input scans and combines on every
-    * core. An input that is still narrower than `defaultParallelism` (a
-    * gzip or multi-line CSV, a one-slice RDD, a local relation) is first
-    * hash-spread by id over that many partitions ([[spreadById]]), a
-    * shuffle inside this lineage. Each row's vector is copied into one
-    * scratch array per task, its strategy id is computed from that array,
-    * and a [[Point]] is built only for a row its id's buffer admits (see
-    * [[SkylineBuffer]]). */
-  private def localAntichains(ds: Dataset[Point], strategy: String, domain: Double,
-                              n: Int): RDD[(Int, Array[Point])] = {
-    val pidOf = pidFunction(strategy, domain, n)
-    val cores = ds.sparkSession.sparkContext.defaultParallelism
-    val planned = coreWidth(ds)
-    val read = idAndValues(planned)
-    val rows = planned.queryExecution.toRdd
-    val in = if (rows.getNumPartitions >= cores) rows
-      else spreadById(rows, read.head, planned.queryExecution.executedPlan.output.length, cores)
-    in.mapPartitions { it =>
-      val proj = UnsafeProjection.create(read)
-      val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
-      var vs = Array.emptyDoubleArray
-      it.foreach { r =>
-        val row = proj(r)
-        val arr = row.getArray(1)
-        if (arr.numElements != vs.length) vs = new Array[Double](arr.numElements)
-        var i = 0
-        while (i < vs.length) { vs(i) = arr.getDouble(i); i += 1 }
-        val pid = pidOf(vs)
-        bufs.getOrElseUpdate(pid, SkylineBuffer.empty).offer(row.getLong(0), vs, pid)
-      }
-      bufs.iterator.map { case (pid, b) => (pid, b.result.toArray) }
-    }.partitionBy(new HashPartitioner(n))
-      .mapPartitions(it => SkylineBuffer.byKey(it.flatMap(_._2.iterator))(_.originPartition)
-        .map { case (pid, b) => (pid, b.result.toArray) })
+  /** [[localPhase]] over the rows of `ds` as [[coreWidth]] plans it, read
+    * once (an adaptive input's shuffle runs once), with its `values` bound
+    * by name and cast to array<double>. Only the surviving rows become
+    * [[Point]]s, through the Dataset's own deserializer, which binds `id`
+    * and up-casts narrower types as `.as[Point]` does; with `via`, a
+    * point's `originPartition` is its strategy id. */
+  private def localPoints(ds: Dataset[Point],
+                          via: Option[ReferenceStrategy]): RDD[(Int, Array[Point])] = {
+    val spark = ds.sparkSession
+    val plan = ds.queryExecution.analyzed
+    val wide = coreWidth(plan)
+    val qe = if (wide eq plan) ds.queryExecution else ColumnBridge.ofRows(spark, wide).queryExecution
+    val out = qe.analyzed.output
+    val enc = encoderFor(ds.encoder).resolveAndBind(out, spark.sessionState.analyzer)
+    val values = out.find(a => spark.sessionState.conf.resolver(a.name, "values")).get
+    localPhase(qe.toRdd, new DimsReader(Seq(Cast(values, ArrayType(DoubleType))), out,
+      vector = true), via).mapPartitions { it =>
+      val point = enc.createDeserializer()
+      it.map { case (pid, rows) => (pid, rows.map { r =>
+        if (via.isEmpty) point(r) else point(r).copy(originPartition = pid) }) }
+    }
   }
 
-  /** `ds` with every file relation in its plan scanned in about
+  /** The local skyline phase of every skyline path (`SkylinePartialExec`
+    * and [[localPoints]]): `rows`' local skylines as blocks of surviving
+    * rows keyed by strategy id (0 without `via`). Building it runs no job.
+    *  - An input narrower than `defaultParallelism` (a gzip or multi-line
+    *    CSV, a one-slice RDD, a small local relation) is first spread over
+    *    that many partitions by a hash of each row's content, so a retried
+    *    task routes every row the same way.
+    *  - Each partition keeps one [[SkylineBuffer]] per strategy id (the
+    *    map-side combine): a row's dims are read into a scratch vector, a
+    *    row with a null or NaN dim is dropped, and only a row its id's
+    *    buffer admits is copied.
+    *  - With `via`, the partials shuffle by strategy id to its `partitions`
+    *    tasks, and each merges its ids' partials per id the same way
+    *    (mr-grid emits up to 2^dims ids, more than the tasks).
+    * Both are RDD shuffles, which adaptive execution cannot coalesce into
+    * one task, of the rows in the layout the plan produces, through the
+    * `UnsafeRow` serializer as `ShuffleExchangeExec` ships them. No row is
+    * copied for them: the bypass-merge and serialized shuffle writers
+    * serialize each record as it arrives, and the reader's one reused row
+    * is read before the next is pulled. The serializer drops the key, so
+    * the merge recomputes each row's id. */
+  private[graft] def localPhase(rows: RDD[InternalRow], read: DimsReader,
+                                via: Option[ReferenceStrategy]): RDD[(Int, Array[InternalRow])] = {
+    val cores = rows.sparkContext.defaultParallelism
+    val in = if (rows.getNumPartitions >= cores) rows
+      else shuffle(rows.map(r => (r.hashCode, r)), read.width, cores)
+    val pidOf = via.map(_.pidOf)
+    val combine = (it: Iterator[InternalRow]) => {
+      val kept = ArrayBuffer[InternalRow]()
+      val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
+      it.foreach { r =>
+        val vs = read(r)
+        if (vs != null && bufs.getOrElseUpdate(pidOf.fold(0)(_(vs)), SkylineBuffer.empty)
+            .offer(kept.length, vs)) kept += r.copy()
+      }
+      bufs.iterator.map { case (pid, b) => (pid, b.result.map(p => kept(p.id.toInt)).toArray) }
+    }
+    val partials = in.mapPartitions(combine)
+    via.fold(partials)(s => shuffle(partials.flatMap { case (pid, b) => b.iterator.map(pid -> _) },
+      read.width, s.partitions).mapPartitions(combine))
+  }
+
+  /** `rows` (of `width` fields) hash-partitioned by key over `n`
+    * partitions, through the `UnsafeRow` serializer. */
+  private def shuffle(rows: RDD[(Int, InternalRow)], width: Int, n: Int): RDD[InternalRow] =
+    new ShuffledRDD[Int, InternalRow, InternalRow](rows, new HashPartitioner(n))
+      .setSerializer(ColumnBridge.rowSerializer(width)).map(_._2)
+
+  /** `plan` with every file relation in it scanned in about
     * `defaultParallelism` balanced byte ranges: Spark's own split size,
     * `min(maxPartitionBytes, total bytes / cores)`, without the
     * `openCostInBytes` floor (4 MB by default) that makes any smaller file
     * ONE split, so a splittable CSV scans on every core instead of being
     * parsed in one task and spread. Many small files likewise pack into
     * about `cores` partitions rather than one per 4 MB of open cost. A
-    * non-splittable file (gzip, multi-line CSV) stays one split; an input
+    * non-splittable file (gzip, multi-line CSV) stays one split; a plan
     * without a file relation is returned as it is.
     *
     * The scan reads its split size from the session its `HadoopFsRelation`
     * holds, not from the planning thread's conf, so each file relation is
     * re-pointed at [[scanSession]]. The user's session conf is never set:
     * a change there, even around planning, would race with other queries on
-    * that session. The relation keeps its output attributes, so `id` and
-    * `values` bind by name as before, and a relation's equality ignores its
-    * session, so a cached input still resolves to its cached data. */
-  private def coreWidth(ds: Dataset[Point]): Dataset[Point] = {
-    lazy val scan = scanSession(ds.sparkSession)
-    val plan = ds.queryExecution.analyzed
+    * that session. The relation keeps its output attributes, so columns
+    * bind by name as before, and a relation's equality ignores its session,
+    * so a cached input still resolves to its cached data. */
+  private[graft] def coreWidth(plan: LogicalPlan): LogicalPlan = {
     // a re-pointed relation equals the original, so a one-step transform
     // would keep the original node; the marker makes both steps a change
     val marked = plan.transform { case l @ LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
-      Rescan(l.copy(relation = r.copy()(scan)))
+      Rescan(l.copy(relation = r.copy()(scanSession(r.sparkSession))))
     }
-    if (marked eq plan) ds
-    else ColumnBridge.ofRows(ds.sparkSession, marked.transform { case Rescan(l) => l })
-      .as[Point](pointEncoder)
+    if (marked eq plan) plan else marked.transform { case Rescan(l) => l }
   }
 
   /** [[coreWidth]]'s placeholder for a re-pointed relation, between its two
@@ -220,38 +238,6 @@ object SkylineOps {
   }
 
   private val scanSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
-
-  /** `rows` (of `width` fields) hash-spread by `id` over `n` partitions
-    * (Murmur3, seed 42, as Spark's hash partitioning): the fallback of the
-    * local phase for an input narrower than the cores after [[coreWidth]].
-    * It uses the mechanism `ShuffleExchangeExec` uses: an RDD shuffle of
-    * the rows in the layout the plan produces, through the `UnsafeRow`
-    * serializer. No row is copied: the bypass-merge and serialized shuffle
-    * writers serialize each record as it arrives
-    * (`ShuffleExchangeExec.needToCopyObjectsBeforeShuffle`), so a reused row
-    * is written before its buffer is refilled. The reader reuses one row
-    * too, which the local phase reads before it pulls the next. */
-  private def spreadById(rows: RDD[InternalRow], id: Expression, width: Int,
-                         n: Int): RDD[InternalRow] =
-    new ShuffledRDD[Int, InternalRow, InternalRow](rows.mapPartitions { it =>
-      val proj = UnsafeProjection.create(Seq(id))
-      it.map(r => (java.lang.Math.floorMod(Murmur3_x86_32.hashLong(proj(r).getLong(0), 42), n), r))
-    }, new HashPartitioner(n)).setSerializer(ColumnBridge.rowSerializer(width)).map(_._2)
-
-  /** The point's `id` as a long and `values` as array<double>, bound by
-    * name to the columns of `ds`'s rows. The casts are no-ops on
-    * [[pointsFrom]]'s types, and widen an input whose `.as[Point]` up-casts
-    * narrower ones; the columns may come in any order, beside others. */
-  private def idAndValues(ds: Dataset[Point]): Seq[Expression] = {
-    val out = ds.queryExecution.analyzed.output
-    val conf = ds.sparkSession.sessionState.conf
-    def read(name: String, as: DataType): Expression = {
-      val i = out.indexWhere(a => conf.resolver(a.name, name))
-      Cast(BoundReference(i, out(i).dataType, out(i).nullable), as,
-        Some(conf.sessionLocalTimeZone))
-    }
-    Seq(read("id", LongType), read("values", ArrayType(DoubleType)))
-  }
 
   /** Driver-side partition-id function with exactly the reference arithmetic.
     * A partition count below 1 is rejected here, when the function is built. */
@@ -299,7 +285,7 @@ object SkylineOps {
     * `:590-608`). Timing fields are wall-clock (non-deterministic), matching
     * field names only. One job when the union of local skylines fits the
     * driver bound (and each task's share of the broadcast bound):
-    * [[collectUnion]] over the cached [[localAntichains]]
+    * [[collectUnion]] over the cached [[localPoints]]
     * returns their sizes, arity and points, and [[mergeUnion]] filters a
     * small union on the driver, counting its survivors per origin
     * partition (the sum is the size). A larger union adds the distributed
@@ -316,7 +302,7 @@ object SkylineOps {
                                         driverBound: Int => Int): DataFrame = {
     val spark = ds.sparkSession
     val t0 = System.currentTimeMillis()
-    val local = localAntichains(ds, strategy, domain, numPartitions).cache()
+    val local = localPoints(ds, Some(ReferenceStrategy(strategy, domain, numPartitions))).cache()
     try {
       val union = collectUnion(local, MaxBroadcastPoints)
       val shapes = union.shapes.flatten
@@ -353,10 +339,11 @@ object SkylineOps {
     * instead of funneling into one single-threaded final merge. */
   def skylineTreeViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
                              numPartitions: Int, depth: Int = 3): Seq[Point] =
-    localAntichains(ds, strategy, domain, numPartitions).values.treeAggregate(SkylineBuffer.empty)(
-      (b, pts) => { pts.foreach(b.add); b },
-      (a, b) => a.merge(b),
-      depth).result
+    localPoints(ds, Some(ReferenceStrategy(strategy, domain, numPartitions))).values
+      .treeAggregate(SkylineBuffer.empty)(
+        (b, pts) => { pts.foreach(b.add); b },
+        (a, b) => a.merge(b),
+        depth).result
 
   private final val MaxBroadcastPoints = 4000000
   private final val ChunkTargetBytes = 64L << 20
@@ -738,9 +725,9 @@ object SkylineOps {
   /** Relational skyline over explicit dimension columns: (idCol as a long,
     * dims as doubles, under the names given) of the Pareto-optimal input rows
     * (duplicates preserved; rows with a null or NaN dimension dropped). It
-    * builds the lazy Catalyst [[graft.plans.Skyline]] node, planned as a
-    * partial skyline per input partition (per strategy id within it when
-    * `via` is set) and the parallel global merge of [[skyline]]. */
+    * builds the lazy Catalyst [[graft.plans.Skyline]] node, planned as
+    * [[localPhase]] (a local skyline per input partition, or per strategy
+    * id when `via` is set) and the parallel global merge of [[skyline]]. */
   def skylineDF(df: DataFrame, idCol: String, dimCols: Seq[String],
                 via: Option[graft.plans.ReferenceStrategy] = None): DataFrame =
     graft.plans.SkylinePlanApi.skyline(df, dimCols, via).select(

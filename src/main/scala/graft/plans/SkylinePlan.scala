@@ -3,22 +3,22 @@ package graft.plans
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression, SpecializedGetters,
+  UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.types.DoubleType
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
-import scala.collection.mutable.ArrayBuffer
-
-import graft.core.{Point, SkylineBuffer}
+import graft.core.Point
 import graft.operators.SkylineOps
 
 /** A reference partitioning strategy ("mr-dim" | "mr-grid" | "mr-angle")
   * over `domain` with `partitions` ids; an unknown name fails here, when
   * the frame is built. */
 case class ReferenceStrategy(name: String, domain: Double, partitions: Int) {
-  private[plans] val pidOf: Array[Double] => Int =
+  private[graft] val pidOf: Array[Double] => Int =
     SkylineOps.pidFunction(name, domain, partitions)
 }
 
@@ -26,11 +26,13 @@ case class ReferenceStrategy(name: String, domain: Double, partitions: Int) {
   *
   * The reference hand-builds its two-phase topology (local BNL → shuffle →
   * global merge, `java/org.main/FlinkSkyline.java:138-174`); here the same
-  * structure is PLANNED: `SkylinePartialExec` runs pipelined on each child
-  * partition (a combiner: one local skyline per partition, or per strategy id
-  * within it when `via` is set), and `SkylineMergeExec` runs the global merge
-  * of [[SkylineOps.skyline]] over the partial survivors on every core.
-  * Filters/projections still push below through the logical node, and the
+  * structure is PLANNED: `SkylinePartialExec` runs the local phase of every
+  * skyline path ([[SkylineOps.localPhase]]: one local skyline per child
+  * partition, or per strategy id merged on the strategy's `partitions`
+  * tasks when `via` is set), and `SkylineMergeExec` runs the global merge
+  * of [[SkylineOps.skyline]] over the partial survivors on every core. The
+  * child's file relations are scanned in core-width splits. Filters and
+  * projections still push below through the logical node, and the
   * operator composes with any child plan.
   *
   * `dims` are expressions over the child's output evaluating to DOUBLE
@@ -53,53 +55,48 @@ private[plans] trait SkylineRowsExec extends UnaryExecNode {
   protected def reader: DimsReader = new DimsReader(dims, child.output)
 }
 
-/** Reads the `dims` of a child row into a double vector, through one
-  * projection generated per task (on first use after deserialization). */
-private[plans] final class DimsReader(dims: Seq[Expression], input: Seq[Attribute])
-    extends Serializable {
-  @transient private lazy val proj = UnsafeProjection.create(dims, input)
+/** Reads the dims of a row of `input` into one scratch vector, through one
+  * projection generated per task (on first use after deserialization; a
+  * task reads through its own copy of the reader). `exprs` are the dims,
+  * one DOUBLE each, or in the `vector` form one ARRAY<DOUBLE> whose arity
+  * is the array's, row by row. */
+private[graft] final class DimsReader(exprs: Seq[Expression], input: Seq[Attribute],
+                                      vector: Boolean = false) extends Serializable {
+  @transient private lazy val proj = UnsafeProjection.create(exprs, input)
+  @transient private var vs: Array[Double] = _
 
-  def arity: Int = dims.length
+  /** The number of fields of a row of `input`. */
+  def width: Int = input.length
 
-  /** Fills `vs`; false when a dim is null or NaN (a malformed row, dropped). */
-  def apply(r: InternalRow, vs: Array[Double]): Boolean = {
+  /** The dims of `r` in the scratch vector, which the next call refills;
+    * null when a dim (or the vector) is null or NaN: a malformed row,
+    * dropped. */
+  def apply(r: InternalRow): Array[Double] = {
     val row = proj(r)
-    var ok = true
+    val from: SpecializedGetters = if (!vector) row
+      else if (row.isNullAt(0)) return null else row.getArray(0)
+    val n = from match { case a: ArrayData => a.numElements(); case _ => exprs.length }
+    if (vs == null || vs.length != n) vs = new Array[Double](n)
     var i = 0
-    while (ok && i < vs.length) {
-      ok = !row.isNullAt(i) && !row.getDouble(i).isNaN
-      if (ok) vs(i) = row.getDouble(i)
+    while (i < n) {
+      if (from.isNullAt(i) || from.getDouble(i).isNaN) return null
+      vs(i) = from.getDouble(i)
       i += 1
     }
-    ok
+    vs
   }
 }
 
-/** Map-side phase: local skyline per child partition, fully pipelined. Each
-  * valid row's dims go into one scratch vector per task, and
-  * [[SkylineBuffer]] (the kd-index kernel; one buffer per strategy id when
-  * `via` is set) admits or drops it there. Only an admitted row is copied
-  * and becomes `Point(rowIndex, dims)`; the rows at the surviving indices
-  * come out. */
+/** Map-side phase: [[SkylineOps.localPhase]] over the child's rows (spread
+  * first when the child is narrower than the cores; one local skyline per
+  * partition, or per strategy id merged on the strategy's `partitions`
+  * tasks when `via` is set). The surviving rows come out. */
 case class SkylinePartialExec(dims: Seq[Expression], via: Option[ReferenceStrategy],
                               child: SparkPlan) extends SkylineRowsExec {
-  override def outputPartitioning: Partitioning = child.outputPartitioning
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val read = reader
-    val pidOf = via.map(_.pidOf)
-    child.execute().mapPartitions { it =>
-      val rows = ArrayBuffer[InternalRow]()
-      val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
-      val vs = new Array[Double](read.arity)
-      it.foreach { r =>
-        if (read(r, vs) && bufs.getOrElseUpdate(pidOf.fold(0)(_(vs)), SkylineBuffer.empty)
-            .offer(rows.length, vs)) rows += r.copy()
-      }
-      bufs.valuesIterator.flatMap(_.result).map(p => rows(p.id.toInt))
-    }
-  }
+  override protected def doExecute(): RDD[InternalRow] =
+    SkylineOps.localPhase(child.execute(), reader, via).flatMap(_._2)
 }
 
 /** Global phase: the partial survivors of child partition `i` are cached,
@@ -121,16 +118,12 @@ case class SkylineMergeExec(dims: Seq[Expression], child: SparkPlan)
     val read = reader
     val rows = child.execute().mapPartitions(_.map(_.copy())).cache()
     val local = rows.mapPartitionsWithIndex { (i, it) =>
-      val pts = it.flatMap { r =>
-        val vs = new Array[Double](read.arity)
-        if (read(r, vs)) Some(Point(i, vs)) else None
-      }.toArray
+      val pts = it.flatMap(r => Option(read(r)).map(vs => Point(i, vs.clone()))).toArray
       if (pts.isEmpty) Iterator.empty else Iterator.single((i, pts))
     }
-    val keep = (it: Iterator[InternalRow], live: Set[Seq[Double]]) => {
-      val vs = new Array[Double](read.arity)
-      if (live.isEmpty) Iterator.empty else it.filter(r => read(r, vs) && live(vs.toSeq))
-    }
+    val keep = (it: Iterator[InternalRow], live: Set[Seq[Double]]) =>
+      if (live.isEmpty) Iterator.empty
+      else it.filter { r => val vs = read(r); vs != null && live(vs.toSeq) }
     SkylineOps.mergeLocal(session, local) match {
       case Left(survivors) =>
         val live = survivors.groupMap(_.id.toInt)(_.values.toSeq).view.mapValues(_.toSet).toMap
@@ -143,11 +136,14 @@ case class SkylineMergeExec(dims: Seq[Expression], child: SparkPlan)
   }
 }
 
-/** Plans logical Skyline → partial + merge (the two-phase MR structure). */
+/** Plans logical Skyline → partial + merge (the two-phase MR structure),
+  * with the child's file relations scanned in core-width splits
+  * ([[SkylineOps.coreWidth]]). */
 object SkylineStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case Skyline(dims, via, child) =>
-      SkylineMergeExec(dims, SkylinePartialExec(dims, via, planLater(child))) :: Nil
+      SkylineMergeExec(dims,
+        SkylinePartialExec(dims, via, planLater(SkylineOps.coreWidth(child)))) :: Nil
     case _ => Nil
   }
 }
@@ -258,9 +254,7 @@ object SkylineExtensions {
 object SkylinePlanApi {
   import org.apache.spark.sql.DataFrame
   import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-  import org.apache.spark.sql.catalyst.expressions.Cast
   import org.apache.spark.sql.graftbridge.ColumnBridge
-  import org.apache.spark.sql.types.DoubleType
 
   /** Skyline of `df` over `dimCols` (each cast to double, resolved by the
     * session's resolver the way `col(c)` is) as a lazy logical [[Skyline]]

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.core.Point
@@ -41,11 +42,11 @@ object SkylineStream {
                          localProcessingTimeMs: Long, globalProcessingTimeMs: Long,
                          totalProcessingTimeMs: Long) {
     def toJson: String =
-      s"""{"query_id": "$queryId", "record_count": ${
+      s"""{"query_id": ${quoted(queryId)}, "record_count": ${
         // the reference interpolates the payload's count verbatim; quote
-        // non-numeric fallbacks ("unknown") so the emitted JSON stays valid
-        if (recordCount.matches("-?\\d+")) recordCount
-        else "\"" + recordCount + "\""}, """ +
+        // anything that is not a JSON integer ("unknown", "007") so the
+        // emitted JSON stays valid
+        if (recordCount.matches("-?(0|[1-9]\\d*)")) recordCount else quoted(recordCount)}, """ +
         s""""skyline_size": $skylineSize, "optimality": ${
           // Locale.ROOT: JSON must use a dot decimal separator regardless of
           // the JVM default locale
@@ -54,6 +55,11 @@ object SkylineStream {
         s""""local_processing_time_ms": $localProcessingTimeMs, """ +
         s""""global_processing_time_ms": $globalProcessingTimeMs, """ +
         s""""total_processing_time_ms": $totalProcessingTimeMs}"""
+
+    /** `s` as a JSON string: the trigger payload is external input, so its
+      * quotes, backslashes and control characters are escaped. */
+    private def quoted(s: String): String =
+      "\"" + new String(JsonStringEncoder.getInstance.quoteAsString(s)) + "\""
   }
 
   /** Parse a data CSV line "id,v1,...,vd" and stamp its partition id; None on

@@ -77,6 +77,25 @@ class SkylineHostileInputSpec extends AnyFunSuite {
     }
   }
 
+  test("Point-level paths drop a point whose vector holds NaN") {
+    import spark.implicits._
+    // the transitivity break of the DataFrame case below: kept, (NaN,-10)
+    // would survive and (-5,2) would not
+    val valid = Seq(Point(1L, Array(0.0, 0.0)), Point(3L, Array(-5.0, 2.0)))
+    val pts = valid ++ Seq(Point(2L, Array(Double.NaN, 1.0)), Point(4L, Array(Double.NaN, -10.0)))
+    for (slices <- Seq(1, Partitions)) {
+      val ds = spark.createDataset(spark.sparkContext.parallelize(pts, slices))
+      val bad = disagreeing(brute(valid), Seq(
+        "skyline" -> (() => asSky(SkylineOps.skyline(ds).collect()))) ++
+        Strategies.flatMap(st => Seq(
+          s"skylineViaStrategy($st)" -> (() => asSky(
+            SkylineOps.skylineViaStrategy(ds, st, Domain, 8).collect())),
+          s"localSkylines($st)" -> (() => brute(
+            SkylineOps.localSkylines(ds, st, Domain, 8).collect().toSeq.flatMap(_._2))))))
+      assert(bad.isEmpty, s"slices=$slices\n${bad.mkString("\n")}")
+    }
+  }
+
   test("DataFrame paths equal brute force over the rows without null or NaN dims") {
     def frame(rows: Seq[(Long, Seq[Option[Double]])], d: Int): DataFrame = {
       val schema = StructType(StructField("id", LongType, nullable = false) +:

@@ -462,6 +462,38 @@ class SkylineOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("Graft.skyline and skylineVia scan a one-file CSV under the open cost on every core") {
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val (domain, n) = (100.0, 8)
+    val cores = spark.sparkContext.defaultParallelism
+    assert(cores > 1 && cores != n)
+    val pts = mkPts(6000, 3, seed = 25, card = 100)
+    val expect = bruteForce(pts)
+    withCsv(pts.map(p => (p.id +: p.values.map(_.toLong)).mkString(","))) { path =>
+      assert(java.nio.file.Files.size(java.nio.file.Paths.get(path)) < (4L << 20))
+      val before = spark.conf.getAll
+      val df = spark.read.schema(StructType(StructField("id", LongType) +:
+        (1 to 3).map(d => StructField(s"v$d", DoubleType)))).csv(path)
+      val dims = Seq("v1", "v2", "v3")
+      val frames = (None -> graft.Graft.skyline(df, dims)) +:
+        Seq("mr-dim", "mr-grid", "mr-angle").map(st =>
+          Some(st) -> graft.Graft.skylineVia(df, "id", dims, st, domain, n))
+      for ((via, frame) <- frames) {
+        val at = via.getOrElse("no strategy")
+        val (rows, rec) = new JobRecorder(spark).during(frame.collect())
+        assert(rows.map(r => (r.getLong(0), (1 to 3).map(r.getDouble): Seq[Double])).toSet ==
+          expect, at)
+        // the scan and the partials run on every core, the per-id merge on
+        // n tasks (the marker job's one stage comes last)
+        val tasks = rec.stages.asScala.toSeq.map(_.numTasks).dropRight(1)
+        assert(tasks.head >= cores && !tasks.contains(1), s"$at: $tasks")
+        assert(via.isEmpty || tasks(1) == n, s"$at: $tasks")
+      }
+      assert(spark.conf.getAll == before)
+    }
+  }
+
   test("split CSV, gzip CSV and a persisted file input equal brute force and toDS()") {
     import spark.implicits._
     val (domain, n, cores) = (100.0, 4, spark.sparkContext.defaultParallelism)

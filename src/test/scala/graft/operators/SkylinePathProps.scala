@@ -11,8 +11,8 @@ import graft.plans.{ReferenceStrategy, SkylinePlanApi}
 /** Generated hostile frames (±Inf, ties from a tiny value pool, duplicate
   * floods, null and NaN dims, more partitions than rows): every skyline path
   * equals brute force over the valid rows. The fixed-seed cases stay in
-  * [[SkylineHostileInputSpec]]; each trial here runs seven Spark queries, so
-  * the trial count is kept small. */
+  * [[SkylineHostileInputSpec]]; each trial here runs thirteen Spark
+  * queries, so the trial count is kept small. */
 object SkylinePathProps extends Properties("SkylinePaths") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
@@ -48,6 +48,7 @@ object SkylinePathProps extends Properties("SkylinePaths") {
       val data = rows.zipWithIndex.map { case (vs, i) =>
         Row.fromSeq(i.toLong +: vs.map(_.map(Double.box).orNull)) }
       val df = spark.createDataFrame(spark.sparkContext.parallelize(data, parts), schema)
+      import spark.implicits._
       val expect = brute(rows.zipWithIndex.collect {
         case (vs, i) if vs.forall(_.exists(!_.isNaN)) => Point(i.toLong, vs.flatten.toArray) })
       def node(via: Option[ReferenceStrategy]): Sky =
@@ -63,8 +64,11 @@ object SkylinePathProps extends Properties("SkylinePaths") {
           points(SkylineOps.skyline(_, maxBroadcastPoints = 3)),
         "skyline(driver bound 0)" ->
           points(SkylineOps.skyline(_, driverBound = _ => 0))) ++
-        Seq("mr-dim", "mr-grid", "mr-angle").map(st =>
-          s"node via $st" -> node(Some(ReferenceStrategy(st, Domain, 8))))
+        Seq("mr-dim", "mr-grid", "mr-angle").flatMap(st => Seq(
+          s"node via $st" -> node(Some(ReferenceStrategy(st, Domain, 8))),
+          s"skylineViaStrategy($st)" -> points(SkylineOps.skylineViaStrategy(_, st, Domain, 8)),
+          s"skyline(localSkylines $st)" -> points(ds =>
+            SkylineOps.skyline(SkylineOps.localSkylines(ds, st, Domain, 8).flatMap(_._2)))))
       val bad = got.collect { case (name, sky) if sky != expect => s"$name: $sky" }
       Prop(bad.isEmpty) :| s"d=$d rows=${rows.size} partitions=$parts expect=$expect\n" +
         bad.mkString("\n")

@@ -73,6 +73,25 @@ class SkylineStreamSpec extends AnyFunSuite {
     assert(r.toJson.contains("\"skyline_size\""))
   }
 
+  test("a result's JSON parses whatever the trigger payload holds") {
+    import spark.implicits._
+    import org.json4s.{JInt, JString}
+    import org.json4s.jackson.JsonMethods.parse
+    // every line in mr-dim partition 0, so the barrier at id 5 is reached
+    val lines = spark.createDataset(Seq("10,1.0,2.0", "11,2.0,1.0"))
+    val cases = Seq(("q\"1\\,5", "q\"1\\", JInt(5)),
+      ("a\u0001\tb,7\"\\\n8", "a\u0001\tb", JString("7\"\\\n8")),
+      ("q2,007", "q2", JString("007")))
+    for ((payload, queryId, count) <- cases) {
+      val res = SkylineStream.runBatch(spark, lines, Seq(payload), "mr-dim", DOMAIN, N)
+      assert(res.length == 1, payload)
+      val json = parse(res.head.toJson)
+      assert(json \ "query_id" == JString(queryId), res.head.toJson)
+      assert(json \ "record_count" == count, res.head.toJson)
+      assert(json \ "skyline_size" == JInt(2), res.head.toJson)
+    }
+  }
+
   test("malformed lines are dropped, duplicates survive") {
     import spark.implicits._
     val lines = Seq("0,5.0,5.0", "1,0.0,0.0", "2,0.0,0.0", "garbage", "3", "4,1.0,xx",
