@@ -272,10 +272,12 @@ final class SkylineBuffer extends Serializable {
   def offer(id: Long, vs: Array[Double]): Boolean =
     admits(vs) && { stage(Point(id, vs.clone())); true }
 
+  /** Every point held now, survivors and staged, without compacting. */
+  def held: Iterator[Point] = points.iterator ++ staged.iterator
+
   /** Adds every point of `other` (survivors and staged). */
   def merge(other: SkylineBuffer): SkylineBuffer = {
-    other.points.foreach(add)
-    other.staged.foreach(add)
+    other.held.foreach(add)
     this
   }
 

@@ -1,21 +1,22 @@
 package graft.operators
 
-import scala.collection.mutable.ArrayBuffer
+import scala.collection.mutable
+import scala.reflect.ClassTag
 
 import org.apache.spark.{HashPartitioner, OneToOneDependency}
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.{encoderFor, ExpressionEncoder}
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Cast, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField,
-  StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Point, SkylineBuffer}
@@ -79,11 +80,9 @@ object SkylineOps {
   private[graft] def skyline(ds: Dataset[Point], maxBroadcastPoints: Int = MaxBroadcastPoints,
                              driverBound: Int => Int = driverBoundOf,
                              chunks: Option[Int] = None,
-                             chunkTargetBytes: Long = ChunkTargetBytes): Dataset[Point] = {
-    val spark = ds.sparkSession
-    asDataset(spark, mergeLocal(spark, localPoints(ds, None), maxBroadcastPoints, driverBound,
-      chunks, chunkTargetBytes))
-  }
+                             chunkTargetBytes: Long = ChunkTargetBytes): Dataset[Point] =
+    asDataset(ds.sparkSession, mergeLocal(ds.sparkSession, localPoints(ds, None),
+      maxBroadcastPoints, driverBound, chunks, chunkTargetBytes))
 
   /** A merge's survivors as a Dataset: a driver-side answer as a local
     * relation (reading it runs no job), a distributed one as its RDD. */
@@ -101,9 +100,8 @@ object SkylineOps {
     * Identical results for every strategy and partition count. */
   def skylineViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
                          numPartitions: Int): Dataset[Point] = {
-    val spark = ds.sparkSession
     val via = Some(ReferenceStrategy(strategy, domain, numPartitions))
-    asDataset(spark, mergeLocal(spark, localPoints(ds, via)))
+    asDataset(ds.sparkSession, mergeLocal(ds.sparkSession, localPoints(ds, via)))
   }
 
   /** Per-strategy local skylines: (partitionId, points tagged with
@@ -117,75 +115,95 @@ object SkylineOps {
   }
 
   /** [[localPhase]] over the rows of `ds` as [[coreWidth]] plans it, read
-    * once (an adaptive input's shuffle runs once), with its `values` bound
-    * by name and cast to array<double>. Only the surviving rows become
-    * [[Point]]s, through the Dataset's own deserializer, which binds `id`
-    * and up-casts narrower types as `.as[Point]` does; with `via`, a
-    * point's `originPartition` is its strategy id. */
+    * once (an adaptive input's shuffle runs once), with `id`, `values` and
+    * `originPartition` bound by name and cast as `.as[Point]` reads them. A
+    * survivor is a [[Point]] of its buffer's vector and its row's id, its
+    * `originPartition` the strategy id when `via` is set. */
   private def localPoints(ds: Dataset[Point],
                           via: Option[ReferenceStrategy]): RDD[(Int, Array[Point])] = {
-    val spark = ds.sparkSession
-    val plan = ds.queryExecution.analyzed
+    val (plan, conf) = (ds.queryExecution.analyzed, ds.sparkSession.sessionState.conf)
     val wide = coreWidth(plan)
-    val qe = if (wide eq plan) ds.queryExecution else ColumnBridge.ofRows(spark, wide).queryExecution
+    val qe = if (wide eq plan) ds.queryExecution
+      else ColumnBridge.ofRows(ds.sparkSession, wide).queryExecution
     val out = qe.analyzed.output
-    val enc = encoderFor(ds.encoder).resolveAndBind(out, spark.sessionState.analyzer)
-    val values = out.find(a => spark.sessionState.conf.resolver(a.name, "values")).get
-    localPhase(qe.toRdd, new DimsReader(Seq(Cast(values, ArrayType(DoubleType))), out,
-      vector = true), via).mapPartitions { it =>
-      val point = enc.createDeserializer()
-      it.map { case (pid, rows) => (pid, rows.map { r =>
-        if (via.isEmpty) point(r) else point(r).copy(originPartition = pid) }) }
+    def field(name: String, as: DataType): Expression = {
+      val i = out.indexWhere(a => conf.resolver(a.name, name))
+      Cast(BoundReference(i, out(i).dataType, out(i).nullable), as, Some(conf.sessionLocalTimeZone))
+    }
+    val (id, origin) = (field("id", LongType), field("originPartition", IntegerType))
+    localPhase(qe.toRdd, new DimsReader(Seq(field("values", ArrayType(DoubleType))), out), via) {
+      (pid, p, r) => Point(id.eval(r).asInstanceOf[Long], p.values,
+        if (via.isEmpty) origin.eval(r).asInstanceOf[Int] else pid)
     }
   }
 
   /** The local skyline phase of every skyline path (`SkylinePartialExec`
-    * and [[localPoints]]): `rows`' local skylines as blocks of surviving
-    * rows keyed by strategy id (0 without `via`). Building it runs no job.
-    *  - An input narrower than `defaultParallelism` (a gzip or multi-line
-    *    CSV, a one-slice RDD, a small local relation) is first spread over
-    *    that many partitions by a hash of each row's content, so a retried
-    *    task routes every row the same way.
-    *  - Each partition keeps one [[SkylineBuffer]] per strategy id (the
-    *    map-side combine): a row's dims are read into a scratch vector, a
-    *    row with a null or NaN dim is dropped, and only a row its id's
-    *    buffer admits is copied.
-    *  - With `via`, the partials shuffle by strategy id to its `partitions`
-    *    tasks, and each merges its ids' partials per id the same way
-    *    (mr-grid emits up to 2^dims ids, more than the tasks).
-    * Both are RDD shuffles, which adaptive execution cannot coalesce into
-    * one task, of the rows in the layout the plan produces, through the
-    * `UnsafeRow` serializer as `ShuffleExchangeExec` ships them. No row is
-    * copied for them: the bypass-merge and serialized shuffle writers
-    * serialize each record as it arrives, and the reader's one reused row
-    * is read before the next is pulled. The serializer drops the key, so
-    * the merge recomputes each row's id. */
-  private[graft] def localPhase(rows: RDD[InternalRow], read: DimsReader,
-                                via: Option[ReferenceStrategy]): RDD[(Int, Array[InternalRow])] = {
+    * and [[localPoints]]): `rows`' local skylines, combined per partition
+    * by [[RowCombiner]], as blocks keyed by strategy id (0 without `via`);
+    * each survivor is passed to `emit` with its id, point and row. An input
+    * narrower than `defaultParallelism` is first spread over that many
+    * partitions by a hash of each row's content (a retried task routes each
+    * row the same way). With `via`, the survivors then shuffle by strategy
+    * id to its `partitions` tasks, which combine them again (mr-grid emits
+    * up to 2^dims ids). Both are RDD shuffles, which adaptive execution
+    * cannot coalesce, of the plan's rows through the `UnsafeRow` serializer,
+    * whose writers serialize each record as it arrives, so no row is copied
+    * for them. Building it runs no job. */
+  private[graft] def localPhase[T: ClassTag](rows: RDD[InternalRow], read: DimsReader,
+    via: Option[ReferenceStrategy])(emit: (Int, Point, InternalRow) => T): RDD[(Int, Array[T])] = {
     val cores = rows.sparkContext.defaultParallelism
     val in = if (rows.getNumPartitions >= cores) rows
-      else shuffle(rows.map(r => (r.hashCode, r)), read.width, cores)
+      else shuffle(rows.map(r => (r.hashCode, r)), read.width, cores).values
     val pidOf = via.map(_.pidOf)
-    val combine = (it: Iterator[InternalRow]) => {
-      val kept = ArrayBuffer[InternalRow]()
-      val bufs = scala.collection.mutable.HashMap[Int, SkylineBuffer]()
-      it.foreach { r =>
-        val vs = read(r)
-        if (vs != null && bufs.getOrElseUpdate(pidOf.fold(0)(_(vs)), SkylineBuffer.empty)
-            .offer(kept.length, vs)) kept += r.copy()
-      }
-      bufs.iterator.map { case (pid, b) => (pid, b.result.map(p => kept(p.id.toInt)).toArray) }
+    // one closure per pass: Spark's cleaner parses this class for each (~2 ms)
+    def combine[U: ClassTag](it: Iterator[InternalRow])(out: (Int, Point, InternalRow) => U) = {
+      val c = new RowCombiner(read, pidOf)
+      it.foreach(c.add)
+      c.result(out)
     }
-    val partials = in.mapPartitions(combine)
-    via.fold(partials)(s => shuffle(partials.flatMap { case (pid, b) => b.iterator.map(pid -> _) },
-      read.width, s.partitions).mapPartitions(combine))
+    via.fold(in.mapPartitions(combine(_)(emit))) { s =>
+      val partials = in.mapPartitions(combine(_)((pid, _, r) => (pid, r)).flatMap(_._2.iterator))
+      shuffle(partials, read.width, s.partitions).mapPartitions(it => combine(it.map(_._2))(emit))
+    }
+  }
+
+  /** [[localPhase]]'s combine of one partition: one [[SkylineBuffer]] per
+    * strategy id (0 without `pidOf`), fed from the reader's scratch vector
+    * (a null or NaN dim drops the row). Only an admitted row is copied; at
+    * twice the points the buffers hold, the copies of evicted points are
+    * let go: O(skyline + stage) copies, even if each row dominates the last. */
+  private[graft] final class RowCombiner(read: DimsReader, pidOf: Option[Array[Double] => Int]) {
+    private val bufs = mutable.HashMap[Int, SkylineBuffer]()
+    private var rows = mutable.LongMap[InternalRow]()
+    private var sweepAt = 2 * SkylineBuffer.FirstStage
+    private var next = 0L
+
+    /** The row copies held now. */
+    def copies: Int = rows.size
+
+    def add(r: InternalRow): Unit = {
+      val vs = read(r)
+      if (vs != null && bufs.getOrElseUpdate(pidOf.fold(0)(_(vs)), SkylineBuffer.empty)
+          .offer(next, vs)) {
+        rows(next) = r.copy()
+        next += 1
+        if (rows.size >= sweepAt) {
+          rows = mutable.LongMap.from(bufs.values.flatMap(_.held).map(p => p.id -> rows(p.id)))
+          sweepAt = math.max(2 * rows.size, sweepAt)
+        }
+      }
+    }
+
+    /** Each id's survivors, through `emit`. */
+    def result[T: ClassTag](emit: (Int, Point, InternalRow) => T): Iterator[(Int, Array[T])] =
+      bufs.iterator.map { case (id, b) => (id, b.result.map(p => emit(id, p, rows(p.id))).toArray) }
   }
 
   /** `rows` (of `width` fields) hash-partitioned by key over `n`
     * partitions, through the `UnsafeRow` serializer. */
-  private def shuffle(rows: RDD[(Int, InternalRow)], width: Int, n: Int): RDD[InternalRow] =
+  private def shuffle(rows: RDD[(Int, InternalRow)], width: Int, n: Int): RDD[(Int, InternalRow)] =
     new ShuffledRDD[Int, InternalRow, InternalRow](rows, new HashPartitioner(n))
-      .setSerializer(ColumnBridge.rowSerializer(width)).map(_._2)
+      .setSerializer(ColumnBridge.rowSerializer(width))
 
   /** `plan` with every file relation in it scanned in about
     * `defaultParallelism` balanced byte ranges: Spark's own split size,

@@ -3,12 +3,12 @@ package graft.plans
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast, Expression, SpecializedGetters,
-  UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Cast, Expression,
+  SpecializedGetters, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 
 import graft.core.Point
@@ -55,14 +55,15 @@ private[plans] trait SkylineRowsExec extends UnaryExecNode {
   protected def reader: DimsReader = new DimsReader(dims, child.output)
 }
 
-/** Reads the dims of a row of `input` into one scratch vector, through one
-  * projection generated per task (on first use after deserialization; a
-  * task reads through its own copy of the reader). `exprs` are the dims,
-  * one DOUBLE each, or in the `vector` form one ARRAY<DOUBLE> whose arity
-  * is the array's, row by row. */
-private[graft] final class DimsReader(exprs: Seq[Expression], input: Seq[Attribute],
-                                      vector: Boolean = false) extends Serializable {
+/** Reads the dims of a row of `input` into one scratch vector (a task
+  * reads through its own copy): one DOUBLE expression per dim, through a
+  * projection generated per task, or one ARRAY<DOUBLE> of the row's arity,
+  * evaluated as it is (its cast is a no-op on an array of doubles). */
+private[graft] final class DimsReader(exprs: Seq[Expression], input: Seq[Attribute])
+    extends Serializable {
+  private val vector = exprs.size == 1 && exprs.head.dataType.isInstanceOf[ArrayType]
   @transient private lazy val proj = UnsafeProjection.create(exprs, input)
+  @transient private lazy val array = BindReferences.bindReference(exprs.head, input)
   @transient private var vs: Array[Double] = _
 
   /** The number of fields of a row of `input`. */
@@ -72,9 +73,10 @@ private[graft] final class DimsReader(exprs: Seq[Expression], input: Seq[Attribu
     * null when a dim (or the vector) is null or NaN: a malformed row,
     * dropped. */
   def apply(r: InternalRow): Array[Double] = {
-    val row = proj(r)
-    val from: SpecializedGetters = if (!vector) row
-      else if (row.isNullAt(0)) return null else row.getArray(0)
+    val from: SpecializedGetters = if (!vector) proj(r) else array.eval(r) match {
+      case null => return null
+      case a: ArrayData => a
+    }
     val n = from match { case a: ArrayData => a.numElements(); case _ => exprs.length }
     if (vs == null || vs.length != n) vs = new Array[Double](n)
     var i = 0
@@ -96,7 +98,7 @@ case class SkylinePartialExec(dims: Seq[Expression], via: Option[ReferenceStrate
   override protected def withNewChildInternal(c: SparkPlan) = copy(child = c)
 
   override protected def doExecute(): RDD[InternalRow] =
-    SkylineOps.localPhase(child.execute(), reader, via).flatMap(_._2)
+    SkylineOps.localPhase(child.execute(), reader, via)((_, _, r) => r).flatMap(_._2)
 }
 
 /** Global phase: the partial survivors of child partition `i` are cached,
@@ -206,12 +208,9 @@ object SkylineExtensions {
     * form for graft_classifier_sum. */
   private def longArrayArg(e: Expression, name: String): Seq[Long] =
     e match {
-      case a if a.foldable && a.dataType.isInstanceOf[
-          org.apache.spark.sql.types.ArrayType] =>
-        val et = a.dataType.asInstanceOf[org.apache.spark.sql.types.ArrayType]
-          .elementType
-        val arr = a.eval().asInstanceOf[
-          org.apache.spark.sql.catalyst.util.ArrayData]
+      case a if a.foldable && a.dataType.isInstanceOf[ArrayType] =>
+        val et = a.dataType.asInstanceOf[ArrayType].elementType
+        val arr = a.eval().asInstanceOf[ArrayData]
         (0 until arr.numElements()).map(i => et match {
           case LongType => arr.getLong(i)
           case org.apache.spark.sql.types.IntegerType => arr.getInt(i).toLong

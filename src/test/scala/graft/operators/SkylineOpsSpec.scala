@@ -381,6 +381,37 @@ class SkylineOpsSpec extends AnyFunSuite {
     assert(preReduce.exists(_.numTasks > 1), shape)
   }
 
+  test("rows that each dominate the last keep few row copies and reach the right answer") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast}
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
+    import spark.implicits._
+    // each row dominates every row before it: admission keeps them all,
+    // while the buffer's survivors stay at one point
+    val n = 20000
+    val pts = Seq.tabulate(n)(i => Point(i.toLong, Array.fill(3)((n - i).toDouble)))
+    val input = Seq(AttributeReference("id", LongType)(),
+      AttributeReference("values", ArrayType(DoubleType))())
+    val c = new SkylineOps.RowCombiner(
+      new graft.plans.DimsReader(Seq(Cast(input(1), ArrayType(DoubleType))), input), None)
+    var most = 0
+    pts.foreach { p =>
+      c.add(InternalRow(p.id, ArrayData.toArrayData(p.values)))
+      most = math.max(most, c.copies)
+    }
+    // the copies of evicted rows go at twice the points the buffer holds
+    // (at most one stage of 128 plus the survivor)
+    assert(most <= 2 * (graft.core.SkylineBuffer.FirstStage + 1), most)
+    val got = c.result((_, _, r) => r.getLong(0)).toSeq
+    assert(got.map(_._1) == Seq(0) && got.head._2.toSeq == Seq(n - 1L))
+    val cores = spark.sparkContext.defaultParallelism
+    val ds = spark.createDataset(spark.sparkContext.parallelize(pts, cores))
+    assert(asSet(SkylineOps.skyline(ds).collect().toSeq) == Set((n - 1L, Seq(1.0, 1.0, 1.0))))
+    val local = SkylineOps.localSkylines(ds, "mr-angle", n.toDouble, 8).collect()
+    assert(local.flatMap(_._2).map(_.id).toSet == Set(n - 1L))
+  }
+
   /** `lines` written to a one-file CSV (gzip-compressed when `gzip`) in a
     * new temporary directory, which is deleted after `body` reads it. */
   private def withCsv[T](lines: Seq[String], gzip: Boolean = false)(body: String => T): T = {
